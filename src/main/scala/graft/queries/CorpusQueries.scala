@@ -134,8 +134,7 @@ object CorpusQueries {
     import graft.sim.ProductQuantize
     import graft.sources.ManifestCommit
     val emb = Tables.embeddings(s, dir)
-    val idxPath =
-      s"/tmp/graft_ivfpq_inc_v1_${sourceFingerprint(dir, "embeddings")}"
+    val idxPath = storedIndexPath("ivfpq_inc", dir, "embeddings")
     if (ManifestCommit.latest(s"$idxPath/model").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -209,8 +208,7 @@ object CorpusQueries {
         |""".stripMargin)) { (s, dir) =>
       import graft.sources.ManifestCommit
       val docs = Tables.documents(s, dir)
-      val idxPath =
-        s"/tmp/graft_bm25_pinc_v1_${sourceFingerprint(dir, "documents")}"
+      val idxPath = storedIndexPath("bm25_pinc", dir, "documents")
       // NO latest().isEmpty guard: appendBatch is idempotent by
       // (appId, batchId), so calling both ingests unconditionally is
       // self-healing — a crash between them leaves batch 0 committed
@@ -228,18 +226,20 @@ object CorpusQueries {
     }
   }
 
+  /** Where the stored index `name` built from source `table` under `dir`
+    * lives: `<java.io.tmpdir>/graft_<name>_v1_<fingerprint>`. v1 is the
+    * layout version (bump on schema change); the fingerprint covers the
+    * source file's path + length + mtime, so regenerated testdata gets a
+    * fresh index path and a stale survivor is never read. */
+  private[queries] def storedIndexPath(name: String, dir: String,
+      table: String): String =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_${name}_v1_${graft.sources.LocalFs.fingerprint(dir, Seq(table))}")
+      .toString
+
   /** DuckDB replay of SketchExprs.hyperplaneSig over `embeddings.embedding`
     * (64 dims): bit p set iff the LCG-plane projection is > 0 — the exact
     * fragment proven bit-identical by q69. */
-  /** Content fingerprint of a source table file for stored-index cache
-    * paths: path + length + mtime, so a regenerated testdata file gets
-    * a fresh index path and a stale /tmp survivor is never read. */
-  private[queries] def sourceFingerprint(dir: String, table: String): String = {
-    val f = new java.io.File(s"$dir/$table.parquet")
-    java.lang.Long.toHexString(
-      (dir + ":" + f.length + ":" + f.lastModified).hashCode.toLong & 0xffffffffL)
-  }
-
   private[queries] def sqlHyperplaneCell(bits: Int): String = {
     val proj = "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
       "list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * " +
@@ -1157,8 +1157,7 @@ object CorpusQueries {
     // later runs only read — the stored-index discipline (q137's
     // pattern). The fingerprint covers the source file's length+mtime,
     // so regenerated testdata can never silently feed a stale index.
-    val idxPath =
-      s"/tmp/graft_ivfpq_idx_v1_${sourceFingerprint(dir, "embeddings")}"
+    val idxPath = storedIndexPath("ivfpq_idx", dir, "embeddings")
     if (ManifestCommit.latest(s"$idxPath/codes").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -1334,9 +1333,8 @@ object CorpusQueries {
       // runs only read. v1 = layout version (bump on schema change);
       // the fingerprint covers the source file's length+mtime, so
       // neither a layout change NOR regenerated testdata can feed a
-      // stale /tmp survivor to the reader
-      val idxPath =
-        s"/tmp/graft_bm25_idx_v1_${sourceFingerprint(dir, "documents")}"
+      // stale survivor to the reader
+      val idxPath = storedIndexPath("bm25_idx", dir, "documents")
       if (ManifestCommit.latest(idxPath).isEmpty)
         graft.text.Bm25.writeIndex(docs, "doc_id", "text", idxPath)
       graft.text.Bm25.topKFromIndex(ManifestCommit.read(s, idxPath),

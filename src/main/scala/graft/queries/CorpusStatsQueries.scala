@@ -281,27 +281,16 @@ object CorpusStatsQueries {
         |       CAST(1 AS BIGINT) AS sketches_agree
         |FROM e ORDER BY source
         |""".stripMargin)) { (s, dir) =>
-      import graft.sources.ManifestCommit
+      import graft.sources.{LocalFs, ManifestCommit}
       val docs = Tables.documents(s, dir).where(col("text").isNotNull)
       def toks(d: org.apache.spark.sql.DataFrame) = d.select(col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("w"))
-      val path = "/tmp/graft_kmv_idx_v1_" +
-        CorpusQueries.sourceFingerprint(dir, "documents")
-      if (ManifestCommit.latest(path).isEmpty) {
-        val stage = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/tmp"), "graft_kmv_stage_").toString
+      val path = CorpusQueries.storedIndexPath("kmv_idx", dir, "documents")
+      LocalFs.publishOnce(java.nio.file.Paths.get(path),
+        p => ManifestCommit.latest(p.toString).nonEmpty) { stage =>
         ManifestCommit.writeVersioned(
           KmvSketch.minima(toks(docs.where(col("doc_id") % 5 =!= 0)),
-            Seq("source"), "w", k, "kmv"), stage)
-        try java.nio.file.Files.move(
-          java.nio.file.Paths.get(stage), java.nio.file.Paths.get(path),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { // lost the publish race: a complete build already won
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.AccessDeniedException |
-               _: java.nio.file.FileSystemException
-            if ManifestCommit.latest(path).nonEmpty => ()
-        }
+            Seq("source"), "w", k, "kmv"), stage.toString)
       }
       val stored = ManifestCommit.read(s, path)
       val merged = KmvSketch.mergeMinima(stored,

@@ -2384,18 +2384,16 @@ object SignalQueries {
       |SELECT doc_id, cluster_id FROM lbl ORDER BY doc_id
       |""".stripMargin)) { (s, dir) =>
     import graft.dedup.Dedup
-    import graft.sources.ManifestCommit
+    import graft.sources.{LocalFs, ManifestCommit}
     val docs = Tables.documents(s, dir)
-    val path = "/tmp/graft_clusters_v1_" +
-      CorpusQueries.sourceFingerprint(dir, "documents")
-    if (ManifestCommit.latest(path).isEmpty) {
-      // build BOTH generations in a staging dir, then atomically
-      // rename into place: a crash between the gen1 and gen2 writes
-      // must not leave a half-built (old-labels-only) dataset behind
-      // the existence check — readers only ever see a complete build
-      val stage = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/tmp"), "graft_clusters_stage_")
-        .toString
+    val path = CorpusQueries.storedIndexPath("clusters", dir, "documents")
+    // build BOTH generations in a staging dir published once: a crash
+    // between the gen1 and gen2 writes must not leave a half-built
+    // (old-labels-only) dataset behind the existence check — readers
+    // only ever see a complete build
+    LocalFs.publishOnce(java.nio.file.Paths.get(path),
+      p => ManifestCommit.latest(p.toString).nonEmpty) { stagePath =>
+      val stage = stagePath.toString
       val oldDocs = docs.where(col("doc_id") % 5 =!= 0)
       val newDocs = docs.where(col("doc_id") % 5 === 0)
       val g1 = ManifestCommit.writeVersioned(
@@ -2405,15 +2403,6 @@ object SignalQueries {
       ManifestCommit.writeVersioned(
         Dedup.incrementalClusters(stored, newDocs, oldDocs,
           "doc_id", "text", threshold = 0.8), stage)
-      try java.nio.file.Files.move(
-        java.nio.file.Paths.get(stage), java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { // lost the publish race: someone else's complete build won
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.AccessDeniedException |
-             _: java.nio.file.FileSystemException
-          if ManifestCommit.latest(path).nonEmpty => ()
-      }
     }
     ManifestCommit.read(s, path).orderBy(col("doc_id"))
   }
@@ -2533,14 +2522,12 @@ object SignalQueries {
       |SELECT doc_id, cluster_id FROM lbl ORDER BY doc_id
       |""".stripMargin)) { (s, dir) =>
     import graft.dedup.Dedup
-    import graft.sources.ManifestCommit
+    import graft.sources.{LocalFs, ManifestCommit}
     val docs = Tables.documents(s, dir)
-    val path = "/tmp/graft_profidx_v1_" +
-      CorpusQueries.sourceFingerprint(dir, "documents")
-    if (ManifestCommit.latest(path + "/labels").isEmpty) {
-      val stage = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/tmp"), "graft_profidx_stage_")
-        .toString
+    val path = CorpusQueries.storedIndexPath("profidx", dir, "documents")
+    LocalFs.publishOnce(java.nio.file.Paths.get(path),
+      p => ManifestCommit.latest(p.resolve("labels").toString).nonEmpty) { stagePath =>
+      val stage = stagePath.toString
       val oldDocs = docs.where(col("doc_id") % 5 =!= 0)
       val newDocs = docs.where(col("doc_id") % 5 === 0)
       // ingest time: profiles persisted alongside the labels
@@ -2567,15 +2554,6 @@ object SignalQueries {
         ManifestCommit.readAt(s, stage + "/profiles", oldProfG)
           .unionByName(newProf), stage + "/profiles")
       ManifestCommit.writeVersioned(merged, stage + "/labels")
-      try java.nio.file.Files.move(
-        java.nio.file.Paths.get(stage), java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.AccessDeniedException |
-             _: java.nio.file.FileSystemException
-          if ManifestCommit.latest(path + "/labels").nonEmpty => ()
-      }
     }
     ManifestCommit.read(s, path + "/labels").orderBy(col("doc_id"))
   }

@@ -574,14 +574,12 @@ object WarehouseQueries {
       |SELECT key, cents, priority FROM g2
       |ORDER BY key
       |""".stripMargin)) { (s, dir) =>
-    import graft.sources.ManifestCommit
+    import graft.sources.{LocalFs, ManifestCommit}
     val orders = Tables.orders(s, dir)
-    val path = "/tmp/graft_schema_evo_v1_" +
-      CorpusQueries.sourceFingerprint(dir, "orders")
-    if (ManifestCommit.latest(path).isEmpty) {
-      val stage = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/tmp"), "graft_schema_evo_stage_")
-        .toString
+    val path = CorpusQueries.storedIndexPath("schema_evo", dir, "orders")
+    LocalFs.publishOnce(java.nio.file.Paths.get(path),
+      p => ManifestCommit.latest(p.toString).nonEmpty) { stagePath =>
+      val stage = stagePath.toString
       val cents = (col("o_totalprice") * 100).cast("decimal(38,0)")
         .cast("long").as("cents")
       ManifestCommit.writeVersioned(
@@ -592,15 +590,6 @@ object WarehouseQueries {
           .select(col("o_orderkey").as("key"), cents,
             col("o_orderpriority").as("priority")),
         stage, mergeSchema = true)
-      try java.nio.file.Files.move(
-        java.nio.file.Paths.get(stage), java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { // lost the publish race: someone else's build won
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.AccessDeniedException |
-             _: java.nio.file.FileSystemException
-          if ManifestCommit.latest(path).nonEmpty => ()
-      }
     }
     ManifestCommit.read(s, path)
       .select(col("key"), col("cents"), col("priority"))

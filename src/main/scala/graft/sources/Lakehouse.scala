@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import scala.jdk.CollectionConverters._
 
 /** Bronze/Silver/Gold lakehouse path scheme ≙ reference
   * `src/common/paths.py:23-55`. Root is any filesystem/object-store URI.
@@ -70,8 +69,8 @@ object Lakehouse {
       spark: SparkSession,
       inputDir: String,
       lake: LakePaths): Seq[(String, String)] = {
-    val files = Files.list(Paths.get(inputDir)).iterator().asScala
-      .filter(_.toString.endsWith(".csv")).toSeq.sortBy(_.toString)
+    val files = LocalFs.list(Paths.get(inputDir))
+      .filter(_.toString.endsWith(".csv")).sortBy(_.toString)
     files.map { f =>
       val spec = DatasetRegistry.route(f.getFileName.toString)
       val out = lake.bronze(spec.lakeSubpath)
@@ -124,20 +123,9 @@ object Lakehouse {
         target.getFileName.toString + s".old-${System.nanoTime()}")
       Files.move(target, retired, StandardCopyOption.ATOMIC_MOVE)
       Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(retired)
+      LocalFs.deleteRecursively(retired)
     } else
       Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = {
-        val s = Files.list(p)
-        try s.iterator().asScala.toSeq finally s.close()
-      }
-      children.foreach(deleteRecursively)
-    }
-    Files.deleteIfExists(p)
   }
 
   /** ORC read/write — the second columnar interchange format (Spark's
@@ -156,18 +144,23 @@ object Lakehouse {
   /** S5: single-file CSV export — coalesce(1), write to a tmp dir, then
     * move the lone part file to the artifact path
     * ≙ `jobs/04_train_and_export_submission.py:49-56`. Only the final
-    * export narrows to one partition; upstream stays parallel.
+    * export narrows to one partition; upstream stays parallel. The tmp
+    * dir (and Spark's `_SUCCESS`/`.crc` leftovers in it) is deleted
+    * whether or not the export succeeds.
     */
   def exportSingleCsv(df: DataFrame, artifactPath: String): Path = {
     val tmp = Files.createTempDirectory("graft_csv_export")
-    val tmpOut = tmp.resolve("out").toString
-    df.coalesce(1).write.option("header", "true").mode(SaveMode.Overwrite).csv(tmpOut)
-    val part = Files.list(Paths.get(tmpOut)).iterator().asScala
-      .find(_.getFileName.toString.matches("part-.*\\.csv"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $tmpOut"))
-    val target = Paths.get(artifactPath)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-    target
+    try {
+      val tmpOut = tmp.resolve("out")
+      df.coalesce(1).write.option("header", "true").mode(SaveMode.Overwrite)
+        .csv(tmpOut.toString)
+      val part = LocalFs.list(tmpOut)
+        .find(_.getFileName.toString.matches("part-.*\\.csv"))
+        .getOrElse(throw new IllegalStateException(s"no part file in $tmpOut"))
+      val target = Paths.get(artifactPath)
+      if (target.getParent != null) Files.createDirectories(target.getParent)
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      target
+    } finally LocalFs.deleteRecursively(tmp)
   }
 }

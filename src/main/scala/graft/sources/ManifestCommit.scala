@@ -1,8 +1,10 @@
 package graft.sources
 import graft.Materialize.MatOps
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Manifest-committed parquet dataset — the object-store-safe commit
@@ -27,6 +29,13 @@ import scala.jdk.CollectionConverters._
   *    same role). Note the loser's manifest does NOT contain the
   *    winner's rows — last-writer-wins at dataset granularity, exactly
   *    the semantics of overwrite/upsert here.
+  *
+  * Every write path is the same two steps: [[stage]] the data files of
+  * the next generation, then [[publish]] the manifest naming them. The
+  * writers differ only in which files the manifest lists besides the
+  * staged ones: none (full rewrites), all of the previous generation's
+  * (appends) or its untouched ones ([[deleteWhere]] and [[upsert]],
+  * through one copy-on-write kernel).
   *
   * Orphans and superseded generations are reclaimed by [[vacuum]], which
   * must only run once no reader still holds an older manifest.
@@ -55,6 +64,16 @@ object ManifestCommit {
   private def manifestGen(p: Path): Long =
     p.getFileName.toString.stripPrefix(ManifestPrefix).toLong
 
+  /** `_manifest-<gen>`, `_stats-<gen>` or `_bloom-<gen>` under `dir`. */
+  private def genFile(dir: Path, prefix: String, gen: Long): Path =
+    dir.resolve(f"$prefix$gen%010d")
+
+  /** Staging name of a metadata file before its atomic publish:
+    * `.manifest-tmp-`, `.stats-tmp-`, `.bloom-tmp-` (+ a nonce). */
+  private def tmpPrefix(prefix: String): String = "." + prefix.drop(1) + "tmp-"
+
+  private def nonce(): String = java.util.UUID.randomUUID().toString.take(8)
+
   /** One zone-map row: a file's min/max for one column (None = the
     * column is all-null in that file). Values are the column's Spark
     * string cast — numeric tags parse back exactly (shortest-decimal
@@ -64,34 +83,36 @@ object ManifestCommit {
   final case class ZoneStat(file: String, column: String, typeTag: String,
       min: Option[String], max: Option[String])
 
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
+  /** Every committed manifest under `dir`, oldest generation first. */
+  private def manifests(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else LocalFs.list(dir)
+      .filter(_.getFileName.toString.startsWith(ManifestPrefix))
+      .sortBy(manifestGen)
+
+  /** A manifest's lines: part files plus "#"-prefixed metadata markers. */
+  private def linesOf(manifest: Path): Seq[String] =
+    Files.readAllLines(manifest).asScala.toSeq.filter(_.nonEmpty)
+
+  /** Latest manifest's RAW lines (files + metadata markers), one read
+    * — the ONE manifest reader every consult derives from (one
+    * LIST+GET per consult, not two). */
+  private def latestRaw(path: String): Option[(Long, Seq[String])] =
+    manifests(Paths.get(path)).lastOption.map(m => manifestGen(m) -> linesOf(m))
 
   /** Highest committed generation and its dataset-relative file list. */
-  def latest(path: String): Option[(Long, Seq[String])] = {
-    val dir = Paths.get(path)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = listDir(dir)
-      .filter(_.getFileName.toString.startsWith(ManifestPrefix))
-    if (manifests.isEmpty) None
-    else {
-      val m = manifests.maxBy(manifestGen)
-      // "#"-prefixed lines are metadata (streaming txn markers), not files
-      Some(manifestGen(m) -> Files.readAllLines(m).asScala.toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#")))
-    }
-  }
+  def latest(path: String): Option[(Long, Seq[String])] =
+    latestRaw(path).map { case (gen, lines) => gen -> filesOf(lines) }
+
+  private def latestOrFail(path: String): (Long, Seq[String]) =
+    latest(path).getOrElse(
+      throw new IllegalStateException(s"no committed manifest under $path"))
 
   /** Read the latest committed generation — and ONLY its files: orphan
     * data from crashed writers and superseded generations are invisible
     * even though they share the directory. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (gen, _) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
-    readAt(spark, path, gen)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    readAt(spark, path, latestOrFail(path)._1)
 
   /** Time travel: read a SPECIFIC committed generation (valid until a
     * vacuum reclaims it — the same contract as table-format history).
@@ -106,9 +127,9 @@ object ManifestCommit {
     * empty) reads as an empty DataFrame of the committed schema
     * rather than throwing at a polling reader. */
   def readAt(spark: SparkSession, path: String, gen: Long): DataFrame = {
-    val manifest = Paths.get(path).resolve(f"$ManifestPrefix$gen%010d")
+    val manifest = genFile(Paths.get(path), ManifestPrefix, gen)
     require(Files.exists(manifest), s"no manifest for generation $gen under $path")
-    val lines = Files.readAllLines(manifest).asScala.toSeq.filter(_.nonEmpty)
+    val lines = linesOf(manifest)
     val files = filesOf(lines)
     val schema = schemaOf(lines)
     if (files.isEmpty) schema match {
@@ -120,28 +141,121 @@ object ManifestCommit {
     else readFiles(spark, path, files, schema)
   }
 
-  /** Read a manifest's (sub)set of dataset-relative files. The
-    * basePath is the DATASET ROOT, not a generation dir: a manifest
-    * may reference files from several generations' data dirs (e.g.
-    * after [[deleteWhere]] republishes untouched files in place), and
-    * partition discovery only parses `k=v` segments, so the
-    * `data-<gen>-<nonce>` level is transparently skipped while
-    * Hive-style partition columns still come back. */
+  /** Read a manifest's (sub)set of dataset-relative files as ONE scan.
+    * A manifest may reference files from several generations' data
+    * dirs (appends, and [[deleteWhere]]/[[upsert]] republishing
+    * untouched files in place). Unpartitioned, or from one data dir,
+    * that is a plain read with the DATASET ROOT as basePath. Hive-style
+    * `k=v` subdirs under several data dirs defeat Spark's partition
+    * discovery, though: it takes each `data-<gen>-<nonce>` level for a
+    * separate table root and refuses the read. Then each data dir's
+    * partitions are discovered on their own and stated together as
+    * the partition spec of one scan over exactly `files` — partition
+    * columns, pruning and `_metadata` intact. */
   private def readFiles(spark: SparkSession, path: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val r0 = spark.read.option("basePath", Paths.get(path).toString)
-    schema.fold(r0)(r0.schema)
-      .parquet(files.map(f => Paths.get(path).resolve(f).toString): _*)
+      files: Seq[String], schema: Option[StructType] = None): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InMemoryFileIndex, LogicalRelation, PartitionSpec, PartitioningAwareFileIndex}
+    val root = Paths.get(path)
+    def scan(base: Path, fs: Seq[String]): DataFrame = {
+      val r0 = spark.read.option("basePath", base.toString)
+      schema.fold(r0)(r0.schema).parquet(fs.map(f => root.resolve(f).toString): _*)
+    }
+    val byDataDir = files.groupBy(_.takeWhile(_ != '/'))
+    if (byDataDir.size <= 1 || !files.exists(_.count(_ == '/') > 1))
+      return scan(root, files)
+    val rels = byDataDir.toSeq.map { case (d, fs) =>
+      scan(root.resolve(d), fs).queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+      }.get
+    }
+    val index = new InMemoryFileIndex(spark, rels.flatMap(_.location.rootPaths),
+      Map.empty, None, userSpecifiedPartitionSpec = Some(PartitionSpec(
+        rels.head.partitionSchema, rels.flatMap(_.location
+          .asInstanceOf[PartitioningAwareFileIndex].partitionSpec().partitions))))
+    spark.baseRelationToDataFrame(rels.head.copy(location = index)(spark))
   }
 
   /** Recursively list the part files under a data dir (partitioned
     * writes nest them in k=v subdirs). */
-  private def partFilesUnder(p: Path): Seq[Path] = listDir(p).flatMap { c =>
+  private def partFilesUnder(p: Path): Seq[Path] = LocalFs.list(p).flatMap { c =>
     if (Files.isDirectory(c)) partFilesUnder(c)
     else if (c.getFileName.toString.matches("part-.*\\.parquet")) Seq(c)
     else Seq.empty
+  }
+
+  /** The dataset-relative name of a `_metadata.file_path` URI. */
+  private def relTo(path: String): String => String = {
+    val dirAbs = Paths.get(path).toAbsolutePath.normalize.toString
+    uri => {
+      val p = if (uri.startsWith("file:")) java.net.URI.create(uri).getPath else uri
+      p.stripPrefix(dirAbs).stripPrefix("/")
+    }
+  }
+
+  /** The ONE staging kernel: write `frame` (Hive-style subdirs per
+    * `partitionBy`, so readers get partition pruning via the basePath
+    * in [[readAt]]) into a fresh `data-<gen>-<nonce>/` for the
+    * generation after `parentGen`. Returns that generation and the
+    * dataset-relative part files the write produced; nothing is
+    * visible to readers until a [[publish]] lists them. */
+  private def stage(frame: DataFrame, path: String, parentGen: Long,
+      partitionBy: Seq[String]): (Long, Seq[String]) = {
+    val dir = Paths.get(path)
+    val gen = parentGen + 1
+    val data = dir.resolve(s"data-$gen-${nonce()}")
+    val w = frame.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(data.toString)
+    gen -> partFilesUnder(data).map(p => dir.relativize(p).toString).sorted
+  }
+
+  /** Publish `lines` (files + markers) as the manifest of `firstGen`:
+    * stage the content once, then HARD LINK it onto the generation
+    * name. link(2) is atomic with the full content visible AND fails
+    * with EEXIST if a concurrent writer claimed the generation —
+    * unlike rename, which on POSIX silently REPLACES an existing
+    * target (ATOMIC_MOVE onto a taken generation would clobber the
+    * winner's manifest). The loser retries one generation higher, or
+    * with `retryOnConflict = false` fails with
+    * [[ConcurrentWriteException]]. An object store plays the same
+    * move with a conditional/if-none-match put. */
+  private def publish(path: String, lines: Seq[String], firstGen: Long,
+      retryOnConflict: Boolean = true): Long = {
+    val dir = Paths.get(path)
+    val tmp = dir.resolve(tmpPrefix(ManifestPrefix) + nonce())
+    Files.write(tmp, lines.asJava)
+    var gen = firstGen
+    var committed = -1L
+    try {
+      while (committed < 0) {
+        try {
+          Files.createLink(genFile(dir, ManifestPrefix, gen), tmp)
+          committed = gen
+        } catch {
+          case _: FileAlreadyExistsException if retryOnConflict => gen += 1
+          case _: FileAlreadyExistsException =>
+            throw new ConcurrentWriteException(
+              s"generation $gen was claimed by a concurrent writer under " +
+                s"$dir — this transaction's staged files are an orphan; " +
+                "re-read and retry")
+        }
+      }
+    } finally Files.deleteIfExists(tmp)
+    committed
+  }
+
+  /** Publish the `_stats-`/`_bloom-` sidecar of committed generation
+    * `gen`: temp-write, then atomic move. The generation name is
+    * already uniquely claimed by its manifest link, so the move cannot
+    * race another writer. */
+  private def writeSidecar(path: String, prefix: String, gen: Long,
+      lines: Seq[String]): Long = {
+    val dir = Paths.get(path)
+    val tmp = dir.resolve(tmpPrefix(prefix) + nonce())
+    Files.write(tmp, lines.asJava)
+    Files.move(tmp, genFile(dir, prefix, gen), StandardCopyOption.ATOMIC_MOVE)
+    gen
   }
 
   /** Write `df` as a new generation and publish it. Returns the committed
@@ -183,9 +297,8 @@ object ManifestCommit {
       exclusiveParent = Some(expectedParentGen.getOrElse(current)))
   }
 
-  /** The ONE stage-and-publish body (gen/nonce/data-dir naming, the
-    * partitioned write, part discovery, marker carry, atomic publish)
-    * shared by [[writeVersioned]] and [[writeVersionedChecked]] —
+  /** The full-rewrite body shared by [[writeVersioned]],
+    * [[writeVersionedExclusive]] and [[writeVersionedChecked]] —
     * `afterWrite` runs between the data write and the publish and may
     * THROW to abort with the staged files left as an invisible,
     * vacuumable orphan. */
@@ -195,21 +308,11 @@ object ManifestCommit {
       partitionBy: Seq[String],
       afterWrite: () => Unit,
       exclusiveParent: Option[Long] = None): Long = {
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
-    val firstGen =
-      exclusiveParent.map(_ + 1)
-        .getOrElse(latest(path).map(_._1).getOrElse(0L) + 1)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"data-$firstGen-$nonce"
-    val writer = frame.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir.resolve(dataDir).toString)
+    val (gen, parts) = stage(frame, path,
+      exclusiveParent.getOrElse(latest(path).fold(0L)(_._1)), partitionBy)
     afterWrite()
-    val parts = partFilesUnder(dir.resolve(dataDir))
-      .map(p => dir.relativize(p).toString)
-      .sorted
-    require(parts.nonEmpty, s"parquet write produced no part files in $dataDir")
+    require(parts.nonEmpty,
+      s"parquet write produced no part files for generation $gen under $path")
     // carry the streaming txn ledger through full rewrites too — a
     // maintenance write must not reopen the door to batch replays.
     // The OLD #schema marker is not carried (a rewrite may narrow the
@@ -218,10 +321,9 @@ object ManifestCommit {
     // the footer-scan fallback — without it, every streaming batch
     // after a compact/writeVersioned pays a readFiles footer pass over
     // the whole table to re-infer what this write already knew.
-    publish(dir,
+    publish(path,
       parts ++ carriedMarkers(path) :+ schemaMarker(nullable(frame.schema)),
-      firstGen, nonce,
-      retryOnConflict = exclusiveParent.isEmpty)
+      gen, retryOnConflict = exclusiveParent.isEmpty)
   }
 
   /** Write-audit-publish: the data files are written and the quality
@@ -261,29 +363,11 @@ object ManifestCommit {
     finally obs.close()
   }
 
-  /** Latest manifest's RAW lines (files + metadata markers), one read
-    * — the shared parse [[latest]]/[[committedTxns]]/[[appendBatch]]
-    * derive from (one LIST+GET per consult, not two). */
-  private def latestRaw(path: String): Option[(Long, Seq[String])] = {
-    val dir = Paths.get(path)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = listDir(dir)
-      .filter(_.getFileName.toString.startsWith(ManifestPrefix))
-    if (manifests.isEmpty) None
-    else {
-      val m = manifests.maxBy(manifestGen)
-      Some(manifestGen(m) ->
-        Files.readAllLines(m).asScala.toSeq.filter(_.nonEmpty))
-    }
-  }
-
   private def txnsOf(lines: Seq[String]): Set[String] =
     lines.filter(_.startsWith(TxnPrefix)).map(_.stripPrefix(TxnPrefix)).toSet
 
   private def filesOf(lines: Seq[String]): Seq[String] =
     lines.filterNot(_.startsWith("#"))
-
-  import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
   /** Decode a manifest's committed-schema marker (base64 of the Spark
     * schema JSON — one line, no '#'/newline hazards). */
@@ -312,20 +396,6 @@ object ManifestCommit {
   def tableSchema(path: String): Option[StructType] =
     latestRaw(path).flatMap(r => schemaOf(r._2))
 
-  /** Schema marker line(s) a same-schema successor manifest must carry
-    * (delete/upsert republish a SUBSET of mixed-schema files, so the
-    * committed schema stays load-bearing). Full rewrites do not carry
-    * the OLD marker — stageAndPublish commits a FRESH one from the
-    * written frame, keeping the next appendBatch off the footer-scan
-    * fallback. */
-  private def carriedSchemaLine(path: String): Seq[String] =
-    latestRaw(path).toSeq.flatMap(r =>
-      r._2.find(_.startsWith(SchemaPrefix)))
-
-  /** Delta-style mergeSchema: same-name fields must type-match exactly
-    * (loud failure otherwise), table-absent append columns are
-    * appended, append-absent table columns stay (old files simply
-    * lack them). Everything lands nullable. */
   /** Type equality modulo nullability at EVERY nesting level: a
     * parquet read-back infers array<int> containsNull=true where the
     * in-memory frame that wrote it said containsNull=false — that is
@@ -346,6 +416,10 @@ object ManifestCommit {
       case _ => a == b
     }
 
+  /** Delta-style mergeSchema: same-name fields must type-match exactly
+    * (loud failure otherwise), table-absent append columns are
+    * appended, append-absent table columns stay (old files simply
+    * lack them). Everything lands nullable. */
   private def mergeSchemas(prev: StructType, next: StructType,
       allowNew: Boolean): StructType = {
     val byName = prev.fields.map(f => f.name -> f).toMap
@@ -406,49 +480,11 @@ object ManifestCommit {
     require(appId.nonEmpty && !appId.contains(":") && !appId.contains("\n"),
       s"appId must be non-empty without ':' or newline: '$appId'")
     val key = s"$appId:$batchId"
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
     // ONE manifest read serves both the replay check and the file list
     val prev = latestRaw(path)
-    val prevTxns = prev.map(r => txnsOf(r._2)).getOrElse(Set.empty)
-    if (prevTxns.contains(key)) return None
-    val prevFiles = prev.map(r => filesOf(r._2)).getOrElse(Seq.empty)
-    val firstGen = prev.map(_._1).getOrElse(0L) + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"data-$firstGen-$nonce"
-    val writer = batch.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir.resolve(dataDir).toString)
-    // an EMPTY partitioned batch writes no part files (dynamic-partition
-    // writers open files on the first row) — that is a legal streaming
-    // micro-batch, and it must still COMMIT its marker or the query
-    // crashes here and replays forever; publish a marker-only
-    // generation carrying the previous files
-    val newParts = partFilesUnder(dir.resolve(dataDir))
-      .map(p => dir.relativize(p).toString)
-    // persist the committed schema with every streaming append: a
-    // marker-only generation (legal first empty batch) must still read
-    // back as an EMPTY frame of the right shape at a polling reader,
-    // not as "manifest lists no files". When the previous manifest has
-    // no marker but DOES list files (writeVersioned tables, or any
-    // table after compact/stageAndPublish, which intentionally drop
-    // it), the batch schema alone is NOT authoritative — a narrower
-    // batch would commit a schema that hides existing columns on every
-    // later readAt. Mirror appendVersioned: infer the prior schema
-    // from the files and merge (type conflicts fail loudly; batch-new
-    // columns widen, prior columns stay).
-    val prevSchema = prev.flatMap(r => schemaOf(r._2)).orElse(
-      if (prevFiles.nonEmpty)
-        Some(readFiles(batch.sparkSession, path, prevFiles).schema)
-      else None)
-    val schemaLine = schemaMarker(prevSchema match {
-      case None => nullable(batch.schema)
-      case Some(ps) => mergeSchemas(ps, batch.schema, allowNew = true)
-    })
-    val markers = (prevTxns + key).toSeq.sorted.map(TxnPrefix + _) :+
-      schemaLine
-    Some(publish(dir, (prevFiles ++ newParts).sorted ++ markers,
-      firstGen, nonce))
+    if (prev.exists(r => txnsOf(r._2).contains(key))) None
+    else Some(append(batch, path, partitionBy, prev, allowNew = true,
+      txn = Some(key), retryOnConflict = true))
   }
 
   /** Batch APPEND as a new generation (previous files re-referenced +
@@ -466,69 +502,45 @@ object ManifestCommit {
     * winner's appended files — re-call to rebase and retry. */
   def appendVersioned(df: DataFrame, path: String,
       partitionBy: Seq[String] = Seq.empty,
-      mergeSchema: Boolean = false): Long = {
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
-    val prev = latestRaw(path)
-    val prevFiles = prev.map(r => filesOf(r._2)).getOrElse(Seq.empty)
-    val prevSchema = prev.flatMap(r => schemaOf(r._2)).orElse(
-      if (prevFiles.nonEmpty)
-        Some(readFiles(df.sparkSession, path, prevFiles).schema)
-      else None)
-    val committed = prevSchema match {
-      case None => nullable(df.schema)
-      case Some(ps) => mergeSchemas(ps, df.schema, allowNew = mergeSchema)
-    }
-    val firstGen = prev.map(_._1).getOrElse(0L) + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"data-$firstGen-$nonce"
-    val writer = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir.resolve(dataDir).toString)
-    val newParts = partFilesUnder(dir.resolve(dataDir))
-      .map(p => dir.relativize(p).toString)
-    // NO conflict retry: this manifest's file list was built from the
+      mergeSchema: Boolean = false): Long =
+    // NO conflict retry: this manifest's file list is built from the
     // generation read at entry, so re-publishing one generation higher
     // after losing a race would silently DROP the winner's files (a
     // lost update — the exact anomaly writeVersionedExclusive exists
     // to prevent). A loser fails loudly; re-call appendVersioned to
     // rebase on the new latest.
-    publish(dir,
-      (prevFiles ++ newParts).sorted ++ carriedMarkers(path) :+
-        schemaMarker(committed),
-      firstGen, nonce, retryOnConflict = false)
-  }
+    append(df, path, partitionBy, latestRaw(path), allowNew = mergeSchema,
+      txn = None, retryOnConflict = false)
 
-  /** Stage the manifest content once, then publish by HARD LINK onto
-    * the generation name: link(2) is atomic with the full content
-    * visible AND fails with EEXIST if a concurrent writer claimed the
-    * generation — unlike rename, which on POSIX silently REPLACES an
-    * existing target (ATOMIC_MOVE onto a taken generation would
-    * clobber the winner's manifest). The loser retries one generation
-    * higher. An object store plays the same move with a
-    * conditional/if-none-match put. */
-  private def publish(dir: Path, parts: Seq[String], firstGen: Long,
-      nonce: String, retryOnConflict: Boolean = true): Long = {
-    val tmp = dir.resolve(s".manifest-tmp-$nonce")
-    Files.write(tmp, parts.asJava)
-    var gen = firstGen
-    var committed = -1L
-    try {
-      while (committed < 0) {
-        try {
-          Files.createLink(dir.resolve(f"$ManifestPrefix$gen%010d"), tmp)
-          committed = gen
-        } catch {
-          case _: FileAlreadyExistsException if retryOnConflict => gen += 1
-          case _: FileAlreadyExistsException =>
-            throw new ConcurrentWriteException(
-              s"generation $gen was claimed by a concurrent writer under " +
-                s"$dir — this transaction's staged files are an orphan; " +
-                "re-read and retry")
-        }
-      }
-    } finally Files.deleteIfExists(tmp)
-    committed
+  /** The append body shared by [[appendBatch]] and [[appendVersioned]]:
+    * the new generation lists `prev`'s files + `df`'s, carries `prev`'s
+    * txn markers (+ `txn`), and commits the merged schema.
+    *
+    * The committed schema is persisted with every append: a
+    * marker-only generation (an EMPTY partitioned batch writes no part
+    * files, and it must still commit its marker or a streaming query
+    * replays it forever) must read back as an EMPTY frame of the right
+    * shape at a polling reader, not as "manifest lists no files". When
+    * `prev` has no marker but DOES list files (pre-marker tables), the
+    * appended schema alone is NOT authoritative — a narrower batch
+    * would commit a schema that hides existing columns on every later
+    * readAt — so the prior schema is inferred from the files and
+    * merged (type conflicts fail loudly, before any data is written). */
+  private def append(df: DataFrame, path: String, partitionBy: Seq[String],
+      prev: Option[(Long, Seq[String])], allowNew: Boolean,
+      txn: Option[String], retryOnConflict: Boolean): Long = {
+    val prevLines = prev.fold(Seq.empty[String])(_._2)
+    val prevFiles = filesOf(prevLines)
+    val committed = schemaOf(prevLines).orElse(
+      if (prevFiles.nonEmpty)
+        Some(readFiles(df.sparkSession, path, prevFiles).schema)
+      else None
+    ).fold(nullable(df.schema))(mergeSchemas(_, df.schema, allowNew))
+    val (gen, newParts) = stage(df, path, prev.fold(0L)(_._1), partitionBy)
+    val markers = (txnsOf(prevLines) ++ txn).toSeq.sorted.map(TxnPrefix + _)
+    publish(path,
+      (prevFiles ++ newParts).sorted ++ markers :+ schemaMarker(committed),
+      gen, retryOnConflict)
   }
 
   /** Write a new generation AND collect per-file zone maps (min/max of
@@ -551,7 +563,7 @@ object ManifestCommit {
     val committed = readAt(spark, path, gen)
     val tags = committed.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
     statsCols.foreach(c => require(tags.contains(c), s"no column $c to collect stats for"))
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.{max, min}
     val aggs = statsCols.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")))
@@ -560,11 +572,7 @@ object ManifestCommit {
       .groupBy(col("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one row per part file — manifest-sized, not data-sized
-    val dirAbs = Paths.get(path).toAbsolutePath.normalize.toString
-    def rel(uri: String): String = {
-      val p = if (uri.startsWith("file:")) java.net.URI.create(uri).getPath else uri
-      p.stripPrefix(dirAbs).stripPrefix("/")
-    }
+    val rel = relTo(path)
     def b64(v: String): String = java.util.Base64.getEncoder
       .encodeToString(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val lines = rows.flatMap { r =>
@@ -575,14 +583,7 @@ object ManifestCommit {
         s"$file\t$c\t${tags(c)}\t$mn\t$mx"
       }
     }.sorted.toSeq
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(s".stats-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, lines.asJava)
-    // the generation name is already uniquely claimed by the manifest
-    // link, so a plain atomic move cannot race another writer
-    Files.move(tmp, dir.resolve(f"$StatsPrefix$gen%010d"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    gen
+    writeSidecar(path, StatsPrefix, gen, lines)
   }
 
   /** Build a per-file BLOOM index sidecar `_bloom-<gen>` over an
@@ -601,13 +602,12 @@ object ManifestCommit {
   def writeBloomIndex(spark: SparkSession, path: String, column: String,
       fpp: Double = 0.01): Long = {
     require(fpp > 0 && fpp < 1, s"fpp in (0,1): $fpp")
-    val (gen, files) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val (gen, files) = latestOrFail(path)
     val dir = Paths.get(path)
     val lines = files.sorted.map { f =>
       val one = spark.read.parquet(dir.resolve(f).toString)
-        .select(org.apache.spark.sql.functions.col(column))
-        .where(org.apache.spark.sql.functions.col(column).isNotNull)
+        .select(col(column))
+        .where(col(column).isNotNull)
       val n = one.count()
       val bloom = one.stat.bloomFilter(column, math.max(n, 1L), fpp)
       val bos = new java.io.ByteArrayOutputStream()
@@ -615,11 +615,7 @@ object ManifestCommit {
       val b = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
       s"$f\t$column\t$b"
     }
-    val tmp = dir.resolve(s".bloom-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, dir.resolve(f"$BloomPrefix$gen%010d"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    gen
+    writeSidecar(path, BloomPrefix, gen, lines)
   }
 
   /** The files of the latest generation that MIGHT contain
@@ -629,17 +625,15 @@ object ManifestCommit {
     */
   def prunePoint(path: String, column: String,
       value: Long): (Seq[String], Seq[String]) = {
-    val (gen, files) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
-    val f = Paths.get(path).resolve(f"$BloomPrefix$gen%010d")
+    val (gen, files) = latestOrFail(path)
+    val f = genFile(Paths.get(path), BloomPrefix, gen)
     if (!Files.exists(f)) return (files, Seq.empty)
-    val blooms = Files.readAllLines(f).asScala.filter(_.nonEmpty).flatMap {
-      l =>
-        val Array(file, c, b) = l.split("\t", 3)
-        if (c != column) None
-        else Some(file -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(
-            java.util.Base64.getDecoder.decode(b))))
+    val blooms = linesOf(f).flatMap { l =>
+      val Array(file, c, b) = l.split("\t", 3)
+      if (c != column) None
+      else Some(file -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(
+          java.util.Base64.getDecoder.decode(b))))
     }.toMap
     files.partition(f => blooms.get(f).forall(_.mightContainLong(value)))
   }
@@ -649,21 +643,26 @@ object ManifestCommit {
     * result correct at any false-positive rate (and pushes into the
     * parquet scan for row-group pruning inside kept files). */
   def readPoint(spark: SparkSession, path: String, column: String,
-      value: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _) = prunePoint(path, column, value)
-    val residual = col(column) === lit(value)
-    if (kept.nonEmpty) readFiles(spark, path, kept, tableSchema(path))
-      .where(residual)
+      value: Long): DataFrame =
+    readKept(spark, path, prunePoint(path, column, value)._1,
+      col(column) === lit(value))
+
+  /** The pruned read of [[readPoint]]/[[readBetween]]: the `kept` files
+    * under the committed schema, filtered by the exact `residual`.
+    * When nothing is kept, the manifest's files are read with a
+    * constant-false filter instead (the schema still comes back;
+    * parquet pushdown scans no row groups). */
+  private def readKept(spark: SparkSession, path: String, kept: Seq[String],
+      residual: Column): DataFrame =
+    if (kept.nonEmpty) readFiles(spark, path, kept, tableSchema(path)).where(residual)
     else read(spark, path).where(residual && lit(false))
-  }
 
   /** Zone maps of a committed generation, or None when the sidecar is
     * absent (plain [[writeVersioned]], or a crash before the sidecar). */
   def stats(path: String, gen: Long): Option[Seq[ZoneStat]] = {
-    val f = Paths.get(path).resolve(f"$StatsPrefix$gen%010d")
+    val f = genFile(Paths.get(path), StatsPrefix, gen)
     if (!Files.exists(f)) None
-    else Some(Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map { l =>
+    else Some(linesOf(f).map { l =>
       val Array(file, c, tag, mn, mx) = l.split("\t", 5)
       def un(v: String): Option[String] =
         if (v == "-") None
@@ -719,8 +718,7 @@ object ManifestCommit {
     * Files without a stat row for `column` are always kept. */
   def pruneBetween(path: String, column: String,
       lo: Any, hi: Any): (Seq[String], Seq[String]) = {
-    val (gen, files) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val (gen, files) = latestOrFail(path)
     stats(path, gen) match {
       case None => (files, Seq.empty)
       case Some(zs) =>
@@ -741,38 +739,43 @@ object ManifestCommit {
     * parquet scan for row-group pruning inside kept files). Falls back
     * to a full-file-list scan when no sidecar exists. */
   def readBetween(spark: SparkSession, path: String, column: String,
-      lo: Any, hi: Any): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _) = pruneBetween(path, column, lo, hi)
-    val residual = col(column) >= lit(lo) && col(column) <= lit(hi)
-    if (kept.nonEmpty) {
-      readFiles(spark, path, kept, tableSchema(path)).where(residual)
-    } else {
-      // nothing can match: read the schema from the manifest's files
-      // with a constant-false filter (parquet pushdown scans no groups)
-      read(spark, path).where(residual && lit(false))
-    }
-  }
+      lo: Any, hi: Any): DataFrame =
+    readKept(spark, path, pruneBetween(path, column, lo, hi)._1,
+      col(column) >= lit(lo) && col(column) <= lit(hi))
 
-  /** Keyed upsert ≙ [[Lakehouse.upsertParquet]] semantics (incoming rows
-    * replace same-key rows, everything else survives) on the manifest
-    * protocol: the merged frame READS the current generation's files and
-    * WRITES only new ones, so no staging swap is needed — the published
-    * state flips with the manifest commit. */
-  def upsert(
-      spark: SparkSession,
-      incoming: DataFrame,
-      keyCols: Seq[String],
-      path: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val merged = latest(path) match {
-      case Some(_) =>
-        read(spark, path)
-          .join(incoming.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(incoming)
-      case None => incoming
-    }
-    writeVersioned(merged, path)
+  /** The copy-on-write kernel of [[deleteWhere]] and [[upsert]]: only
+    * the files holding affected rows rewrite, every other file of the
+    * latest generation is referenced in place by the new manifest,
+    * byte-identical and never copied. `hits` maps the committed rows
+    * (read under the committed schema, hidden `_metadata` still
+    * resolvable) to the `_metadata.file_path` of every row that forces
+    * its file's rewrite. `rewrite` maps the affected files' rows (None
+    * when no file is affected) to the rows written in their place (None
+    * when there are none). With no file affected and nothing to write,
+    * the current generation is returned and nothing is published.
+    * The successor manifest carries the txn markers and the committed
+    * schema: rewritten rows materialize the FULL schema while untouched
+    * files keep their old one, so the schema marker stays load-bearing.
+    */
+  private def copyOnWrite(spark: SparkSession, path: String,
+      partitionBy: Seq[String], hits: DataFrame => DataFrame)(
+      rewrite: Option[DataFrame] => Option[DataFrame]): Long = {
+    val (gen, lines) = latestRaw(path).getOrElse(
+      throw new IllegalStateException(s"no committed manifest under $path"))
+    val (files, stored, rel) = (filesOf(lines), schemaOf(lines), relTo(path))
+    val affected = hits(readFiles(spark, path, files, stored))
+      .distinct().collect().map(r => rel(r.getString(0))).toSet
+    val rows = rewrite(
+      if (affected.isEmpty) None
+      else Some(readFiles(spark, path, affected.toSeq.sorted, stored)))
+    if (affected.isEmpty && rows.isEmpty) return gen
+    val newParts = rows.fold(Seq.empty[String])(stage(_, path, gen, partitionBy)._2)
+    val manifest = (files.filterNot(affected) ++ newParts).sorted
+    require(manifest.nonEmpty,
+      "deleteWhere would delete every row of every file; write an empty " +
+        "generation explicitly if that is intended")
+    publish(path, manifest ++ txnsOf(lines).toSeq.sorted.map(TxnPrefix + _) ++
+      lines.find(_.startsWith(SchemaPrefix)), gen + 1)
   }
 
   /** Copy-on-write DELETE: remove every row of the latest generation
@@ -798,103 +801,46 @@ object ManifestCommit {
     * matches.
     */
   def deleteWhere(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column,
+      condition: Column,
       partitionBy: Seq[String] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val (gen, files) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
-    val dir = Paths.get(path)
-    val dirAbs = dir.toAbsolutePath.normalize.toString
-    def rel(uri: String): String = {
-      val p = if (uri.startsWith("file:")) java.net.URI.create(uri).getPath
-        else uri
-      p.stripPrefix(dirAbs).stripPrefix("/")
+    import org.apache.spark.sql.functions.{coalesce, not}
+    copyOnWrite(spark, path, partitionBy,
+      _.where(condition).select(col("_metadata.file_path"))) {
+      _.map(_.where(not(coalesce(condition, lit(false))))).filterNot(_.isEmpty)
     }
-    // honor the committed schema (mixed-schema tables): rewritten
-    // survivors materialize the FULL schema, untouched files keep
-    // their old one, and the carried #schema marker stays load-bearing
-    val stored = tableSchema(path)
-    val affected = readFiles(spark, path, files, stored)
-      .where(condition)
-      .select(col("_metadata.file_path"))
-      .distinct().collect().map(r => rel(r.getString(0))).toSet
-    if (affected.isEmpty) return gen
-    val untouched = files.filterNot(affected)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val survivors = readFiles(spark, path, affected.toSeq.sorted, stored)
-      .where(not(coalesce(condition, lit(false))))
-    val newParts =
-      if (survivors.isEmpty) Seq.empty
-      else {
-        val dataDir = s"data-${gen + 1}-$nonce"
-        val w = survivors.write.mode(SaveMode.Overwrite)
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-          .parquet(dir.resolve(dataDir).toString)
-        partFilesUnder(dir.resolve(dataDir))
-          .map(p => dir.relativize(p).toString)
-      }
-    val manifest = (untouched ++ newParts).sorted
-    require(manifest.nonEmpty,
-      "deleteWhere would delete every row of every file; write an empty " +
-        "generation explicitly if that is intended")
-    publish(dir, manifest ++ carriedMarkers(path) ++
-      carriedSchemaLine(path), gen + 1, nonce)
   }
 
-  /** Copy-on-write keyed UPSERT — [[upsert]]'s semantics (incoming
-    * rows replace same-key rows) at [[deleteWhere]]'s cost: only the
-    * files CONTAINING a matched key rewrite; everything else is
-    * referenced in place. The plain [[upsert]] rewrites the whole
-    * dataset every run — correct, but at 100 TB the nightly 0.1%
-    * upsert must touch 0.1% of files (clustered layouts make the
-    * affected set small), not 100%.
+  /** Copy-on-write keyed UPSERT ≙ [[Lakehouse.upsertParquet]] semantics
+    * (incoming rows replace same-key rows, everything else survives)
+    * at [[deleteWhere]]'s cost: only the files CONTAINING a matched key
+    * rewrite; everything else is referenced in place. At 100 TB the
+    * nightly 0.1% upsert must touch 0.1% of files (clustered layouts
+    * make the affected set small), not 100%. The first upsert into an
+    * absent table is a plain [[writeVersioned]].
     *
     * The affected-file probe is one `_metadata`-projected semi join
     * against the (broadcastable) incoming key set; survivors of the
     * affected files are anti-joined on the key and rewritten together
-    * with ALL incoming rows into the new data dir.
+    * with ALL incoming rows into the new data dir (Hive-style subdirs
+    * per `partitionBy`, which must match the table's layout).
     */
-  def upsertByKey(
+  def upsert(
       spark: SparkSession,
       incoming: DataFrame,
-      keyCol: String,
+      keyCols: Seq[String],
       path: String,
       partitionBy: Seq[String] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.col
-    val (gen, files) = latest(path).getOrElse {
-      return writeVersioned(incoming, path, partitionBy)
-    }
-    val dir = Paths.get(path)
-    val dirAbs = dir.toAbsolutePath.normalize.toString
-    def rel(uri: String): String = {
-      val p = if (uri.startsWith("file:")) java.net.URI.create(uri).getPath
-        else uri
-      p.stripPrefix(dirAbs).stripPrefix("/")
-    }
-    val keys = incoming.select(col(keyCol)).distinct().materialize()
-    val stored = tableSchema(path) // mixed-schema tables read committed
+    if (latest(path).isEmpty) return writeVersioned(incoming, path, partitionBy)
+    val keys = incoming.select(keyCols.map(col): _*).distinct().materialize()
     // project the hidden _metadata column BEFORE the join — it only
     // resolves against the file-source relation itself
-    val affected = readFiles(spark, path, files, stored)
-      .select(col("_metadata.file_path").as("__file"), col(keyCol))
-      .join(keys, Seq(keyCol), "left_semi")
-      .select(col("__file"))
-      .distinct().collect().map(r => rel(r.getString(0))).toSet
-    val untouched = files.filterNot(affected)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val survivors =
-      if (affected.isEmpty) incoming
-      else readFiles(spark, path, affected.toSeq.sorted, stored)
-        .join(keys, Seq(keyCol), "left_anti")
-        .unionByName(incoming)
-    val dataDir = s"data-${gen + 1}-$nonce"
-    val w = survivors.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dir.resolve(dataDir).toString)
-    val newParts = partFilesUnder(dir.resolve(dataDir))
-      .map(p => dir.relativize(p).toString)
-    publish(dir, (untouched ++ newParts).sorted ++ carriedMarkers(path) ++
-      carriedSchemaLine(path), gen + 1, nonce)
+    copyOnWrite(spark, path, partitionBy,
+      _.select(col("_metadata.file_path").as("__file") +: keyCols.map(col): _*)
+        .join(keys, keyCols, "left_semi")
+        .select(col("__file"))) { affected =>
+      Some(affected.fold(incoming)(
+        _.join(keys, keyCols, "left_anti").unionByName(incoming)))
+    }
   }
 
   /** Compact the latest generation's small files into ~`targetBytes`
@@ -928,8 +874,7 @@ object ManifestCommit {
       layout: (DataFrame, Int) => DataFrame =
         (df, n) => df.repartition(n)): Long = {
     require(targetBytes > 0, s"targetBytes must be > 0: $targetBytes")
-    val (gen, files) = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val (gen, files) = latestOrFail(path)
     val dir = Paths.get(path)
     val totalBytes = files.map(f => Files.size(dir.resolve(f))).sum
     val nTarget = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
@@ -992,16 +937,10 @@ object ManifestCommit {
   def expireGenerations(path: String, keepLast: Int): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
     val dir = Paths.get(path)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val manifests = listDir(dir)
-      .filter(_.getFileName.toString.startsWith(ManifestPrefix))
-      .sortBy(manifestGen)
-    if (manifests.size <= keepLast) return Seq.empty
-    val (expired, survivors) =
-      manifests.splitAt(manifests.size - keepLast)
-    def filesIn(m: Path): Seq[String] =
-      Files.readAllLines(m).asScala.toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
+    val all = manifests(dir)
+    if (all.size <= keepLast) return Seq.empty
+    val (expired, survivors) = all.splitAt(all.size - keepLast)
+    def filesIn(m: Path): Seq[String] = filesOf(linesOf(m))
     val keepFiles =
       survivors.flatMap(filesIn).map(f => dir.resolve(f).normalize).toSet
     val removed = Seq.newBuilder[String]
@@ -1016,19 +955,11 @@ object ManifestCommit {
     val expiredFiles = expired.flatMap(filesIn).distinct
     expired.foreach { m =>
       val gen = manifestGen(m)
-      Seq(m, dir.resolve(f"$StatsPrefix$gen%010d"),
-        dir.resolve(f"$BloomPrefix$gen%010d")).foreach { p =>
-        if (Files.exists(p)) {
-          Files.delete(p); removed += p.getFileName.toString
-        }
-      }
+      Seq(m, genFile(dir, StatsPrefix, gen), genFile(dir, BloomPrefix, gen))
+        .filter(Files.deleteIfExists).foreach(removed += _.getFileName.toString)
     }
-    expiredFiles.foreach { f =>
-      val p = dir.resolve(f).normalize
-      if (!keepFiles.contains(p) && Files.exists(p)) {
-        Files.delete(p); removed += f
-      }
-    }
+    expiredFiles.filterNot(f => keepFiles.contains(dir.resolve(f).normalize))
+      .filter(f => Files.deleteIfExists(dir.resolve(f))).foreach(removed += _)
     removed.result()
   }
 
@@ -1042,40 +973,35 @@ object ManifestCommit {
     * vacuum horizon). */
   def vacuum(path: String): Seq[String] = {
     val dir = Paths.get(path)
+    val metaPrefixes = Seq(ManifestPrefix, StatsPrefix, BloomPrefix)
     latest(path) match {
       case None => Seq.empty
       case Some((gen, files)) =>
-        val keep = files.map(f => dir.resolve(f).normalize).toSet +
-          dir.resolve(f"$ManifestPrefix$gen%010d").normalize +
-          dir.resolve(f"$StatsPrefix$gen%010d").normalize +
-          dir.resolve(f"$BloomPrefix$gen%010d").normalize
+        val keep = files.map(f => dir.resolve(f).normalize).toSet ++
+          metaPrefixes.map(genFile(dir, _, gen).normalize)
         // the generation's TOP data dir is the first segment of each
         // entry — file parents may be partition subdirs (Season=.../)
         val keepDataDirs =
           files.map(f => dir.resolve(f.takeWhile(_ != '/')).normalize).toSet
         val removed = Seq.newBuilder[String]
-        def dropUnreferencedParts(p: Path): Unit = listDir(p).foreach { f =>
+        def dropUnreferencedParts(p: Path): Unit = LocalFs.list(p).foreach { f =>
           if (Files.isDirectory(f)) dropUnreferencedParts(f)
           else if (f.getFileName.toString.matches("part-.*\\.parquet") &&
             !keep.contains(f.normalize)) {
             Files.delete(f); removed += dir.relativize(f).toString
           }
         }
-        listDir(dir).foreach { child =>
+        LocalFs.list(dir).foreach { child =>
           val name = child.getFileName.toString
-          if (((name.startsWith(ManifestPrefix) || name.startsWith(StatsPrefix)
-              || name.startsWith(BloomPrefix))
-              && !keep.contains(child.normalize))
-            || name.startsWith(".manifest-tmp-")
-            || name.startsWith(".stats-tmp-")
-            || name.startsWith(".bloom-tmp-")) {
+          if ((metaPrefixes.exists(name.startsWith) && !keep.contains(child.normalize))
+              || metaPrefixes.exists(p => name.startsWith(tmpPrefix(p)))) {
             Files.delete(child); removed += name
           } else if (name.startsWith("data-") && !keepDataDirs.contains(child.normalize)) {
             // crashed writers leave nested _temporary/... trees — delete
             // recursively, not just one level
-            deleteRecursively(child)
+            LocalFs.deleteRecursively(child)
             removed += name
-          } else if (name.startsWith("data-") && keepDataDirs.contains(child.normalize)) {
+          } else if (name.startsWith("data-")) {
             // referenced dir: drop only unreferenced part files inside
             // (recursing into partition subdirs; _SUCCESS markers stay,
             // harmless)
@@ -1084,11 +1010,6 @@ object ManifestCommit {
         }
         removed.result().sorted
     }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   /** One schema-drift finding between two generations. `change` is

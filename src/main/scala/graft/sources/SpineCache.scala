@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.io.File
-import java.security.MessageDigest
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Disk-backed SPINE TABLES: expensive intermediates that many
@@ -27,12 +26,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     is exact, so results are bit-identical with or without the
   *     cache (the DuckDB oracle recomputes from scratch either way —
   *     the gate re-proves it);
-  *   - publication is atomic (write to a temp dir, rename into
-  *     place); a concurrent builder loses the rename race and reads
+  *   - publication is [[LocalFs.publishOnce]]: the build writes a
+  *     dot-prefixed staging dir that is renamed into place, so
+  *     published spines are the only non-dot entries under the cache
+  *     root; a concurrent builder loses the rename race and reads
   *     the winner's table, and a rename that fails for any OTHER
   *     reason (permissions, tmpdir device surprise) fails LOUDLY with
   *     the real cause instead of a downstream path-not-found (ADVICE
-  *     r10). A failed build leaves only a temp dir, never a
+  *     r10). A failed build leaves nothing behind, never a
   *     half-published spine.
   *
   * At cluster scale the same pattern writes to the object store via
@@ -48,30 +49,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cross-run memo. */
 object SpineCache {
 
-  private lazy val cacheRoot: File = {
-    val f = new File(sys.props("java.io.tmpdir"),
+  private lazy val cacheRoot: Path = {
+    val p = Paths.get(sys.props("java.io.tmpdir"),
       s"graft_spines_${ProcessHandle.current().pid()}_" +
         java.lang.Long.toHexString(System.nanoTime()))
-    f.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(f)))
-    f
-  }
-
-  private def sha(s: String): String =
-    MessageDigest.getInstance("SHA-1").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  /** Source-data fingerprint: mtime + length of the named source
-    * table file/dir under `dir` (regeneration changes both). */
-  private def fingerprint(dir: String, sourceTable: String): String = {
-    val f = new File(dir, s"$sourceTable.parquet")
-    s"${f.getAbsolutePath}|${f.lastModified}|${f.length}"
-  }
-
-  private def deleteRec(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRec)
-    f.delete(): Unit
+    Files.createDirectories(p)
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => LocalFs.deleteRecursively(p)))
+    p
   }
 
   /** The spine named `name` over `dir`, built from `sourceTables`
@@ -82,24 +67,10 @@ object SpineCache {
       sourceTables: Seq[String], version: Int = 1)
       (build: => DataFrame): DataFrame =
     synchronized {
-      val fps = sourceTables.map(fingerprint(dir, _)).mkString(";")
-      val key = sha(s"$dir|$fps|v$version").take(16)
-      val path = new File(cacheRoot, s"${name}_$key")
-      if (!new File(path, "_SUCCESS").exists()) {
-        val tmp = new File(cacheRoot,
-          s".${name}_${key}_tmp_${System.nanoTime()}")
-        build.write.mode("overwrite").parquet(tmp.toString)
-        if (!tmp.renameTo(path)) {
-          deleteRec(tmp)
-          // a lost publish race leaves the winner's table in place; any
-          // OTHER rename failure must not fall through to a misleading
-          // path-not-found on the read below
-          if (!new File(path, "_SUCCESS").exists())
-            throw new IllegalStateException(
-              s"SpineCache publish of '$name' failed: rename to $path " +
-                "did not succeed and no concurrent winner exists " +
-                "(tmpdir permissions / cross-device rename?)")
-        }
+      val path = cacheRoot.resolve(
+        s"${name}_${LocalFs.fingerprint(dir, sourceTables, s"v$version")}")
+      LocalFs.publishOnce(path, p => Files.exists(p.resolve("_SUCCESS"))) {
+        stage => build.write.mode("overwrite").parquet(stage.toString)
       }
       s.read.parquet(path.toString)
     }
@@ -114,6 +85,6 @@ object SpineCache {
     * spine from the parquet inputs — pass 2 stays a genuinely cold
     * repeat measurement, never a warm rerun of pass 1's spines. */
   def clear(): Unit = synchronized {
-    Option(cacheRoot.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
+    LocalFs.list(cacheRoot).foreach(LocalFs.deleteRecursively)
   }
 }

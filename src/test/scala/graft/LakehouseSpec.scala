@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.sources.{DatasetRegistry, LakePaths, Lakehouse, ManifestCommit}
 
 class LakehouseSpec extends AnyFunSuite {
@@ -246,11 +247,20 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("single-file csv export produces exactly one readable artifact") {
     import spark.implicits._
+    def exportDirs(): Set[String] = {
+      val s = Files.list(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_csv_export")).toSet
+      finally s.close()
+    }
+    val before = exportDirs()
     val out = Files.createTempDirectory("graft_csv").resolve("sub.csv")
     Lakehouse.exportSingleCsv(
       Seq(("2026_1101_1102", 0.5), ("2026_1101_1103", 0.7)).toDF("ID", "Pred"), out.toString)
     val lines = Files.readAllLines(out)
     assert(lines.get(0) === "ID,Pred")
     assert(lines.size === 3)
+    // the staging dir (with Spark's _SUCCESS and .crc files) is gone
+    assert(exportDirs() -- before === Set.empty[String])
   }
 }
