@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -38,26 +39,19 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control char: a tab or CR in an oracle's SQL
+    // must not make the checker's json.load fail
+    val mapper = new ObjectMapper()
+    val oracle = mapper.createObjectNode()
+    SparkEntry.oracleSql.foreach { case (k, v) => oracle.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), mapper.writeValueAsString(oracle))
     // the full declared-query manifest: lets the checker flag a query
     // whose output is MISSING entirely (a rows-only query that crashed
     // would otherwise escape the gate — no output dir, no oracle row)
+    val declared = mapper.createArrayNode()
+    SparkEntry.queries.keys.toSeq.sorted.foreach(n => declared.add(n))
     Files.writeString(Paths.get(s"$outDir/declared_queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      mapper.writeValueAsString(declared))
     spark.stop()
   }
 }

@@ -1,16 +1,19 @@
 package graft.jobs
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.dataformat.yaml.YAMLMapper
 import java.nio.file.{Files, Paths}
 
 /** Typed pipeline configuration ≙ reference `conf/pipeline.yml:1-34`
   * (league, shuffle partitions, ELO constants, rolling N, blend α, model
-  * hyper-parameters, backtest season bounds).
+  * hyper-parameters, backtest season bounds). The one way to configure a
+  * [[PipelineRunner.run]].
   *
-  * The file format is the YAML subset that file actually uses — nested
-  * maps by 2-space indentation, scalar leaves (quoted/bare strings,
-  * numbers, booleans), `#` comments — parsed by hand because the build is
-  * offline (no YAML library resolves). Lists are not supported; the
-  * reference config has none.
+  * [[fromText]] reads the YAML with the Jackson YAML module that ships in
+  * Spark's jars and looks each field up by its key path; an absent key
+  * keeps the field's default, a present one of the wrong type is rejected
+  * by name. The `modeling.*` model settings are also the fallback for a
+  * param an HPO params file does not carry (see [[graft.ml.HpoParams]]).
   */
 final case class PipelineConfig(
     league: String = "M",
@@ -35,108 +38,44 @@ final case class PipelineConfig(
 
 object PipelineConfig {
 
-  /** Parse the YAML-subset text into nested string-keyed maps. */
-  private[jobs] def parseTree(text: String): Map[String, Any] = {
-    // strip comments (outside quotes) and blank lines, keep (indent, key, value?)
-    val entries = text.linesIterator.toSeq.flatMap { raw =>
-      val noComment = {
-        val sb = new StringBuilder
-        var inQuote = false
-        var done = false
-        raw.foreach { c =>
-          if (!done) {
-            if (c == '"') { inQuote = !inQuote; sb += c }
-            else if (c == '#' && !inQuote) done = true
-            else sb += c
-          }
-        }
-        sb.toString
-      }
-      val trimmed = noComment.trim
-      if (trimmed.isEmpty) None
-      else {
-        val indent = noComment.indexWhere(!_.isWhitespace)
-        val colon = trimmed.indexOf(':')
-        require(colon > 0, s"expected 'key: value' line, got: $raw")
-        val key = trimmed.substring(0, colon).trim
-        val value = trimmed.substring(colon + 1).trim
-        Some((indent, key, if (value.isEmpty) None else Some(scalar(value))))
-      }
-    }
-    def build(items: Seq[(Int, String, Option[Any])]): Map[String, Any] =
-      if (items.isEmpty) Map.empty
-      else {
-        val level = items.head._1
-        val b = Map.newBuilder[String, Any]
-        var rest = items
-        while (rest.nonEmpty) {
-          val (ind, key, value) = rest.head
-          require(ind == level, s"inconsistent indentation at '$key'")
-          rest = rest.tail
-          val children = rest.takeWhile(_._1 > level)
-          rest = rest.drop(children.length)
-          b += key -> (value match {
-            case Some(v) => v
-            case None => build(children)
-          })
-        }
-        b.result()
-      }
-    build(entries)
-  }
-
-  private def scalar(s: String): Any = {
-    val unquoted =
-      if (s.length >= 2 && s.head == '"' && s.last == '"') s.substring(1, s.length - 1)
-      else s
-    if (unquoted ne s) unquoted
-    else if (s == "true") true
-    else if (s == "false") false
-    else s.toIntOption.orElse(s.toDoubleOption).getOrElse(s)
-  }
-
-  private def at(tree: Map[String, Any], path: String*): Option[Any] =
-    path.foldLeft(Option[Any](tree)) {
-      case (Some(m: Map[String @unchecked, Any @unchecked]), k) => m.get(k)
-      case _ => None
-    }
-
   def fromText(text: String): PipelineConfig = {
-    val t = parseTree(text)
-    def str(d: String, p: String*) = at(t, p: _*).map(_.toString).getOrElse(d)
-    def int(d: Int, p: String*) = at(t, p: _*).map {
-      case i: Int => i
-      case d2: Double => d2.toInt
-      case o => o.toString.toInt
-    }.getOrElse(d)
-    def dbl(d: Double, p: String*) = at(t, p: _*).map {
-      case i: Int => i.toDouble
-      case d2: Double => d2
-      case o => o.toString.toDouble
-    }.getOrElse(d)
-    def bool(d: Boolean, p: String*) = at(t, p: _*).map {
-      case b: Boolean => b
-      case o => o.toString.toBoolean
-    }.getOrElse(d)
+    val root =
+      try new YAMLMapper().readTree(text)
+      catch { case e: JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed pipeline config: ${e.getOriginalMessage}", e)
+      }
+    require(root.isObject || root.isMissingNode, "pipeline config must be a YAML mapping")
+    // a present key must hold a scalar its field can take; the error names
+    // the key path, where Jackson's asInt/asDouble would coerce to 0
+    def leaf[A](default: A, key: String, kind: String)(parse: String => Option[A]): A = {
+      val n = root.at("/" + key.replace('.', '/'))
+      if (n.isMissingNode) default
+      else Option.when(n.isValueNode)(n.asText).flatMap(parse).getOrElse(
+        throw new IllegalArgumentException(s"pipeline config $key: expected $kind, got $n"))
+    }
+    def str(d: String, key: String) = leaf(d, key, "a string")(Some(_))
+    def int(d: Int, key: String) = leaf(d, key, "an integer")(_.toIntOption)
+    def dbl(d: Double, key: String) = leaf(d, key, "a number")(_.toDoubleOption)
+    def bool(d: Boolean, key: String) = leaf(d, key, "true or false")(_.toBooleanOption)
     val defaults = PipelineConfig()
     PipelineConfig(
-      league = str(defaults.league, "competition", "league").toUpperCase,
-      shufflePartitions = int(defaults.shufflePartitions, "spark", "shuffle_partitions"),
-      adaptiveEnabled = bool(defaults.adaptiveEnabled, "spark", "adaptive_enabled"),
-      eloInitialRating = dbl(defaults.eloInitialRating, "elo", "initial_rating"),
-      eloKFactor = dbl(defaults.eloKFactor, "elo", "k_factor"),
-      rollingN = int(defaults.rollingN, "rolling", "window_last_n_games"),
-      blendAlphaGbt = dbl(defaults.blendAlphaGbt, "modeling", "blend_alpha_gbt"),
-      lrMaxIter = int(defaults.lrMaxIter, "modeling", "logreg", "max_iter"),
-      lrRegParam = dbl(defaults.lrRegParam, "modeling", "logreg", "reg_param"),
-      lrElasticNet = dbl(defaults.lrElasticNet, "modeling", "logreg", "elastic_net_param"),
-      gbtMaxIter = int(defaults.gbtMaxIter, "modeling", "gbt", "max_iter"),
-      gbtMaxDepth = int(defaults.gbtMaxDepth, "modeling", "gbt", "max_depth"),
-      gbtSubsamplingRate = dbl(defaults.gbtSubsamplingRate, "modeling", "gbt", "subsampling_rate"),
-      minTrainSeason = int(defaults.minTrainSeason, "backtest", "min_train_season"),
-      maxValSeason = int(defaults.maxValSeason, "backtest", "max_val_season"),
+      league = str(defaults.league, "competition.league").toUpperCase,
+      shufflePartitions = int(defaults.shufflePartitions, "spark.shuffle_partitions"),
+      adaptiveEnabled = bool(defaults.adaptiveEnabled, "spark.adaptive_enabled"),
+      eloInitialRating = dbl(defaults.eloInitialRating, "elo.initial_rating"),
+      eloKFactor = dbl(defaults.eloKFactor, "elo.k_factor"),
+      rollingN = int(defaults.rollingN, "rolling.window_last_n_games"),
+      blendAlphaGbt = dbl(defaults.blendAlphaGbt, "modeling.blend_alpha_gbt"),
+      lrMaxIter = int(defaults.lrMaxIter, "modeling.logreg.max_iter"),
+      lrRegParam = dbl(defaults.lrRegParam, "modeling.logreg.reg_param"),
+      lrElasticNet = dbl(defaults.lrElasticNet, "modeling.logreg.elastic_net_param"),
+      gbtMaxIter = int(defaults.gbtMaxIter, "modeling.gbt.max_iter"),
+      gbtMaxDepth = int(defaults.gbtMaxDepth, "modeling.gbt.max_depth"),
+      gbtSubsamplingRate = dbl(defaults.gbtSubsamplingRate, "modeling.gbt.subsampling_rate"),
+      minTrainSeason = int(defaults.minTrainSeason, "backtest.min_train_season"),
+      maxValSeason = int(defaults.maxValSeason, "backtest.max_val_season"),
       commitProtocol = {
-        val p = str(defaults.commitProtocol, "lake", "commit_protocol").toLowerCase
+        val p = str(defaults.commitProtocol, "lake.commit_protocol").toLowerCase
         require(p == "overwrite" || p == "manifest", s"unknown commit_protocol: $p")
         p
       })

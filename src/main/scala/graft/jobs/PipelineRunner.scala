@@ -22,35 +22,25 @@ object PipelineRunner {
       backtest: Seq[Backtest.FoldMetrics],
       submissionPath: Option[String])
 
-  /** @param inputDir  directory of Kaggle-schema CSVs (compact results,
-    *                  seeds, …) routed by the dataset registry
-    * @param lakeRoot  lake root directory
-    * @param league    M or W
+  /** Runs the job chain ≙ the reference reading `conf/pipeline.yml` in
+    * every job: league, ELO constants, rolling N, blend α, model settings
+    * and backtest bounds all come from [[PipelineConfig]] (load one with
+    * `PipelineConfig.load(path)`).
+    *
+    * @param inputDir      directory of Kaggle-schema CSVs (compact results,
+    *                      seeds, …) routed by the dataset registry
+    * @param lakeRoot      lake root directory
+    * @param exportCsv     submission CSV to write, if any
+    * @param hpoParamsPath `hpo_best_params.json` to reload for the LR+GBT
+    *                      ensemble export (absent file → config settings)
     */
   def run(
       spark: SparkSession,
       inputDir: String,
       lakeRoot: String,
-      league: String = "M",
-      rollingN: Int = 10,
+      config: PipelineConfig = PipelineConfig(),
       exportCsv: Option[String] = None,
-      hpoParamsPath: Option[String] = None,
-      blendAlpha: Double = 0.65): Result =
-    run(spark, inputDir, lakeRoot,
-      PipelineConfig(league = league, rollingN = rollingN, blendAlphaGbt = blendAlpha),
-      exportCsv, hpoParamsPath)
-
-  /** Config-file-driven variant ≙ the reference reading
-    * `conf/pipeline.yml` in every job: league, ELO constants, rolling N,
-    * blend α and backtest bounds all come from [[PipelineConfig]]
-    * (load one with `PipelineConfig.load(path)`). */
-  def run(
-      spark: SparkSession,
-      inputDir: String,
-      lakeRoot: String,
-      config: PipelineConfig,
-      exportCsv: Option[String],
-      hpoParamsPath: Option[String]): Result = {
+      hpoParamsPath: Option[String] = None): Result = {
     // Apply the config's execution settings for the DURATION of the run
     // only — run() must not leave a hidden session-conf mutation behind
     // for callers whose own queries follow (restored in the finally).
@@ -94,16 +84,13 @@ object PipelineRunner {
       config: PipelineConfig,
       exportCsv: Option[String],
       hpoParamsPath: Option[String]): Result = {
-    val league = config.league
-    val rollingN = config.rollingN
-    val blendAlpha = config.blendAlphaGbt
     val lake = LakePaths(lakeRoot)
 
     // 01: bronze ingest (csv -> trimmed -> parquet)
     Lakehouse.ingestBronze(spark, inputDir, lake)
 
     // games with a stable GameId for deterministic fold/window tie-breaks
-    val games = spark.read.parquet(lake.bronze(s"$league/regular_compact"))
+    val games = spark.read.parquet(lake.bronze(s"${config.league}/regular_compact"))
     val gamesKeyed = games.select(
       col("Season").cast("int").as("Season"),
       col("DayNum").cast("int").as("DayNum"),
@@ -126,7 +113,7 @@ object PipelineRunner {
         spark.read.parquet(path)
       }
     def writeSilver(df: DataFrame, name: String): DataFrame =
-      writeRead(df, lake.silver(league, name))
+      writeRead(df, lake.silver(config.league, name))
 
     // 02: team-season stats  05: elo  06: rolling snapshot
     val stats = writeSilver(TeamSeasonStats.build(gamesKeyed), "team_season_stats")
@@ -134,7 +121,7 @@ object PipelineRunner {
       Elo.perSeason(gamesKeyed, config.eloKFactor, config.eloInitialRating),
       "elo_ratings")
     val rolling = writeSilver(
-      Rolling.lastPerSeason(Rolling.features(LongGames.build(gamesKeyed), rollingN)),
+      Rolling.lastPerSeason(Rolling.features(LongGames.build(gamesKeyed), config.rollingN)),
       "rolling_last_per_season")
 
     // 03: gold training matchups (two-sided attach + diffs + dropna)
@@ -147,7 +134,7 @@ object PipelineRunner {
         Matchups.buildLabeled(gamesKeyed), features,
         diffCols = Seq("WinRate", "AvgPointDiff", "Elo")),
       essential = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff"))
-    val goldRead = writeRead(gold, lake.gold(league, "training_matchups"))
+    val goldRead = writeRead(gold, lake.gold(config.league, "training_matchups"))
 
     // 07: rolling backtest (season bounds from config)
     val featureCols = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff")
@@ -157,7 +144,8 @@ object PipelineRunner {
 
     // 04/12: final fit + submission export. With an HPO params file
     // (S7, ≙ jobs/12:58-89) the export is the LR+GBT ensemble fit with
-    // the reloaded tuned params; absent file → reference's defaults;
+    // the reloaded tuned params; absent file or param → the config's
+    // `modeling.*` settings;
     // no path requested → the plain LR export.
     val path = exportCsv.map { out =>
       val full = Modeling.fillMissing(goldRead, featureCols).cache()
@@ -170,8 +158,8 @@ object PipelineRunner {
           val hpo = HpoParams.read(p)
           val lrParams = hpo.map(_.logreg.params).getOrElse(Map.empty)
           val gbtParams = hpo.map(_.gbt.params).getOrElse(Map.empty)
-          val lrModel = HpoParams.lrFrom(lrParams, featureCols).fit(full)
-          val gbtModel = HpoParams.gbtFrom(gbtParams, featureCols).fit(full)
+          val lrModel = HpoParams.lrFrom(lrParams, featureCols, config).fit(full)
+          val gbtModel = HpoParams.gbtFrom(gbtParams, featureCols, config).fit(full)
           // blend by chaining transforms over ONE frame — gold matchup IDs
           // are not unique (rematches), so the reference's join-on-ID blend
           // (Modeling.blend, kept for unique-ID submission frames) would
@@ -183,8 +171,8 @@ object PipelineRunner {
             .withColumn("pred_gbt", Modeling.probOf())
             .select(
               concat_ws("_", col("Season"), col("Team1"), col("Team2")).as("ID"),
-              (lit(blendAlpha) * col("pred_gbt") +
-                lit(1.0 - blendAlpha) * col("pred_lr")).as("Pred"))
+              (lit(config.blendAlphaGbt) * col("pred_gbt") +
+                lit(1.0 - config.blendAlphaGbt) * col("pred_lr")).as("Pred"))
         case None =>
           idAnd(Modeling.lrPipeline(featureCols, maxIter = 15).fit(full))
       }

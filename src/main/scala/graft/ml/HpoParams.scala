@@ -1,19 +1,24 @@
 package graft.ml
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.tuning.TrainValidationSplitModel
+import scala.jdk.CollectionConverters._
+import graft.jobs.PipelineConfig
 
 /** S7 — the HPO best-params hand-off ≙ reference
   * `jobs/11_hpo_backtest.py:48-58` (tune → `hpo_best_params.json`) and
   * `jobs/12_train_ensemble_export.py:58-89` (reload → ensemble fit,
-  * falling back to defaults when the file is absent).
+  * falling back to the run's [[PipelineConfig]] model settings when the
+  * file or a param is absent).
   *
-  * JSON is hand-rolled on both sides (driver-only metadata, tens of
-  * bytes; the build is offline so no JSON library resolves). The writer
-  * emits exactly the subset the reader understands: one top-level object,
-  * string/number scalars, one level of nested objects, and a string
-  * array for `feature_cols`.
+  * The file is read and written as a Jackson tree (the `jackson-databind`
+  * that ships in Spark's jars): `league`, `val_season`, `feature_cols`,
+  * and `logreg`/`gbt` → `{params, metrics: {auc, logloss}}`. A NaN or
+  * infinite metric is written as `null` and `null` reads back as NaN.
+  * Key order and integer-valued params do not matter on read, and keys
+  * the reader does not know are ignored, so hand-edited files load.
   */
 object HpoParams {
 
@@ -76,159 +81,82 @@ object HpoParams {
     fixed ++ tuned
   }
 
+  private val mapper = new ObjectMapper()
+
   // ---- write ----
 
-  private def jStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def jNum(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" // JSON has no NaN/Infinity tokens
-    else if (d == d.floor && math.abs(d) < 1e15) d.toLong.toString
-    else d.toString
-
-  private def jReport(r: ModelReport): String = {
-    val params = r.params.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jStr(k)}: ${jNum(v)}" }.mkString("{", ", ", "}")
-    s"""{"params": $params, "metrics": {"auc": ${jNum(r.auc)}, "logloss": ${jNum(r.logLoss)}}}"""
-  }
-
   def write(result: HpoResult, path: String): Path = {
-    val json =
-      s"""{
-         |  "league": ${jStr(result.league)},
-         |  "val_season": ${result.valSeason},
-         |  "feature_cols": ${result.featureCols.map(jStr).mkString("[", ", ", "]")},
-         |  "logreg": ${jReport(result.logreg)},
-         |  "gbt": ${jReport(result.gbt)}
-         |}
-         |""".stripMargin
+    val root = mapper.createObjectNode()
+      .put("league", result.league)
+      .put("val_season", result.valSeason)
+    val cols = root.putArray("feature_cols")
+    result.featureCols.foreach(c => cols.add(c))
+    Seq("logreg" -> result.logreg, "gbt" -> result.gbt).foreach { case (key, r) =>
+      val report = root.putObject(key)
+      val params = report.putObject("params")
+      r.params.toSeq.sortBy(_._1).foreach { case (k, v) => params.put(k, v) }
+      val metrics = report.putObject("metrics")
+      // JSON has no NaN/Infinity tokens (Jackson would write the string
+      // "NaN"): a non-finite metric is null, which reads back as NaN
+      Seq("auc" -> r.auc, "logloss" -> r.logLoss).foreach { case (k, v) =>
+        if (v.isNaN || v.isInfinite) metrics.putNull(k) else metrics.put(k, v)
+      }
+    }
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
-    Files.writeString(p, json)
+    Files.writeString(p, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root) + "\n")
     p
   }
 
   // ---- read ----
 
-  /** Minimal recursive-descent JSON reader (objects, arrays, strings,
-    * numbers, true/false/null) — enough for the file this object writes
-    * and for hand-edited param files. */
-  private final class P(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = {
-      ws()
-      if (i >= s.length || s(i) != c)
-        throw new IllegalArgumentException(s"expected '$c' at $i in $s")
-      i += 1
-    }
-    def value(): Any = {
-      ws()
-      s(i) match {
-        case '{' => obj()
-        case '[' => arr()
-        case '"' => str()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ => num()
-      }
-    }
-    private def obj(): Map[String, Any] = {
-      expect('{'); ws()
-      if (s(i) == '}') { i += 1; return Map.empty }
-      val b = Map.newBuilder[String, Any]
-      var done = false
-      while (!done) {
-        ws()
-        val k = str()
-        expect(':')
-        b += (k -> value())
-        ws()
-        if (s(i) == ',') i += 1 else { expect('}'); done = true }
-      }
-      b.result()
-    }
-    private def arr(): Seq[Any] = {
-      expect('['); ws()
-      if (s(i) == ']') { i += 1; return Seq.empty }
-      val b = Seq.newBuilder[Any]
-      var done = false
-      while (!done) {
-        b += value()
-        ws()
-        if (s(i) == ',') i += 1 else { expect(']'); done = true }
-      }
-      b.result()
-    }
-    private def str(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case c => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    private def num(): Double = {
-      val start = i
-      while (i < s.length && (s(i).isDigit || "+-.eE".contains(s(i)))) i += 1
-      s.substring(start, i).toDouble
-    }
-  }
-
   def read(path: String): Option[HpoResult] = {
-    if (!Files.exists(Paths.get(path))) return None
-    val root = new P(Files.readString(Paths.get(path))).value()
-      .asInstanceOf[Map[String, Any]]
+    val p = Paths.get(path)
+    if (!Files.exists(p)) return None
+    val root = mapper.readTree(Files.readString(p))
+    def number(n: JsonNode, what: String): Double = {
+      require(n.isNumber, s"$path: $what must be a number, got $n")
+      n.doubleValue
+    }
     def report(key: String): ModelReport = {
-      val o = root(key).asInstanceOf[Map[String, Any]]
-      val params = o("params").asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[Double] }
-      val metrics = o("metrics").asInstanceOf[Map[String, Any]]
-      def numOrNaN(v: Any): Double = v match {
-        case null => Double.NaN // writer emits null for NaN/Infinity
-        case d: Double => d
+      val o = root.required(key)
+      val params = o.required("params").properties().asScala
+        .map(e => e.getKey -> number(e.getValue, s"$key.params.${e.getKey}")).toMap
+      val metrics = o.required("metrics")
+      def metric(name: String): Double = {
+        val n = metrics.required(name)
+        if (n.isNull) Double.NaN else number(n, s"$key.metrics.$name")
       }
-      ModelReport(params, numOrNaN(metrics("auc")), numOrNaN(metrics("logloss")))
+      ModelReport(params, metric("auc"), metric("logloss"))
     }
     Some(HpoResult(
-      league = root("league").asInstanceOf[String],
-      valSeason = root("val_season").asInstanceOf[Double].toInt,
-      featureCols = root("feature_cols").asInstanceOf[Seq[Any]].map(_.asInstanceOf[String]),
+      league = root.required("league").asText,
+      valSeason = number(root.required("val_season"), "val_season").toInt,
+      featureCols = root.required("feature_cols").asScala.map(_.asText).toSeq,
       logreg = report("logreg"),
       gbt = report("gbt")))
   }
 
-  // ---- reload into pipelines ≙ jobs/12:67-89 (defaults when absent) ----
+  // ---- reload into pipelines ≙ jobs/12:67-89: a param the file does not
+  // carry (or no file at all) falls back to the run's config ----
 
-  def lrFrom(params: Map[String, Double], featureCols: Seq[String]): Pipeline =
+  def lrFrom(
+      params: Map[String, Double],
+      featureCols: Seq[String],
+      config: PipelineConfig = PipelineConfig()): Pipeline =
     Modeling.lrPipeline(
       featureCols,
-      maxIter = params.getOrElse("maxIter", 80.0).toInt,
-      regParam = params.getOrElse("regParam", 0.05),
-      elasticNet = params.getOrElse("elasticNetParam", 0.0))
+      maxIter = params.get("maxIter").fold(config.lrMaxIter)(_.toInt),
+      regParam = params.getOrElse("regParam", config.lrRegParam),
+      elasticNet = params.getOrElse("elasticNetParam", config.lrElasticNet))
 
-  def gbtFrom(params: Map[String, Double], featureCols: Seq[String]): Pipeline =
+  def gbtFrom(
+      params: Map[String, Double],
+      featureCols: Seq[String],
+      config: PipelineConfig = PipelineConfig()): Pipeline =
     Modeling.gbtPipeline(
       featureCols,
-      maxIter = params.getOrElse("maxIter", 120.0).toInt,
-      maxDepth = params.getOrElse("maxDepth", 5.0).toInt,
-      subsamplingRate = params.getOrElse("subsamplingRate", 0.8))
+      maxIter = params.get("maxIter").fold(config.gbtMaxIter)(_.toInt),
+      maxDepth = params.get("maxDepth").fold(config.gbtMaxDepth)(_.toInt),
+      subsamplingRate = params.getOrElse("subsamplingRate", config.gbtSubsamplingRate))
 }

@@ -84,50 +84,6 @@ object Lakehouse {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Keyed upsert into a parquet dataset: existing rows whose key matches
-    * an incoming row are replaced (left_anti on the keys), everything
-    * else survives, incoming rows land as-is. The reference's only write
-    * mode is full overwrite; this is the incremental-maintenance path.
-    *
-    * The merged frame is written to a sibling staging directory and then
-    * renamed into place. Overwriting the source path directly would be
-    * delete-then-write: any task retry or lost cached block after the
-    * delete recomputes from already-deleted files and loses data. With
-    * stage-and-swap the original directory stays intact until the new
-    * dataset is fully committed; the swap itself is a filesystem rename.
-    * (A table format — Delta/Iceberg — would make the commit transactional
-    * even on object stores; no such jars in this environment.)
-    */
-  def upsertParquet(
-      spark: SparkSession,
-      incoming: DataFrame,
-      keyCols: Seq[String],
-      path: String): Unit = {
-    val target = Paths.get(path)
-    val exists = Files.exists(target)
-    val merged = if (exists) {
-      val current = spark.read.parquet(path)
-      current.join(incoming.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(incoming)
-    } else incoming
-    val staging = target.resolveSibling(
-      target.getFileName.toString + s".staging-${System.nanoTime()}")
-    merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // Swap order matters for crash safety: park the old directory aside,
-    // move the staging dir in, and only then delete the old copy. A crash
-    // between the two moves leaves the data recoverable under `.old-*`;
-    // delete-before-move would leave NO directory at `path`, and the next
-    // upsert would silently treat the table as empty.
-    if (exists) {
-      val retired = target.resolveSibling(
-        target.getFileName.toString + s".old-${System.nanoTime()}")
-      Files.move(target, retired, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      LocalFs.deleteRecursively(retired)
-    } else
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** ORC read/write — the second columnar interchange format (Spark's
     * native ORC datasource; orc-core ships in this Spark distribution).
     * Same scan properties as parquet: column pruning and predicate

@@ -8,9 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Manifest-committed parquet dataset — the object-store-safe commit
-  * protocol that [[Lakehouse.upsertParquet]]'s stage-and-swap cannot give
-  * (directory rename is atomic on POSIX, neither atomic nor cheap on
-  * object stores). This is the Delta/Iceberg commit idea reduced to its
+  * protocol that a stage-and-swap directory rename cannot give (rename
+  * is atomic on POSIX, neither atomic nor cheap on object stores). This is the Delta/Iceberg commit idea reduced to its
   * kernel, with no table-format jars:
   *
   *  - data files only ever ACCUMULATE under `path/data-<gen>-<nonce>/`;
@@ -810,8 +809,8 @@ object ManifestCommit {
     }
   }
 
-  /** Copy-on-write keyed UPSERT ≙ [[Lakehouse.upsertParquet]] semantics
-    * (incoming rows replace same-key rows, everything else survives)
+  /** Copy-on-write keyed UPSERT (incoming rows replace same-key rows,
+    * everything else survives, unmatched incoming rows append)
     * at [[deleteWhere]]'s cost: only the files CONTAINING a matched key
     * rewrite; everything else is referenced in place. At 100 TB the
     * nightly 0.1% upsert must touch 0.1% of files (clustered layouts

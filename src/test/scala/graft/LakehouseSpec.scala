@@ -44,20 +44,6 @@ class LakehouseSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(id), EqualTo(id,2)]"), plan)
   }
 
-  test("keyed upsert replaces matching rows and appends new ones") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft_upsert").resolve("t").toString
-    Lakehouse.upsertParquet(spark,
-      Seq((2024, 1, "a"), (2024, 2, "b")).toDF("Season", "TeamID", "v"),
-      Seq("Season", "TeamID"), path)
-    Lakehouse.upsertParquet(spark,
-      Seq((2024, 2, "B2"), (2024, 3, "c")).toDF("Season", "TeamID", "v"),
-      Seq("Season", "TeamID"), path)
-    val out = spark.read.parquet(path).collect()
-      .map(r => r.getInt(1) -> r.getString(2)).toMap
-    assert(out === Map(1 -> "a", 2 -> "B2", 3 -> "c"))
-  }
-
   test("manifest commit: upsert round-trip, crash invisibility, gen race, vacuum") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_manifest").resolve("t").toString

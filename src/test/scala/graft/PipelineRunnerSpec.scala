@@ -166,4 +166,87 @@ class PipelineRunnerSpec extends AnyFunSuite {
     assert(gbtStage.getMaxIter === 120)
     assert(gbtStage.getSubsamplingRate === 0.8)
   }
+
+  test("config model settings are the fallback when the HPO file or a param is absent") {
+    val cfg = graft.jobs.PipelineConfig.fromText(
+      """modeling:
+        |  logreg:
+        |    max_iter: 7
+        |  gbt:
+        |    max_depth: 3
+        |""".stripMargin)
+    assert(graft.ml.HpoParams.read("/nonexistent/hpo.json").isEmpty)
+    val lrStage = graft.ml.HpoParams.lrFrom(Map.empty, Seq("f1"), cfg).getStages(1)
+      .asInstanceOf[org.apache.spark.ml.classification.LogisticRegression]
+    assert(lrStage.getMaxIter === 7)
+    assert(lrStage.getRegParam === 0.05)
+    // a param the file does carry wins over the config
+    val gbtStage = graft.ml.HpoParams.gbtFrom(Map("maxIter" -> 9.0), Seq("f1"), cfg).getStages(1)
+      .asInstanceOf[org.apache.spark.ml.classification.GBTClassifier]
+    assert(gbtStage.getMaxIter === 9)
+    assert(gbtStage.getMaxDepth === 3)
+    assert(gbtStage.getSubsamplingRate === 0.8)
+  }
+
+  test("malformed config values are rejected naming the key") {
+    def rejected(yml: String): String =
+      intercept[IllegalArgumentException](graft.jobs.PipelineConfig.fromText(yml)).getMessage
+    assert(rejected("spark:\n  shuffle_partitions: eight\n").contains("spark.shuffle_partitions"))
+    assert(rejected("modeling:\n  gbt:\n    max_iter: 2.5\n").contains("modeling.gbt.max_iter"))
+    assert(rejected("elo:\n  k_factor: high\n").contains("elo.k_factor"))
+    assert(rejected("spark:\n  adaptive_enabled: maybe\n").contains("spark.adaptive_enabled"))
+    assert(rejected("lake:\n  commit_protocol: delta\n").contains("unknown commit_protocol"))
+    assert(rejected("spark:\n  shuffle_partitions: [8\n").contains("malformed pipeline config"))
+    assert(rejected("eight\n").contains("YAML mapping"))
+  }
+
+  test("hpo params files written by the earlier hand-rolled writer, or edited by hand, read back") {
+    import graft.ml.HpoParams.{HpoResult, ModelReport}
+    val expected = HpoResult("M", 2023, Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff"),
+      ModelReport(Map("elasticNetParam" -> 0.0, "maxIter" -> 60.0, "regParam" -> 0.01),
+        Double.NaN, 0.6931471805599453),
+      ModelReport(Map("maxDepth" -> 2.0, "maxIter" -> 5.0, "stepSize" -> 0.1, "subsamplingRate" -> 0.9),
+        0.7125, 0.5843))
+    // byte-for-byte the earlier writer's output for `expected`
+    val written =
+      """{
+        |  "league": "M",
+        |  "val_season": 2023,
+        |  "feature_cols": ["WinRateDiff", "AvgPointDiffDiff", "EloDiff"],
+        |  "logreg": {"params": {"elasticNetParam": 0, "maxIter": 60, "regParam": 0.01}, "metrics": {"auc": null, "logloss": 0.6931471805599453}},
+        |  "gbt": {"params": {"maxDepth": 2, "maxIter": 5, "stepSize": 0.1, "subsamplingRate": 0.9}, "metrics": {"auc": 0.7125, "logloss": 0.5843}}
+        |}
+        |""".stripMargin
+    // reordered keys, one unknown key, params as integers or decimals
+    val edited =
+      """{"gbt": {"metrics": {"logloss": 0.5843, "auc": 0.7125},
+        |         "params": {"subsamplingRate": 0.9, "stepSize": 0.1, "maxIter": 5.0, "maxDepth": 2}},
+        | "note": "tuned by hand",
+        | "logreg": {"metrics": {"logloss": 0.6931471805599453, "auc": null},
+        |            "params": {"maxIter": 60, "regParam": 0.01, "elasticNetParam": 0}},
+        | "feature_cols": ["WinRateDiff", "AvgPointDiffDiff", "EloDiff"],
+        | "val_season": 2023, "league": "M"}""".stripMargin
+    val dir = Files.createTempDirectory("graft_hpo_compat")
+    // NaN != NaN, so compare with the NaN metric mapped to a sentinel
+    def comparable(r: HpoResult) =
+      r.copy(logreg = r.logreg.copy(auc = if (r.logreg.auc.isNaN) -1.0 else r.logreg.auc))
+    Seq("written" -> written, "edited" -> edited).foreach { case (name, text) =>
+      val path = dir.resolve(s"$name.json")
+      Files.writeString(path, text)
+      val back = graft.ml.HpoParams.read(path.toString).get
+      assert(back.logreg.auc.isNaN, name)
+      assert(comparable(back) === comparable(expected), name)
+    }
+
+    // write -> read keeps a NaN AUC, in the same key layout
+    val out = dir.resolve("roundtrip.json").toString
+    graft.ml.HpoParams.write(expected, out)
+    val back = graft.ml.HpoParams.read(out).get
+    assert(back.logreg.auc.isNaN)
+    assert(comparable(back) === comparable(expected))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(out))
+    assert(tree.fieldNames().asScala.toSeq === Seq("league", "val_season", "feature_cols", "logreg", "gbt"))
+    assert(tree.at("/logreg/metrics/auc").isNull)
+    assert(tree.at("/gbt/metrics").fieldNames().asScala.toSeq === Seq("auc", "logloss"))
+  }
 }

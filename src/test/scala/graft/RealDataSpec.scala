@@ -62,7 +62,8 @@ class RealDataSpec extends AnyFunSuite {
     val lake = Files.createTempDirectory("graft_real_lake")
     val sub = Files.createTempDirectory("graft_real_out").resolve("submission.csv")
     val result = graft.jobs.PipelineRunner.run(
-      spark, in.toString, lake.toString, league = "W", exportCsv = Some(sub.toString))
+      spark, in.toString, lake.toString, graft.jobs.PipelineConfig(league = "W"),
+      exportCsv = Some(sub.toString))
     assert(result.seasonsBuilt === 3)
     assert(result.goldRows > 10000) // ~5k games/season × 2 perspectives
     // win-rate/elo diffs are genuinely predictive on real basketball data
