@@ -26,18 +26,44 @@ object SketchExprs {
     case other => throw new IllegalArgumentException(s"unsupported element type $other")
   }
 
+  /** The two-array kernel shape: null-safe, and ONE virtual
+    * `compute(a, b)` call per row both when interpreted and in
+    * generated code (`refName` labels the generated reference). */
+  sealed trait ArrayPairKernel extends BinaryExpression {
+    protected def refName: String
+    protected def elemType(e: Expression): DataType =
+      e.dataType.asInstanceOf[ArrayType].elementType
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(refName, this)
+      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
+    }
+  }
+
+  /** [[ArrayPairKernel]] with a DOUBLE result; `compute` keeps the
+    * primitive signature the generated code calls. */
+  sealed trait DoublePairKernel extends ArrayPairKernel {
+    override def dataType: DataType = DoubleType
+    def compute(a: ArrayData, b: ArrayData): Double
+    override protected def nullSafeEval(l: Any, r: Any): Any =
+      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  }
+
+  /** [[ArrayPairKernel]] with a BIGINT result. */
+  sealed trait LongPairKernel extends ArrayPairKernel {
+    override def dataType: DataType = LongType
+    def compute(a: ArrayData, b: ArrayData): Long
+    override protected def nullSafeEval(l: Any, r: Any): Any =
+      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  }
+
   /** cos(a, b) with three independent left-fold accumulators
     * (dot, ‖a‖², ‖b‖²) — the identical IEEE op sequence as three separate
     * `aggregate(zip_with(...))` folds, so values match the declarative
     * form bit-for-bit.
     */
   case class CosineSim(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends DoublePairKernel {
+    protected def refName = "cosKernel"
     def compute(a: ArrayData, b: ArrayData): Double = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = math.min(a.numElements(), b.numElements())
@@ -49,10 +75,6 @@ object SketchExprs {
         i += 1
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cosKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
@@ -67,12 +89,8 @@ object SketchExprs {
     * folds (the q462 TwoNN fix: 182 s → scan-speed at sf0.1).
     */
   case class SqEuclidean(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends DoublePairKernel {
+    protected def refName = "sqeucKernel"
     def compute(a: ArrayData, b: ArrayData): Double = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = math.min(a.numElements(), b.numElements())
@@ -84,10 +102,6 @@ object SketchExprs {
         i += 1
       }
       na - 2.0 * dot + nb
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sqeucKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
@@ -404,12 +418,8 @@ object SketchExprs {
     * embeddings); one virtual call per pair instead of an interpreted
     * lambda per element. */
   case class SqEuclideanDiff(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends DoublePairKernel {
+    protected def refName = "sqeucDiffKernel"
     def compute(a: ArrayData, b: ArrayData): Double = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = math.min(a.numElements(), b.numElements())
@@ -422,21 +432,13 @@ object SketchExprs {
       }
       acc
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sqeucDiffKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
 
   case class SqEuclideanLong(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends LongPairKernel {
+    protected def refName = "sqeucLongKernel"
     def compute(a: ArrayData, b: ArrayData): Long = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = requireDensePair(a, b, "SqEuclideanLong")
@@ -449,10 +451,6 @@ object SketchExprs {
       }
       s
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sqeucLongKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
@@ -463,12 +461,8 @@ object SketchExprs {
     * b, x·y), 0L, +)` lambda fold in any order. One virtual call per
     * pair. */
   case class DotLong(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends LongPairKernel {
+    protected def refName = "dotLongKernel"
     def compute(a: ArrayData, b: ArrayData): Long = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = requireDensePair(a, b, "DotLong")
@@ -480,10 +474,6 @@ object SketchExprs {
       }
       s
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("dotLongKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
@@ -493,12 +483,8 @@ object SketchExprs {
     * order, one running accumulator — so values are bit-identical to
     * the lambda formulation it replaces. */
   case class DotDouble(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends DoublePairKernel {
+    protected def refName = "dotDoubleKernel"
     def compute(a: ArrayData, b: ArrayData): Double = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = requireDensePair(a, b, "DotDouble")
@@ -510,10 +496,6 @@ object SketchExprs {
       }
       s
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("dotDoubleKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
@@ -522,12 +504,8 @@ object SketchExprs {
     * MinHash-signature agreement kernel (estimated Jaccard numerator).
     * Exact integer count, any fold order. */
   case class ArrayAgreeCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    private def elemType(e: Expression) =
-      e.dataType.asInstanceOf[ArrayType].elementType
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+      extends LongPairKernel {
+    protected def refName = "agreeKernel"
     def compute(a: ArrayData, b: ArrayData): Long = {
       val (ta, tb) = (elemType(left), elemType(right))
       val n = requireDensePair(a, b, "ArrayAgreeCount")
@@ -538,10 +516,6 @@ object SketchExprs {
         i += 1
       }
       s
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("agreeKernel", this)
-      defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)

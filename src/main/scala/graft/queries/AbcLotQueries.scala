@@ -309,10 +309,8 @@ object AbcLotQueries {
     * overall daily mean. */
   def q1175: Q = Q(
     "q1175_turn_of_month",
-    Some("""
-      |WITH day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-      |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-      |        FROM lineitem GROUP BY 1),
+    Some(s"""
+      |WITH ${DaySeries.sqlDay},
       |dom AS (SELECT day(dd) AS dom, count(*) AS nd, sum(z) AS sz
       |        FROM day GROUP BY 1),
       |tot AS (SELECT sum(nd) AS tn, sum(sz) AS ts FROM dom)

@@ -32,15 +32,9 @@ object BootstrapQueries {
   // def, NOT val: `all` builds oracle strings at object init
   private def nB = 64
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle resample frame rj(b, z2): value drawn at each (b, t). */
   private def sqlRj: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |ag AS (SELECT count(*) AS n FROM sq),
     |bs AS (SELECT * FROM (VALUES ${(1 to nB).map(b => s"($b)").mkString(",")}) v(b)),
     |ix AS (SELECT bs.b, 1 + ((bs.b * 2654435761 + sq.t * 40503)

@@ -117,20 +117,7 @@ object ConvergenceQueries {
       s"(${plogp(y, n)} + ${plogp(s"($n - $y)", n)})"
     Q("q492_info_gain_features",
       Some(s"""
-        |WITH l AS (
-        |  SELECT CASE WHEN floor(l.l_discount * 100 + 0.5) >= 5
-        |              THEN 1 ELSE 0 END AS f_disc,
-        |         CASE WHEN l.l_quantity > 25.0 THEN 1 ELSE 0 END AS f_qty,
-        |         CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-        |           AS f_urg,
-        |         CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS y
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |agg AS (
-        |  SELECT count(*) AS n, sum(y) AS yy,
-        |         sum(f_disc) AS nd, sum(f_disc * y) AS yd,
-        |         sum(f_qty) AS nq, sum(f_qty * y) AS yq,
-        |         sum(f_urg) AS nu, sum(f_urg * y) AS yu
-        |  FROM l),
+        |WITH ${OpsSimQueries.sqlFeatureCounts},
         |m AS (
         |  SELECT feature, n, n1, y1, n - n1 AS n0, yy - y1 AS y0,
         |         ${h("yy", "n")} AS hp
@@ -153,28 +140,7 @@ object ConvergenceQueries {
         |            AS BIGINT) AS gain_ratio_milli
         |FROM g ORDER BY feature
         |""".stripMargin)) { (s, dir) =>
-      val l = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(
-          when(expr("floor(l_discount * 100 + 0.5) >= 5"), 1L).otherwise(0L)
-            .as("f_disc"),
-          when(col("l_quantity") > 25.0, 1L).otherwise(0L).as("f_qty"),
-          when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-            .as("f_urg"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      val agg = l.agg(count(lit(1)).as("n"), sum(col("y")).as("yy"),
-        sum(col("f_disc")).as("nd"), sum(col("f_disc") * col("y")).as("yd"),
-        sum(col("f_qty")).as("nq"), sum(col("f_qty") * col("y")).as("yq"),
-        sum(col("f_urg")).as("nu"), sum(col("f_urg") * col("y")).as("yu"))
-        .materialize()
-      val u = agg.select(lit("deep_discount").as("feature"), col("n"),
-          col("yy"), col("nd").as("n1"), col("yd").as("y1"))
-        .unionAll(agg.select(lit("bulk_quantity"), col("n"), col("yy"),
-          col("nq"), col("yq")))
-        .unionAll(agg.select(lit("urgent_priority"), col("n"), col("yy"),
-          col("nu"), col("yu")))
+      val u = OpsSimQueries.featureCounts(s, dir)
       u.select(col("feature"), col("n"), col("n1"),
           (col("n") - col("n1")).as("n0"), col("y1"),
           (col("yy") - col("y1")).as("y0"),

@@ -158,6 +158,49 @@ object CorpusQueries {
       .orderBy(col("vec_id"), col("nn_rank"))
   }
 
+  /** BM25 top-k oracle, scored from the raw corpus: the token sets of
+    * docs with doc_id < nQuery query every other doc; each per-term
+    * contribution is quantized to DECIMAL(18,9) before the exact sum
+    * (q98's recipe — q137 and q185 replay it against their stored
+    * indexes). */
+  private def sqlBm25TopK(nQuery: Int, k: Int, k1: Double, b: Double)
+      : String = s"""
+    |WITH toks98 AS (
+    |  SELECT doc_id, unnest(${sqlTokens("text")}) AS term FROM documents),
+    |tf98 AS (
+    |  SELECT doc_id, term, count(*) AS tf FROM toks98 GROUP BY 1, 2),
+    |dl98 AS (SELECT doc_id, sum(tf) AS dl FROM tf98 GROUP BY 1),
+    |st98 AS (SELECT count(*) AS n, sum(dl) AS total FROM dl98),
+    |df98 AS (SELECT term, count(*) AS df FROM tf98 GROUP BY 1),
+    |qt98 AS (
+    |  SELECT DISTINCT doc_id AS query_id, term FROM toks98
+    |  WHERE doc_id < $nQuery),
+    |pairs AS (
+    |  SELECT qt98.query_id, tf98.doc_id, tf98.term,
+    |         ln(1.0 + (CAST(n - df AS DOUBLE) + 0.5)
+    |                   / (CAST(df AS DOUBLE) + 0.5))
+    |         * ((CAST(tf AS DOUBLE) * ${k1 + 1.0})
+    |            / (CAST(tf AS DOUBLE) + $k1 * (${1.0 - b} + $b *
+    |               (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))))
+    |           AS contrib
+    |  FROM qt98
+    |  JOIN tf98 USING (term)
+    |  JOIN df98 USING (term)
+    |  JOIN dl98 ON dl98.doc_id = tf98.doc_id
+    |  CROSS JOIN st98
+    |  WHERE tf98.doc_id != qt98.query_id),
+    |scores AS (
+    |  SELECT query_id, doc_id,
+    |         CAST(sum(CAST(contrib AS DECIMAL(18,9))) AS DOUBLE) AS score
+    |  FROM pairs GROUP BY query_id, doc_id),
+    |ranked AS (
+    |  SELECT *, row_number() OVER (
+    |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rk
+    |  FROM scores)
+    |SELECT query_id, rk, doc_id, score FROM ranked WHERE rk <= $k
+    |ORDER BY query_id, rk
+    |""".stripMargin
+
   /** INCREMENTALLY-maintained BM25 (Bm25.appendPostings →
     * indexFromPostings → topKFromIndex): the corpus ingested as two
     * exactly-once append generations of NORMALIZED postings (no baked
@@ -170,42 +213,7 @@ object CorpusQueries {
     val k1 = 1.2
     val b = 0.75
     Q("q185_bm25_incremental",
-      Some(s"""
-        |WITH toks98 AS (
-        |  SELECT doc_id, unnest(${sqlTokens("text")}) AS term FROM documents),
-        |tf98 AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks98 GROUP BY 1, 2),
-        |dl98 AS (SELECT doc_id, sum(tf) AS dl FROM tf98 GROUP BY 1),
-        |st98 AS (SELECT count(*) AS n, sum(dl) AS total FROM dl98),
-        |df98 AS (SELECT term, count(*) AS df FROM tf98 GROUP BY 1),
-        |qt98 AS (
-        |  SELECT DISTINCT doc_id AS query_id, term FROM toks98
-        |  WHERE doc_id < 10),
-        |pairs AS (
-        |  SELECT qt98.query_id, tf98.doc_id, tf98.term,
-        |         ln(1.0 + (CAST(n - df AS DOUBLE) + 0.5)
-        |                   / (CAST(df AS DOUBLE) + 0.5))
-        |         * ((CAST(tf AS DOUBLE) * ${k1 + 1.0})
-        |            / (CAST(tf AS DOUBLE) + $k1 * (${1.0 - b} + $b *
-        |               (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))))
-        |           AS contrib
-        |  FROM qt98
-        |  JOIN tf98 USING (term)
-        |  JOIN df98 USING (term)
-        |  JOIN dl98 ON dl98.doc_id = tf98.doc_id
-        |  CROSS JOIN st98
-        |  WHERE tf98.doc_id != qt98.query_id),
-        |scores AS (
-        |  SELECT query_id, doc_id,
-        |         CAST(sum(CAST(contrib AS DECIMAL(18,9))) AS DOUBLE) AS score
-        |  FROM pairs GROUP BY query_id, doc_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rk
-        |  FROM scores)
-        |SELECT query_id, rk, doc_id, score FROM ranked WHERE rk <= 4
-        |ORDER BY query_id, rk
-        |""".stripMargin)) { (s, dir) =>
+      Some(sqlBm25TopK(10, 4, k1, b))) { (s, dir) =>
       import graft.sources.ManifestCommit
       val docs = Tables.documents(s, dir)
       val idxPath = storedIndexPath("bm25_pinc", dir, "documents")
@@ -1058,46 +1066,7 @@ object CorpusQueries {
     "q97_ivf_pq_ann",
     Some(s"""
       |WITH ${PipelineQueries.sqlPqPrelude},
-      |codes AS (SELECT vec_id, m, k AS code FROM ranked WHERE rn = 1),
-      |ccell AS (SELECT vec_id, ${sqlHyperplaneCell(6)} AS cell FROM embeddings),
-      |qc AS (SELECT vec_id AS qid, ${sqlHyperplaneCell(6)} AS qcell
-      |       FROM embeddings WHERE vec_id < 50),
-      |probes AS (
-      |  SELECT qid, xor(qcell, u.mask) AS cell
-      |  FROM qc, unnest([CAST(0 AS BIGINT), 1, 2, 4, 8, 16, 32]) AS u(mask)),
-      |qs AS (
-      |  SELECT vec_id AS qid, CAST(u.m AS INTEGER) AS m,
-      |         list_slice(embedding, u.m * 8 + 1, u.m * 8 + 8) AS qvec
-      |  FROM embeddings, unnest(range(0, 8)) AS u(m)
-      |  WHERE vec_id < 50),
-      |qd AS (
-      |  SELECT qid, m, k AS code,
-      |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(range(1, 9), i ->
-      |             (CAST(qvec[i] AS DOUBLE) - CAST(cvec[i] AS DOUBLE)) *
-      |             (CAST(qvec[i] AS DOUBLE) - CAST(cvec[i] AS DOUBLE)))),
-      |           (a, b) -> a + b) AS qdst
-      |  FROM qs JOIN cb USING (m)),
-      |cand AS (
-      |  SELECT p.qid, c.vec_id AS neighbor_id
-      |  FROM probes p JOIN ccell c ON c.cell = p.cell
-      |  WHERE c.vec_id != p.qid),
-      |pairs AS (
-      |  SELECT cand.qid, cand.neighbor_id, co.m, qd.qdst
-      |  FROM cand
-      |  JOIN codes co ON co.vec_id = cand.neighbor_id
-      |  JOIN qd ON qd.qid = cand.qid AND qd.m = co.m AND qd.code = co.code),
-      |adc AS (
-      |  SELECT qid, neighbor_id,
-      |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list(qdst ORDER BY m)), (a, b) -> a + b) AS adc_dist
-      |  FROM pairs GROUP BY qid, neighbor_id),
-      |rnk AS (
-      |  SELECT *, row_number() OVER (
-      |    PARTITION BY qid ORDER BY adc_dist, neighbor_id) AS nn_rank
-      |  FROM adc)
-      |SELECT qid AS vec_id, nn_rank, neighbor_id, adc_dist
-      |FROM rnk WHERE nn_rank <= 3 ORDER BY vec_id, nn_rank
+      |${sqlIvfAdcOracle(50)}
       |""".stripMargin)) { (s, dir) =>
     import graft.sim.ProductQuantize
     val emb = Tables.embeddings(s, dir)
@@ -1207,42 +1176,7 @@ object CorpusQueries {
     val k1 = 1.2
     val b = 0.75
     Q("q98_bm25_topk",
-      Some(s"""
-        |WITH toks98 AS (
-        |  SELECT doc_id, unnest(${sqlTokens("text")}) AS term FROM documents),
-        |tf98 AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks98 GROUP BY 1, 2),
-        |dl98 AS (SELECT doc_id, sum(tf) AS dl FROM tf98 GROUP BY 1),
-        |st98 AS (SELECT count(*) AS n, sum(dl) AS total FROM dl98),
-        |df98 AS (SELECT term, count(*) AS df FROM tf98 GROUP BY 1),
-        |qt98 AS (
-        |  SELECT DISTINCT doc_id AS query_id, term FROM toks98
-        |  WHERE doc_id < 20),
-        |pairs AS (
-        |  SELECT qt98.query_id, tf98.doc_id, tf98.term,
-        |         ln(1.0 + (CAST(n - df AS DOUBLE) + 0.5)
-        |                   / (CAST(df AS DOUBLE) + 0.5))
-        |         * ((CAST(tf AS DOUBLE) * ${k1 + 1.0})
-        |            / (CAST(tf AS DOUBLE) + $k1 * (${1.0 - b} + $b *
-        |               (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))))
-        |           AS contrib
-        |  FROM qt98
-        |  JOIN tf98 USING (term)
-        |  JOIN df98 USING (term)
-        |  JOIN dl98 ON dl98.doc_id = tf98.doc_id
-        |  CROSS JOIN st98
-        |  WHERE tf98.doc_id != qt98.query_id),
-        |scores AS (
-        |  SELECT query_id, doc_id,
-        |         CAST(sum(CAST(contrib AS DECIMAL(18,9))) AS DOUBLE) AS score
-        |  FROM pairs GROUP BY query_id, doc_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rk
-        |  FROM scores)
-        |SELECT query_id, rk, doc_id, score FROM ranked WHERE rk <= 5
-        |ORDER BY query_id, rk
-        |""".stripMargin)) { (s, dir) =>
+      Some(sqlBm25TopK(20, 5, k1, b))) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       // topK ≡ topKFromIndex over buildIndexTable (its own definition);
       // the index now comes from the shared spine
@@ -1290,42 +1224,7 @@ object CorpusQueries {
     val k1 = 1.2
     val b = 0.75
     Q("q137_bm25_stored_query",
-      Some(s"""
-        |WITH toks98 AS (
-        |  SELECT doc_id, unnest(${sqlTokens("text")}) AS term FROM documents),
-        |tf98 AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks98 GROUP BY 1, 2),
-        |dl98 AS (SELECT doc_id, sum(tf) AS dl FROM tf98 GROUP BY 1),
-        |st98 AS (SELECT count(*) AS n, sum(dl) AS total FROM dl98),
-        |df98 AS (SELECT term, count(*) AS df FROM tf98 GROUP BY 1),
-        |qt98 AS (
-        |  SELECT DISTINCT doc_id AS query_id, term FROM toks98
-        |  WHERE doc_id < 20),
-        |pairs AS (
-        |  SELECT qt98.query_id, tf98.doc_id, tf98.term,
-        |         ln(1.0 + (CAST(n - df AS DOUBLE) + 0.5)
-        |                   / (CAST(df AS DOUBLE) + 0.5))
-        |         * ((CAST(tf AS DOUBLE) * ${k1 + 1.0})
-        |            / (CAST(tf AS DOUBLE) + $k1 * (${1.0 - b} + $b *
-        |               (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))))
-        |           AS contrib
-        |  FROM qt98
-        |  JOIN tf98 USING (term)
-        |  JOIN df98 USING (term)
-        |  JOIN dl98 ON dl98.doc_id = tf98.doc_id
-        |  CROSS JOIN st98
-        |  WHERE tf98.doc_id != qt98.query_id),
-        |scores AS (
-        |  SELECT query_id, doc_id,
-        |         CAST(sum(CAST(contrib AS DECIMAL(18,9))) AS DOUBLE) AS score
-        |  FROM pairs GROUP BY query_id, doc_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rk
-        |  FROM scores)
-        |SELECT query_id, rk, doc_id, score FROM ranked WHERE rk <= 5
-        |ORDER BY query_id, rk
-        |""".stripMargin)) { (s, dir) =>
+      Some(sqlBm25TopK(20, 5, k1, b))) { (s, dir) =>
       import graft.sources.ManifestCommit
       val docs = Tables.documents(s, dir)
       // one stored index per (format version, source-content

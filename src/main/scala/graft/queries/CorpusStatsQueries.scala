@@ -528,58 +528,18 @@ object CorpusStatsQueries {
       |  SELECT doc_id, n_chars AS x, len(${sqlTokens("text")}) AS y
       |  FROM documents
       |  WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-      |cx AS (SELECT x, count(*) AS c FROM v GROUP BY x),
-      |rx AS (
-      |  SELECT x, 2 * coalesce(sum(c) OVER (ORDER BY x
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |         + c + 1 AS rx2
-      |  FROM cx),
-      |cy AS (SELECT y, count(*) AS c FROM v GROUP BY y),
-      |ry AS (
-      |  SELECT y, 2 * coalesce(sum(c) OVER (ORDER BY y
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |         + c + 1 AS ry2
-      |  FROM cy),
-      |j AS (
-      |  SELECT CAST(rx.rx2 AS HUGEINT) AS rx2,
-      |         CAST(ry.ry2 AS HUGEINT) AS ry2
-      |  FROM v JOIN rx ON v.x = rx.x JOIN ry ON v.y = ry.y),
-      |agg AS (
-      |  SELECT count(*) AS n, sum(rx2) AS sx, sum(ry2) AS sy,
-      |         sum(rx2 * rx2) AS sxx, sum(ry2 * ry2) AS syy,
-      |         sum(rx2 * ry2) AS sxy
-      |  FROM j)
+      |${PipelineQueries.sqlSpearmanSums}
       |SELECT CAST(n AS BIGINT) AS n,
       |       ${PipelineQueries.sqlPearsonMilli(
                  "n", "sx", "sy", "sxx", "syy", "sxy")} AS rho_milli
       |FROM agg
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val d38 = "decimal(38,0)"
     val v = Tables.documents(s, dir)
       .where(col("text").isNotNull && col("n_chars").isNotNull)
       .select(col("doc_id"), col("n_chars").as("x"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("y"))
       .materialize() // feeds both rank dims AND the per-doc join
-    def rankDim(c: String, out: String) = {
-      val wC = Window.orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
-        .withColumn(out,
-          lit(2L) * coalesce(sum(col("__c")).over(wC), lit(0L)) +
-            col("__c") + 1L)
-        .select(col(c), col(out))
-    }
-    val j = v
-      .join(broadcast(rankDim("x", "rx2")), Seq("x"))
-      .join(broadcast(rankDim("y", "ry2")), Seq("y"))
-      .select(col("rx2").cast(d38).as("rx2"), col("ry2").cast(d38).as("ry2"))
-    j.agg(count(lit(1)).as("n"),
-        sum(col("rx2")).cast(d38).as("sx"),
-        sum(col("ry2")).cast(d38).as("sy"),
-        sum(col("rx2") * col("rx2")).cast(d38).as("sxx"),
-        sum(col("ry2") * col("ry2")).cast(d38).as("syy"),
-        sum(col("rx2") * col("ry2")).cast(d38).as("sxy"))
+    PipelineQueries.spearmanSums(v)
       .select(col("n"),
         expr(PipelineQueries.sqlPearsonMilli(
           "n", "sx", "sy", "sxx", "syy", "sxy")).as("rho_milli"))

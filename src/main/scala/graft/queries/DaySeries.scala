@@ -12,9 +12,23 @@ import graft.Tables
   * Served through [[graft.sources.SpineCache]]: ONE lineitem
   * aggregation per (testdata fingerprint), parquet-backed for every
   * later consumer in any process — the round-9-verdict spine-table
-  * pattern. The oracle side keeps the inline `day`/`sq` CTEs, so the
-  * gate proves the cached table equals the from-scratch aggregation. */
+  * pattern. [[sql]] is the same frame as oracle text, spliced into
+  * every consumer's oracle SQL, so the gate proves the cached table
+  * equals the from-scratch aggregation. */
 object DaySeries {
+
+  /** Oracle CTE `day(dd, z)`: exact revenue cents per ship date. */
+  def sqlDay: String =
+    """day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
+      |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
+      |        FROM lineitem GROUP BY 1)""".stripMargin
+
+  /** Oracle CTEs `day` and `sq(t, z)`, the text of [[revenue]]; starts
+    * on a fresh line. */
+  def sql: String = s"""
+    |$sqlDay,
+    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
+
   def revenue(s: SparkSession, dir: String): DataFrame =
     graft.sources.SpineCache.table(s, dir, "daily_revenue_cents",
       "lineitem") {

@@ -26,15 +26,8 @@ object DemandQueries {
     * correctly-rounded IEEE sqrt is bit-identical in both engines. */
   def q391: Q = Q(
     "q391_paasche_fisher_index",
-    Some("""
-      |WITH py AS (
-      |  SELECT l_partkey AS part, CAST(year(l_shipdate) AS BIGINT) AS y,
-      |         sum(CAST(floor(CAST(l_extendedprice * (1.0 - l_discount)
-      |              AS DECIMAL(18,9)) * 100) AS BIGINT)) AS net,
-      |         sum(CAST(l_quantity AS BIGINT)) AS qty
-      |  FROM lineitem GROUP BY 1, 2),
-      |up AS (SELECT part, y, (1000 * net) // qty AS upm, qty FROM py),
-      |base AS (SELECT part, upm AS up0, qty AS q0 FROM up WHERE y = 1995),
+    Some(s"""
+      |WITH ${WarehouseQueries.sqlUnitPrices},
       |idx AS (
       |  SELECT up.y, count(*) AS n_parts,
       |         sum(CAST(up.upm AS HUGEINT) * base.q0) AS lnum,
@@ -56,15 +49,7 @@ object DemandQueries {
       |FROM px ORDER BY y
       |""".stripMargin)) { (s, dir) =>
     val d38 = "decimal(38,0)"
-    val up = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey").as("part"),
-        year(col("l_shipdate")).cast("long").as("y"))
-      .agg(sum(floor((col("l_extendedprice")
-          * (lit(1.0) - col("l_discount"))).cast("decimal(18,9)") * 100)
-          .cast("long")).as("net"),
-        sum(col("l_quantity").cast("long")).as("qty"))
-      .select(col("part"), col("y"),
-        expr("(1000 * net) div qty").as("upm"), col("qty"))
+    val up = WarehouseQueries.unitPrices(s, dir)
       .materialize() // part×year dim feeds the base AND the index join
     val base = up.where(col("y") === 1995)
       .select(col("part"), col("upm").as("up0"), col("qty").as("q0"))

@@ -27,15 +27,9 @@ object DensityQueries {
 
   val all: Seq[Q] = Seq(q1126, q1127, q1128, q1129, q1130)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle stats CTE st(n, mn, mx, r). */
   private def sqlSt: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |st AS (SELECT count(*) AS n, min(z) AS mn, max(z) AS mx,
     |              max(z) - min(z) AS r
     |       FROM sq)""".stripMargin

@@ -455,13 +455,8 @@ object DependenceQueries {
         |FROM ks CROSS JOIN base ORDER BY k_days
         |""".stripMargin)) { (s, dir) =>
       import s.implicits._
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"))

@@ -248,12 +248,7 @@ object DiagnosticQueries {
       " AS BIGINT)"
     Q("q483_cooks_distance_days",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS y
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("y")},
         |mm AS (SELECT min(d) AS lo FROM o),
         |pt AS (SELECT d, d - mm.lo AS x, y FROM rev CROSS JOIN mm),
         |mo AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
@@ -277,13 +272,8 @@ object DiagnosticQueries {
         |FROM pt CROSS JOIN ss
         |ORDER BY cooks_d_micro DESC, day LIMIT 10
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("y"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "y")
       val mm = o.agg(min(col("d")).as("lo"))
       val pt = rev.crossJoin(broadcast(mm))
         .select(col("d"), (col("d") - col("lo")).as("x"), col("y"))

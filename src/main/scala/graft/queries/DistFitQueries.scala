@@ -29,12 +29,7 @@ object DistFitQueries {
       s"CAST(floor(CAST($ex AS DECIMAL(28,6)) * 1000) AS BIGINT) AS $name"
     Q("q496_gpd_peaks_over_threshold",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |u AS (
         |  SELECT max(CASE WHEN rn = (950 * n + 999) // 1000 THEN x END)
         |           AS u
@@ -51,12 +46,8 @@ object DistFitQueries {
         |       ${q(beta, "beta_milli")}
         |FROM mo
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir)
+      val rev = Scaffolds.dollarsByDay(o, "x")
         .materialize()
       val u = graft.operators.OrderStats.quantilesDisc(
           rev.withColumn("k", lit(0L)), Seq("k"), "x", Seq(950))
@@ -224,13 +215,8 @@ object DistFitQueries {
     * out of paging. */
   def q499: Q = Q(
     "q499_anomaly_ensemble",
-    Some("""
-      |WITH o AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-      |  FROM orders),
-      |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-      |        FROM o GROUP BY 1),
+    Some(s"""
+      |WITH ${Scaffolds.sqlOrderDollars("x")},
       |mo AS (SELECT count(*) AS n, sum(x) AS sx,
       |              sum(CAST(x AS HUGEINT) * x) AS q FROM rev),
       |qs AS (

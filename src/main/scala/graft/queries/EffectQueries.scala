@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
 import graft.Tables
@@ -213,6 +214,62 @@ object EffectQueries {
           AS DECIMAL(28,9)) * 1000000) AS BIGINT)""").as("ccc_micro"))
   }
 
+  /** Oracle CTE `ord(grp, t)`: per order, grp 1 for '1-URGENT' and 2
+    * otherwise, t = days from order date to its last ship date,
+    * inclusive (orders whose lines all ship earlier are dropped). */
+  private[queries] def sqlUrgencyTimes: String =
+    """ord AS (
+      |  SELECT CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 2
+      |         END AS grp,
+      |         max(epoch_us(l.l_shipdate) // 86400000000)
+      |           - epoch_us(o.o_orderdate) // 86400000000 + 1 AS t
+      |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+      |  GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
+      |  HAVING max(epoch_us(l.l_shipdate) // 86400000000)
+      |         >= epoch_us(o.o_orderdate) // 86400000000)""".stripMargin
+
+  /** Spark side of [[sqlUrgencyTimes]]: (grp, t), uncached. */
+  private[queries] def urgencyTimes(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .select(col("o_orderkey").as("id"),
+        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(2L)
+          .as("grp"),
+        expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
+          " div 86400000000").as("a"))
+      .join(Tables.lineitem(s, dir)
+        .select(col("l_orderkey"),
+          expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
+            " div 86400000000").as("sd")),
+        col("id") === col("l_orderkey"))
+      .groupBy(col("id"), col("grp"), col("a"))
+      .agg(max(col("sd")).as("done"))
+      .where(col("done") >= col("a"))
+      .select(col("grp"), (col("done") - col("a") + 1).as("t"))
+
+  /** Oracle CTE `mo` over `src(grp, t)`: count, sum and sum of squares
+    * of t per group, as (n1, s1, q1, n2, s2_, q2). */
+  private[queries] def sqlGroupMoments(src: String): String =
+    s"""mo AS (
+      |  SELECT sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n1,
+      |         sum(CASE WHEN grp = 1 THEN t ELSE 0 END) AS s1,
+      |         sum(CASE WHEN grp = 1 THEN t * t ELSE 0 END) AS q1,
+      |         sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS n2,
+      |         sum(CASE WHEN grp = 2 THEN t ELSE 0 END) AS s2_,
+      |         sum(CASE WHEN grp = 2 THEN t * t ELSE 0 END) AS q2
+      |  FROM $src)""".stripMargin
+
+  /** Spark side of [[sqlGroupMoments]]. */
+  private[queries] def groupMoments(ord: DataFrame): DataFrame =
+    ord.agg(
+      sum(when(col("grp") === 1, 1L).otherwise(0L)).as("n1"),
+      sum(when(col("grp") === 1, col("t")).otherwise(0L)).as("s1"),
+      sum(when(col("grp") === 1, col("t") * col("t")).otherwise(0L))
+        .as("q1"),
+      sum(when(col("grp") === 2, 1L).otherwise(0L)).as("n2"),
+      sum(when(col("grp") === 2, col("t")).otherwise(0L)).as("s2_"),
+      sum(when(col("grp") === 2, col("t") * col("t")).otherwise(0L))
+        .as("q2"))
+
   /** Cohen's d (and the small-sample Hedges' g correction) for urgent
     * vs non-urgent order fulfillment spans — the effect SIZE the
     * shipped log-rank (q444) and z-tests don't report. Pooled variance
@@ -229,23 +286,8 @@ object EffectQueries {
     val g = s"($d) * (1.0 - 3.0 / (4.0 * CAST(n1 + n2 AS DOUBLE) - 9.0))"
     Q("q489_cohens_d_urgency",
       Some(s"""
-        |WITH ord AS (
-        |  SELECT CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 2
-        |         END AS grp,
-        |         max(epoch_us(l.l_shipdate) // 86400000000)
-        |           - epoch_us(o.o_orderdate) // 86400000000 + 1 AS t
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |  GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-        |  HAVING max(epoch_us(l.l_shipdate) // 86400000000)
-        |         >= epoch_us(o.o_orderdate) // 86400000000),
-        |mo AS (
-        |  SELECT sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n1,
-        |         sum(CASE WHEN grp = 1 THEN t ELSE 0 END) AS s1,
-        |         sum(CASE WHEN grp = 1 THEN t * t ELSE 0 END) AS q1,
-        |         sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS n2,
-        |         sum(CASE WHEN grp = 2 THEN t ELSE 0 END) AS s2_,
-        |         sum(CASE WHEN grp = 2 THEN t * t ELSE 0 END) AS q2
-        |  FROM ord)
+        |WITH ${sqlUrgencyTimes},
+        |${sqlGroupMoments("ord")}
         |SELECT CAST(n1 AS BIGINT) AS n_urgent, CAST(n2 AS BIGINT) AS n_other,
         |       CAST(floor(CAST(
         |           CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
@@ -257,30 +299,7 @@ object EffectQueries {
         |         AS hedges_g_milli
         |FROM mo
         |""".stripMargin)) { (s, dir) =>
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("id"),
-          when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(2L)
-            .as("grp"),
-          expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-            " div 86400000000").as("a"))
-        .join(Tables.lineitem(s, dir)
-          .select(col("l_orderkey"),
-            expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
-              " div 86400000000").as("sd")),
-          col("id") === col("l_orderkey"))
-        .groupBy(col("id"), col("grp"), col("a"))
-        .agg(max(col("sd")).as("done"))
-        .where(col("done") >= col("a"))
-        .select(col("grp"), (col("done") - col("a") + 1).as("t"))
-      val mo = ord.agg(
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("grp") === 1, col("t")).otherwise(0L)).as("s1"),
-        sum(when(col("grp") === 1, col("t") * col("t")).otherwise(0L))
-          .as("q1"),
-        sum(when(col("grp") === 2, 1L).otherwise(0L)).as("n2"),
-        sum(when(col("grp") === 2, col("t")).otherwise(0L)).as("s2_"),
-        sum(when(col("grp") === 2, col("t") * col("t")).otherwise(0L))
-          .as("q2"))
+      val mo = groupMoments(urgencyTimes(s, dir))
       mo.select(col("n1").as("n_urgent"), col("n2").as("n_other"),
         expr("""CAST(floor(CAST(
             CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)

@@ -33,16 +33,10 @@ object EssQueries {
   private def blockB = 32
   private def blockL = 50
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle per-lag milli ACF rk(k, r) for k = 1..maxLag (full-series
     * centering, denominator S₀). */
   private def sqlRk: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |ag AS (SELECT count(*) AS n, sum(z) AS sz FROM sq),
     |ctr AS (SELECT t, n * z - sz AS c FROM sq CROSS JOIN ag),
     |s0 AS (SELECT sum(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0)))
@@ -129,7 +123,7 @@ object EssQueries {
       " / CAST(n2 AS DOUBLE) / CAST(n2 AS DOUBLE)))"
     Q("q1137_geweke_diagnostic",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n FROM sq),
         |w1 AS (SELECT count(*) AS n1, sum(z) AS s1,
         |         sum(CAST(z AS DECIMAL(19,0)) * CAST(z AS DECIMAL(19,0)))
@@ -174,7 +168,7 @@ object EssQueries {
       " / CAST(n2 AS DOUBLE) / CAST(n2 AS DOUBLE)))"
     Q("q1138_batch_means_ess",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n, count(*) // 50 AS m FROM sq),
         |bm AS (SELECT (t - 1) // m AS batch,
         |         (1000 * sum(z)) // count(*) AS bmean
@@ -227,7 +221,7 @@ object EssQueries {
       " / CAST(bn AS DOUBLE) / (CAST(bn AS DOUBLE) - 1.0)))"
     Q("q1139_circular_block_bootstrap",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n,
         |              (count(*) + ${blockL - 1}) // ${blockL} AS slots
         |       FROM sq),

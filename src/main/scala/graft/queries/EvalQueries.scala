@@ -1,6 +1,6 @@
 package graft.queries
 import graft.Materialize.MatOps
-
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sim.{AnnEval, Similarity}
@@ -383,6 +383,26 @@ object EvalQueries {
     }
   }
 
+  /** Oracle CTEs `p`/`e`: the shared-prefix similarity graph (docs
+    * joined on their first 12 trimmed chars), edges e(a, b) with a < b. */
+  private def sqlPrefixEdges: String =
+    """p AS (
+      |  SELECT doc_id, substr(trim(text), 1, 12) AS s FROM documents
+      |  WHERE text IS NOT NULL),
+      |e AS (
+      |  SELECT x.doc_id AS a, y.doc_id AS b
+      |  FROM p x JOIN p y ON x.s = y.s AND x.doc_id < y.doc_id)""".stripMargin
+
+  /** Spark side of [[sqlPrefixEdges]]: edges (s, a, b), uncached. */
+  private def prefixEdges(s: SparkSession, dir: String): DataFrame = {
+    val p = Tables.documents(s, dir)
+      .where(col("text").isNotNull)
+      .select(col("doc_id"), substring(trim(col("text")), 1, 12).as("s"))
+    p.select(col("doc_id").as("a"), col("s"))
+      .join(p.select(col("doc_id").as("b"), col("s")), Seq("s"))
+      .where(col("a") < col("b"))
+  }
+
   /** Global clustering coefficient (q130's triangles over q155's
     * graph, closed into the standard metric): 3·triangles / wedges as
     * an exact ppm integer, wedges = Σ deg·(deg−1)/2 — "how cliquish is
@@ -391,13 +411,8 @@ object EvalQueries {
     * count. */
   def q202: Q = Q(
     "q202_clustering_coefficient",
-    Some("""
-      |WITH p AS (
-      |  SELECT doc_id, substr(trim(text), 1, 12) AS s FROM documents
-      |  WHERE text IS NOT NULL),
-      |e AS (
-      |  SELECT x.doc_id AS a, y.doc_id AS b
-      |  FROM p x JOIN p y ON x.s = y.s AND x.doc_id < y.doc_id),
+    Some(s"""
+      |WITH ${sqlPrefixEdges},
       |tri AS (
       |  SELECT count(*) AS n_triangles
       |  FROM e e1 JOIN e e2 ON e2.a = e1.b
@@ -415,12 +430,7 @@ object EvalQueries {
       |FROM tri CROSS JOIN w
       |""".stripMargin)) { (s, dir) =>
     import graft.operators.Triangles
-    val p = Tables.documents(s, dir)
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), substring(trim(col("text")), 1, 12).as("s"))
-    val edges = p.select(col("doc_id").as("a"), col("s"))
-      .join(p.select(col("doc_id").as("b"), col("s")), Seq("s"))
-      .where(col("a") < col("b"))
+    val edges = prefixEdges(s, dir)
       .select(col("a"), col("b"))
       .materialize() // feeds the triangle count AND the degree sum
     val tri = Triangles.triangleCount(edges, "a", "b")
@@ -747,15 +757,11 @@ object EvalQueries {
       .orderBy(col("source"))
   }
 
-  /** Funnel stage-conversion report (over Funnel.funnel): the per-user
-    * stage table collapsed to the marketing-facing shape — entities
-    * reaching each stage, step conversion ppm (vs previous stage) and
-    * overall conversion ppm (vs stage 1), all exact integer
-    * divisions. */
-  def q192: Q = Q(
-    "q192_funnel_report",
-    Some("""
-      |WITH e AS (
+  /** Oracle CTEs `e`/`s1`/`s2`/`s3`: the view → click → purchase
+    * funnel as three chained per-user windows; s3 carries t1, t2, t3,
+    * each the first ns of its stage at or after the previous one. */
+  private def sqlFunnelStages: String =
+    """e AS (
       |  SELECT user_id, event_type, epoch_ns(ts) AS ns FROM events),
       |s1 AS (
       |  SELECT *, min(CASE WHEN event_type = 'view' THEN ns END)
@@ -767,7 +773,17 @@ object EvalQueries {
       |s3 AS (
       |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t2 IS NOT NULL
       |                      AND ns >= t2 THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t3 FROM s2),
+      |    OVER (PARTITION BY user_id) AS t3 FROM s2)""".stripMargin
+
+  /** Funnel stage-conversion report (over Funnel.funnel): the per-user
+    * stage table collapsed to the marketing-facing shape — entities
+    * reaching each stage, step conversion ppm (vs previous stage) and
+    * overall conversion ppm (vs stage 1), all exact integer
+    * divisions. */
+  def q192: Q = Q(
+    "q192_funnel_report",
+    Some(s"""
+      |WITH ${sqlFunnelStages},
       |agg AS (
       |  SELECT user_id, max(t1) AS t1, max(t2) AS t2, max(t3) AS t3
       |  FROM s3 GROUP BY user_id),
@@ -1075,20 +1091,8 @@ object EvalQueries {
     * actual observed µs (no interpolation). */
   def q187: Q = Q(
     "q187_funnel_latency",
-    Some("""
-      |WITH e AS (
-      |  SELECT user_id, event_type, epoch_ns(ts) AS ns FROM events),
-      |s1 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'view' THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t1 FROM e),
-      |s2 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'click' AND t1 IS NOT NULL
-      |                      AND ns >= t1 THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t2 FROM s1),
-      |s3 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t2 IS NOT NULL
-      |                      AND ns >= t2 THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t3 FROM s2),
+    Some(s"""
+      |WITH ${sqlFunnelStages},
       |agg AS (
       |  SELECT user_id, max(t1) AS t1, max(t3) AS t3
       |  FROM s3 GROUP BY user_id),
@@ -3558,24 +3562,14 @@ object EvalQueries {
     * join over the same edges. */
   def q130: Q = Q(
     "q130_triangle_count",
-    Some("""
-      |WITH p AS (
-      |  SELECT doc_id, substr(trim(text), 1, 12) AS s FROM documents
-      |  WHERE text IS NOT NULL),
-      |e AS (
-      |  SELECT x.doc_id AS a, y.doc_id AS b
-      |  FROM p x JOIN p y ON x.s = y.s AND x.doc_id < y.doc_id)
+    Some(s"""
+      |WITH ${sqlPrefixEdges}
       |SELECT count(*) AS n_triangles
       |FROM e e1 JOIN e e2 ON e2.a = e1.b
       |          JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
       |""".stripMargin)) { (s, dir) =>
     import graft.operators.Triangles
-    val p = Tables.documents(s, dir)
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), substring(trim(col("text")), 1, 12).as("s"))
-    val edges = p.select(col("doc_id").as("a"), col("s"))
-      .join(p.select(col("doc_id").as("b"), col("s")), Seq("s"))
-      .where(col("a") < col("b"))
+    val edges = prefixEdges(s, dir)
     Triangles.triangleCount(edges, "a", "b")
   }
 
@@ -4229,20 +4223,8 @@ object EvalQueries {
     * 2). */
   def q111: Q = Q(
     "q111_conversion_funnel",
-    Some("""
-      |WITH e AS (
-      |  SELECT user_id, event_type, epoch_ns(ts) AS ns FROM events),
-      |s1 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'view' THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t1 FROM e),
-      |s2 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'click' AND t1 IS NOT NULL
-      |                      AND ns >= t1 THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t2 FROM s1),
-      |s3 AS (
-      |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t2 IS NOT NULL
-      |                      AND ns >= t2 THEN ns END)
-      |    OVER (PARTITION BY user_id) AS t3 FROM s2),
+    Some(s"""
+      |WITH ${sqlFunnelStages},
       |agg AS (
       |  SELECT user_id, max(t1) AS t1, max(t2) AS t2, max(t3) AS t3
       |  FROM s3 GROUP BY user_id)

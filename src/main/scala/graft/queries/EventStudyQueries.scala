@@ -24,15 +24,9 @@ object EventStudyQueries {
 
   val all: Seq[Q] = Seq(q1186, q1187, q1188, q1189, q1190)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle CTEs: dv(t, d) scaled deviations, ev(e) top-5 events. */
   private def sqlEv: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |ag AS (SELECT count(*) AS n, sum(z) AS sz FROM sq),
     |dv AS (SELECT t, n * z - sz AS d FROM sq CROSS JOIN ag),
     |ev AS (SELECT t AS e FROM dv CROSS JOIN ag

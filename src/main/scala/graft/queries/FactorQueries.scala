@@ -274,16 +274,7 @@ object FactorQueries {
         |""".stripMargin)) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val br = Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand").as("brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("brand"),
-          expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
-            " div 86400000000").as("d"))
-        .agg(expr("CAST(sum(CAST(l_extendedprice * 100" +
-          " AS DECIMAL(38,0))) div 100 AS BIGINT)").as("x"))
-        .materialize()
+      val br = PortmanteauQueries.brandDayDollars(s, dir).materialize()
       val top2 = br.groupBy(col("brand")).agg(sum(col("x")).as("s"))
         .orderBy(col("s").desc, col("brand")).limit(2)
         .withColumn("rk", row_number().over(

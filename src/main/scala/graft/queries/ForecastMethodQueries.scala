@@ -2,9 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
-import graft.Tables
 
 /** Round-9 forecast-method wave on monthly revenue with a fixed-origin
   * 12-month holdout: the drift method, a Theta(0,2)-style SES+half-
@@ -20,13 +18,8 @@ object ForecastMethodQueries {
 
   val all: Seq[Q] = Seq(q946, q947, q948, q949, q950)
 
-  private def sqlSq: String = """
-    |mo AS (
-    |  SELECT (year(l_shipdate) - 1995) * 12 + month(l_shipdate) - 1
-    |           AS m,
-    |         sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |  FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY m) AS t, z FROM mo),
+  private def sqlSq: String = s"""
+    |${MonthSeries.sql},
     |gl AS (SELECT count(*) AS n FROM sq),
     |tr AS (SELECT sq.t, sq.z FROM sq CROSS JOIN gl
     |       WHERE sq.t <= gl.n - 12),
@@ -36,20 +29,10 @@ object ForecastMethodQueries {
     |              max_by(z, t) AS zl, min_by(z, t) AS zf FROM tr)"""
     .stripMargin
 
-  private def sqBase(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(((year(col("l_shipdate")) - 1995) * 12
-        + month(col("l_shipdate")) - 1).as("m"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .groupBy(col("m")).agg(sum(col("v")).as("z"))
-      .select(row_number().over(Window.orderBy(col("m"))).as("t"),
-        col("z"))
-
   /** (sq, gl, tr, ho, tb) Spark frames mirroring the oracle CTEs. */
   private def frames(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val sq = sqBase(s, dir).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val gl = sq.agg(count(lit(1)).as("n"))
     val tr = sq.crossJoin(broadcast(gl)).where(col("t") <= col("n") - 12)
       .select(col("t"), col("z")).materialize()
@@ -94,13 +77,11 @@ object ForecastMethodQueries {
           .as("naive_mae_cents"))
   }
 
-  /** Theta(0,2)-style forecast: SES level (α=1/5 integer fold over
-    * the train window) plus half the OLS trend times the horizon. */
-  def q947: Q = Q(
-    "q947_theta_forecast",
-    Some(s"""
-      |WITH RECURSIVE ${sqlSq},
-      |hw AS (
+  /** Oracle CTEs `hw`/`lv`/`ols`/`bb` over tr(t, z): the SES level
+    * l (α = 1/5 integer fold, needs WITH RECURSIVE) and the OLS trend
+    * slope b — the two parts of the theta forecast. */
+  private def sqlTheta: String =
+    """hw AS (
       |  SELECT t, CAST(z AS HUGEINT) AS l FROM tr WHERE t = 1
       |  UNION ALL
       |  SELECT s.t, (CAST(s.z AS HUGEINT) + 4 * w.l) // 5
@@ -111,16 +92,10 @@ object ForecastMethodQueries {
       |               sum(CAST(t AS HUGEINT) * z) AS sxy,
       |               sum(CAST(t AS HUGEINT) * t) AS sxx FROM tr),
       |bb AS (SELECT (n * sxy - sx * sy) // (n * sxx - sx * sx) AS b
-      |       FROM ols),
-      |ev AS (
-      |  SELECT abs(ho.z - (lv.l + (ho.h * bb.b) // 2)) AS e
-      |  FROM ho CROSS JOIN lv CROSS JOIN bb)
-      |SELECT CAST(count(*) AS BIGINT) AS n_holdout,
-      |       CAST(sum(CAST(e AS HUGEINT)) // count(*) AS BIGINT)
-      |         AS theta_mae_cents
-      |FROM ev
-      |""".stripMargin)) { (s, dir) =>
-    val (_, tr, ho, _) = frames(s, dir)
+      |       FROM ols)""".stripMargin
+
+  /** Spark side of [[sqlTheta]]: one-row frames (lv(l), bb(b)). */
+  private def theta(tr: DataFrame): (DataFrame, DataFrame) = {
     val lv = tr.agg(sort_array(collect_list(struct(col("t"), col("z"))))
       .as("xs"))
       .select(expr(
@@ -136,6 +111,26 @@ object ForecastMethodQueries {
       .select(expr("CAST((n * sxy - sx * sy" +
         " - (n * sxy - sx * sy) % (n * sxx - sx * sx))" +
         " / (n * sxx - sx * sx) AS DECIMAL(38,0))").as("b"))
+    (lv, bb)
+  }
+
+  /** Theta(0,2)-style forecast: SES level (α=1/5 integer fold over
+    * the train window) plus half the OLS trend times the horizon. */
+  def q947: Q = Q(
+    "q947_theta_forecast",
+    Some(s"""
+      |WITH RECURSIVE ${sqlSq},
+      |${sqlTheta},
+      |ev AS (
+      |  SELECT abs(ho.z - (lv.l + (ho.h * bb.b) // 2)) AS e
+      |  FROM ho CROSS JOIN lv CROSS JOIN bb)
+      |SELECT CAST(count(*) AS BIGINT) AS n_holdout,
+      |       CAST(sum(CAST(e AS HUGEINT)) // count(*) AS BIGINT)
+      |         AS theta_mae_cents
+      |FROM ev
+      |""".stripMargin)) { (s, dir) =>
+    val (_, tr, ho, _) = frames(s, dir)
+    val (lv, bb) = theta(tr)
     ho.crossJoin(broadcast(lv)).crossJoin(broadcast(bb))
       .select(abs(col("z") - (col("l") + expr("(h * b) div 2")))
         .cast("decimal(38,0)").as("e"))
@@ -162,7 +157,7 @@ object ForecastMethodQueries {
       |         AS tracking_signal_milli
       |FROM mo2
       |""".stripMargin)) { (s, dir) =>
-    val sq = sqBase(s, dir).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val b = sq.select((col("t") - 1).as("tb"), col("z").as("zb"))
     sq.join(b, col("t") === col("tb"))
       .select((col("zb") - col("z")).cast("decimal(38,0)").as("e"))
@@ -181,18 +176,7 @@ object ForecastMethodQueries {
     "q949_forecast_combination",
     Some(s"""
       |WITH RECURSIVE ${sqlSq},
-      |hw AS (
-      |  SELECT t, CAST(z AS HUGEINT) AS l FROM tr WHERE t = 1
-      |  UNION ALL
-      |  SELECT s.t, (CAST(s.z AS HUGEINT) + 4 * w.l) // 5
-      |  FROM hw w JOIN tr s ON s.t = w.t + 1),
-      |lv AS (SELECT max_by(l, t) AS l FROM hw),
-      |ols AS (SELECT count(*) AS n, sum(CAST(t AS HUGEINT)) AS sx,
-      |               sum(CAST(z AS HUGEINT)) AS sy,
-      |               sum(CAST(t AS HUGEINT) * z) AS sxy,
-      |               sum(CAST(t AS HUGEINT) * t) AS sxx FROM tr),
-      |bb AS (SELECT (n * sxy - sx * sy) // (n * sxx - sx * sx) AS b
-      |       FROM ols),
+      |${sqlTheta},
       |fc AS (
       |  SELECT ho.z,
       |         CAST(tb.zl AS HUGEINT) AS f_naive,
@@ -218,21 +202,7 @@ object ForecastMethodQueries {
       |FROM mm ORDER BY method
       |""".stripMargin)) { (s, dir) =>
     val (_, tr, ho, tb) = frames(s, dir)
-    val lv = tr.agg(sort_array(collect_list(struct(col("t"), col("z"))))
-      .as("xs"))
-      .select(expr(
-        """aggregate(xs, CAST(-1 AS DECIMAL(38,0)),
-          |  (acc, e) -> IF(acc < 0, CAST(e.z AS DECIMAL(38,0)),
-          |    CAST((CAST(e.z AS DECIMAL(38,0)) + 4 * acc) div 5
-          |         AS DECIMAL(38,0))))""".stripMargin).as("l"))
-    val bb = tr.select(col("t").cast("decimal(38,0)").as("x"),
-        col("z").cast("decimal(38,0)").as("y"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
-      .select(expr("CAST((n * sxy - sx * sy" +
-        " - (n * sxy - sx * sy) % (n * sxx - sx * sx))" +
-        " / (n * sxx - sx * sx) AS DECIMAL(38,0))").as("b"))
+    val (lv, bb) = theta(tr)
     val fc = ho.crossJoin(broadcast(tb)).crossJoin(broadcast(lv))
       .crossJoin(broadcast(bb))
       .select(col("z").cast("decimal(38,0)").as("zv"),
@@ -277,7 +247,7 @@ object ForecastMethodQueries {
       |            AS BIGINT) AS lag1_autocorr_milli
       |FROM mo2
       |""".stripMargin)) { (s, dir) =>
-    val sq = sqBase(s, dir).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val b = sq.select((col("t") - 1).as("tb"), col("z").as("zb"))
     val er = sq.join(b, col("t") === col("tb"))
       .select(col("t"), (col("zb") - col("z")).cast("decimal(38,0)")

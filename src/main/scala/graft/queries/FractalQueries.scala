@@ -32,16 +32,10 @@ object FractalQueries {
   private def ks = Seq(2, 3, 4, 5, 6, 7, 8)
   private def scales = Seq(16, 32, 64, 128)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle per-(k,m) Higuchi segment CTE ending in lk(k, nseg,
     * l_micro): normalized curve length per k, mean over offsets. */
   private def sqlLk: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |lg AS (SELECT * FROM (VALUES ${ks.map(k => s"($k)").mkString(",")}) v(k)),
     |nn AS (SELECT count(*) AS n FROM sq),
     |hp AS (SELECT lg.k, a.t, abs(b.z - a.z) AS ad
@@ -157,7 +151,7 @@ object FractalQueries {
       " + 0.4 * CAST(nd AS DOUBLE)))))"
     Q("q1113_petrosian_crossings",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n, sum(z) AS sz FROM sq),
         |df AS (SELECT t, z - lag(z, 1) OVER (ORDER BY t) AS d1 FROM sq),
         |ds AS (SELECT count(*) AS nd FROM
@@ -211,7 +205,7 @@ object FractalQueries {
       " + log10(CAST(dmax AS DOUBLE) / CAST(l AS DOUBLE))))"
     Q("q1114_katz_dimension",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |mm AS (SELECT min(z) AS mn, max(z) AS mx FROM sq),
         |zn AS (SELECT t, (1000000 * (z - mn)) // (mx - mn) AS zn
         |       FROM sq CROSS JOIN mm),
@@ -284,7 +278,7 @@ object FractalQueries {
       " * CAST(gyy AS DOUBLE) - CAST(gy AS DOUBLE) * CAST(gy AS DOUBLE))))"
     Q("q1115_dfa_alpha",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n, sum(z) AS sz FROM sq),
         |prof AS (SELECT t, sum(n * z - sz) OVER (ORDER BY t
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS y

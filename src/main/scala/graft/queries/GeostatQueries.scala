@@ -31,19 +31,12 @@ object GeostatQueries {
   // def, NOT val: `all` builds oracle strings at object init
   private def lags = Seq(1, 2, 3, 5, 7, 14, 21, 28)
 
-  /** Oracle day/sq CTEs (inline — the gate proves spine ≡ scratch). */
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   private def sqlLg: String =
     s"""lg AS (SELECT * FROM (VALUES ${lags.map(h => s"($h)").mkString(",")}) v(h))"""
 
   /** Oracle lag-pair CTE pr(h, ta, d) with d = z(t+h) − z(t). */
   private def sqlPr: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |${sqlLg},
     |pr AS (SELECT lg.h, a.t AS ta, b.z - a.z AS d
     |       FROM lg CROSS JOIN sq a JOIN sq b ON b.t = a.t + lg.h)""".stripMargin

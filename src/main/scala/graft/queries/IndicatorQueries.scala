@@ -27,12 +27,6 @@ object IndicatorQueries {
 
   val all: Seq[Q] = Seq(q1001, q1002, q1003, q1004, q1005)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   private def sq(s: SparkSession, dir: String): DataFrame =
     DaySeries.revenue(s, dir)
 
@@ -40,7 +34,7 @@ object IndicatorQueries {
   def q1001: Q = Q(
     "q1001_bollinger_exceedance",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |bb AS (
       |  SELECT t, z,
       |         sum(z) OVER w AS sw,
@@ -94,7 +88,7 @@ object IndicatorQueries {
   def q1002: Q = Q(
     "q1002_rsi_regimes",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |dl AS (SELECT t, z - lag(z) OVER (ORDER BY t) AS d FROM sq),
       |gs AS (
       |  SELECT t,
@@ -140,7 +134,7 @@ object IndicatorQueries {
   def q1003: Q = Q(
     "q1003_macd_crossovers",
     Some(s"""
-      |WITH RECURSIVE ${sqlSq},
+      |WITH RECURSIVE ${DaySeries.sql},
       |walk AS (
       |  SELECT 1 AS t, 1000 * z AS e12, 1000 * z AS e26,
       |         CAST(0 AS BIGINT) AS sg, CAST(0 AS BIGINT) AS cx,
@@ -219,7 +213,7 @@ object IndicatorQueries {
   def q1004: Q = Q(
     "q1004_kelly_fraction",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |dl AS (SELECT z - lag(z) OVER (ORDER BY t) AS d FROM sq),
       |mo AS (SELECT count(d) AS n,
       |              sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS w,
@@ -257,7 +251,7 @@ object IndicatorQueries {
   def q1005: Q = Q(
     "q1005_band_followthrough",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |bb AS (
       |  SELECT t, z,
       |         sum(z) OVER w AS sw,

@@ -176,6 +176,50 @@ object InterpolationQueries {
       s" ELSE (CAST($db AS DOUBLE) + CAST($dc AS DOUBLE)) / 2.0 END)"
   }
 
+  /** Oracle CTEs ending in seg(m, a16, ym2, ym1, y0, y1, y2, y3) —
+    * [[sqlSeg]]'s targets widened to 3 knots each side (Akima). */
+  private def sqlSegWide: String =
+    """md0 AS (SELECT (year(CAST(l_shipdate AS DATE)) - 1992) * 12
+      |          + month(CAST(l_shipdate AS DATE)) AS mraw,
+      |          sum(CAST(l_extendedprice * 100 AS BIGINT)) AS y
+      |        FROM lineitem GROUP BY 1),
+      |mm AS (SELECT dense_rank() OVER (ORDER BY mraw) AS m, y FROM md0),
+      |kn AS (SELECT (m + 1) // 2 AS ki, y FROM mm WHERE m % 2 = 1),
+      |kw AS (SELECT ki, lag(y, 2) OVER (ORDER BY ki) AS ym2,
+      |              lag(y, 1) OVER (ORDER BY ki) AS ym1, y AS y0,
+      |              lead(y, 1) OVER (ORDER BY ki) AS y1,
+      |              lead(y, 2) OVER (ORDER BY ki) AS y2,
+      |              lead(y, 3) OVER (ORDER BY ki) AS y3
+      |       FROM kn),
+      |seg AS (SELECT t.m, 16 * t.y AS a16, k.ym2, k.ym1, k.y0, k.y1,
+      |               k.y2, k.y3
+      |        FROM (SELECT m, y FROM mm WHERE m % 2 = 0) t
+      |        JOIN kw k ON k.ki = t.m // 2
+      |        WHERE k.ym2 IS NOT NULL AND k.y3 IS NOT NULL)""".stripMargin
+
+  /** Spark twin of [[sqlSegWide]]. */
+  private def segWide(s: SparkSession, dir: String): DataFrame = {
+    val md0 = Tables.lineitem(s, dir)
+      .groupBy(((year(col("l_shipdate").cast("date")) - 1992) * 12
+        + month(col("l_shipdate").cast("date"))).as("mraw"))
+      .agg(expr("sum(CAST(CAST(l_extendedprice * 100" +
+        " AS DECIMAL(38,0)) AS LONG))").as("y"))
+    val mm = md0.select(
+      dense_rank().over(Window.orderBy(col("mraw"))).as("m"), col("y"))
+    val wk = Window.orderBy(col("ki"))
+    val kw = mm.where(pmod(col("m"), lit(2)) === 1)
+      .select(expr("(m + 1) div 2").as("ki"), col("y"))
+      .select(col("ki"), lag(col("y"), 2).over(wk).as("ym2"),
+        lag(col("y"), 1).over(wk).as("ym1"), col("y").as("y0"),
+        lead(col("y"), 1).over(wk).as("y1"),
+        lead(col("y"), 2).over(wk).as("y2"),
+        lead(col("y"), 3).over(wk).as("y3"))
+    mm.where(pmod(col("m"), lit(2)) === 0)
+      .select(col("m"), (lit(16) * col("y")).as("a16"))
+      .join(kw, col("ki") === expr("m div 2"))
+      .where(col("ym2").isNotNull && col("y3").isNotNull)
+  }
+
   /** Akima backtest — needs secants d₋₂..d₁, so targets are further
     * restricted to knots with 3 left / 3 right neighbors (the kw
     * window is widened; stated). */
@@ -189,46 +233,12 @@ object InterpolationQueries {
     val pred = s"(CAST(y0 + y1 AS DOUBLE) / 2.0 + ($m0 - $m1) / 8.0)"
     Q("q1179_akima_backtest",
       Some(s"""
-        |WITH md0 AS (SELECT (year(CAST(l_shipdate AS DATE)) - 1992) * 12
-        |          + month(CAST(l_shipdate AS DATE)) AS mraw,
-        |          sum(CAST(l_extendedprice * 100 AS BIGINT)) AS y
-        |        FROM lineitem GROUP BY 1),
-        |mm AS (SELECT dense_rank() OVER (ORDER BY mraw) AS m, y FROM md0),
-        |kn AS (SELECT (m + 1) // 2 AS ki, y FROM mm WHERE m % 2 = 1),
-        |kw AS (SELECT ki, lag(y, 2) OVER (ORDER BY ki) AS ym2,
-        |              lag(y, 1) OVER (ORDER BY ki) AS ym1, y AS y0,
-        |              lead(y, 1) OVER (ORDER BY ki) AS y1,
-        |              lead(y, 2) OVER (ORDER BY ki) AS y2,
-        |              lead(y, 3) OVER (ORDER BY ki) AS y3
-        |       FROM kn),
-        |seg AS (SELECT t.m, 16 * t.y AS a16, k.ym2, k.ym1, k.y0, k.y1,
-        |               k.y2, k.y3
-        |        FROM (SELECT m, y FROM mm WHERE m % 2 = 0) t
-        |        JOIN kw k ON k.ki = t.m // 2
-        |        WHERE k.ym2 IS NOT NULL AND k.y3 IS NOT NULL),
+        |WITH ${sqlSegWide},
         |er AS (SELECT a16 - CAST(floor(16.0 * $pred) AS BIGINT) AS e
         |       FROM seg)
         |${sqlErrOut}
         |""".stripMargin)) { (s, dir) =>
-      val md0 = Tables.lineitem(s, dir)
-        .groupBy(((year(col("l_shipdate").cast("date")) - 1992) * 12
-          + month(col("l_shipdate").cast("date"))).as("mraw"))
-        .agg(expr("sum(CAST(CAST(l_extendedprice * 100" +
-          " AS DECIMAL(38,0)) AS LONG))").as("y"))
-      val mm = md0.select(
-        dense_rank().over(Window.orderBy(col("mraw"))).as("m"), col("y"))
-      val wk = Window.orderBy(col("ki"))
-      val kw = mm.where(pmod(col("m"), lit(2)) === 1)
-        .select(expr("(m + 1) div 2").as("ki"), col("y"))
-        .select(col("ki"), lag(col("y"), 2).over(wk).as("ym2"),
-          lag(col("y"), 1).over(wk).as("ym1"), col("y").as("y0"),
-          lead(col("y"), 1).over(wk).as("y1"),
-          lead(col("y"), 2).over(wk).as("y2"),
-          lead(col("y"), 3).over(wk).as("y3"))
-      val sg = mm.where(pmod(col("m"), lit(2)) === 0)
-        .select(col("m"), (lit(16) * col("y")).as("a16"))
-        .join(kw, col("ki") === expr("m div 2"))
-        .where(col("ym2").isNotNull && col("y3").isNotNull)
+      val sg = segWide(s, dir)
       errOut(sg.select((col("a16") -
         expr(s"CAST(floor(16.0 * $pred) AS BIGINT)")).as("e")))
     }
@@ -249,23 +259,7 @@ object InterpolationQueries {
       s" + ($m0ak - $m1ak) / 8.0)"
     Q("q1180_interp_method_ranking",
       Some(s"""
-        |WITH md0 AS (SELECT (year(CAST(l_shipdate AS DATE)) - 1992) * 12
-        |          + month(CAST(l_shipdate AS DATE)) AS mraw,
-        |          sum(CAST(l_extendedprice * 100 AS BIGINT)) AS y
-        |        FROM lineitem GROUP BY 1),
-        |mm AS (SELECT dense_rank() OVER (ORDER BY mraw) AS m, y FROM md0),
-        |kn AS (SELECT (m + 1) // 2 AS ki, y FROM mm WHERE m % 2 = 1),
-        |kw AS (SELECT ki, lag(y, 2) OVER (ORDER BY ki) AS ym2,
-        |              lag(y, 1) OVER (ORDER BY ki) AS ym1, y AS y0,
-        |              lead(y, 1) OVER (ORDER BY ki) AS y1,
-        |              lead(y, 2) OVER (ORDER BY ki) AS y2,
-        |              lead(y, 3) OVER (ORDER BY ki) AS y3
-        |       FROM kn),
-        |seg AS (SELECT t.m, 16 * t.y AS a16, k.ym2, k.ym1, k.y0, k.y1,
-        |               k.y2, k.y3
-        |        FROM (SELECT m, y FROM mm WHERE m % 2 = 0) t
-        |        JOIN kw k ON k.ki = t.m // 2
-        |        WHERE k.ym2 IS NOT NULL AND k.y3 IS NOT NULL),
+        |WITH ${sqlSegWide},
         |ev AS (SELECT 'a_linear' AS method, a16 - 8 * (y0 + y1) AS e
         |         FROM seg
         |       UNION ALL
@@ -288,25 +282,7 @@ object InterpolationQueries {
         |         AS rank_no
         |FROM rr ORDER BY method
         |""".stripMargin)) { (s, dir) =>
-      val md0 = Tables.lineitem(s, dir)
-        .groupBy(((year(col("l_shipdate").cast("date")) - 1992) * 12
-          + month(col("l_shipdate").cast("date"))).as("mraw"))
-        .agg(expr("sum(CAST(CAST(l_extendedprice * 100" +
-          " AS DECIMAL(38,0)) AS LONG))").as("y"))
-      val mm = md0.select(
-        dense_rank().over(Window.orderBy(col("mraw"))).as("m"), col("y"))
-      val wk = Window.orderBy(col("ki"))
-      val kw = mm.where(pmod(col("m"), lit(2)) === 1)
-        .select(expr("(m + 1) div 2").as("ki"), col("y"))
-        .select(col("ki"), lag(col("y"), 2).over(wk).as("ym2"),
-          lag(col("y"), 1).over(wk).as("ym1"), col("y").as("y0"),
-          lead(col("y"), 1).over(wk).as("y1"),
-          lead(col("y"), 2).over(wk).as("y2"),
-          lead(col("y"), 3).over(wk).as("y3"))
-      val sg = mm.where(pmod(col("m"), lit(2)) === 0)
-        .select(col("m"), (lit(16) * col("y")).as("a16"))
-        .join(kw, col("ki") === expr("m div 2"))
-        .where(col("ym2").isNotNull && col("y3").isNotNull)
+      val sg = segWide(s, dir)
         .materialize()
       def ev(name: String, e: org.apache.spark.sql.Column) =
         sg.select(lit(name).as("method"), e.as("e"))

@@ -2,9 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
-import graft.Tables
 
 /** Round-9 state-space wave: a 1-D random-walk Kalman filter over the
   * ~83-month revenue series, run ENTIRELY in scaled-integer
@@ -25,12 +23,7 @@ object KalmanQueries {
   val all: Seq[Q] = Seq(q866, q867, q868, q869, q870)
 
   private def sqlWalk(qcDiv: String = "10"): String = s"""
-    |mo AS (
-    |  SELECT (year(l_shipdate) - 1995) * 12 + month(l_shipdate) - 1
-    |           AS m,
-    |         sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |  FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY m) AS t, z FROM mo),
+    |${MonthSeries.sql},
     |rc AS (SELECT count(*) AS n, sum(CAST(z AS HUGEINT)) AS s,
     |              sum(CAST(z AS HUGEINT) * z) AS q FROM sq),
     |pr AS (SELECT (n * q - s * s) // (n * (n - 1)) AS r,
@@ -58,14 +51,7 @@ object KalmanQueries {
   /** Spark single-row frame (n, xs array, r, qc) for the fold. */
   private def foldInput(s: SparkSession, dir: String, qcDiv: Int)
       : DataFrame = {
-    val sq = Tables.lineitem(s, dir)
-      .select(((year(col("l_shipdate")) - 1995) * 12
-        + month(col("l_shipdate")) - 1).as("m"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .groupBy(col("m")).agg(sum(col("v")).as("z"))
-      .select(row_number().over(Window.orderBy(col("m"))).as("t"),
-        col("z")).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val pr = sq.select(col("z").cast("decimal(38,0)").as("zd"))
       .agg(count(lit(1)).as("n"), sum(col("zd")).as("s"),
         sum(col("zd") * col("zd")).as("q"))
@@ -165,13 +151,8 @@ object KalmanQueries {
     * Q = R/100, R/10, R — one parameterized walk per ratio. */
   def q869: Q = Q(
     "q869_kalman_qr_sweep",
-    Some("""
-      |WITH RECURSIVE mo AS (
-      |  SELECT (year(l_shipdate) - 1995) * 12 + month(l_shipdate) - 1
-      |           AS m,
-      |         sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-      |  FROM lineitem GROUP BY 1),
-      |sq AS (SELECT row_number() OVER (ORDER BY m) AS t, z FROM mo),
+    Some(s"""
+      |WITH RECURSIVE ${MonthSeries.sql},
       |rc AS (SELECT count(*) AS n, sum(CAST(z AS HUGEINT)) AS s,
       |              sum(CAST(z AS HUGEINT) * z) AS q FROM sq),
       |dvs AS (SELECT * FROM (VALUES (100),(10),(1)) AS t(dv)),
@@ -197,14 +178,7 @@ object KalmanQueries {
       |       CAST(x AS BIGINT) AS level_cents
       |FROM fin ORDER BY qr_div DESC
       |""".stripMargin)) { (s, dir) =>
-    val sq = Tables.lineitem(s, dir)
-      .select(((year(col("l_shipdate")) - 1995) * 12
-        + month(col("l_shipdate")) - 1).as("m"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .groupBy(col("m")).agg(sum(col("v")).as("z"))
-      .select(row_number().over(Window.orderBy(col("m"))).as("t"),
-        col("z")).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val dvs = s.createDataFrame(Seq(100, 10, 1).map(Tuple1(_))).toDF("dv")
     val pr = sq.select(col("z").cast("decimal(38,0)").as("zd"))
       .agg(count(lit(1)).as("n"), sum(col("zd")).as("s"),

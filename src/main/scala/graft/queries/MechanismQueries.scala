@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
@@ -101,12 +102,7 @@ object MechanismQueries {
     val a2 = "0.419"; val d3 = "0.076"; val d4 = "1.924"
     Q("q532_xbar_r_chart",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
         |grid AS (
         |  SELECT (g.d - mm.lo) // 7 AS wk, coalesce(rev.x, 0) AS x
@@ -141,13 +137,8 @@ object MechanismQueries {
         |       CAST(oc.r_ooc AS BIGINT) AS r_out_of_control
         |FROM oc
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"), col("lo"))
@@ -238,6 +229,67 @@ object MechanismQueries {
     }
   }
 
+  /** Bradley–Terry MM strengths (micro) after `iters` rounds over the
+    * brand-pair dim g(i, j, n) and the win counts w(i, wins):
+    * (brand, wins, bt_strength_micro). Size-gated like the SupplierGraph
+    * fixpoints: at most `cap` pairs fold the whole trajectory inside ONE
+    * task with the identical long floor-division chain (the distributed
+    * per-round loop ran ~24 tiny Spark jobs); more run the dataframe
+    * loop. Both fail on a value past Long — the local fold through
+    * `multiplyExact`/`addExact`, the loop through ANSI arithmetic. */
+  private[graft] def btStrengths(g: DataFrame, w: DataFrame, iters: Int,
+      cap: Long = SupplierGraph.localEdgeCap): DataFrame = {
+    val s = g.sparkSession
+    if (g.count() <= cap) {
+      import s.implicits._
+      g.select(lit(0L).as("t"), col("i"), col("j"), col("n"))
+        .unionAll(w.select(lit(1L).as("t"), col("i"),
+          col("i").as("j2"), col("wins")))
+        .as[(Long, String, String, Long)]
+        .repartition(1)
+        .mapPartitions { it =>
+          val rows = it.toArray
+          val gps = rows.collect { case (0L, i, j, n) => (i, j, n) }
+          val wm = rows.collect { case (1L, i, _, x) => (i, x) }.toMap
+          var pi: Map[String, Long] =
+            wm.map { case (i, _) => i -> 1000000L }
+          for (_ <- 1 to iters) {
+            val den = scala.collection.mutable.HashMap.empty[
+              String, Long]
+            gps.foreach { case (i, j, n) =>
+              for (pv <- pi.get(i); qv <- pi.get(j))
+                den.update(i, Math.addExact(den.getOrElse(i, 0L),
+                  Math.multiplyExact(1000000000000L, n) / (pv + qv)))
+            }
+            pi = wm.flatMap { case (i, wins) =>
+              den.get(i).map(d =>
+                i -> Math.multiplyExact(1000000000000L, wins) / d)
+            }
+          }
+          pi.iterator.map { case (i, p) => (i, wm(i), p) }
+        }
+        .toDF("brand", "wins", "bt_strength_micro")
+    } else {
+      var pi = w.select(col("i"), lit(1000000L).as("pi")).materialize()
+      for (_ <- 1 to iters) {
+        val den = g
+          .join(pi.select(col("i").as("pii"), col("pi").as("pv")),
+            col("pii") === col("i"))
+          .join(pi.select(col("i").as("pij"), col("pi").as("qv")),
+            col("pij") === col("j"))
+          .groupBy(col("i"))
+          .agg(sum(expr("(1000000000000 * n) div (pv + qv)")).as("den"))
+        pi = w.join(den, Seq("i"))
+          .select(col("i"),
+            expr("(1000000000000 * wins) div den").as("pi"))
+          .materialize(truncate = true) // constant-depth per round
+      }
+      pi.join(w, Seq("i"))
+        .select(col("i").as("brand"), col("wins"),
+          col("pi").as("bt_strength_micro"))
+    }
+  }
+
   /** Bradley–Terry paired-comparison strengths for brands: in every
     * order containing two brands, the one with the larger line revenue
     * "wins"; strengths come from 12 minorization-maximization rounds
@@ -321,60 +373,8 @@ object MechanismQueries {
         .materialize() // brand-pair dim (≤600 rows)
       val w = duel.groupBy(col("wi").as("i")).agg(count(lit(1)).as("wins"))
         .materialize()
-      // 12 MM rounds over a ≤25-brand / ≤600-pair dim: size-gated like
-      // the SupplierGraph fixpoints — under the cap the whole trajectory
-      // folds inside ONE task with the identical long floor-division
-      // chain (the distributed per-round loop ran ~24 tiny Spark jobs);
-      // above the cap the dataframe loop runs as before.
-      val bt =
-        if (g.count() <= SupplierGraph.localEdgeCap) {
-          import s.implicits._
-          g.select(lit(0L).as("t"), col("i"), col("j"), col("n"))
-            .unionAll(w.select(lit(1L).as("t"), col("i"),
-              col("i").as("j2"), col("wins")))
-            .as[(Long, String, String, Long)]
-            .repartition(1)
-            .mapPartitions { it =>
-              val rows = it.toArray
-              val gps = rows.collect { case (0L, i, j, n) => (i, j, n) }
-              val wm = rows.collect { case (1L, i, _, x) => (i, x) }.toMap
-              var pi: Map[String, Long] =
-                wm.map { case (i, _) => i -> 1000000L }
-              for (_ <- 1 to iters) {
-                val den = scala.collection.mutable.HashMap.empty[
-                  String, Long]
-                gps.foreach { case (i, j, n) =>
-                  for (pv <- pi.get(i); qv <- pi.get(j))
-                    den.update(i,
-                      den.getOrElse(i, 0L) + (1000000000000L * n) / (pv + qv))
-                }
-                pi = wm.flatMap { case (i, wins) =>
-                  den.get(i).map(d => i -> (1000000000000L * wins) / d)
-                }
-              }
-              pi.iterator.map { case (i, p) => (i, wm(i), p) }
-            }
-            .toDF("brand", "wins", "bt_strength_micro")
-        } else {
-          var pi = w.select(col("i"), lit(1000000L).as("pi")).materialize()
-          for (_ <- 1 to iters) {
-            val den = g
-              .join(pi.select(col("i").as("pii"), col("pi").as("pv")),
-                col("pii") === col("i"))
-              .join(pi.select(col("i").as("pij"), col("pi").as("qv")),
-                col("pij") === col("j"))
-              .groupBy(col("i"))
-              .agg(sum(expr("(1000000000000 * n) div (pv + qv)")).as("den"))
-            pi = w.join(den, Seq("i"))
-              .select(col("i"),
-                expr("(1000000000000 * wins) div den").as("pi"))
-              .materialize(truncate = true) // constant-depth per round
-          }
-          pi.join(w, Seq("i"))
-            .select(col("i").as("brand"), col("wins"),
-              col("pi").as("bt_strength_micro"))
-        }
-      bt.orderBy(col("bt_strength_micro").desc, col("brand"))
+      btStrengths(g, w, iters)
+        .orderBy(col("bt_strength_micro").desc, col("brand"))
         .limit(10)
     }
   }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
@@ -286,16 +287,12 @@ object OpsSimQueries {
           AS DECIMAL(28,6)) * 1000) AS BIGINT)""").as("tau_b_milli"))
   }
 
-  /** Decision-stump screen: which single binary feature (deep
-    * discount, bulk quantity, urgent priority) best splits return
-    * risk, by Gini impurity gain with permille-quantized side
-    * impurities (the stated contract). The first node a tree learner
-    * would grow, as a pure relational computation — one fact pass,
-    * then dim-sized arithmetic per feature. */
-  def q479: Q = Q(
-    "q479_gini_stump_returns",
-    Some("""
-      |WITH l AS (
+  /** Oracle CTEs `l`/`agg`: lineitem × order flags — deep discount
+    * (≥ 5%), bulk quantity (> 25), urgent priority — against the
+    * return label y, reduced to one row of counts (n, yy and per
+    * feature n·/y·). */
+  private[queries] def sqlFeatureCounts: String =
+    """l AS (
       |  SELECT CASE WHEN floor(l.l_discount * 100 + 0.5) >= 5
       |              THEN 1 ELSE 0 END AS f_disc,
       |         CASE WHEN l.l_quantity > 25.0 THEN 1 ELSE 0 END AS f_qty,
@@ -308,7 +305,46 @@ object OpsSimQueries {
       |         sum(f_disc) AS nd, sum(f_disc * y) AS yd,
       |         sum(f_qty) AS nq, sum(f_qty * y) AS yq,
       |         sum(f_urg) AS nu, sum(f_urg * y) AS yu
-      |  FROM l),
+      |  FROM l)""".stripMargin
+
+  /** Spark side of [[sqlFeatureCounts]], one row per feature:
+    * (feature, n, yy, n1, y1). */
+  private[queries] def featureCounts(s: SparkSession, dir: String)
+      : DataFrame = {
+    val l = Tables.lineitem(s, dir)
+      .join(Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_orderpriority")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(
+        when(expr("floor(l_discount * 100 + 0.5) >= 5"), 1L).otherwise(0L)
+          .as("f_disc"),
+        when(col("l_quantity") > 25.0, 1L).otherwise(0L).as("f_qty"),
+        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
+          .as("f_urg"),
+        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val agg = l.agg(count(lit(1)).as("n"), sum(col("y")).as("yy"),
+      sum(col("f_disc")).as("nd"), sum(col("f_disc") * col("y")).as("yd"),
+      sum(col("f_qty")).as("nq"), sum(col("f_qty") * col("y")).as("yq"),
+      sum(col("f_urg")).as("nu"), sum(col("f_urg") * col("y")).as("yu"))
+      .materialize()
+    agg.select(lit("deep_discount").as("feature"), col("n"),
+        col("yy"), col("nd").as("n1"), col("yd").as("y1"))
+      .unionAll(agg.select(lit("bulk_quantity"), col("n"), col("yy"),
+        col("nq"), col("yq")))
+      .unionAll(agg.select(lit("urgent_priority"), col("n"), col("yy"),
+        col("nu"), col("yu")))
+  }
+
+  /** Decision-stump screen: which single binary feature (deep
+    * discount, bulk quantity, urgent priority) best splits return
+    * risk, by Gini impurity gain with permille-quantized side
+    * impurities (the stated contract). The first node a tree learner
+    * would grow, as a pure relational computation — one fact pass,
+    * then dim-sized arithmetic per feature. */
+  def q479: Q = Q(
+    "q479_gini_stump_returns",
+    Some(s"""
+      |WITH ${sqlFeatureCounts},
       |m AS (
       |  SELECT feature, n, n1, y1, n - n1 AS n0, yy - y1 AS y0,
       |         (2000 * yy * (n - yy)) // (n * n) AS gp
@@ -328,28 +364,7 @@ object OpsSimQueries {
       |       CAST(gp - gw AS BIGINT) AS gain_milli
       |FROM g ORDER BY gain_milli DESC, feature
       |""".stripMargin)) { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(
-        when(expr("floor(l_discount * 100 + 0.5) >= 5"), 1L).otherwise(0L)
-          .as("f_disc"),
-        when(col("l_quantity") > 25.0, 1L).otherwise(0L).as("f_qty"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-          .as("f_urg"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-    val agg = l.agg(count(lit(1)).as("n"), sum(col("y")).as("yy"),
-      sum(col("f_disc")).as("nd"), sum(col("f_disc") * col("y")).as("yd"),
-      sum(col("f_qty")).as("nq"), sum(col("f_qty") * col("y")).as("yq"),
-      sum(col("f_urg")).as("nu"), sum(col("f_urg") * col("y")).as("yu"))
-      .materialize()
-    val u = agg.select(lit("deep_discount").as("feature"), col("n"),
-        col("yy"), col("nd").as("n1"), col("yd").as("y1"))
-      .unionAll(agg.select(lit("bulk_quantity"), col("n"), col("yy"),
-        col("nq"), col("yq")))
-      .unionAll(agg.select(lit("urgent_priority"), col("n"), col("yy"),
-        col("nu"), col("yu")))
+    val u = featureCounts(s, dir)
     u.select(col("feature"), col("n"), col("n1"),
         (col("n") - col("n1")).as("n0"), col("y1"),
         (col("yy") - col("y1")).as("y0"),

@@ -25,13 +25,6 @@ object OrdinalPatternQueries {
 
   val all: Seq[Q] = Seq(q1046, q1047, q1048, q1049, q1050)
 
-  /** Oracle day/sq CTEs (inline — the gate proves spine ≡ scratch). */
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Shared order-3 code text over columns z0, z1, z2 (identical in
     * both engines — integer CASE arithmetic). */
   private def code3: String =
@@ -74,7 +67,7 @@ object OrdinalPatternQueries {
   def q1046: Q = Q(
     "q1046_ordinal_patterns",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |${sqlTri},
       |n AS (SELECT count(*) AS n FROM tri)
       |SELECT CAST(code AS BIGINT) AS pattern,
@@ -99,7 +92,7 @@ object OrdinalPatternQueries {
   def q1047: Q = Q(
     "q1047_permutation_entropy",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |${sqlTri},
       |pc AS (SELECT code, count(*) AS c FROM tri GROUP BY 1),
       |ag AS (SELECT sum(c) AS n, count(*) AS n_patterns,
@@ -132,7 +125,7 @@ object OrdinalPatternQueries {
   def q1048: Q = Q(
     "q1048_forbidden_order4",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |qw AS (SELECT t, z AS z0,
       |              lead(z, 1) OVER (ORDER BY t) AS z1,
       |              lead(z, 2) OVER (ORDER BY t) AS z2,
@@ -170,7 +163,7 @@ object OrdinalPatternQueries {
   def q1049: Q = Q(
     "q1049_pattern_transitions",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |${sqlTri},
       |tr AS (SELECT code AS from_code,
       |              lead(code) OVER (ORDER BY t) AS to_code
@@ -208,7 +201,7 @@ object OrdinalPatternQueries {
   def q1050: Q = Q(
     "q1050_difference_sign",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |dw AS (SELECT z, lead(z) OVER (ORDER BY t) AS zn FROM sq),
       |ag AS (SELECT count(*) AS m,
       |              sum(CASE WHEN zn > z THEN 1 ELSE 0 END) AS d,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
-import graft.Tables
 
 /** Round-9 paired-comparison wave on the region×brand revenue
   * tournament (the q826 ballots): Bradley-Terry strengths via FIVE
@@ -25,15 +24,9 @@ object PairedCompQueries {
   val all: Seq[Q] = Seq(q876, q877, q878, q879, q880)
 
   /** Oracle ballots + both-direction pair wins (5 voters per pair). */
-  private def sqlPw: String = """
+  private def sqlPw: String = s"""
     |rb AS MATERIALIZED (
-    |  SELECT n.n_regionkey AS r, p.p_brand AS b,
-    |         sum(CAST(l.l_extendedprice * 100 AS BIGINT)) AS rev
-    |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    |       JOIN customer c ON c.c_custkey = o.o_custkey
-    |       JOIN nation n ON n.n_nationkey = c.c_nationkey
-    |       JOIN part p ON p.p_partkey = l.l_partkey
-    |  GROUP BY 1, 2),
+    |${RankAggQueries.sqlRegionBrandRev}),
     |rk AS MATERIALIZED (SELECT r, b, row_number() OVER (PARTITION BY r
     |         ORDER BY rev DESC, b) AS rnk FROM rb),
     |pw AS MATERIALIZED (
@@ -90,24 +83,7 @@ object PairedCompQueries {
 
   /** Spark ballots → both-direction pair wins dim. */
   private def pwBase(s: SparkSession, dir: String): DataFrame = {
-    val rk = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey")),
-        col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(s, dir)
-        .select(col("n_nationkey"), col("n_regionkey").as("r"))),
-        col("n_nationkey") === col("c_nationkey"))
-      .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand").as("b")),
-        col("p_partkey") === col("l_partkey"))
-      .groupBy(col("r"), col("b"))
-      .agg(sum(col("v").cast("decimal(38,0)")).as("rev"))
-      .select(col("r"), col("b"), row_number().over(
-        Window.partitionBy(col("r")).orderBy(col("rev").desc, col("b")))
-        .as("rnk"))
+    val rk = RankAggQueries.rkBase(s, dir)
     rk.join(rk.select(col("r").as("r2"), col("b").as("bb"),
         col("rnk").as("rnk2")),
       col("r") === col("r2") && col("bb") =!= col("b"))
@@ -123,13 +99,19 @@ object PairedCompQueries {
     * division is identical to the dataframe loop's decimal(38,0)
     * `x - x % y) / y` chain, and the output re-casts to the same
     * decimal type; above the cap the per-round loop runs as before. */
-  private def btBase(s: SparkSession, dir: String): DataFrame = {
-    val pw = pwSpine(s, dir)
+  private def btBase(s: SparkSession, dir: String): DataFrame =
+    btFrom(pwSpine(s, dir))
+
+  /** [[btBase]] over a given pair-wins dim pw(ba, bb, wins, nv): at
+    * most `cap` pairs fold in one task, more run the dataframe loop. */
+  private[graft] def btFrom(pw: DataFrame,
+      cap: Long = SupplierGraph.localEdgeCap): DataFrame = {
+    val s = pw.sparkSession
     // Long-path magnitude bound (ADVICE r11 #3): nv is the per-pair
     // VOTER count, bounded by the region dim (5), so nv*1e12 ~ 5e12
     // and praw*nb*1e6 <= (w1*1e12/d)*25*1e6 stay far inside Long; the
     // require fails loudly if a schema change ever breaks that bound
-    if (pw.count() <= SupplierGraph.localEdgeCap) {
+    if (pw.count() <= cap) {
       require(pw.agg(max(col("nv"))).head().getLong(0) <= 1000000L,
         "btBase local Long path requires small per-pair voter counts")
       import s.implicits._

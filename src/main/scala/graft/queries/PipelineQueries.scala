@@ -2,6 +2,7 @@ package graft.queries
 import graft.Materialize.MatOps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
@@ -60,6 +61,58 @@ object PipelineQueries {
        |         * (CAST($n AS DOUBLE) * CAST($syy AS DOUBLE)
        |            - CAST($sy AS DOUBLE) * CAST($sy AS DOUBLE)))
        |AS DECIMAL(18,9)) * 1000) AS BIGINT) END""".stripMargin
+
+  /** Oracle CTEs `cx`..`agg` over v(x, y): the doubled mid-ranks
+    * rx2/ry2 of x and y (ties share 2·(#below) + c + 1) and their exact
+    * sums n, sx, sy, sxx, syy, sxy — Spearman's ρ is
+    * [[sqlPearsonMilli]] over `agg`. */
+  private[queries] def sqlSpearmanSums: String =
+    """cx AS (SELECT x, count(*) AS c FROM v GROUP BY x),
+      |rx AS (
+      |  SELECT x, 2 * coalesce(sum(c) OVER (ORDER BY x
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |         + c + 1 AS rx2
+      |  FROM cx),
+      |cy AS (SELECT y, count(*) AS c FROM v GROUP BY y),
+      |ry AS (
+      |  SELECT y, 2 * coalesce(sum(c) OVER (ORDER BY y
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |         + c + 1 AS ry2
+      |  FROM cy),
+      |j AS (
+      |  SELECT CAST(rx.rx2 AS HUGEINT) AS rx2,
+      |         CAST(ry.ry2 AS HUGEINT) AS ry2
+      |  FROM v JOIN rx ON v.x = rx.x JOIN ry ON v.y = ry.y),
+      |agg AS (
+      |  SELECT count(*) AS n, sum(rx2) AS sx, sum(ry2) AS sy,
+      |         sum(rx2 * rx2) AS sxx, sum(ry2 * ry2) AS syy,
+      |         sum(rx2 * ry2) AS sxy
+      |  FROM j)""".stripMargin
+
+  /** Spark side of [[sqlSpearmanSums]]: the one `agg` row, from v(x, y)
+    * (v is read three times; the caller materializes it). */
+  private[queries] def spearmanSums(v: DataFrame): DataFrame = {
+    val d38 = "decimal(38,0)"
+    def rankDim(c: String, out: String) = {
+      val wC = Window.orderBy(col(c))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
+        .withColumn(out,
+          lit(2L) * coalesce(sum(col("__c")).over(wC), lit(0L)) +
+            col("__c") + 1L)
+        .select(col(c), col(out))
+    }
+    v
+      .join(broadcast(rankDim("x", "rx2")), Seq("x"))
+      .join(broadcast(rankDim("y", "ry2")), Seq("y"))
+      .select(col("rx2").cast(d38).as("rx2"), col("ry2").cast(d38).as("ry2"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("rx2")).cast(d38).as("sx"),
+        sum(col("ry2")).cast(d38).as("sy"),
+        sum(col("rx2") * col("rx2")).cast(d38).as("sxx"),
+        sum(col("ry2") * col("ry2")).cast(d38).as("syy"),
+        sum(col("rx2") * col("ry2")).cast(d38).as("sxy"))
+  }
 
   /** ≙ Dedup.shingles(n=3) on pre-tokenized list `toks`. */
   private[queries] def sqlShingles(toks: String) =
@@ -380,36 +433,49 @@ object PipelineQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Brute-force exact cosine top-3 (ANN baseline): queries = vec_id < 50,
-    * corpus = all. Left-fold double dot products — bit-identical on both
-    * engines. */
-  def q30: Q = {
+  /** Oracle tail of the brute-force cosine top-3 (q30, q62): `pairs`
+    * scores each `q` row against every other row of `corpus` (a
+    * relation aliased or named `c`) on vector column `v` (left-fold
+    * double dots, bit-identical on both engines), then `ranked` keeps
+    * the best 3 per query. */
+  private def sqlCosineTop3(corpus: String, v: String): String = {
     def dot(a: String, b: String) =
       s"""list_reduce(list_prepend(0.0, list_transform(range(1, 65),
          |  i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))),
          |  (x, y) -> x + y)""".stripMargin
+    s"""pairs AS (
+      |  SELECT q.vec_id, c.vec_id AS neighbor_id,
+      |         ${dot(s"q.$v", s"c.$v")}
+      |           / (sqrt(${dot(s"q.$v", s"q.$v")})
+      |              * sqrt(${dot(s"c.$v", s"c.$v")})) AS cos
+      |  FROM q JOIN $corpus ON q.vec_id != c.vec_id),
+      |ranked AS (SELECT *, row_number() OVER (
+      |             PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS nn_rank
+      |           FROM pairs)
+      |SELECT vec_id, nn_rank, neighbor_id, cos
+      |FROM ranked WHERE nn_rank <= 3 ORDER BY vec_id, nn_rank""".stripMargin
+  }
+
+  /** Spark side of [[sqlCosineTop3]]: exact cosine top-3 of the
+    * vec_id < 50 queries over `corpus`'s (vec_id, embedding). */
+  private def cosineTop3(corpus: DataFrame): DataFrame =
+    Similarity.bruteForceTopK(
+      corpus = corpus, queries = corpus.filter(col("vec_id") < 50),
+      idCol = "vec_id", vecCol = "embedding", k = 3)
+      .withColumnRenamed("rank", "nn_rank")
+      .orderBy(col("vec_id"), col("nn_rank"))
+
+  /** Brute-force exact cosine top-3 (ANN baseline): queries = vec_id < 50,
+    * corpus = all. Left-fold double dot products — bit-identical on both
+    * engines. */
+  def q30: Q = {
     Q("q30_cosine_topk",
       Some(s"""
         |WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 50),
         |c AS (SELECT vec_id, embedding FROM embeddings),
-        |pairs AS (
-        |  SELECT q.vec_id, c.vec_id AS neighbor_id,
-        |         ${dot("q.embedding", "c.embedding")}
-        |           / (sqrt(${dot("q.embedding", "q.embedding")})
-        |              * sqrt(${dot("c.embedding", "c.embedding")})) AS cos
-        |  FROM q JOIN c ON q.vec_id != c.vec_id),
-        |ranked AS (SELECT *, row_number() OVER (
-        |             PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS nn_rank
-        |           FROM pairs)
-        |SELECT vec_id, nn_rank, neighbor_id, cos
-        |FROM ranked WHERE nn_rank <= 3 ORDER BY vec_id, nn_rank
+        |${sqlCosineTop3("c", "embedding")}
         |""".stripMargin)) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-        corpus = emb, queries = emb.filter(col("vec_id") < 50),
-        idCol = "vec_id", vecCol = "embedding", k = 3)
-        .withColumnRenamed("rank", "nn_rank")
-        .orderBy(col("vec_id"), col("nn_rank"))
+      cosineTop3(Tables.embeddings(s, dir))
     }
   }
 
@@ -669,10 +735,6 @@ object PipelineQueries {
     * shuffle/broadcast payload is 4× smaller than floats). Same shape as
     * q30; the oracle replays quantization + integer dots + ranking. */
   def q62: Q = {
-    def dot(a: String, b: String) =
-      s"""list_reduce(list_prepend(0.0, list_transform(range(1, 65),
-         |  i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))),
-         |  (x, y) -> x + y)""".stripMargin
     Q("q62_quantized_ann",
       Some(s"""
         |WITH e AS (
@@ -685,26 +747,10 @@ object PipelineQueries {
         |         ELSE floor(CAST(x AS DOUBLE) * 127.0 / m) END AS INTEGER)) AS qa
         |  FROM e),
         |q AS (SELECT vec_id, qa FROM qv WHERE vec_id < 50),
-        |pairs AS (
-        |  SELECT q.vec_id, c.vec_id AS neighbor_id,
-        |         ${dot("q.qa", "c.qa")}
-        |           / (sqrt(${dot("q.qa", "q.qa")})
-        |              * sqrt(${dot("c.qa", "c.qa")})) AS cos
-        |  FROM q JOIN qv c ON q.vec_id != c.vec_id),
-        |ranked AS (SELECT *, row_number() OVER (
-        |             PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS nn_rank
-        |           FROM pairs)
-        |SELECT vec_id, nn_rank, neighbor_id, cos
-        |FROM ranked WHERE nn_rank <= 3 ORDER BY vec_id, nn_rank
+        |${sqlCosineTop3("qv c", "qa")}
         |""".stripMargin)) { (s, dir) =>
-      import graft.sim.Quantize
-      val codes = Quantize.quantizedCodes(
-        Tables.embeddings(s, dir), "vec_id", "embedding")
-      Similarity.bruteForceTopK(
-        corpus = codes, queries = codes.filter(col("vec_id") < 50),
-        idCol = "vec_id", vecCol = "embedding", k = 3)
-        .withColumnRenamed("rank", "nn_rank")
-        .orderBy(col("vec_id"), col("nn_rank"))
+      cosineTop3(graft.sim.Quantize.quantizedCodes(
+        Tables.embeddings(s, dir), "vec_id", "embedding"))
     }
   }
 

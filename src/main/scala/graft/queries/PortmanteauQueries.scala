@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
@@ -175,6 +176,20 @@ object PortmanteauQueries {
     }
   }
 
+  /** Per (part brand, ship day number) revenue in whole dollars,
+    * (brand, d, x), uncached — the two-brand day grids' input. */
+  private[queries] def brandDayDollars(s: SparkSession, dir: String)
+      : DataFrame =
+    Tables.lineitem(s, dir)
+      .join(Tables.part(s, dir)
+        .select(col("p_partkey"), col("p_brand").as("brand")),
+        col("l_partkey") === col("p_partkey"))
+      .groupBy(col("brand"),
+        expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
+          " div 86400000000").as("d"))
+      .agg(expr("CAST(sum(CAST(l_extendedprice * 100 AS DECIMAL(38,0)))" +
+        " div 100 AS BIGINT)").as("x"))
+
   /** Upper-tail dependence between the two largest brands' daily
     * revenue series: λ_U ≈ P(X > q95(X) | Y > q95(Y)) both ways —
     * do their extreme days coincide (copula tail behavior the Pearson
@@ -226,16 +241,7 @@ object PortmanteauQueries {
       |            AS BIGINT) AS lambda_u_milli
       |FROM ct
       |""".stripMargin)) { (s, dir) =>
-    val br = Tables.lineitem(s, dir)
-      .join(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand").as("brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("brand"),
-        expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"))
-      .agg(expr("CAST(sum(CAST(l_extendedprice * 100 AS DECIMAL(38,0)))" +
-        " div 100 AS BIGINT)").as("x"))
-      .materialize()
+    val br = brandDayDollars(s, dir).materialize()
     val top2 = br.groupBy(col("brand")).agg(sum(col("x")).as("s"))
       .orderBy(col("s").desc, col("brand")).limit(2)
       .withColumn("r", row_number().over(

@@ -22,21 +22,26 @@ object RankAggQueries {
 
   val all: Seq[Q] = Seq(q826, q827, q828, q829, q830)
 
-  private def sqlRk: String = """
+  /** Oracle body of the `rb(r, b, rev)` CTE: exact revenue cents per
+    * (customer region, part brand) — the ballots' input. */
+  private[queries] def sqlRegionBrandRev: String =
+    """  SELECT n.n_regionkey AS r, p.p_brand AS b,
+      |         sum(CAST(l.l_extendedprice * 100 AS BIGINT)) AS rev
+      |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+      |       JOIN customer c ON c.c_custkey = o.o_custkey
+      |       JOIN nation n ON n.n_nationkey = c.c_nationkey
+      |       JOIN part p ON p.p_partkey = l.l_partkey
+      |  GROUP BY 1, 2""".stripMargin
+
+  private def sqlRk: String = s"""
     |rb AS (
-    |  SELECT n.n_regionkey AS r, p.p_brand AS b,
-    |         sum(CAST(l.l_extendedprice * 100 AS BIGINT)) AS rev
-    |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    |       JOIN customer c ON c.c_custkey = o.o_custkey
-    |       JOIN nation n ON n.n_nationkey = c.c_nationkey
-    |       JOIN part p ON p.p_partkey = l.l_partkey
-    |  GROUP BY 1, 2),
+    |$sqlRegionBrandRev),
     |rk AS (SELECT r, b, row_number() OVER (PARTITION BY r
     |         ORDER BY rev DESC, b) AS rnk FROM rb)""".stripMargin
 
   /** Spark ballot dim (r, b, rnk): one fact pass then a 125-row
     * partitioned window. */
-  private def rkBase(s: SparkSession, dir: String): DataFrame =
+  private[queries] def rkBase(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")

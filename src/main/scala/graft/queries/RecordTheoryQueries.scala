@@ -24,11 +24,7 @@ object RecordTheoryQueries {
   val all: Seq[Q] = Seq(q1026, q1027, q1028, q1029, q1030)
 
   /** Day series + record flags: rec(t, z, is_up, is_dn). */
-  private def sqlRec: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day),
+  private def sqlRec: String = s"""${DaySeries.sql},
     |rec AS (
     |  SELECT t, z,
     |         CASE WHEN t = 1 OR z > max(z) OVER wp THEN 1 ELSE 0 END

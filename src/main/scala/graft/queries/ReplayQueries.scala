@@ -200,13 +200,8 @@ object ReplayQueries {
     * any trend fit here. */
   def q503: Q = Q(
     "q503_durbin_watson",
-    Some("""
-      |WITH o AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-      |  FROM orders),
-      |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS y
-      |        FROM o GROUP BY 1),
+    Some(s"""
+      |WITH ${Scaffolds.sqlOrderDollars("y")},
       |mm AS (SELECT min(d) AS lo FROM o),
       |pt AS (SELECT d, d - mm.lo AS x, y FROM rev CROSS JOIN mm),
       |mo AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
@@ -234,13 +229,8 @@ object ReplayQueries {
       |       CAST((1000 * num) // den AS BIGINT) AS dw_milli
       |FROM dw
       |""".stripMargin)) { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-        " div 86400000000").as("d"),
-        (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-      .materialize()
-    val rev = o.groupBy(col("d"))
-      .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("y"))
+    val o = Scaffolds.orderCents(s, dir).materialize()
+    val rev = Scaffolds.dollarsByDay(o, "y")
     val mm = o.agg(min(col("d")).as("lo"))
     val pt = rev.crossJoin(broadcast(mm))
       .select(col("d"), (col("d") - col("lo")).as("x"), col("y"))
@@ -296,12 +286,7 @@ object ReplayQueries {
       plnp("(n00 + n10)", "(n00 + n01 + n10 + n11)", "(n00 + n10)")
     Q("q504_christoffersen_var",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |u AS (
         |  SELECT max(CASE WHEN rn = (950 * n + 999) // 1000 THEN x END)
         |           AS var95

@@ -138,16 +138,11 @@ object ResidualDiagQueries {
           .as("lm_milli"))
   }
 
-  /** White test: LM = n·R² of e² on {t, t²} via the two-regressor
-    * correlation identity R² = (r₁²+r₂²−2r₁r₂r₁₂)/(1−r₁₂²) — all
-    * three correlations pinned doubles from exact moments. */
-  def q732: Q = Q(
-    "q732_white_test",
-    Some(s"""
-      |WITH ${sqlRes},
-      |gq AS (SELECT t, CAST(t AS HUGEINT) * t AS t2,
-      |              CAST(floor(e * e) AS BIGINT) AS g FROM res),
-      |mg AS (
+  /** Oracle CTEs `mg`/`cr` over gq(t, t2, g): exact moments of g on
+    * {t, t²}, then r1 = r(g, t), r2c = r(g, t²) and r12 = r(t, t²) as
+    * pinned doubles — the two-regressor R² inputs. */
+  private def sqlTwoRegCorr: String =
+    """mg AS (
       |  SELECT count(*) AS n, sum(t) AS st, sum(t2) AS st2,
       |         sum(g) AS sg,
       |         sum(CAST(t AS HUGEINT) * t) AS stt,
@@ -180,21 +175,11 @@ object ResidualDiagQueries {
       |                * (CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)
       |                   - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE)))
       |           AS r12
-      |  FROM mg)
-      |SELECT CAST(n AS BIGINT) AS n_days,
-      |       CAST(floor((r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)
-      |            / (1.0 - r12 * r12) * 1000000.0) AS BIGINT)
-      |         AS r2_micro,
-      |       CAST(floor(CAST(n AS DOUBLE)
-      |            * (r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)
-      |            / (1.0 - r12 * r12) * 1000.0) AS BIGINT) AS lm_milli
-      |FROM cr
-      |""".stripMargin)) { (s, dir) =>
-    res(s, dir)
-      .select(col("t"),
-        (col("t").cast("decimal(38,0)") * col("t")).as("t2"),
-        floor(col("e") * col("e")).cast("long").as("g"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
+      |  FROM mg)""".stripMargin
+
+  /** Spark side of [[sqlTwoRegCorr]]: (n, r1, r2c, r12) from gq rows. */
+  private def twoRegCorr(gq: DataFrame): DataFrame =
+    gq.agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
         sum(col("t2")).as("st2"), sum(col("g")).as("sg"),
         sum(col("t").cast("decimal(38,0)") * col("t")).as("stt"),
         sum(col("t2") * col("t2")).as("st2t2"),
@@ -221,6 +206,30 @@ object ResidualDiagQueries {
           " - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))" +
           " * (CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)" +
           " - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE)))").as("r12"))
+
+  /** White test: LM = n·R² of e² on {t, t²} via the two-regressor
+    * correlation identity R² = (r₁²+r₂²−2r₁r₂r₁₂)/(1−r₁₂²) — all
+    * three correlations pinned doubles from exact moments. */
+  def q732: Q = Q(
+    "q732_white_test",
+    Some(s"""
+      |WITH ${sqlRes},
+      |gq AS (SELECT t, CAST(t AS HUGEINT) * t AS t2,
+      |              CAST(floor(e * e) AS BIGINT) AS g FROM res),
+      |${sqlTwoRegCorr}
+      |SELECT CAST(n AS BIGINT) AS n_days,
+      |       CAST(floor((r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)
+      |            / (1.0 - r12 * r12) * 1000000.0) AS BIGINT)
+      |         AS r2_micro,
+      |       CAST(floor(CAST(n AS DOUBLE)
+      |            * (r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)
+      |            / (1.0 - r12 * r12) * 1000.0) AS BIGINT) AS lm_milli
+      |FROM cr
+      |""".stripMargin)) { (s, dir) =>
+    twoRegCorr(res(s, dir)
+      .select(col("t"),
+        (col("t").cast("decimal(38,0)") * col("t")).as("t2"),
+        floor(col("e") * col("e")).cast("long").as("g")))
       .select(col("n").cast("long").as("n_days"),
         expr("CAST(floor((r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)" +
           " / (1.0 - r12 * r12) * 1000000.0) AS BIGINT)").as("r2_micro"),
@@ -289,40 +298,7 @@ object ResidualDiagQueries {
     Some(s"""
       |WITH ${sqlRes},
       |gq AS (SELECT t, CAST(t AS HUGEINT) * t AS t2, y AS g FROM res),
-      |mg AS (
-      |  SELECT count(*) AS n, sum(t) AS st, sum(t2) AS st2,
-      |         sum(g) AS sg,
-      |         sum(CAST(t AS HUGEINT) * t) AS stt,
-      |         sum(CAST(t2 AS HUGEINT) * t2) AS st2t2,
-      |         sum(CAST(t AS HUGEINT) * t2) AS stt2,
-      |         sum(CAST(g AS HUGEINT) * g) AS sgg,
-      |         sum(CAST(t AS HUGEINT) * g) AS sgt,
-      |         sum(CAST(t2 AS HUGEINT) * g) AS sgt2
-      |  FROM gq),
-      |cr AS (
-      |  SELECT n,
-      |         (CAST(n AS DOUBLE) * CAST(sgt AS DOUBLE)
-      |          - CAST(st AS DOUBLE) * CAST(sg AS DOUBLE))
-      |         / sqrt((CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-      |                 - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-      |                * (CAST(n AS DOUBLE) * CAST(sgg AS DOUBLE)
-      |                   - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)))
-      |           AS r1,
-      |         (CAST(n AS DOUBLE) * CAST(sgt2 AS DOUBLE)
-      |          - CAST(st2 AS DOUBLE) * CAST(sg AS DOUBLE))
-      |         / sqrt((CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)
-      |                 - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE))
-      |                * (CAST(n AS DOUBLE) * CAST(sgg AS DOUBLE)
-      |                   - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)))
-      |           AS r2c,
-      |         (CAST(n AS DOUBLE) * CAST(stt2 AS DOUBLE)
-      |          - CAST(st AS DOUBLE) * CAST(st2 AS DOUBLE))
-      |         / sqrt((CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-      |                 - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-      |                * (CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)
-      |                   - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE)))
-      |           AS r12
-      |  FROM mg)
+      |${sqlTwoRegCorr}
       |SELECT CAST(n AS BIGINT) AS n_days,
       |       CAST(floor(r1 * r1 * 1000000.0) AS BIGINT) AS r2_1_micro,
       |       CAST(floor((r1 * r1 + r2c * r2c - 2.0 * r1 * r2c * r12)
@@ -336,37 +312,10 @@ object ResidualDiagQueries {
       |         AS f_milli
       |FROM cr
       |""".stripMargin)) { (s, dir) =>
-    res(s, dir)
+    twoRegCorr(res(s, dir)
       .select(col("t"),
         (col("t").cast("decimal(38,0)") * col("t")).as("t2"),
-        col("y").as("g"))
-      .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
-        sum(col("t2")).as("st2"), sum(col("g")).as("sg"),
-        sum(col("t").cast("decimal(38,0)") * col("t")).as("stt"),
-        sum(col("t2") * col("t2")).as("st2t2"),
-        sum(col("t").cast("decimal(38,0)") * col("t2")).as("stt2"),
-        sum(col("g").cast("decimal(38,0)") * col("g")).as("sgg"),
-        sum(col("t").cast("decimal(38,0)") * col("g")).as("sgt"),
-        sum(col("t2") * col("g")).as("sgt2"))
-      .select(col("n"),
-        expr("(CAST(n AS DOUBLE) * CAST(sgt AS DOUBLE)" +
-          " - CAST(st AS DOUBLE) * CAST(sg AS DOUBLE))" +
-          " / sqrt((CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)" +
-          " - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))" +
-          " * (CAST(n AS DOUBLE) * CAST(sgg AS DOUBLE)" +
-          " - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)))").as("r1"),
-        expr("(CAST(n AS DOUBLE) * CAST(sgt2 AS DOUBLE)" +
-          " - CAST(st2 AS DOUBLE) * CAST(sg AS DOUBLE))" +
-          " / sqrt((CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)" +
-          " - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE))" +
-          " * (CAST(n AS DOUBLE) * CAST(sgg AS DOUBLE)" +
-          " - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)))").as("r2c"),
-        expr("(CAST(n AS DOUBLE) * CAST(stt2 AS DOUBLE)" +
-          " - CAST(st AS DOUBLE) * CAST(st2 AS DOUBLE))" +
-          " / sqrt((CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)" +
-          " - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))" +
-          " * (CAST(n AS DOUBLE) * CAST(st2t2 AS DOUBLE)" +
-          " - CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE)))").as("r12"))
+        col("y").as("g")))
       .select(col("n").cast("long").as("n_days"),
         expr("CAST(floor(r1 * r1 * 1000000.0) AS BIGINT)")
           .as("r2_1_micro"),

@@ -161,12 +161,7 @@ object RichnessQueries {
          |  FROM $name)""".stripMargin
     Q("q543_chow_test",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |mm AS (SELECT min(d) AS lo FROM o),
         |pt AS (
         |  SELECT rev.d - mm.lo AS t, rev.x,
@@ -181,13 +176,8 @@ object RichnessQueries {
         |         AS chow_f_milli
         |FROM poolf CROSS JOIN asegf CROSS JOIN bsegf
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"))
       val pt = rev.crossJoin(broadcast(mm))
         .select((col("d") - col("lo")).as("t"), col("x"),

@@ -129,13 +129,8 @@ object ScaleTestQueries {
     * over n-cleared centered partial sums (no HAC, documented). */
   def q953: Q = Q(
     "q953_kpss_level",
-    Some("""
-      |WITH mo AS (
-      |  SELECT (year(l_shipdate) - 1995) * 12 + month(l_shipdate) - 1
-      |           AS m,
-      |         sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-      |  FROM lineitem GROUP BY 1),
-      |sq AS (SELECT row_number() OVER (ORDER BY m) AS t, z FROM mo),
+    Some(s"""
+      |WITH ${MonthSeries.sql},
       |gl AS (SELECT count(*) AS n, sum(CAST(z AS HUGEINT)) AS s
       |       FROM sq),
       |ut AS (SELECT t, gl.n * CAST(z AS HUGEINT) - gl.s AS u
@@ -151,14 +146,7 @@ object ScaleTestQueries {
       |            AS BIGINT) AS kpss_eta_milli
       |FROM ag
       |""".stripMargin)) { (s, dir) =>
-    val sq = Tables.lineitem(s, dir)
-      .select(((year(col("l_shipdate")) - 1995) * 12
-        + month(col("l_shipdate")) - 1).as("m"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .groupBy(col("m")).agg(sum(col("v")).as("z"))
-      .select(row_number().over(Window.orderBy(col("m"))).as("t"),
-        col("z")).materialize()
+    val sq = MonthSeries.frame(s, dir).materialize()
     val gl = sq.agg(count(lit(1)).as("n"),
       sum(col("z").cast("decimal(38,0)")).as("s"))
     val ps = sq.crossJoin(broadcast(gl))
@@ -179,13 +167,8 @@ object ScaleTestQueries {
     * rolling-sd spread — a drifting level shows as a ratio ≫ 1. */
   def q954: Q = Q(
     "q954_rolling_stability",
-    Some("""
-      |WITH mo AS (
-      |  SELECT (year(l_shipdate) - 1995) * 12 + month(l_shipdate) - 1
-      |           AS m,
-      |         sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-      |  FROM lineitem GROUP BY 1),
-      |sq AS (SELECT row_number() OVER (ORDER BY m) AS t, z FROM mo),
+    Some(s"""
+      |WITH ${MonthSeries.sql},
       |rw AS (SELECT t, sum(z) OVER w AS sw, count(*) OVER w AS cw
       |       FROM sq WINDOW w AS (ORDER BY t ROWS BETWEEN 11 PRECEDING
       |                            AND CURRENT ROW)),
@@ -196,14 +179,7 @@ object ScaleTestQueries {
       |       CAST((1000 * mx) // mn AS BIGINT) AS mean_ratio_milli
       |FROM ag
       |""".stripMargin)) { (s, dir) =>
-    val sq = Tables.lineitem(s, dir)
-      .select(((year(col("l_shipdate")) - 1995) * 12
-        + month(col("l_shipdate")) - 1).as("m"),
-        expr("CAST(CAST(l_extendedprice * 100 AS DECIMAL(38,0)) AS LONG)")
-          .as("v"))
-      .groupBy(col("m")).agg(sum(col("v")).as("z"))
-      .select(row_number().over(Window.orderBy(col("m"))).as("t"),
-        col("z"))
+    val sq = MonthSeries.frame(s, dir)
     val w = Window.orderBy(col("t")).rowsBetween(-11, 0)
     sq.select(sum(col("z")).over(w).as("sw"),
         count(lit(1)).over(w).as("cw"))

@@ -35,11 +35,7 @@ object SegmentDpQueries {
 
   /** Day series + prefix sums + pair costs: sq(t, z), gl(tm),
     * c(i, j, cost). */
-  private def sqlCost: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day),
+  private def sqlCost: String = s"""${DaySeries.sql},
     |gl AS (SELECT max(t) AS tm FROM sq),
     |pf AS (SELECT t, sum(z) OVER (ORDER BY t) AS cs,
     |              sum(CAST(z AS HUGEINT) * z) OVER (ORDER BY t) AS cq

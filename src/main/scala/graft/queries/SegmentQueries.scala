@@ -35,12 +35,7 @@ object SegmentQueries {
         s" - ${sq(slr, nlr)}) / 1000.0 AS DECIMAL(28,6))) AS BIGINT)"
     Q("q536_binary_segmentation",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
         |grid AS (
         |  SELECT g.d - mm.lo AS t, coalesce(rev.x, 0) AS x
@@ -77,13 +72,8 @@ object SegmentQueries {
         |       (SELECT CAST(t AS BIGINT) FROM cp3) AS cp_right,
         |       (SELECT CAST(n AS BIGINT) FROM ps LIMIT 1) AS n_days
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"), col("lo"))
@@ -207,13 +197,8 @@ object SegmentQueries {
     * forecast is dollar-quantized before its exact squared error. */
   def q538: Q = Q(
     "q538_forecast_combination",
-    Some("""
-      |WITH o AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-      |  FROM orders),
-      |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-      |        FROM o GROUP BY 1),
+    Some(s"""
+      |WITH ${Scaffolds.sqlOrderDollars("x")},
       |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
       |grid AS (
       |  SELECT g.d AS day, coalesce(rev.x, 0) AS x,
@@ -254,13 +239,8 @@ object SegmentQueries {
       |         AS combined_vs_best_milli
       |FROM sc
       |""".stripMargin)) { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-        " div 86400000000").as("d"),
-        (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-      .materialize()
-    val rev = o.groupBy(col("d"))
-      .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+    val o = Scaffolds.orderCents(s, dir).materialize()
+    val rev = Scaffolds.dollarsByDay(o, "x")
     val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val grid = mm.select(explode(sequence(col("lo"), col("hi")))
         .as("day"), col("lo"), col("hi"))

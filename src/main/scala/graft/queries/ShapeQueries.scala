@@ -373,15 +373,7 @@ object ShapeQueries {
       " / (CAST(n2 AS DOUBLE) * CAST(n2 - 1 AS DOUBLE)))"
     Q("q510_winsorized_welch",
       Some(s"""
-        |WITH ord AS (
-        |  SELECT CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 2
-        |         END AS grp,
-        |         max(epoch_us(l.l_shipdate) // 86400000000)
-        |           - epoch_us(o.o_orderdate) // 86400000000 + 1 AS t
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |  GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-        |  HAVING max(epoch_us(l.l_shipdate) // 86400000000)
-        |         >= epoch_us(o.o_orderdate) // 86400000000),
+        |WITH ${EffectQueries.sqlUrgencyTimes},
         |qb AS (
         |  SELECT grp,
         |         max(CASE WHEN rn = (100 * n + 999) // 1000 THEN t END)
@@ -396,14 +388,7 @@ object ShapeQueries {
         |cl AS (
         |  SELECT ord.grp, least(greatest(ord.t, qb.lo), qb.hi) AS t
         |  FROM ord JOIN qb ON qb.grp = ord.grp),
-        |mo AS (
-        |  SELECT sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n1,
-        |         sum(CASE WHEN grp = 1 THEN t ELSE 0 END) AS s1,
-        |         sum(CASE WHEN grp = 1 THEN t * t ELSE 0 END) AS q1,
-        |         sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS n2,
-        |         sum(CASE WHEN grp = 2 THEN t ELSE 0 END) AS s2_,
-        |         sum(CASE WHEN grp = 2 THEN t * t ELSE 0 END) AS q2
-        |  FROM cl)
+        |${EffectQueries.sqlGroupMoments("cl")}
         |SELECT CAST(n1 AS BIGINT) AS n_urgent, CAST(n2 AS BIGINT)
         |         AS n_other,
         |       CAST(floor(CAST(
@@ -415,22 +400,7 @@ object ShapeQueries {
         |         AS welch_t_milli
         |FROM mo
         |""".stripMargin)) { (s, dir) =>
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("id"),
-          when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(2L)
-            .as("grp"),
-          expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-            " div 86400000000").as("a"))
-        .join(Tables.lineitem(s, dir)
-          .select(col("l_orderkey"),
-            expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))" +
-              " div 86400000000").as("sd")),
-          col("id") === col("l_orderkey"))
-        .groupBy(col("id"), col("grp"), col("a"))
-        .agg(max(col("sd")).as("done"))
-        .where(col("done") >= col("a"))
-        .select(col("grp"), (col("done") - col("a") + 1).as("t"))
-        .materialize()
+      val ord = EffectQueries.urgencyTimes(s, dir).materialize()
       val qb = graft.operators.OrderStats.quantilesDisc(
           ord, Seq("grp"), "t", Seq(100, 900))
         .groupBy(col("grp"))
@@ -440,15 +410,7 @@ object ShapeQueries {
       val cl = ord.join(broadcast(qb), col("jgrp") === col("grp"))
         .select(col("grp"),
           least(greatest(col("t"), col("lo")), col("hi")).as("t"))
-      val mo = cl.agg(
-        sum(when(col("grp") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("grp") === 1, col("t")).otherwise(0L)).as("s1"),
-        sum(when(col("grp") === 1, col("t") * col("t")).otherwise(0L))
-          .as("q1"),
-        sum(when(col("grp") === 2, 1L).otherwise(0L)).as("n2"),
-        sum(when(col("grp") === 2, col("t")).otherwise(0L)).as("s2_"),
-        sum(when(col("grp") === 2, col("t") * col("t")).otherwise(0L))
-          .as("q2"))
+      val mo = EffectQueries.groupMoments(cl)
       mo.select(col("n1").as("n_urgent"), col("n2").as("n_other"),
         expr("""CAST(floor(CAST(
             CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)

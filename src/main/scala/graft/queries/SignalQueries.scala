@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
@@ -378,16 +378,11 @@ object SignalQueries {
     }
   }
 
-  /** Session path mining: each gap-sessionized visit (q53's 30-minute
-    * recipe) becomes its first-5-event-type path string; paths are
-    * counted and the top-20 reported — the "how do users actually move
-    * through the product" table. The per-session array is bounded by
-    * the slice, the path vocabulary is tiny, and the heavy lifting is
-    * the same one user-keyed exchange the session operators share. */
-  def q216: Q = Q(
-    "q216_session_paths",
-    Some("""
-      |WITH e AS (
+  /** Oracle CTEs `e`/`o`/`g`: events sessionized per user at a
+    * 30-minute gap (q53's recipe); g adds `prev` and the session
+    * ordinal `grp` to (user_id, t_us, event_id, event_type). */
+  private def sqlSessions: String =
+    """e AS (
       |  SELECT user_id, epoch_ns(ts) // 1000 AS t_us, event_id,
       |         event_type
       |  FROM events),
@@ -401,16 +396,10 @@ object SignalQueries {
       |                     THEN 1 ELSE 0 END)
       |              OVER (PARTITION BY user_id ORDER BY t_us, event_id
       |                    ROWS UNBOUNDED PRECEDING) AS grp
-      |  FROM o),
-      |p AS (
-      |  SELECT user_id, grp,
-      |         array_to_string(list_slice(
-      |           list(event_type ORDER BY t_us, event_id), 1, 5), '>')
-      |           AS path
-      |  FROM g GROUP BY user_id, grp)
-      |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
-      |FROM p GROUP BY path ORDER BY n_sessions DESC, path LIMIT 20
-      |""".stripMargin)) { (s, dir) =>
+      |  FROM o)""".stripMargin
+
+  /** Spark side of [[sqlSessions]]: the `g` frame, uncached. */
+  private def sessions(s: SparkSession, dir: String): DataFrame = {
     val wo = Window.partitionBy(col("user_id"))
       .orderBy(col("t_us"), col("event_id"))
     Tables.events(s, dir)
@@ -422,6 +411,28 @@ object SignalQueries {
           col("t_us") - col("prev") >= 1800000000L, 1L).otherwise(0L))
         .over(wo.rowsBetween(Window.unboundedPreceding,
           Window.currentRow)))
+  }
+
+  /** Session path mining: each gap-sessionized visit (q53's 30-minute
+    * recipe) becomes its first-5-event-type path string; paths are
+    * counted and the top-20 reported — the "how do users actually move
+    * through the product" table. The per-session array is bounded by
+    * the slice, the path vocabulary is tiny, and the heavy lifting is
+    * the same one user-keyed exchange the session operators share. */
+  def q216: Q = Q(
+    "q216_session_paths",
+    Some(s"""
+      |WITH ${sqlSessions},
+      |p AS (
+      |  SELECT user_id, grp,
+      |         array_to_string(list_slice(
+      |           list(event_type ORDER BY t_us, event_id), 1, 5), '>')
+      |           AS path
+      |  FROM g GROUP BY user_id, grp)
+      |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
+      |FROM p GROUP BY path ORDER BY n_sessions DESC, path LIMIT 20
+      |""".stripMargin)) { (s, dir) =>
+    sessions(s, dir)
       .groupBy(col("user_id"), col("grp"))
       .agg(array_sort(collect_list(struct(col("t_us"), col("event_id"),
         col("event_type")))).as("__arr"))
@@ -1458,22 +1469,8 @@ object SignalQueries {
     * vocabulary, never a self-join. */
   def q234: Q = Q(
     "q234_session_lift",
-    Some("""
-      |WITH e AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS t_us, event_id,
-      |         event_type
-      |  FROM events),
-      |o AS (
-      |  SELECT *, lag(t_us) OVER (PARTITION BY user_id
-      |    ORDER BY t_us, event_id) AS prev
-      |  FROM e),
-      |g AS (
-      |  SELECT *, sum(CASE WHEN prev IS NULL
-      |                          OR t_us - prev >= 1800000000
-      |                     THEN 1 ELSE 0 END)
-      |              OVER (PARTITION BY user_id ORDER BY t_us, event_id
-      |                    ROWS UNBOUNDED PRECEDING) AS grp
-      |  FROM o),
+    Some(s"""
+      |WITH ${sqlSessions},
       |st AS (SELECT DISTINCT user_id, grp, event_type FROM g),
       |stot AS (SELECT count(DISTINCT (user_id, grp)) AS s
       |         FROM g),
@@ -1494,17 +1491,7 @@ object SignalQueries {
       |CROSS JOIN stot
       |ORDER BY t_a, t_b
       |""".stripMargin)) { (s, dir) =>
-    val wo = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us"), col("event_id"))
-    val st = Tables.events(s, dir)
-      .select(col("user_id"), expr("ts div 1000").as("t_us"),
-        col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("t_us"), 1).over(wo))
-      .withColumn("grp", sum(
-        when(col("prev").isNull ||
-          col("t_us") - col("prev") >= 1800000000L, 1L).otherwise(0L))
-        .over(wo.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    val st = sessions(s, dir)
       .select(col("user_id"), col("grp"), col("event_type"))
       .distinct()
       .materialize() // session-type dim feeds marginals + pairs + total
@@ -1704,22 +1691,8 @@ object SignalQueries {
     * user-keyed exchange end-to-end. */
   def q238: Q = Q(
     "q238_session_exit_types",
-    Some("""
-      |WITH e AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS t_us, event_id,
-      |         event_type
-      |  FROM events),
-      |o AS (
-      |  SELECT *, lag(t_us) OVER (PARTITION BY user_id
-      |    ORDER BY t_us, event_id) AS prev
-      |  FROM e),
-      |g AS (
-      |  SELECT *, sum(CASE WHEN prev IS NULL
-      |                          OR t_us - prev >= 1800000000
-      |                     THEN 1 ELSE 0 END)
-      |              OVER (PARTITION BY user_id ORDER BY t_us, event_id
-      |                    ROWS UNBOUNDED PRECEDING) AS grp
-      |  FROM o),
+    Some(s"""
+      |WITH ${sqlSessions},
       |lastev AS (
       |  SELECT user_id, grp, event_type AS exit_type FROM (
       |    SELECT *, row_number() OVER (PARTITION BY user_id, grp
@@ -1745,17 +1718,7 @@ object SignalQueries {
       |FROM c JOIN t ON t.converted = c.converted
       |ORDER BY converted, exit_type
       |""".stripMargin)) { (s, dir) =>
-    val wo = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us"), col("event_id"))
-    val sess = Tables.events(s, dir)
-      .select(col("user_id"), expr("ts div 1000").as("t_us"),
-        col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("t_us"), 1).over(wo))
-      .withColumn("grp", sum(
-        when(col("prev").isNull ||
-          col("t_us") - col("prev") >= 1800000000L, 1L).otherwise(0L))
-        .over(wo.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    val sess = sessions(s, dir)
       .groupBy(col("user_id"), col("grp"))
       .agg(
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -2031,22 +1994,8 @@ object SignalQueries {
     * dim-sized order statistics via quantilesDisc. */
   def q243: Q = Q(
     "q243_time_to_conversion",
-    Some("""
-      |WITH e AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS t_us, event_id,
-      |         event_type
-      |  FROM events),
-      |o AS (
-      |  SELECT *, lag(t_us) OVER (PARTITION BY user_id
-      |    ORDER BY t_us, event_id) AS prev
-      |  FROM e),
-      |g AS (
-      |  SELECT *, sum(CASE WHEN prev IS NULL
-      |                          OR t_us - prev >= 1800000000
-      |                     THEN 1 ELSE 0 END)
-      |              OVER (PARTITION BY user_id ORDER BY t_us, event_id
-      |                    ROWS UNBOUNDED PRECEDING) AS grp
-      |  FROM o),
+    Some(s"""
+      |WITH ${sqlSessions},
       |entry AS (
       |  SELECT user_id, grp, event_type AS entry_type FROM (
       |    SELECT *, row_number() OVER (PARTITION BY user_id, grp
@@ -2074,17 +2023,7 @@ object SignalQueries {
       |ORDER BY entry_type, permille
       |""".stripMargin)) { (s, dir) =>
     import graft.operators.OrderStats
-    val wo = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us"), col("event_id"))
-    val g = Tables.events(s, dir)
-      .select(col("user_id"), expr("ts div 1000").as("t_us"),
-        col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("t_us"), 1).over(wo))
-      .withColumn("grp", sum(
-        when(col("prev").isNull ||
-          col("t_us") - col("prev") >= 1800000000L, 1L).otherwise(0L))
-        .over(wo.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    val g = sessions(s, dir)
       .materialize() // one sessionized pass feeds entry + aggregates
     val entry = g
       .withColumn("rn", row_number().over(

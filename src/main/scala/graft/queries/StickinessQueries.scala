@@ -261,13 +261,8 @@ object StickinessQueries {
     * the statistic and its argmax day are exact rationals. */
   def q550: Q = Q(
     "q550_cusum_of_squares",
-    Some("""
-      |WITH o AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-      |  FROM orders),
-      |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-      |        FROM o GROUP BY 1),
+    Some(s"""
+      |WITH ${Scaffolds.sqlOrderDollars("x")},
       |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
       |grid AS (
       |  SELECT g.d - mm.lo AS t, coalesce(rev.x, 0) AS x
@@ -292,13 +287,8 @@ object StickinessQueries {
       |               * (SELECT qt FROM cum LIMIT 1)) AS BIGINT)
       |         AS cos_stat_milli
       |""".stripMargin)) { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-        " div 86400000000").as("d"),
-        (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-      .materialize()
-    val rev = o.groupBy(col("d"))
-      .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+    val o = Scaffolds.orderCents(s, dir).materialize()
+    val rev = Scaffolds.dollarsByDay(o, "x")
     val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val grid = mm.select(explode(sequence(col("lo"), col("hi")))
         .as("day"), col("lo"))

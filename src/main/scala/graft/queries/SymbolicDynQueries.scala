@@ -31,15 +31,9 @@ object SymbolicDynQueries {
 
   val all: Seq[Q] = Seq(q1121, q1122, q1123, q1124, q1125)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle binarized sequence bt(t, b) + ag(n, sz). */
   private def sqlBt: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |ag AS (SELECT count(*) AS n, sum(z) AS sz FROM sq),
     |bt AS (SELECT t, CASE WHEN n * z - sz > 0 THEN 1 ELSE 0 END AS b
     |       FROM sq CROSS JOIN ag)""".stripMargin

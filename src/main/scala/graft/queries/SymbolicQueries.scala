@@ -24,13 +24,8 @@ object SymbolicQueries {
     * Day-dim² pair pass, every test an integer comparison. */
   def q511: Q = Q(
     "q511_recurrence_quantification",
-    Some("""
-      |WITH o AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-      |  FROM orders),
-      |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-      |        FROM o GROUP BY 1),
+    Some(s"""
+      |WITH ${Scaffolds.sqlOrderDollars("x")},
       |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
       |grid AS (
       |  SELECT g.d - mm.lo AS t, coalesce(rev.x, 0) AS x
@@ -68,13 +63,8 @@ object SymbolicQueries {
       |       CAST((1000 * vert.vpts) // nrec.r AS BIGINT) AS lam_milli
       |FROM nrec CROSS JOIN npairs CROSS JOIN diag CROSS JOIN vert
       |""".stripMargin)) { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-        " div 86400000000").as("d"),
-        (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-      .materialize()
-    val rev = o.groupBy(col("d"))
-      .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+    val o = Scaffolds.orderCents(s, dir).materialize()
+    val rev = Scaffolds.dollarsByDay(o, "x")
     val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val grid = mm.select(explode(sequence(col("lo"), col("hi")))
         .as("day"), col("lo"))
@@ -141,12 +131,7 @@ object SymbolicQueries {
         s" AS DECIMAL(28,9)) * 1000000) AS BIGINT) END)"
     Q("q512_spectral_entropy",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
         |grid AS (
         |  SELECT g.d AS day, coalesce(rev.x, 0) AS x
@@ -189,13 +174,8 @@ object SymbolicQueries {
         |FROM ent CROSS JOIN fl
         |""".stripMargin)) { (s, dir) =>
       import s.implicits._
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"), col("lo"))
@@ -253,12 +233,7 @@ object SymbolicQueries {
     val bp = "0.4307272992954576"
     Q("q513_sax_weekly_words",
       Some(s"""
-        |WITH o AS (
-        |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-        |         CAST(o_totalprice * 100 AS HUGEINT) AS cents
-        |  FROM orders),
-        |rev AS (SELECT d, CAST(sum(cents) // 100 AS BIGINT) AS x
-        |        FROM o GROUP BY 1),
+        |WITH ${Scaffolds.sqlOrderDollars("x")},
         |mm AS (SELECT min(d) AS lo, max(d) AS hi FROM o),
         |grid AS (
         |  SELECT (g.d - mm.lo) // 7 AS wk, coalesce(rev.x, 0) AS x
@@ -292,13 +267,8 @@ object SymbolicQueries {
         |SELECT word AS sax_word, CAST(n AS BIGINT) AS n_windows
         |FROM wc ORDER BY n_windows DESC, sax_word LIMIT 5
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"), col("lo"))

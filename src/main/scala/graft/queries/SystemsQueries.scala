@@ -70,13 +70,9 @@ object SystemsQueries {
         |            AS BIGINT) AS power_permille
         |FROM pw ORDER BY period
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
+      val o = Scaffolds.orderCents(s, dir)
         .materialize() // feeds the per-day rollup AND the range scalars
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"), col("lo"))
@@ -347,13 +343,8 @@ object SystemsQueries {
         |FROM f
         |""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.types._
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"))
@@ -427,13 +418,8 @@ object SystemsQueries {
         |            WHEN sd > 0 THEN 'naive1' ELSE 'tie' END AS better
         |FROM agg
         |""".stripMargin)) { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
-          " div 86400000000").as("d"),
-          (col("o_totalprice") * 100).cast("decimal(38,0)").as("cents"))
-        .materialize()
-      val rev = o.groupBy(col("d"))
-        .agg(expr("CAST(sum(cents) div 100 AS BIGINT)").as("x"))
+      val o = Scaffolds.orderCents(s, dir).materialize()
+      val rev = Scaffolds.dollarsByDay(o, "x")
       val mm = o.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       val grid = mm.select(explode(sequence(col("lo"), col("hi")))
           .as("day"))

@@ -28,12 +28,6 @@ object TechIndicator2Queries {
 
   val all: Seq[Q] = Seq(q1106, q1107, q1108, q1109, q1110)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle day series with quantity volume: sq(t, z, q). */
   private def sqlSqv: String = """
     |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
@@ -61,7 +55,7 @@ object TechIndicator2Queries {
   def q1106: Q = Q(
     "q1106_cci",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |sm AS (SELECT t, z, sum(z) OVER (ORDER BY t
       |         ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS s
       |       FROM sq),
@@ -112,7 +106,7 @@ object TechIndicator2Queries {
       " + CAST(b28 AS DOUBLE) / CAST(t28 AS DOUBLE)) / 7.0)"
     Q("q1107_ultimate_oscillator",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |bt AS (SELECT t,
         |         z - least(z, lag(z, 1) OVER (ORDER BY t)) AS bp,
         |         abs(z - lag(z, 1) OVER (ORDER BY t)) AS tr
@@ -181,7 +175,7 @@ object TechIndicator2Queries {
   def q1108: Q = Q(
     "q1108_ichimoku_cloud",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |ln0 AS (SELECT t, z,
       |    (max(z) OVER (ORDER BY t ROWS BETWEEN 8 PRECEDING
       |       AND CURRENT ROW)

@@ -21,22 +21,16 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale: the series is CALENDAR-bounded; the one fact-scaled pass is
   * the day aggregate served by the [[DaySeries.revenue]] spine (the
-  * oracle keeps the inline day CTE, proving spine ≡ scratch). Windows
+  * oracle inlines the same frame's text, [[DaySeries.sql]], so the
+  * gate proves spine ≡ scratch). Windows
   * run over the ~2.5k-row day dim, never the fact. */
 object TechIndicatorQueries {
 
   val all: Seq[Q] = Seq(q1101, q1102, q1103, q1104, q1105)
 
-  /** Oracle day/sq CTEs (inline — the gate proves spine ≡ scratch). */
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle channel CTE ch(t, z, hh, ll, epoch) — full windows only. */
   private def sqlCh: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |ch0 AS (SELECT t, z,
     |          max(z) OVER (ORDER BY t
     |            ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS hh,
@@ -99,7 +93,7 @@ object TechIndicatorQueries {
   def q1102: Q = Q(
     "q1102_aroon",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |ar0 AS (SELECT t,
       |          max(z * 10000 + t) OVER (ORDER BY t
       |            ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS ench,
@@ -227,7 +221,7 @@ object TechIndicatorQueries {
   def q1105: Q = Q(
     "q1105_chande_momentum",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |df AS (SELECT t, z - lag(z, 1) OVER (ORDER BY t) AS d1 FROM sq),
       |mv AS (SELECT t,
       |         sum(CASE WHEN d1 > 0 THEN d1 ELSE 0 END) OVER (ORDER BY t

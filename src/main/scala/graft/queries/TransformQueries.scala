@@ -29,12 +29,6 @@ object TransformQueries {
   private def bcLambdas = Seq(-2000, -1000, -500, 0, 500, 1000, 2000)
   private def yjLambdas = Seq(-1000, -500, 500, 1000, 1500)
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Shared skew/kurt-from-milli-value moment texts (columns n, s1,
     * s2, s3, s4 — w is the milli-quantized transformed value). */
   private def m2 = "((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE)" +
@@ -85,7 +79,7 @@ object TransformQueries {
   def q1146: Q = Q(
     "q1146_box_cox_profile",
     Some(s"""
-      |WITH ${sqlSq},
+      |WITH ${DaySeries.sql},
       |mxx AS (SELECT max(z) AS mx FROM sq),
       |lg AS (SELECT * FROM (VALUES ${bcLambdas.map(l => s"($l)").mkString(",")}) v(lm)),
       |f AS (SELECT lg.lm AS lam, ${bcW} AS w
@@ -118,7 +112,7 @@ object TransformQueries {
       s" + ($kurt - 3.0) * ($kurt - 3.0) / 24.0))"
     Q("q1147_lognormality_audit",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |mxx AS (SELECT max(z) AS mx FROM sq),
         |f AS (SELECT 'raw' AS scale, CAST(floor(1000.0
         |          * CAST(z AS DOUBLE) / CAST(mx AS DOUBLE)) AS BIGINT) AS w
@@ -170,7 +164,7 @@ object TransformQueries {
       " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))))"
     Q("q1148_tukey_lambda_ppcc",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |ag AS (SELECT count(*) AS n FROM sq),
         |rk AS (SELECT z, row_number() OVER (ORDER BY z, t) AS rn FROM sq),
         |lg AS (SELECT * FROM (VALUES ${yjLambdas.map(l => s"($l)").mkString(",")}) v(lm)),
@@ -227,7 +221,7 @@ object TransformQueries {
       " ELSE 'VI' END)"
     Q("q1149_pearson_classification",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |mxx AS (SELECT max(z) AS mx FROM sq),
         |f AS (SELECT 1 AS one, CAST(floor(1000.0 * CAST(z AS DOUBLE)
         |          / CAST(mx AS DOUBLE)) AS BIGINT) AS w
@@ -264,7 +258,7 @@ object TransformQueries {
       " AS BIGINT)"
     Q("q1150_yeo_johnson_profile",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |df AS (SELECT t, z - lag(z, 1) OVER (ORDER BY t) AS d FROM sq
         |       QUALIFY d IS NOT NULL),
         |mxx AS (SELECT max(abs(d)) AS mx FROM df),

@@ -33,15 +33,9 @@ object UnitRootQueries {
   private def brB = "Brand#22"
   private def ccfLags = (-10 to 10).toSeq
 
-  private def sqlSq: String = """
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day)""".stripMargin
-
   /** Oracle lag frame xy(x, y) with x = z_{t−1}, y = Δz. */
   private def sqlXy: String = s"""
-    |${sqlSq},
+    |${DaySeries.sql},
     |xy AS (SELECT lag(z, 1) OVER (ORDER BY t) AS x,
     |              z - lag(z, 1) OVER (ORDER BY t) AS y
     |       FROM sq QUALIFY x IS NOT NULL)""".stripMargin
@@ -142,7 +136,7 @@ object UnitRootQueries {
       " ELSE NULL END)"
     Q("q1118_ar1_half_life",
       Some(s"""
-        |WITH ${sqlSq},
+        |WITH ${DaySeries.sql},
         |xy AS (SELECT lag(z, 1) OVER (ORDER BY t) AS x, z AS y
         |       FROM sq QUALIFY x IS NOT NULL),
         |${sqlMo}

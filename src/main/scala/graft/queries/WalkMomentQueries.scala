@@ -41,15 +41,10 @@ object WalkMomentQueries {
     (e, ed, deg, wp)
   }
 
-  /** Exact closed-walk moments: tr A² = 2m, tr A³ = 6T (T from
-    * Σ cn over ADJACENT pairs = 3T), tr A⁴ = Σdeg² + 2Σ_{u<v}cn² —
-    * the spectral fingerprint a sampling estimator would converge
-    * to, computed exactly. */
-  def q751: Q = Q(
-    "q751_walk_moments",
-    Some(s"""
-      |WITH ${sqlWp},
-      |nn AS (SELECT count(*) AS n FROM deg),
+  /** Oracle CTEs `nn`/`mm`/`tt`/`m4` over [[sqlWp]]: node count n,
+    * edge count m, Σ cn over adjacent pairs (= 3T) and t4 = tr A⁴. */
+  private def sqlWalkMoments: String =
+    """nn AS (SELECT count(*) AS n FROM deg),
       |mm AS (SELECT count(*) AS m FROM e),
       |tt AS (
       |  SELECT coalesce(sum(wp.cn), 0) AS adjcn
@@ -57,14 +52,11 @@ object WalkMomentQueries {
       |m4 AS (
       |  SELECT (SELECT sum(CAST(dg AS HUGEINT) * dg) FROM deg)
       |         + 2 * (SELECT coalesce(sum(CAST(cn AS HUGEINT) * cn), 0)
-      |                FROM wp) AS t4)
-      |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
-      |       CAST(mm.m AS BIGINT) AS n_edges,
-      |       CAST(2 * mm.m AS BIGINT) AS tr_a2,
-      |       CAST(2 * tt.adjcn AS BIGINT) AS tr_a3,
-      |       CAST(m4.t4 AS BIGINT) AS tr_a4
-      |FROM nn CROSS JOIN mm CROSS JOIN tt CROSS JOIN m4
-      |""".stripMargin)) { (s, dir) =>
+      |                FROM wp) AS t4)""".stripMargin
+
+  /** Spark side of [[sqlWalkMoments]]: one row (n, m, adjcn, sd2, sc2)
+    * with tr A⁴ = sd2 + 2·sc2. */
+  private def walkMoments(s: SparkSession, dir: String): DataFrame = {
     val (e, _, deg, wp0) = frames(s, dir)
     val wp = wp0.materialize()
     val nn = deg.agg(count(lit(1)).as("n"))
@@ -77,6 +69,25 @@ object WalkMomentQueries {
       * col("cn")), lit(0).cast("decimal(38,0)")).as("sc2"))
     nn.crossJoin(broadcast(mm)).crossJoin(broadcast(tt))
       .crossJoin(broadcast(d2)).crossJoin(broadcast(c2))
+  }
+
+  /** Exact closed-walk moments: tr A² = 2m, tr A³ = 6T (T from
+    * Σ cn over ADJACENT pairs = 3T), tr A⁴ = Σdeg² + 2Σ_{u<v}cn² —
+    * the spectral fingerprint a sampling estimator would converge
+    * to, computed exactly. */
+  def q751: Q = Q(
+    "q751_walk_moments",
+    Some(s"""
+      |WITH ${sqlWp},
+      |${sqlWalkMoments}
+      |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
+      |       CAST(mm.m AS BIGINT) AS n_edges,
+      |       CAST(2 * mm.m AS BIGINT) AS tr_a2,
+      |       CAST(2 * tt.adjcn AS BIGINT) AS tr_a3,
+      |       CAST(m4.t4 AS BIGINT) AS tr_a4
+      |FROM nn CROSS JOIN mm CROSS JOIN tt CROSS JOIN m4
+      |""".stripMargin)) { (s, dir) =>
+    walkMoments(s, dir)
       .select(col("n").cast("long").as("n_nodes"),
         col("m").cast("long").as("n_edges"),
         expr("CAST(2 * m AS BIGINT)").as("tr_a2"),
@@ -115,15 +126,7 @@ object WalkMomentQueries {
     "q753_bipartivity_truncated",
     Some(s"""
       |WITH ${sqlWp},
-      |nn AS (SELECT count(*) AS n FROM deg),
-      |mm AS (SELECT count(*) AS m FROM e),
-      |tt AS (
-      |  SELECT coalesce(sum(wp.cn), 0) AS adjcn
-      |  FROM wp JOIN e ON e.a = wp.u AND e.c = wp.v),
-      |m4 AS (
-      |  SELECT (SELECT sum(CAST(dg AS HUGEINT) * dg) FROM deg)
-      |         + 2 * (SELECT coalesce(sum(CAST(cn AS HUGEINT) * cn), 0)
-      |                FROM wp) AS t4)
+      |${sqlWalkMoments}
       |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
       |       CAST((1000000 * (24 * CAST(nn.n AS HUGEINT) + 24 * mm.m
       |              + m4.t4))
@@ -132,18 +135,7 @@ object WalkMomentQueries {
       |         AS bipartivity_ppm
       |FROM nn CROSS JOIN mm CROSS JOIN tt CROSS JOIN m4
       |""".stripMargin)) { (s, dir) =>
-    val (e, _, deg, wp0) = frames(s, dir)
-    val wp = wp0.materialize()
-    val nn = deg.agg(count(lit(1)).as("n"))
-    val mm = e.agg(count(lit(1)).as("m"))
-    val tt = wp.join(e, e("a") === wp("u") && e("c") === wp("v"))
-      .agg(coalesce(sum(col("cn")), lit(0L)).as("adjcn"))
-    val d2 = deg.agg(sum(col("dg").cast("decimal(38,0)") * col("dg"))
-      .as("sd2"))
-    val c2 = wp.agg(coalesce(sum(col("cn").cast("decimal(38,0)")
-      * col("cn")), lit(0).cast("decimal(38,0)")).as("sc2"))
-    nn.crossJoin(broadcast(mm)).crossJoin(broadcast(tt))
-      .crossJoin(broadcast(d2)).crossJoin(broadcast(c2))
+    walkMoments(s, dir)
       .select(col("n").cast("long").as("n_nodes"),
         expr("CAST((1000000 * (24 * CAST(n AS DECIMAL(38,0)) + 24 * m" +
           " + (sd2 + 2 * sc2)))" +

@@ -27,9 +27,7 @@ object WalshQueries {
   /** Day series (0-indexed, first 256 days) + spectrum CTEs:
     * sq0(t, z), wht(k, w). */
   private def sqlWht: String = s"""
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
+    |${DaySeries.sqlDay},
     |sq0 AS (SELECT row_number() OVER (ORDER BY dd) - 1 AS t, z
     |        FROM day QUALIFY row_number() OVER (ORDER BY dd) <= $n),
     |wht AS MATERIALIZED (

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
 import graft.Tables
@@ -1224,6 +1225,31 @@ object WarehouseQueries {
           "/ (50.0 * CAST(n AS DOUBLE))) AS BIGINT)").as("chi2_milli"))
   }
 
+  /** Oracle CTEs `py`/`up`/`base`: per (part, ship year) net revenue
+    * cents and quantity, the milli unit price upm, and the base-year
+    * (1995) basket (up0, q0) — the price-index input (q384, q391). */
+  private[queries] def sqlUnitPrices: String =
+    """py AS (
+      |  SELECT l_partkey AS part, CAST(year(l_shipdate) AS BIGINT) AS y,
+      |         sum(CAST(floor(CAST(l_extendedprice * (1.0 - l_discount)
+      |              AS DECIMAL(18,9)) * 100) AS BIGINT)) AS net,
+      |         sum(CAST(l_quantity AS BIGINT)) AS qty
+      |  FROM lineitem GROUP BY 1, 2),
+      |up AS (SELECT part, y, (1000 * net) // qty AS upm, qty FROM py),
+      |base AS (SELECT part, upm AS up0, qty AS q0 FROM up WHERE y = 1995)""".stripMargin
+
+  /** Spark side of [[sqlUnitPrices]]: up(part, y, upm, qty), uncached. */
+  private[queries] def unitPrices(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .groupBy(col("l_partkey").as("part"),
+        year(col("l_shipdate")).cast("long").as("y"))
+      .agg(sum(floor((col("l_extendedprice")
+          * (lit(1.0) - col("l_discount"))).cast("decimal(18,9)") * 100)
+          .cast("long")).as("net"),
+        sum(col("l_quantity").cast("long")).as("qty"))
+      .select(col("part"), col("y"),
+        expr("(1000 * net) div qty").as("upm"), col("qty"))
+
   /** Laspeyres price index per year (base 1995): how did realized unit
     * prices move, holding the base year's quantity mix fixed.
     * Per-(part, year) unit prices are milli-quantized rationals; the
@@ -1231,15 +1257,8 @@ object WarehouseQueries {
     * the base year and year t enter (stated basket). */
   def q384: Q = Q(
     "q384_laspeyres_price_index",
-    Some("""
-      |WITH py AS (
-      |  SELECT l_partkey AS part, CAST(year(l_shipdate) AS BIGINT) AS y,
-      |         sum(CAST(floor(CAST(l_extendedprice * (1.0 - l_discount)
-      |              AS DECIMAL(18,9)) * 100) AS BIGINT)) AS net,
-      |         sum(CAST(l_quantity AS BIGINT)) AS qty
-      |  FROM lineitem GROUP BY 1, 2),
-      |up AS (SELECT part, y, (1000 * net) // qty AS upm, qty FROM py),
-      |base AS (SELECT part, upm AS up0, qty AS q0 FROM up WHERE y = 1995),
+    Some(s"""
+      |WITH ${sqlUnitPrices},
       |idx AS (
       |  SELECT up.y, count(*) AS n_parts,
       |         sum(CAST(up.upm AS HUGEINT) * base.q0) AS num,
@@ -1251,15 +1270,7 @@ object WarehouseQueries {
       |FROM idx ORDER BY y
       |""".stripMargin)) { (s, dir) =>
     val d38 = "decimal(38,0)"
-    val up = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey").as("part"),
-        year(col("l_shipdate")).cast("long").as("y"))
-      .agg(sum(floor((col("l_extendedprice")
-          * (lit(1.0) - col("l_discount"))).cast("decimal(18,9)") * 100)
-          .cast("long")).as("net"),
-        sum(col("l_quantity").cast("long")).as("qty"))
-      .select(col("part"), col("y"),
-        expr("(1000 * net) div qty").as("upm"), col("qty"))
+    val up = unitPrices(s, dir)
       .materialize() // part×year dim feeds the base AND the index join
     val base = up.where(col("y") === 1995)
       .select(col("part"), col("upm").as("up0"), col("qty").as("q0"))
@@ -2100,33 +2111,12 @@ object WarehouseQueries {
       |  SELECT s.s_suppkey, CAST(s.s_acctbal * 100 AS BIGINT) AS x,
       |         coalesce(rev.cents, 0) AS y
       |  FROM supplier s LEFT JOIN rev ON s.s_suppkey = rev.l_suppkey),
-      |cx AS (SELECT x, count(*) AS c FROM v GROUP BY x),
-      |rx AS (
-      |  SELECT x, 2 * coalesce(sum(c) OVER (ORDER BY x
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |         + c + 1 AS rx2
-      |  FROM cx),
-      |cy AS (SELECT y, count(*) AS c FROM v GROUP BY y),
-      |ry AS (
-      |  SELECT y, 2 * coalesce(sum(c) OVER (ORDER BY y
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |         + c + 1 AS ry2
-      |  FROM cy),
-      |j AS (
-      |  SELECT CAST(rx.rx2 AS HUGEINT) AS rx2,
-      |         CAST(ry.ry2 AS HUGEINT) AS ry2
-      |  FROM v JOIN rx ON v.x = rx.x JOIN ry ON v.y = ry.y),
-      |agg AS (
-      |  SELECT count(*) AS n, sum(rx2) AS sx, sum(ry2) AS sy,
-      |         sum(rx2 * rx2) AS sxx, sum(ry2 * ry2) AS syy,
-      |         sum(rx2 * ry2) AS sxy
-      |  FROM j)
+      |${PipelineQueries.sqlSpearmanSums}
       |SELECT CAST(n AS BIGINT) AS n_suppliers,
       |       ${PipelineQueries.sqlPearsonMilli(
                  "n", "sx", "sy", "sxx", "syy", "sxy")} AS rho_milli
       |FROM agg
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
     val rev = Tables.lineitem(s, dir)
       .groupBy(col("l_suppkey"))
@@ -2137,25 +2127,7 @@ object WarehouseQueries {
       .select((col("s_acctbal") * 100).cast(d38).cast("long").as("x"),
         coalesce(col("cents"), lit(0L)).as("y"))
       .materialize() // supplier dim feeds both rank dims AND the join
-    def rankDim(c: String, out: String) = {
-      val wC = Window.orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
-        .withColumn(out,
-          lit(2L) * coalesce(sum(col("__c")).over(wC), lit(0L)) +
-            col("__c") + 1L)
-        .select(col(c), col(out))
-    }
-    val j = v
-      .join(broadcast(rankDim("x", "rx2")), Seq("x"))
-      .join(broadcast(rankDim("y", "ry2")), Seq("y"))
-      .select(col("rx2").cast(d38).as("rx2"), col("ry2").cast(d38).as("ry2"))
-    j.agg(count(lit(1)).as("n"),
-        sum(col("rx2")).cast(d38).as("sx"),
-        sum(col("ry2")).cast(d38).as("sy"),
-        sum(col("rx2") * col("rx2")).cast(d38).as("sxx"),
-        sum(col("ry2") * col("ry2")).cast(d38).as("syy"),
-        sum(col("rx2") * col("ry2")).cast(d38).as("sxy"))
+    PipelineQueries.spearmanSums(v)
       .select(col("n").as("n_suppliers"),
         expr(PipelineQueries.sqlPearsonMilli(
           "n", "sx", "sy", "sxx", "syy", "sxy")).as("rho_milli"))

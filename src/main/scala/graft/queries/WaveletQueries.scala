@@ -31,11 +31,7 @@ object WaveletQueries {
 
   /** Day series + per-(level, block) Haar pyramid CTEs: `sq`(t, z),
     * `pyr`(j, b, d, cn) with d the signed detail sum. */
-  private def sqlPyr: String = s"""
-    |day AS (SELECT CAST(l_shipdate AS DATE) AS dd,
-    |               sum(CAST(l_extendedprice * 100 AS BIGINT)) AS z
-    |        FROM lineitem GROUP BY 1),
-    |sq AS (SELECT row_number() OVER (ORDER BY dd) AS t, z FROM day),
+  private def sqlPyr: String = s"""${DaySeries.sql},
     |lv AS (SELECT * FROM (VALUES ${(1 to maxLevel).map(j => s"($j)").mkString(",")}) v(j)),
     |pyr AS (
     |  SELECT j, (t - 1) // (1 << j) AS b,

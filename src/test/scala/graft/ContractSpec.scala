@@ -27,6 +27,23 @@ class ContractSpec extends AnyFunSuite {
       "q162_compressibility")) // zlib is JVM-side; no SQL engine replays it
   }
 
+  test("every oracle's SQL text is pinned byte for byte") {
+    // SHA-256 over (name NUL sql NUL) in name order. An intended oracle
+    // change updates these constants in the same commit; a refactor of
+    // shared oracle text must leave them as they are.
+    val oracles = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    oracles.foreach { case (name, sql) =>
+      md.update(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.update(0.toByte)
+      md.update(sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.update(0.toByte)
+    }
+    assert(oracles.size === 1186)
+    assert(md.digest().map(b => f"$b%02x").mkString ===
+      "fe36aba230eab4af7eb65494833eff033378e558c50692927290fda60d31cb35")
+  }
+
   test("typed Dataset views of domain frames round-trip") {
     import spark.implicits._
     val games = Seq(Game(2024, 1, 1L, 101, 70, 102, 60)).toDS()
