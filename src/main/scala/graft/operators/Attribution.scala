@@ -28,6 +28,14 @@ import org.apache.spark.sql.functions._
   */
 object Attribution {
 
+  /** The argument contract every attribution model shares. */
+  private def requireArgs(convType: String, touchTypes: Seq[String],
+      lookback: Long): Unit = {
+    require(lookback > 0, "lookback must be positive")
+    require(!touchTypes.contains(convType),
+      "convType in touchTypes would let a conversion credit itself")
+  }
+
   /** Each conversion event with its attributed channel.
     *
     * @param events     event log
@@ -51,9 +59,7 @@ object Attribution {
       convType: String,
       touchTypes: Seq[String],
       lookback: Long): DataFrame = {
-    require(lookback > 0, "lookback must be positive")
-    require(!touchTypes.contains(convType),
-      "convType in touchTypes would let a conversion credit itself")
+    requireArgs(convType, touchTypes, lookback)
     val w = Window.partitionBy(col(entityCol))
       .orderBy(col(tsCol).asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -74,6 +80,37 @@ object Attribution {
         when(col("__ok"), col("__lc")).otherwise(lit("(none)")))
       .withColumn("touch_ts", when(col("__ok"), col("__lt")))
       .drop("__lt", "__lc", "__ok")
+  }
+
+  /** The multi-touch models' shared frames: the conversions
+    * (__e, __cts, conversion_id) and their eligible touches — the
+    * entity-keyed join, each touch sorting strictly before its
+    * conversion under (ts, id) and within `lookback`, adding
+    * (__tts, __tid, channel). NULL entities drop (the
+    * lastTouch-aligned contract — see above). */
+  private def eligibleTouches(
+      events: DataFrame,
+      entityCol: String,
+      tsCol: String,
+      idCol: String,
+      typeCol: String,
+      convType: String,
+      touchTypes: Seq[String],
+      lookback: Long): (DataFrame, DataFrame) = {
+    requireArgs(convType, touchTypes, lookback)
+    val convs = events.where(col(typeCol) === convType &&
+        col(entityCol).isNotNull)
+      .select(col(entityCol).as("__e"), col(tsCol).as("__cts"),
+        col(idCol).as("conversion_id"))
+    val touches = events.where(col(typeCol).isin(touchTypes: _*))
+      .select(col(entityCol).as("__e"), col(tsCol).as("__tts"),
+        col(idCol).as("__tid"), col(typeCol).as("channel"))
+    val eligible = convs.join(touches, Seq("__e"))
+      .where((col("__tts") < col("__cts") ||
+          (col("__tts") === col("__cts") &&
+            col("__tid") < col("conversion_id"))) &&
+        col("__cts") - col("__tts") <= lookback)
+    (convs, eligible)
   }
 
   /** Linear (multi-touch) attribution — every eligible touch shares
@@ -107,21 +144,8 @@ object Attribution {
       convType: String,
       touchTypes: Seq[String],
       lookback: Long): DataFrame = {
-    require(lookback > 0, "lookback must be positive")
-    require(!touchTypes.contains(convType),
-      "convType in touchTypes would let a conversion credit itself")
-    // NULL entities drop (the lastTouch-aligned contract — see above)
-    val convs = events.where(col(typeCol) === convType &&
-        col(entityCol).isNotNull)
-      .select(col(entityCol).as("__e"), col(tsCol).as("__cts"),
-        col(idCol).as("conversion_id"))
-    val touches = events.where(col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("__e"), col(tsCol).as("__tts"),
-        col(idCol).as("__tid"), col(typeCol).as("channel"))
-    val eligible = convs.join(touches, Seq("__e"))
-      .where((col("__tts") < col("__cts") ||
-          (col("__tts") === col("__cts") && col("__tid") < col("conversion_id"))) &&
-        col("__cts") - col("__tts") <= lookback)
+    val (convs, eligible) = eligibleTouches(events, entityCol, tsCol,
+      idCol, typeCol, convType, touchTypes, lookback)
     val perChannel = eligible
       .groupBy(col("conversion_id"), col("channel"))
       .agg(count(lit(1)).as("n_channel_touches"))
@@ -171,21 +195,8 @@ object Attribution {
       convType: String,
       touchTypes: Seq[String],
       lookback: Long): DataFrame = {
-    require(lookback > 0, "lookback must be positive")
-    require(!touchTypes.contains(convType),
-      "convType in touchTypes would let a conversion credit itself")
-    val convs = events.where(col(typeCol) === convType &&
-        col(entityCol).isNotNull)
-      .select(col(entityCol).as("__e"), col(tsCol).as("__cts"),
-        col(idCol).as("conversion_id"))
-    val touches = events.where(col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("__e"), col(tsCol).as("__tts"),
-        col(idCol).as("__tid"), col(typeCol).as("channel"))
-    val eligible = convs.join(touches, Seq("__e"))
-      .where((col("__tts") < col("__cts") ||
-          (col("__tts") === col("__cts") &&
-            col("__tid") < col("conversion_id"))) &&
-        col("__cts") - col("__tts") <= lookback)
+    val (convs, eligible) = eligibleTouches(events, entityCol, tsCol,
+      idCol, typeCol, convType, touchTypes, lookback)
     val w = Window.partitionBy(col("conversion_id"))
       .orderBy(col("__tts"), col("__tid"))
     val positioned = eligible

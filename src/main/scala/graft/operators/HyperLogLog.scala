@@ -60,6 +60,18 @@ object HyperLogLog {
   def termLiteral(r: Int): String =
     (BigDecimal(1) / BigDecimal(2).pow(r)).setScale(12).bigDecimal.toPlainString
 
+  /** Oracle SQL for [[rho]]: the CASE arms over the bucket word `w`,
+    * completed at each site as `CASE $sqlRhoCase ELSE $RhoCap END`. */
+  def sqlRhoCase: String = (1 until RhoCap)
+    .map(k => s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k")
+    .mkString(" ")
+
+  /** Oracle SQL for the 2^(−r) register term: the CASE arms over `r`,
+    * each the exact [[termLiteral]] as DECIMAL(14,12). */
+  def sqlTermCase: String = (0 to RhoCap)
+    .map(r => s"WHEN r = $r THEN CAST(${termLiteral(r)} AS DECIMAL(14,12))")
+    .mkString(" ")
+
   private def log2(m: Int): Int = 31 - Integer.numberOfLeadingZeros(m)
 
   /** rho(w) = trailing zeros of w + 1, capped: the CASE chain

@@ -1,5 +1,6 @@
 package graft.operators
 import graft.Materialize.MatOps
+import graft.SizeGate
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -80,20 +81,20 @@ object Triangles {
     * round 0..rounds, converged = 1 iff the last two counts agree —
     * the q591 contract.
     *
-    * Size-gated like the SupplierGraph fixpoint twins: under `cap`
-    * the whole peel folds inside ONE executor task (an edge's
-    * triangle support is the common-neighbor count of its endpoints
-    * within the current edge set — exactly [[edgeSupport]]'s integer
-    * count, so the trajectory is bit-identical); above the cap the
-    * per-round wedge-join loop runs. The cap is a parameter so the
-    * spec can force either branch and assert identical trajectories. */
-  def trussTrajectory(e0: DataFrame, rounds: Int, minSup: Int = 2,
-      cap: Long = 1L << 20): DataFrame = {
+    * Size-gated like the SupplierGraph fixpoint twins: under
+    * [[graft.SizeGate.EdgeRows]] edges the whole peel folds inside ONE
+    * executor task (an edge's triangle support is the common-neighbor
+    * count of its endpoints within the current edge set — exactly
+    * [[edgeSupport]]'s integer count, so the trajectory is
+    * bit-identical); above the bound the per-round wedge-join loop
+    * runs. */
+  def trussTrajectory(e0: DataFrame, rounds: Int, minSup: Int = 2)
+      : DataFrame = {
     require(rounds >= 1,
       s"trussTrajectory needs rounds >= 1, got $rounds") // ADVICE r11 #4
     val s = e0.sparkSession
     import s.implicits._
-    if (e0.count() <= cap) {
+    if (SizeGate.local(e0, SizeGate.EdgeRows)) {
       e0.select(col("a").cast("long"), col("c").cast("long"))
         .as[(Long, Long)]
         .repartition(1)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-10 collective-risk wave: the compound frequency-severity
@@ -81,7 +82,7 @@ object CompoundRiskQueries {
     * process/pass and read by every consumer (longs round-trip parquet
     * exactly; the DuckDB oracle keeps the inline CTEs, so the gate
     * proves cache ≡ from-scratch). The mix build itself is size-gated:
-    * under the cap the convolution chain + frequency mixture folds
+    * under the bound the convolution chain + frequency mixture folds
     * into ONE executor task of identical Long arithmetic
     * ([[mixOf]]). */
   private val spineSrc = "lineitem"
@@ -126,17 +127,18 @@ object CompoundRiskQueries {
   /** Mixture pmf mix(v, p) from severity counts sev(v, c) and the
     * frequency pmf fq(k, g): 9 re-quantized self-convolutions of the
     * severity pmf, mixed by fq. Size-gated (the SupplierGraph fixpoint
-    * discipline): when the severity dim has ≤ `cap` distinct values
-    * and max value ≤ `cap`, the whole chain folds into ONE executor
+    * discipline): when the severity dim has ≤ [[SizeGate.PairRows]]
+    * distinct values and max value ≤ the same bound (the twin's dense
+    * arrays are indexed by value), the whole chain folds into ONE
+    * executor
     * task — same Long arithmetic ((1e6·c) div m, per-level
     * Σp·p div 1e6 re-quantization, Σg·p div gt), same SUPPORT
     * (a level-k value exists iff it is a sum of k severity values,
     * even when its quantized mass is 0 — zero-mass rows survive
-    * exactly like the relational groupBy's); above the cap the
+    * exactly like the relational groupBy's); above the bound the
     * broadcast-join rounds run unchanged. `CompoundRiskTwinSpec`
     * forces both branches. */
-  private[graft] def mixOf(sev: DataFrame, fq: DataFrame,
-      cap: Long = 4096L): DataFrame = {
+  private[graft] def mixOf(sev: DataFrame, fq: DataFrame): DataFrame = {
     val s = sev.sparkSession
     val Array(nSev, maxV, minV) = sev
       .agg(count(lit(1)), coalesce(max(col("v")), lit(0L)),
@@ -145,7 +147,8 @@ object CompoundRiskQueries {
     // minV ≥ 0: the dense-array twin indexes by value (severities are
     // quantities, nonnegative by domain; a negative value falls back
     // to the relational plan rather than assuming)
-    if (nSev <= cap && maxV <= cap && minV >= 0L) mixLocal(sev, fq)
+    if (SizeGate.local(s, SizeGate.PairRows)(nSev) &&
+      maxV <= SizeGate.PairRows && minV >= 0L) mixLocal(sev, fq)
     else mixDistributed(sev, fq)
   }
 

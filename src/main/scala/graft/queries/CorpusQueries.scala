@@ -265,6 +265,21 @@ object CorpusQueries {
   private[queries] def sqlCosine(a: String, b: String) =
     s"${sqlDot(a, b)} / (sqrt(${sqlDot(a, a)}) * sqrt(${sqlDot(b, b)}))"
 
+  /** banded_raw/banded CTE pair of the banded-LSH oracles over `sigs`
+    * (vec_id, embedding, sig): `bands` bands of `rows` signature bits,
+    * bucket = the band's bits, buckets over `maxBucket` rows dropped
+    * (the bucket cap). */
+  private[queries] def sqlBandedCtes(bands: Int, rows: Int,
+      maxBucket: Int): String =
+    s"""banded_raw AS (
+       |  SELECT vec_id, embedding, u.b AS band, (sig >> (u.b * $rows)) % ${1 << rows} AS bucket
+       |  FROM sigs, unnest(range(0, $bands)) AS u(b)),
+       |banded AS (
+       |  SELECT * FROM (
+       |    SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
+       |    FROM banded_raw)
+       |  WHERE bsz <= $maxBucket)""".stripMargin
+
   /** sigs/losers CTE pair shared by q75 and q82 — cell assignment plus
     * the one-pass lower-id keep rule (SemDedup.semanticDedup). */
   private def sqlSemanticLosersCtes(bits: Int, threshold: Double) =
@@ -482,14 +497,7 @@ object CorpusQueries {
         |WITH sigs AS (
         |  SELECT vec_id, embedding, ${sqlHyperplaneCell(60)} AS sig
         |  FROM embeddings),
-        |banded_raw AS (
-        |  SELECT vec_id, embedding, u.b AS band, (sig >> (u.b * 6)) % 64 AS bucket
-        |  FROM sigs, unnest(range(0, 10)) AS u(b)),
-        |banded AS (
-        |  SELECT * FROM (
-        |    SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
-        |    FROM banded_raw)
-        |  WHERE bsz <= 4096),
+        |${sqlBandedCtes(10, 6, 4096)},
         |losers AS (
         |  SELECT DISTINCT y.vec_id
         |  FROM banded x JOIN banded y
@@ -1359,14 +1367,7 @@ object CorpusQueries {
         |sigs AS (
         |  SELECT vec_id, embedding, ${sqlHyperplaneCell(60)} AS sig
         |  FROM allv),
-        |banded_raw AS (
-        |  SELECT vec_id, embedding, u.b AS band, (sig >> (u.b * 6)) % 64 AS bucket
-        |  FROM sigs, unnest(range(0, 10)) AS u(b)),
-        |banded AS (
-        |  SELECT * FROM (
-        |    SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
-        |    FROM banded_raw)
-        |  WHERE bsz <= 4096),
+        |${sqlBandedCtes(10, 6, 4096)},
         |losers AS (
         |  SELECT DISTINCT y.vec_id
         |  FROM banded x JOIN banded y

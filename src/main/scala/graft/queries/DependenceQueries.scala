@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 dependence wave: categorical mutual information, targeted-
@@ -186,22 +187,21 @@ object DependenceQueries {
   }
 
   /** Attack-robustness panel (removed_permille, n_nodes_kept,
-    * largest_component, largest_share_milli) over the edge frame
-    * e(a, c) and the degree-ranked node dim dr(node, rnk). Size-gated
-    * on the edge count (the SupplierGraph fixpoint discipline): under
-    * the cap ALL levels run in ONE executor task — per-level DSU over
-    * the surviving nodes (every survivor starts as its own singleton,
-    * exactly the left-join-coalesce semantics of the distributed
-    * plan), same Long cut/share arithmetic; above the cap the
-    * per-level join + alternating-star component loop runs unchanged.
+    * largest_component, largest_share_milli) over the edge frame e(a, c)
+    * and the degree-ranked node dim dr(node, rnk). Size-gated on the edge
+    * count (the SupplierGraph fixpoint discipline): under
+    * [[SizeGate.EdgeRows]] ALL levels run in ONE executor task —
+    * per-level DSU over the surviving nodes (every survivor starts as its
+    * own singleton, exactly the left-join-coalesce semantics of the
+    * distributed plan), same Long cut/share arithmetic; above the bound
+    * the per-level join + alternating-star component loop runs unchanged.
     * `AttackPanelTwinSpec` forces both branches. */
   private[graft] def attackPanel(e: org.apache.spark.sql.DataFrame,
-      dr: org.apache.spark.sql.DataFrame, nn0: Long, levels: Seq[Int],
-      cap: Long = SupplierGraph.localEdgeCap)
+      dr: org.apache.spark.sql.DataFrame, nn0: Long, levels: Seq[Int])
       : org.apache.spark.sql.DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    if (e.count() <= cap) {
+    if (SizeGate.local(e, SizeGate.EdgeRows)) {
       val schema = org.apache.spark.sql.types.StructType(
         Seq("removed_permille", "n_nodes_kept", "largest_component",
           "largest_share_milli").map(n =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-9 modern-dependence wave on the day-grain (revenue, quantity)
@@ -84,19 +85,17 @@ object DistDependenceQueries {
           .stripMargin).as("dcor2_milli"))
   }
 
-  /** One-row dCor V-statistic aggregates (n, ta, tb, sab, saa, sbb,
-    * crab, craa, crbb) over the day panel (d, x, y). Size-gated (the
-    * day series is CALENDAR-bounded): under the cap — row count
-    * ≤ 4096 AND max |x|, |y| ≤ 2⁴⁹, which keeps every inner
-    * accumulator inside unsigned 128-bit by construction — the n²
+  /** One-row dCor V-statistic aggregates (n, ta, tb, sab, saa, sbb, crab,
+    * craa, crbb) over the day panel (d, x, y). Size-gated (the day series
+    * is CALENDAR-bounded): under the bound — row count ≤
+    * [[SizeGate.PairRows]] AND max |x|, |y| ≤ 2⁴⁹, which keeps every
+    * inner accumulator inside unsigned 128-bit by construction — the n²
     * pair fan-out folds into ONE executor task of exact integer
-    * arithmetic (pair sums in (hi, lo) limbs, per-row sums in Long
-    * ≤ 2⁶², row-product sums in BigInt), bit-identical to the
-    * DECIMAL(38,0) relational aggregates; above the cap the
-    * crossJoin + two-aggregate plan runs unchanged. `DcorTwinSpec`
-    * forces both branches. */
-  private[graft] def dcorStats(day: DataFrame,
-      cap: Long = 4096L): DataFrame = {
+    * arithmetic (pair sums in (hi, lo) limbs, per-row sums in Long ≤ 2⁶²,
+    * row-product sums in BigInt), bit-identical to the DECIMAL(38,0)
+    * relational aggregates; above the bound the crossJoin + two-aggregate
+    * plan runs unchanged. `DcorTwinSpec` forces both branches. */
+  private[graft] def dcorStats(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
     val lim = 1L << 49
@@ -105,7 +104,8 @@ object DistDependenceQueries {
         coalesce(max(abs(col("x"))), lit(0L)),
         coalesce(max(abs(col("y"))), lit(0L)))
       .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    if (nd <= cap && mx <= lim && my <= lim) {
+    if (SizeGate.local(s, SizeGate.PairRows)(nd) && mx <= lim &&
+      my <= lim) {
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val schema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("n",

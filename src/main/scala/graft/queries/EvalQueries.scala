@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sim.{AnnEval, Similarity}
 import graft.text.{Sampling, Sharding, TextAnalysis, Versioning}
-import CorpusQueries.{sqlCosine, sqlHyperplaneCell, sqlQualityExpr}
+import CorpusQueries.{sqlBandedCtes, sqlCosine, sqlHyperplaneCell, sqlQualityExpr}
 import PipelineQueries.{sqlCharFold, sqlContentFp, sqlInList, sqlSaltedHash, sqlShingles, sqlSimhash, sqlTokens}
 
 /** Round-5 evaluation + versioning operators: corpus snapshot diff,
@@ -898,14 +898,8 @@ object EvalQueries {
   def q191: Q = {
     val m = 64
     val cap = graft.operators.HyperLogLog.RhoCap
-    val rhoCase = (1 until cap)
-      .map(k => s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k")
-      .mkString(" ")
-    val termCase = (0 to cap)
-      .map(r =>
-        s"WHEN r = $r THEN CAST(${graft.operators.HyperLogLog.termLiteral(r)}"
-          + " AS DECIMAL(14,12))")
-      .mkString(" ")
+    val rhoCase = graft.operators.HyperLogLog.sqlRhoCase
+    val termCase = graft.operators.HyperLogLog.sqlTermCase
     val aM2 = graft.operators.HyperLogLog.alphaM2(m)
     Q("q191_rolling_hll",
       Some(s"""
@@ -3020,14 +3014,7 @@ object EvalQueries {
       |sigs AS (
       |  SELECT vec_id, embedding, ${sqlHyperplaneCell(32)} AS sig
       |  FROM embeddings),
-      |banded_raw AS (
-      |  SELECT vec_id, embedding, u.b AS band, (sig >> (u.b * 8)) % 256 AS bucket
-      |  FROM sigs, unnest(range(0, 4)) AS u(b)),
-      |banded AS (
-      |  SELECT * FROM (
-      |    SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
-      |    FROM banded_raw)
-      |  WHERE bsz <= 128),
+      |${sqlBandedCtes(4, 8, 128)},
       |cand AS (
       |  SELECT DISTINCT x.vec_id, x.embedding AS qvec,
       |                  y.vec_id AS neighbor_id, y.embedding AS nvec
@@ -3231,14 +3218,8 @@ object EvalQueries {
   def q143: Q = {
     val m = 64
     val cap = graft.operators.HyperLogLog.RhoCap
-    val rhoCase = (1 until cap)
-      .map(k => s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k")
-      .mkString(" ")
-    val termCase = (0 to cap)
-      .map(r =>
-        s"WHEN r = $r THEN CAST(${graft.operators.HyperLogLog.termLiteral(r)}"
-          + " AS DECIMAL(14,12))")
-      .mkString(" ")
+    val rhoCase = graft.operators.HyperLogLog.sqlRhoCase
+    val termCase = graft.operators.HyperLogLog.sqlTermCase
     val aM2 = graft.operators.HyperLogLog.alphaM2(m)
     Q("q143_hll_distinct",
       Some(s"""
@@ -4553,14 +4534,7 @@ object EvalQueries {
       |sigs AS (
       |  SELECT vec_id, embedding, ${sqlHyperplaneCell(32)} AS sig
       |  FROM embeddings),
-      |banded_raw AS (
-      |  SELECT vec_id, embedding, u.b AS band, (sig >> (u.b * 8)) % 256 AS bucket
-      |  FROM sigs, unnest(range(0, 4)) AS u(b)),
-      |banded AS (
-      |  SELECT * FROM (
-      |    SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
-      |    FROM banded_raw)
-      |  WHERE bsz <= 128),
+      |${sqlBandedCtes(4, 8, 128)},
       |cand AS (
       |  SELECT DISTINCT x.vec_id, x.embedding AS qvec,
       |                  y.vec_id AS neighbor_id, y.embedding AS nvec

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 factorization wave: a rank-1 matrix factorization of the
@@ -107,20 +108,21 @@ object FactorQueries {
   /** Rank-1 ALS trajectory over the brand × nation cell dim r(br, na,
     * x): `iters` alternating updates, returning the final (u(br, u),
     * v(na, v)) frames. Size-gated on the cell count (the SupplierGraph
-    * fixpoint discipline): under the cap the whole trajectory folds
+    * fixpoint discipline): under [[SizeGate.PairRows]] cells the whole
+    * trajectory folds
     * into ONE executor task — u rounds in overflow-checked Long
     * arithmetic (multiplyExact/addExact mirror the plan's ANSI LONG
     * sums), v rounds in BigInt (the plan's DECIMAL(38,0) sums), both
     * closed by the same truncating division on nonnegative values;
-    * above the cap the 6-round broadcast-join loop runs unchanged
+    * above the bound the 6-round broadcast-join loop runs unchanged
     * (round 11's plan: 2 materialize + ~2 jobs per half-round).
     * `AlsTwinSpec` forces both branches. */
   private[graft] def alsRank1(r: org.apache.spark.sql.DataFrame,
-      iters: Int, cap: Long = 4096L)
+      iters: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val s = r.sparkSession
     import s.implicits._
-    if (r.count() <= cap) {
+    if (SizeGate.local(r, SizeGate.PairRows)) {
       val tagged = r.select(col("br"), col("na").cast("long"), col("x"))
         .as[(String, Long, Long)].rdd.repartition(1)
         .mapPartitions { it =>

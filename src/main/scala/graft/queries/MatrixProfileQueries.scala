@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-9 matrix-profile wave: the exact (brute-force) matrix
@@ -113,15 +114,14 @@ object MatrixProfileQueries {
         min_by(col("s"), col("dist") * (tMax + 1L) + col("s")).as("sb"))
 
   // ------------------------------------------------------------------
-  // size-gated single-task twins (the RobustScaleQueries.localDayCap /
-  // SupplierGraph fixpoint discipline): the series is CALENDAR-bounded
+  // size-gated single-task twins (SizeGate.PairRows, the SupplierGraph
+  // fixpoint discipline): the series is CALENDAR-bounded
   // (~2.5k rows at every sf), so the ~3.1M-row lag/diff fan-out, its
   // exchange on lg and the running-sum window fold inside ONE executor
   // task of identical arithmetic. Distances are exact BigInt (the
   // distributed plan's DECIMAL(38,0) — daily revenue cents square-sums
-  // can exceed Long); above the cap the relational plan runs unchanged.
-  // `cap` is a parameter so MatrixProfileTwinSpec can force either
-  // branch and assert bit-identical rows (ADVICE r11 #1).
+  // can exceed Long); above the bound the relational plan runs
+  // unchanged.
   // ------------------------------------------------------------------
 
   private def distSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -180,9 +180,8 @@ object MatrixProfileQueries {
   private def dec(v: BigInt) = new java.math.BigDecimal(v.bigInteger)
 
   /** Gated profile frame (t, p, sb). */
-  private[graft] def profileFrame(sq: DataFrame, tMax: Int,
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame =
-    if (tMax <= cap) {
+  private[graft] def profileFrame(sq: DataFrame, tMax: Int): DataFrame =
+    if (SizeGate.local(sq.sparkSession, SizeGate.PairRows)(tMax)) {
       val s = sq.sparkSession
       import s.implicits._
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -217,9 +216,8 @@ object MatrixProfileQueries {
 
   /** Gated top-motif frame: the single lex-min (dist, t, s) half pair
     * as a 1-row (t, s, dist) frame. */
-  private[graft] def motifFrame(sq: DataFrame, tMax: Int,
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame =
-    if (tMax <= cap) {
+  private[graft] def motifFrame(sq: DataFrame, tMax: Int): DataFrame =
+    if (SizeGate.local(sq.sparkSession, SizeGate.PairRows)(tMax)) {
       localFold(sq, tMax) { z =>
         var bd: BigInt = null; var bt = 0; var bs = 0
         foreachPair(z, tMax, 7 to (tMax - 7)) { (i, s2, d) =>
@@ -236,9 +234,10 @@ object MatrixProfileQueries {
 
   /** Gated fixed-lag half-pair frame (t, s, dist) for DISTINCT
     * positive lags (q959's 7/30/365). */
-  private[graft] def lagPairs(sq: DataFrame, tMax: Int, lags: Seq[Int],
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame =
-    if (tMax <= cap && lags.nonEmpty && lags.forall(_ >= 1) &&
+  private[graft] def lagPairs(sq: DataFrame, tMax: Int, lags: Seq[Int])
+      : DataFrame =
+    if (SizeGate.local(sq.sparkSession, SizeGate.PairRows)(tMax) &&
+      lags.nonEmpty && lags.forall(_ >= 1) &&
       lags.distinct.size == lags.size) {
       localFold(sq, tMax) { z =>
         val out = scala.collection.mutable.ArrayBuffer

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 mechanism wave: a Lindley single-server queue replay (via
@@ -232,15 +233,16 @@ object MechanismQueries {
   /** Bradley–Terry MM strengths (micro) after `iters` rounds over the
     * brand-pair dim g(i, j, n) and the win counts w(i, wins):
     * (brand, wins, bt_strength_micro). Size-gated like the SupplierGraph
-    * fixpoints: at most `cap` pairs fold the whole trajectory inside ONE
+    * fixpoints: at most [[SizeGate.EdgeRows]] pairs fold the whole
+    * trajectory inside ONE
     * task with the identical long floor-division chain (the distributed
     * per-round loop ran ~24 tiny Spark jobs); more run the dataframe
     * loop. Both fail on a value past Long — the local fold through
     * `multiplyExact`/`addExact`, the loop through ANSI arithmetic. */
-  private[graft] def btStrengths(g: DataFrame, w: DataFrame, iters: Int,
-      cap: Long = SupplierGraph.localEdgeCap): DataFrame = {
+  private[graft] def btStrengths(g: DataFrame, w: DataFrame, iters: Int)
+      : DataFrame = {
     val s = g.sparkSession
-    if (g.count() <= cap) {
+    if (SizeGate.local(g, SizeGate.EdgeRows)) {
       import s.implicits._
       g.select(lit(0L).as("t"), col("i"), col("j"), col("n"))
         .unionAll(w.select(lit(1L).as("t"), col("i"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-11 Passing–Bablok method-comparison wave: daily GROSS
@@ -95,24 +96,21 @@ object MethodCompQueries {
 
   /** The 1-row (n, k, b) PB fit, size-gated on the day count (the
     * siegelFrame discipline): the slope table is day²-bounded
-    * (~3.1M pairs at every sf), so under the cap the pair fan-out,
+    * (~3.1M pairs at every sf), so under [[SizeGate.PairRows]] days
+    * the pair fan-out,
     * the kf bookkeeping and the ranked-slope selection fold inside
     * ONE executor task — xd/yd are long differences of long daily
     * micro-dollars (no overflow: both operands are positive longs),
     * each slope is the IDENTICAL one IEEE divide, and the rank
     * positions select the same s values as the (s, pid) row_number
-    * (ties permute only equal s). Above the cap the distributed
-    * fan-out + bucket-parallel rank runs unchanged. `cap` is a
-    * parameter so MethodCompTwinSpec can force either branch. */
-  private[graft] def pbFitOf(sq: DataFrame,
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame = {
-    // the local branch allocates an Int-indexed n(n-1)/2 slope array —
-    // a raised cap would overflow it silently (the qnFrame bound)
-    require(cap <= RobustScaleQueries.localDayCap,
-      s"pbFitOf local cap must stay <= ${RobustScaleQueries.localDayCap}")
+    * (ties permute only equal s). Above the bound the distributed
+    * fan-out + bucket-parallel rank runs unchanged. */
+  private[graft] def pbFitOf(sq: DataFrame): DataFrame = {
     val s = sq.sparkSession
     val nDays = sq.count()
-    if (nDays >= 2 && nDays <= cap) {
+    // the local branch's Int-indexed n(n-1)/2 slope array stays far
+    // from Int overflow under the fixed PairRows bound (the qnFrame one)
+    if (SizeGate.local(s, SizeGate.PairRows)(nDays) && nDays >= 2) {
       import s.implicits._
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("n",
@@ -291,12 +289,11 @@ object MethodCompQueries {
 
   /** q1073's concordance counts (np, nc, nd, nt), size-gated like
     * [[pbFitOf]] — sign bookkeeping over the day² pair frame in one
-    * task under the cap, the distributed pair join above it. */
-  private[graft] def tauAgg(sq: DataFrame,
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame = {
+    * task under the bound, the distributed pair join above it. */
+  private[graft] def tauAgg(sq: DataFrame): DataFrame = {
     val s = sq.sparkSession
     val nDays = sq.count()
-    if (nDays >= 2 && nDays <= cap) {
+    if (SizeGate.local(s, SizeGate.PairRows)(nDays) && nDays >= 2) {
       import s.implicits._
       sq.select(col("t").cast("int"), col("x").cast("long"),
           col("y").cast("long"))

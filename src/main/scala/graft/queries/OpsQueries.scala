@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 operations-research + retrieval-eval wave: EOQ lot sizing,
@@ -434,18 +435,17 @@ object OpsQueries {
 
   /** q416's two unrolled weighted HITS iterations (supp, am), size-
     * gated on the pair-dim row count (the SupplierGraph fixpoint
-    * discipline): under the cap the four half-steps (each a shuffle
+    * discipline): under [[SizeGate.EdgeRows]] pairs the four
+    * half-steps (each a shuffle
     * join + aggregate + max-normalize in the dataframe loop) fold
     * inside ONE executor task of identical Long arithmetic —
     * `Math.*Exact` so an overflow throws exactly where the ANSI
-    * dataframe loop would; above the cap the per-step loop runs
-    * unchanged. `cap` is a parameter so OpsTwinSpec can force both
-    * branches. */
-  private[graft] def hitsAuth2(e: org.apache.spark.sql.DataFrame,
-      cap: Long = SupplierGraph.localEdgeCap)
+    * dataframe loop would; above the bound the per-step loop runs
+    * unchanged. */
+  private[graft] def hitsAuth2(e: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val s = e.sparkSession
-    if (e.count() <= cap) {
+    if (SizeGate.local(e, SizeGate.EdgeRows)) {
       import s.implicits._
       e.select(col("cust").cast("long"), col("supp").cast("long"),
           col("w").cast("long"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 
 /** Round-9 paired-comparison wave on the region×brand revenue
   * tournament (the q826 ballots): Bradley-Terry strengths via FIVE
@@ -93,27 +94,33 @@ object PairedCompQueries {
   }
 
   /** Spark BT strengths after 5 MM iterations (b, p micro, w1, wins).
-    * Size-gated like the SupplierGraph fixpoints: under the cap the
-    * 5-round trajectory folds inside ONE task — every per-round value
-    * is a positive integer comfortably inside Long, where floor
-    * division is identical to the dataframe loop's decimal(38,0)
-    * `x - x % y) / y` chain, and the output re-casts to the same
-    * decimal type; above the cap the per-round loop runs as before. */
+    * Size-gated like the SupplierGraph fixpoints: under the bound the
+    * 5-round trajectory folds inside ONE task, where floor division is
+    * identical to the dataframe loop's decimal(38,0) `x - x % y) / y`
+    * chain, and the output re-casts to the same decimal type; above
+    * it the per-round loop runs as before. */
   private def btBase(s: SparkSession, dir: String): DataFrame =
     btFrom(pwSpine(s, dir))
 
   /** [[btBase]] over a given pair-wins dim pw(ba, bb, wins, nv): at
-    * most `cap` pairs fold in one task, more run the dataframe loop. */
-  private[graft] def btFrom(pw: DataFrame,
-      cap: Long = SupplierGraph.localEdgeCap): DataFrame = {
+    * most [[SizeGate.EdgeRows]] pairs whose magnitudes fit the Long
+    * fold run in one task, anything else runs the dataframe loop.
+    * The magnitude bound (one aggregate, taken only when the row
+    * bound passes): Σ|nv| ≤ L and 1 + Σ|wins| ≤ L with
+    * L = Long.MaxValue / 10¹², so every nv·10¹², every per-brand
+    * denominator Σ nv·10¹² div (pa + pb) and every w·10¹² (hence
+    * praw ≤ w·10¹²) fits a Long; the renormalization praw·nb·10⁶ div
+    * Σpraw outgrows Long on its own and runs in BigInt. */
+  private[graft] def btFrom(pw: DataFrame): DataFrame = {
     val s = pw.sparkSession
-    // Long-path magnitude bound (ADVICE r11 #3): nv is the per-pair
-    // VOTER count, bounded by the region dim (5), so nv*1e12 ~ 5e12
-    // and praw*nb*1e6 <= (w1*1e12/d)*25*1e6 stay far inside Long; the
-    // require fails loudly if a schema change ever breaks that bound
-    if (pw.count() <= cap) {
-      require(pw.agg(max(col("nv"))).head().getLong(0) <= 1000000L,
-        "btBase local Long path requires small per-pair voter counts")
+    val lim = Long.MaxValue / 1000000000000L
+    def fitsLong: Boolean = {
+      val m = pw.agg(coalesce(sum(abs(col("nv").cast("long"))), lit(0L)),
+          coalesce(sum(abs(col("wins").cast("long"))), lit(0L)))
+        .head()
+      m.getLong(0) <= lim && m.getLong(1) < lim
+    }
+    if (SizeGate.local(pw, SizeGate.EdgeRows) && fitsLong) {
       import s.implicits._
       pw.select(col("ba"), col("bb"), col("wins").cast("long"),
           col("nv").cast("long"))
@@ -138,10 +145,10 @@ object PairedCompQueries {
             val praw = w1.iterator.flatMap { case (b, w) =>
               den.get(b).map(d => b -> (w * 1000000000000L) / d)
             }.toMap
-            val sSum = praw.valuesIterator.sum
+            val sSum = praw.valuesIterator.map(BigInt(_)).sum
             val nb = praw.size.toLong
             p = praw.map { case (b, pr) =>
-              b -> (pr * nb * 1000000L) / sSum
+              b -> (BigInt(pr) * nb * 1000000L / sSum).toLong
             }
           }
           p.iterator.map { case (b, pv) => (b, pv, w1(b), w0(b)) }

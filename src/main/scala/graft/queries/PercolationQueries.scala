@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 
 /** Round-11 percolation / robustness wave on the supplier
   * co-purchase graph ([[SupplierGraph]] edges): weight-threshold
@@ -92,21 +93,19 @@ object PercolationQueries {
     lbl
   }
 
-  /** Spark summary (scenario, n_edges, n_nodes, n_components,
-    * giant_size, giant_share_ppm) from kept edges ke(sc, a, c, ...),
-    * size-gated on the scenario-panel row count (the SupplierGraph
-    * fixpoint discipline): under the cap the WHOLE panel — per-
+  /** Spark summary (scenario, n_edges, n_nodes, n_components, giant_size,
+    * giant_share_ppm) from kept edges ke(sc, a, c, ...), size-gated on
+    * the scenario-panel row count (the SupplierGraph fixpoint
+    * discipline): under [[SizeGate.EdgeRows]] the WHOLE panel — per-
     * scenario union-find, component sizes, edge counts and the giant
-    * share — folds into ONE executor task (round 11 folded only the
-    * label step and still paid a count + shuffle + three groupBys +
-    * a join per query); above the cap the distributed min-label
-    * rounds run exactly as before. Components are execution-shape
-    * independent, so both branches are bit-identical —
-    * `PercolationTwinSpec` forces each via `cap`. */
-  private[graft] def summarize(ke: DataFrame,
-      cap: Long = SupplierGraph.localEdgeCap): DataFrame = {
+    * share — folds into ONE executor task (round 11 folded only the label
+    * step and still paid a count + shuffle + three groupBys + a join per
+    * query); above the bound the distributed min-label rounds run exactly
+    * as before. Components are execution-shape independent, so both
+    * branches are bit-identical — `PercolationTwinSpec` checks both. */
+  private[graft] def summarize(ke: DataFrame): DataFrame = {
     val s = ke.sparkSession
-    if (ke.count() <= cap) {
+    if (SizeGate.local(ke, SizeGate.EdgeRows)) {
       import s.implicits._
       s.createDataFrame(
         ke.select(col("sc").cast("long"), col("a").cast("long"),

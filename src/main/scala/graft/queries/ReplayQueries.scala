@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 replay-and-residuals wave: LRU cache replay against static
@@ -343,23 +344,21 @@ object ReplayQueries {
   }
 
   /** Per-permutation group sums pm(b, n1, ps1, ps2) over the span
-    * frame ord(id, g, t): for each pseudo-permutation b, rows rank by
-    * the salted LCG-mixed hash (ties by id) and ps1/ps2 sum t over the
-    * first n1 / remaining ranks (n1 = |g = 1|). Size-gated on the
-    * frame's row count (the SupplierGraph fixpoint discipline): under
-    * the cap the whole 40-way fan-out + per-permutation rank split
-    * folds into ONE executor task — same Long arithmetic
+    * frame ord(id, g, t): for each pseudo-permutation b, rows rank by the
+    * salted LCG-mixed hash (ties by id) and ps1/ps2 sum t over the first
+    * n1 / remaining ranks (n1 = |g = 1|). Size-gated on the frame's row
+    * count (the SupplierGraph fixpoint discipline): under
+    * [[SizeGate.EdgeRows]] the whole 40-way fan-out + per-permutation
+    * rank split folds into ONE executor task — same Long arithmetic
     * (multiplyExact/addExact mirror the ANSI plan's overflow throws),
-    * same (hash, id) sort order; above the cap the crossJoin +
+    * same (hash, id) sort order; above the bound the crossJoin +
     * partitioned row_number window runs unchanged (the order frame is
-    * fact-scaled at 100 TB). `PermutationTwinSpec` forces both
-    * branches. */
+    * fact-scaled at 100 TB). `PermutationTwinSpec` forces both branches. */
   private[graft] def permSums(ord: org.apache.spark.sql.DataFrame,
-      nPerm: Int, cap: Long = 1L << 20)
-      : org.apache.spark.sql.DataFrame = {
+      nPerm: Int): org.apache.spark.sql.DataFrame = {
     val s = ord.sparkSession
     import s.implicits._
-    if (ord.count() <= cap) {
+    if (SizeGate.local(ord, SizeGate.EdgeRows)) {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("b",
           org.apache.spark.sql.types.IntegerType),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-9 robust-scale wave on daily shipped revenue: the Rousseeuw-
@@ -39,32 +40,27 @@ object RobustScaleQueries {
         .agg(sum(col("v")).as("x"))
     }
 
-  /** Size gate for the single-task day² twins (Sn, Qn, HL here; the
-    * Siegel slope in RobustTrendQueries): a day series under this row
-    * cap runs its pairwise order-statistic selection inside ONE
-    * executor task — the calendar bounds the series at ~2.5k rows at
-    * EVERY sf, so the relational all-pairs plan only ever re-sorted a
-    * constant ~3M-row frame through full shuffles; above the cap
-    * (≈8.4M pairs, 67 MB of longs per task) the relational plan runs
-    * unchanged. The SupplierGraph fixpoint discipline applied to the
-    * calendar dim. */
-  val localDayCap = 1L << 12
+  // The single-task day² twins below (Sn, Qn, HL; the Siegel slope in
+  // RobustTrendQueries) gate on SizeGate.PairRows: a day series under
+  // it runs its pairwise order-statistic selection inside ONE executor
+  // task — the calendar bounds the series at ~2.5k rows at EVERY sf,
+  // so the relational all-pairs plan only ever re-sorted a constant
+  // ~3M-row frame through full shuffles; above it the relational plan
+  // runs unchanged.
 
   /** Sn: per day i the himed (rank (n−1) div 2 + 1) of |xᵢ − xⱼ|,
     * j ≠ i, then the lomed (rank (n+1) div 2) over the n per-day
     * values — both exact order statistics on longs, so the single-
     * task twin is bit-identical to the relational plan (the window
     * tie-break by j only reorders EQUAL gap values; the value at the
-    * rank is unchanged). `cap` is a parameter so the spec can force
-    * either branch. */
-  private[graft] def snFrame(day: DataFrame,
-      cap: Long = localDayCap): DataFrame = {
+    * rank is unchanged). */
+  private[graft] def snFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
     val c = day.count()
     // the degenerate n < 2 series has no pairs — only the relational
     // plan states its (empty) contract; the twin handles n >= 2
-    if (c >= 2 && c <= cap) {
+    if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
       day.select(col("x")).as[Long]
         .repartition(1)
         .mapPartitions { it =>
@@ -112,16 +108,13 @@ object RobustScaleQueries {
 
   /** Qn: the k-th smallest of the n(n−1)/2 pairwise gaps,
     * k = (n div 2 + 1)·(n div 2) div 2 — one exact selection. */
-  private[graft] def qnFrame(day: DataFrame,
-      cap: Long = localDayCap): DataFrame = {
-    // the local branch allocates an Int-indexed n(n-1)/2 gap array —
-    // a raised cap would overflow it silently (ADVICE r11 #4)
-    require(cap <= localDayCap,
-      s"qnFrame local cap must stay <= $localDayCap, got $cap")
+  private[graft] def qnFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
     val c = day.count()
-    if (c >= 2 && c <= cap) {
+    // the local branch's Int-indexed n(n-1)/2 gap array stays far
+    // from Int overflow under the fixed PairRows bound
+    if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
       day.select(col("x")).as[Long]
         .repartition(1)
         .mapPartitions { it =>
@@ -159,15 +152,12 @@ object RobustScaleQueries {
   /** Hodges-Lehmann pseudomedian: the (m+1) div 2-th smallest of the
     * m = n(n+1)/2 Walsh sums xᵢ + xⱼ (i ≤ j), halved by floor
     * division. */
-  private[graft] def hlFrame(day: DataFrame,
-      cap: Long = localDayCap): DataFrame = {
-    // same Int-indexed Walsh-sum array bound as qnFrame
-    require(cap <= localDayCap,
-      s"hlFrame local cap must stay <= $localDayCap, got $cap")
+  private[graft] def hlFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
     val c = day.count()
-    if (c >= 1 && c <= cap) {
+    // same Int-indexed Walsh-sum array bound as qnFrame
+    if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 1) {
       day.select(col("x")).as[Long]
         .repartition(1)
         .mapPartitions { it =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-8 robust-trend wave: seasonal Mann–Kendall, the Siegel
@@ -122,8 +123,8 @@ object RobustTrendQueries {
     siegelFrame(DailyNet.frame(s, dir).materialize())
   }
 
-  /** The q647 Siegel selection, size-gated on the day count (the
-    * RobustScaleQueries.localDayCap discipline): under the cap the
+  /** The q647 Siegel selection, size-gated on the day count
+    * ([[SizeGate.PairRows]]): under the bound the
     * whole day² slope table, its per-day medians (rank
     * (500·(n−1)+999) div 1000 over ascending slopes — exactly
     * OrderStats.quantilesDisc at permille 500) and the global median
@@ -131,14 +132,12 @@ object RobustTrendQueries {
     * exactly: the net difference is a long (daily net cents fit far
     * inside a long at any real scale; the decimal cast would overflow
     * the same way), ONE IEEE double divide and multiply in the same
-    * op order, floor to long. `cap` is a parameter so the spec can
-    * force either branch and assert bit-identical rows. */
-  private[graft] def siegelFrame(d: DataFrame,
-      cap: Long = RobustScaleQueries.localDayCap): DataFrame = {
+    * op order, floor to long. */
+  private[graft] def siegelFrame(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
     val c = d.count()
-    if (c >= 2 && c <= cap) {
+    if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
       d.select(col("day").cast("long"), col("net").cast("long"))
         .as[(Long, Long)]
         .repartition(1)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-10 exact 1-D segmentation wave (Fisher/Jenks dynamic
@@ -170,11 +171,11 @@ object SegmentDpQueries {
     * best cost of splitting days 1..j into m segments, computed once —
     * q972's k = 5 run strictly subsumes the k = 4 stages the other
     * four queries need, so the whole wave shares one build. Round 12:
-    * the build is size-gated on the day count (localDayCap) — under
-    * the cap the whole 5-stage min-plus recurrence folds into ONE
+    * the build is size-gated on the day count ([[SizeGate.PairRows]])
+    * — under the bound the whole 5-stage min-plus recurrence folds into ONE
     * executor task over the prefix arrays with exact 128-bit integer
     * arithmetic (values reach ~5·10²⁴ at sf0.1 — past Long, inside
-    * the distributed plan's DECIMAL(38,0)); above the cap the
+    * the distributed plan's DECIMAL(38,0)); above the bound the
     * 5-round broadcast-join loop over the pair-cost spine runs
     * unchanged. `SegmentDpTwinSpec` forces both branches. */
   private def stageSpine(s: SparkSession, dir: String): DataFrame =
@@ -182,7 +183,7 @@ object SegmentDpQueries {
       Seq("lineitem"), version = 2) {
       val sq = DaySeries.revenue(s, dir)
       val tMax = sq.count().toInt
-      if (tMax <= RobustScaleQueries.localDayCap) stagesLocal(sq, tMax)
+      if (SizeGate.local(s, SizeGate.PairRows)(tMax)) stagesLocal(sq, tMax)
       else stagesDistributed(costFrame(s, dir)._1, tMax)
     }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
+import graft.SizeGate
 import graft.Tables
 
 /** Round-7 segmentation wave: two-level binary changepoint
@@ -325,21 +326,22 @@ object SegmentQueries {
   /** Hodges–Lehmann one-row summary (n_urgent, n_other,
     * hl_shift_days) from the two span-value histograms. Size-gated on
     * the combined histogram row count (span values are CALENDAR-
-    * bounded): under the cap the histogram cross product, the
+    * bounded): under [[SizeGate.HistRows]] the histogram cross
+    * product, the
     * weighted-median rank walk and both group totals fold into ONE
     * executor task — pair weights as exact BigInt products matching
     * the plan's DECIMAL(38,0), first-d-with-2·cum ≥ tw pick identical
-    * to the ascending cum window + min; above the cap the
+    * to the ascending cum window + min; above the bound the
     * dim²-crossJoin plan runs unchanged (the r12 profile put q539's
     * ~4 s in the ~6M-row BroadcastNestedLoopJoin fan-out, not the
     * fact pass — guide §2.2, compute the reduction where the data
     * is). `HlShiftTwinSpec` forces both branches. */
   private[graft] def hlSummary(hu: org.apache.spark.sql.DataFrame,
-      ho: org.apache.spark.sql.DataFrame, cap: Long = 1L << 13)
+      ho: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val s = hu.sparkSession
     import s.implicits._
-    if (hu.count() + ho.count() <= cap) {
+    if (SizeGate.local(s, SizeGate.HistRows)(hu.count() + ho.count())) {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("n_urgent",
           org.apache.spark.sql.types.LongType),

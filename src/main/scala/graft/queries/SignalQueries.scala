@@ -36,12 +36,7 @@ object SignalQueries {
   private def sqlHllEstCtes(
       tag: String, rel: String, keys: Seq[String]): String = {
     val m = 64
-    val cap = graft.operators.HyperLogLog.RhoCap
-    val termCase = (0 to cap)
-      .map(r =>
-        s"WHEN r = $r THEN CAST(${graft.operators.HyperLogLog.termLiteral(r)}"
-          + " AS DECIMAL(14,12))")
-      .mkString(" ")
+    val termCase = graft.operators.HyperLogLog.sqlTermCase
     val aM2 = graft.operators.HyperLogLog.alphaM2(m)
     val ks = keys.mkString(", ")
     s"""agg_$tag AS (
@@ -824,9 +819,7 @@ object SignalQueries {
     * rides along so the row is its own calibration. */
   def q225: Q = {
     val cap = graft.operators.HyperLogLog.RhoCap
-    val rhoCase = (1 until cap)
-      .map(k => s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k")
-      .mkString(" ")
+    val rhoCase = graft.operators.HyperLogLog.sqlRhoCase
     Q("q225_hll_overlap",
       Some(s"""
         |WITH tok AS (
@@ -2562,14 +2555,8 @@ object SignalQueries {
     val ms = Seq(16, 64, 256)
     def chain(m: Int): String = {
       val cap = graft.operators.HyperLogLog.RhoCap
-      val rhoCase = (1 until cap)
-        .map(k => s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k")
-        .mkString(" ")
-      val termCase = (0 to cap)
-        .map(r =>
-          s"WHEN r = $r THEN CAST(${graft.operators.HyperLogLog.termLiteral(r)}"
-            + " AS DECIMAL(14,12))")
-        .mkString(" ")
+      val rhoCase = graft.operators.HyperLogLog.sqlRhoCase
+      val termCase = graft.operators.HyperLogLog.sqlTermCase
       val aM2 = graft.operators.HyperLogLog.alphaM2(m)
       s"""w$m AS (SELECT hv % $m AS bucket, hv // $m AS w FROM h),
          |reg$m AS (

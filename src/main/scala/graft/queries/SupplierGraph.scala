@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
-import graft.Tables
+import graft.{SizeGate, Tables}
 
 /** Shared supplier co-purchase graph for the graph-analytics faces
   * (q457 link prediction, q473 eccentricity, q495 PageRank
@@ -76,18 +76,13 @@ object SupplierGraph {
       .select(col("a").as("ea"), col("c").as("ec"))
       .materialize()
 
-  /** Size gate for the single-task fixpoint twins below: a graph whose
-    * both-direction adjacency fits under this row cap runs its
-    * BFS/relaxation rounds inside ONE executor task (the driver-DSU
-    * discipline from dedup clustering — bounded dims earn a local
-    * algorithm, the fact never does); anything larger keeps the
-    * distributed per-round loop. At the sandbox SFs the supplier
-    * co-purchase adjacency is ≤ ~10⁵ rows and the per-round Spark-job
-    * overhead (join + distinct + anti-join + checkpoint + count ≈ 4
-    * jobs/round × 6-12 rounds) dominated every budgeted graph audit;
-    * on a 100 TB corpus the adjacency blows the cap and the loop runs
-    * exactly as before. */
-  val localEdgeCap = 1L << 20
+  // The fixpoint twins below gate on SizeGate.EdgeRows: a graph whose
+  // both-direction adjacency fits runs its BFS/relaxation rounds inside
+  // ONE executor task (the driver-DSU discipline from dedup clustering
+  // — bounded dims earn a local algorithm, the fact never does). At the
+  // sandbox SFs the co-purchase adjacency is ≤ ~10⁵ rows and per-round
+  // Spark-job overhead (≈ 4 jobs/round × 6-12 rounds) dominated every
+  // budgeted graph audit; a larger adjacency keeps the per-round loop.
 
   /** Capped multi-source layered BFS: (src, node, d) for every node
     * within `maxHops` of each source, at its MINIMUM distance. BFS
@@ -95,9 +90,8 @@ object SupplierGraph {
     * local twin returns bit-identical rows to the distributed loop
     * (same exactness assert included). */
   def bfsFrom(ed: DataFrame, srcs: DataFrame, maxHops: Int,
-      assertExhausted: Boolean = false,
-      cap: Long = localEdgeCap): DataFrame =
-    if (ed.count() <= cap)
+      assertExhausted: Boolean = false): DataFrame =
+    if (SizeGate.local(ed, SizeGate.EdgeRows))
       bfsFromLocal(ed, srcs, maxHops, assertExhausted)
     else bfsFromDistributed(ed, srcs, maxHops, assertExhausted)
 
@@ -226,9 +220,9 @@ object SupplierGraph {
     * round over the (src × reached-node) frame — O(rounds · srcs ·
     * |E|) like [[bfsFrom]], constant-depth lineage via per-round
     * truncating materialize. */
-  def relaxMinSum(ew: DataFrame, srcs: DataFrame, rounds: Int,
-      cap: Long = localEdgeCap): DataFrame =
-    if (ew.count() <= cap)
+  def relaxMinSum(ew: DataFrame, srcs: DataFrame, rounds: Int)
+      : DataFrame =
+    if (SizeGate.local(ew, SizeGate.EdgeRows))
       relaxLocal(ew, srcs, rounds, col("cost"), 0L,
         (acc, edge) => acc + edge, math.min)
     else {
@@ -245,13 +239,6 @@ object SupplierGraph {
       d
     }
 
-  /** Single-task twin of the H-round relaxations: per round, every
-    * (src, reached-node) value relaxes across every out-edge using the
-    * PREVIOUS round's table (exactly the dataframe loop's
-    * relax-then-union-then-reaggregate semantics); `combine` folds the
-    * path value (+ for min-sum costs, least for maximin widths) and
-    * `pick` keeps the per-(src, node) optimum. Long-exact, so rows are
-    * bit-identical to the distributed loop. */
   /** Dense CSR view of a single-task edge snapshot: arbitrary Long
     * node ids remapped to 0..n−1 so the relaxation loops below run on
     * primitive arrays instead of boxed (Long, Long)-keyed hash maps —
@@ -296,24 +283,50 @@ object SupplierGraph {
     }
   }
 
-  private def relaxLocal(ew: DataFrame, srcs: DataFrame, rounds: Int,
-      edgeVal: org.apache.spark.sql.Column, selfVal: Long,
-      combine: (Long, Long) => Long, pick: (Long, Long) => Long)
-      : DataFrame = {
+  /** The relaxation twins' single-task input: edge rows (0, ea, ec,
+    * edge value) and source rows (1, src, src, 0) in ONE partition. */
+  private def seeded(ew: DataFrame, srcs: DataFrame,
+      edgeVal: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] = {
     val s = ew.sparkSession
     import s.implicits._
-    val out = ew.select(lit(0L).as("t"), col("ea").cast("long").as("u"),
+    ew.select(lit(0L).as("t"), col("ea").cast("long").as("u"),
         col("ec").cast("long").as("v"), edgeVal.cast("long").as("x"))
       .unionAll(srcs.select(lit(1L).as("t"),
         col("src").cast("long").as("u"), col("src").cast("long").as("v"),
         lit(0L).as("x")))
       .as[(Long, Long, Long, Long)]
       .repartition(1)
+  }
+
+  /** Splits a [[seeded]] partition into its (ea, ec, value) edges and
+    * its sources in first-seen order. */
+  private def edgesAndSources(it: Iterator[(Long, Long, Long, Long)])
+      : (Array[(Long, Long, Long)],
+        scala.collection.mutable.LinkedHashSet[Long]) = {
+    val rows = it.toArray
+    val edges = rows.collect { case (0L, a, c, v) => (a, c, v) }
+    val srcIds = scala.collection.mutable.LinkedHashSet.empty[Long]
+    rows.foreach { case (t, v, _, _) => if (t == 1L) srcIds += v }
+    (edges, srcIds)
+  }
+
+  /** Single-task twin of the H-round relaxations: per round, every
+    * (src, reached-node) value relaxes across every out-edge using the
+    * PREVIOUS round's table (exactly the dataframe loop's
+    * relax-then-union-then-reaggregate semantics); `combine` folds the
+    * path value (+ for min-sum costs, least for maximin widths) and
+    * `pick` keeps the per-(src, node) optimum. Long-exact, so rows are
+    * bit-identical to the distributed loop. */
+  private def relaxLocal(ew: DataFrame, srcs: DataFrame, rounds: Int,
+      edgeVal: org.apache.spark.sql.Column, selfVal: Long,
+      combine: (Long, Long) => Long, pick: (Long, Long) => Long)
+      : DataFrame = {
+    val s = ew.sparkSession
+    import s.implicits._
+    val out = seeded(ew, srcs, edgeVal)
       .mapPartitions { it =>
-        val rows = it.toArray
-        val edges = rows.collect { case (0L, a, c, v) => (a, c, v) }
-        val srcIds = scala.collection.mutable.LinkedHashSet.empty[Long]
-        rows.foreach { case (t, v, _, _) => if (t == 1L) srcIds += v }
+        val (edges, srcIds) = edgesAndSources(it)
         val g = new LocalCsr(edges, srcIds)
         srcIds.iterator.flatMap { src =>
           var cur = new Array[Long](g.n)
@@ -354,8 +367,8 @@ object SupplierGraph {
     * width is its minimum edge support; b(v) = max over ≤H-edge paths.
     * Self-width is the sentinel 10^9 (an "infinite" pipe). */
   def relaxMaxMin(ewSupport: DataFrame, srcs: DataFrame,
-      rounds: Int, cap: Long = localEdgeCap): DataFrame =
-    if (ewSupport.count() <= cap)
+      rounds: Int): DataFrame =
+    if (SizeGate.local(ewSupport, SizeGate.EdgeRows))
       relaxLocal(ewSupport, srcs, rounds, col("w"), 1000000000L,
         math.min, math.max)
         .withColumnRenamed("wd", "bw")
@@ -378,23 +391,14 @@ object SupplierGraph {
     * independent min over the same ≤H-edge path set). Size-gated like
     * the other fixpoints; rows (src, node, wd, d) are bit-identical to
     * the per-round dataframe loop. */
-  def relaxDual(ew: DataFrame, srcs: DataFrame, rounds: Int,
-      cap: Long = localEdgeCap): DataFrame =
-    if (ew.count() <= cap) {
+  def relaxDual(ew: DataFrame, srcs: DataFrame, rounds: Int)
+      : DataFrame =
+    if (SizeGate.local(ew, SizeGate.EdgeRows)) {
       val s = ew.sparkSession
       import s.implicits._
-      val out = ew.select(lit(0L).as("t"), col("ea").cast("long").as("u"),
-          col("ec").cast("long").as("v"), col("cost").cast("long").as("x"))
-        .unionAll(srcs.select(lit(1L).as("t"),
-          col("src").cast("long").as("u"), col("src").cast("long").as("v"),
-          lit(0L).as("x")))
-        .as[(Long, Long, Long, Long)]
-        .repartition(1)
+      val out = seeded(ew, srcs, col("cost"))
         .mapPartitions { it =>
-          val rows = it.toArray
-          val edges = rows.collect { case (0L, a, c, v) => (a, c, v) }
-          val srcIds = scala.collection.mutable.LinkedHashSet.empty[Long]
-          rows.foreach { case (t, v, _, _) => if (t == 1L) srcIds += v }
+          val (edges, srcIds) = edgesAndSources(it)
           val g = new LocalCsr(edges, srcIds)
           srcIds.iterator.flatMap { src =>
             var wdA = new Array[Long](g.n)
@@ -451,23 +455,14 @@ object SupplierGraph {
     * (src, node) pair count, the improved-vs-round-(k−1) count and the
     * label mass — the whole curve from ONE task when the adjacency is
     * under the gate, one bounded action per round above it. */
-  def relaxStats(ew: DataFrame, srcs: DataFrame, rounds: Int,
-      cap: Long = localEdgeCap): DataFrame = {
+  def relaxStats(ew: DataFrame, srcs: DataFrame, rounds: Int)
+      : DataFrame = {
     val s = ew.sparkSession
     import s.implicits._
-    if (ew.count() <= cap) {
-      val out = ew.select(lit(0L).as("t"), col("ea").cast("long").as("u"),
-          col("ec").cast("long").as("v"), col("cost").cast("long").as("x"))
-        .unionAll(srcs.select(lit(1L).as("t"),
-          col("src").cast("long").as("u"), col("src").cast("long").as("v"),
-          lit(0L).as("x")))
-        .as[(Long, Long, Long, Long)]
-        .repartition(1)
+    if (SizeGate.local(ew, SizeGate.EdgeRows)) {
+      val out = seeded(ew, srcs, col("cost"))
         .mapPartitions { it =>
-          val rows = it.toArray
-          val edges = rows.collect { case (0L, a, c, v) => (a, c, v) }
-          val srcIds = scala.collection.mutable.LinkedHashSet.empty[Long]
-          rows.foreach { case (t, v, _, _) => if (t == 1L) srcIds += v }
+          val (edges, srcIds) = edgesAndSources(it)
           // one shared table over all sources: key (src, node) — the
           // per-round stats aggregate over the union of sources exactly
           // like the dataframe loop's (budget × node) frame
@@ -554,17 +549,16 @@ object SupplierGraph {
     * recurrence r_k(v) = base + Σ_{(u,v)∈E} (17·((w·r_{k−1}(u)) div
     * wout(u))) div 20 with r_0 = scale div n and base = (3·scale) div
     * (20·n) — the q495 observability face. Size-gated like the other
-    * fixpoint twins: under `cap` (default [[localEdgeCap]]) the whole
+    * fixpoint twins: under [[graft.SizeGate.EdgeRows]] the whole
     * curve folds inside ONE executor task with identical long
     * arithmetic (all operands nonnegative, so JVM `/` ≡ Spark `div` ≡
-    * DuckDB `//`); above the cap the per-round dataframe loop runs
-    * unchanged. The cap is a parameter so the spec can force either
-    * branch and assert bit-identical curves. */
-  def pagerankResiduals(ed: DataFrame, iters: Int, scale: Long,
-      cap: Long = localEdgeCap): DataFrame = {
+    * DuckDB `//`); above the bound the per-round dataframe loop runs
+    * unchanged. */
+  def pagerankResiduals(ed: DataFrame, iters: Int, scale: Long)
+      : DataFrame = {
     val s = ed.sparkSession
     import s.implicits._
-    if (ed.count() <= cap) {
+    if (SizeGate.local(ed, SizeGate.EdgeRows)) {
       val out = ed
         .select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"))

@@ -59,8 +59,7 @@ object TopologyQueries {
         |""".stripMargin)) { (s, dir) =>
       val e0 = SupplierGraph.edges(s, dir).select(col("a"), col("c"))
         .materialize(truncate = true)
-      graft.operators.Triangles.trussTrajectory(e0, trussRounds,
-          cap = SupplierGraph.localEdgeCap)
+      graft.operators.Triangles.trussTrajectory(e0, trussRounds)
         .orderBy(col("round"))
     }
   }

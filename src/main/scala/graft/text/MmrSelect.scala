@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.SizeGate
 
 /** Maximal-marginal-relevance selection (Carbonell & Goldstein 1998) —
   * pick k documents that are individually high-quality AND mutually
@@ -12,22 +13,23 @@ import org.apache.spark.sql.functions._
   *
   * Division of labor at 100 TB: the DISTRIBUTED part is the prefilter
   * (GroupedTopK / ordered limit reduces the corpus to an N-candidate
-  * pool); the greedy loop is inherently sequential (step t depends on
-  * the t−1 choices) and runs over the prefiltered pool on the driver —
-  * a deliberate, documented collect of N candidate rows (the M3
-  * scalar-collect rule stretched to a bounded pool, enforced by a hard
-  * cap). Everything is integer arithmetic: quality is a caller-scaled
-  * permille, similarity is exact Jaccard permille (integer division),
-  * score = λ100·q − (100−λ100)·maxSim, ties break by id — so an
-  * oracle replays the selection verbatim.
+  * pool); the greedy loop is inherently sequential (step t depends on the
+  * t−1 choices) and runs over the prefiltered pool on the driver — a
+  * deliberate, documented collect of N candidate rows (the M3
+  * scalar-collect rule stretched to a bounded pool: a pool above
+  * [[graft.SizeGate.PoolRows]] runs the k-round distributed greedy
+  * instead, with the same rows). Everything is integer arithmetic:
+  * quality is a caller-scaled permille, similarity is exact Jaccard
+  * permille (integer division), score = λ100·q − (100−λ100)·maxSim, ties
+  * break by id — so an oracle replays the selection verbatim.
   */
 object MmrSelect {
 
   /** Both selectors key their driver-side state by the LONG id, so a
     * null id (or a duplicate after the long cast) would silently merge
     * or drop pool rows — fail fast instead. One tiny aggregate over
-    * the already-bounded pool. */
-  private def requireCleanIds(df: DataFrame, idCol: String): Unit = {
+    * the already-bounded pool, whose row count sizes the pool gate. */
+  private def requireCleanIds(df: DataFrame, idCol: String): Long = {
     val r = df.select(col(idCol).cast("long").as("__id"))
       .agg(count(lit(1)).as("n"), count(col("__id")).as("nn"),
         countDistinct(col("__id")).as("nd"))
@@ -38,6 +40,7 @@ object MmrSelect {
     require(r.getLong(1) == r.getLong(2),
       s"$idCol contains duplicates after the long cast — " +
         "driver-side selection state would drop rows silently")
+    r.getLong(0)
   }
 
   /** Greedy-select `k` rows from a PREFILTERED candidate pool.
@@ -45,7 +48,8 @@ object MmrSelect {
     * setCol (array of DISTINCT elements for the Jaccard metric).
     * Output: (idCol, sel_rank, quality, max_sim_permille) — the score
     * components at selection time (first pick has max_sim 0).
-    * Hard-capped at 100k candidates: beyond that, prefilter harder. */
+    * A pool above [[graft.SizeGate.PoolRows]] candidates runs
+    * [[selectDistributed]] (same rows). */
   def select(
       df: DataFrame,
       idCol: String,
@@ -55,46 +59,45 @@ object MmrSelect {
       lam100: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(lam100 >= 0 && lam100 <= 100, s"lam100 in [0,100]: $lam100")
-    requireCleanIds(df, idCol)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pool = df
-      .select(col(idCol).cast("long"), col(qualityCol).cast("long"),
-        col(setCol))
-      .as[(Long, Long, Seq[String])]
-      .collect()
-    require(pool.length <= 100000,
-      s"MMR pool has ${pool.length} candidates — prefilter below 100k " +
-        "or use selectDistributed (no pool ceiling)")
-    val sets = pool.map { case (id, _, s) => id -> s.toSet }.toMap
-    def simPermille(a: Set[String], b: Set[String]): Long = {
-      val inter = (a & b).size.toLong
-      val uni = a.size + b.size - inter
-      if (uni == 0) 0L else inter * 1000L / uni
-    }
-    val remaining = scala.collection.mutable.Map(
-      pool.map(p => p._1 -> p._2): _*)
-    val selected = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, Long, Long, Long)] // (id, rank, q, maxSim)
-    val maxSim = scala.collection.mutable.Map(
-      pool.map(p => p._1 -> 0L): _*)
-    var rank = 1
-    while (rank <= k && remaining.nonEmpty) {
-      val pick = remaining.keys.minBy { id =>
-        val score = lam100 * remaining(id) - (100L - lam100) * maxSim(id)
-        (-score, id) // max score, then smallest id
+    val n = requireCleanIds(df, idCol)
+    if (SizeGate.local(df.sparkSession, SizeGate.PoolRows)(n)) {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val pool = df
+        .select(col(idCol).cast("long"), col(qualityCol).cast("long"),
+          col(setCol))
+        .as[(Long, Long, Seq[String])]
+        .collect()
+      val sets = pool.map { case (id, _, s) => id -> s.toSet }.toMap
+      def simPermille(a: Set[String], b: Set[String]): Long = {
+        val inter = (a & b).size.toLong
+        val uni = a.size + b.size - inter
+        if (uni == 0) 0L else inter * 1000L / uni
       }
-      selected += ((pick, rank.toLong, remaining(pick), maxSim(pick)))
-      remaining.remove(pick)
-      val ps = sets(pick)
-      remaining.keys.foreach { id =>
-        val s = simPermille(sets(id), ps)
-        if (s > maxSim(id)) maxSim(id) = s
+      val remaining = scala.collection.mutable.Map(
+        pool.map(p => p._1 -> p._2): _*)
+      val selected = scala.collection.mutable.ArrayBuffer.empty[
+        (Long, Long, Long, Long)] // (id, rank, q, maxSim)
+      val maxSim = scala.collection.mutable.Map(
+        pool.map(p => p._1 -> 0L): _*)
+      var rank = 1
+      while (rank <= k && remaining.nonEmpty) {
+        val pick = remaining.keys.minBy { id =>
+          val score = lam100 * remaining(id) - (100L - lam100) * maxSim(id)
+          (-score, id) // max score, then smallest id
+        }
+        selected += ((pick, rank.toLong, remaining(pick), maxSim(pick)))
+        remaining.remove(pick)
+        val ps = sets(pick)
+        remaining.keys.foreach { id =>
+          val s = simPermille(sets(id), ps)
+          if (s > maxSim(id)) maxSim(id) = s
+        }
+        rank += 1
       }
-      rank += 1
-    }
-    selected.toSeq
-      .toDF(idCol, "sel_rank", "quality", "max_sim_permille")
+      selected.toSeq
+        .toDF(idCol, "sel_rank", "quality", "max_sim_permille")
+    } else selectDistributed(df, idCol, qualityCol, setCol, k, lam100)
   }
 
   /** Greedy maximum-coverage selection — [[select]]'s submodular
@@ -103,8 +106,9 @@ object MmrSelect {
     * set-cover greedy. The "which k documents teach the tokenizer the
     * most vocabulary" / "which k tests cover the most branches"
     * selector. Same bounded-pool contract as MMR: distributed
-    * prefilter first, then a deliberate driver loop over ≤100k
-    * candidates (step t depends on the union of steps 1..t−1 — not a
+    * prefilter first, then a deliberate driver loop over at most
+    * [[graft.SizeGate.PoolRows]] candidates, [[coverSelectDistributed]]
+    * above that (step t depends on the union of steps 1..t−1 — not a
     * parallel shape). Output: (idCol, sel_rank, gain, covered_total),
     * all integers, ties by id — an oracle replays every pick. */
   def coverSelect(
@@ -113,34 +117,33 @@ object MmrSelect {
       setCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    requireCleanIds(df, idCol)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pool = df
-      .select(col(idCol).cast("long"), col(setCol))
-      .as[(Long, Seq[String])]
-      .collect()
-    require(pool.length <= 100000,
-      s"cover pool has ${pool.length} candidates — prefilter below 100k " +
-        "or use coverSelectDistributed (no pool ceiling)")
-    val sets = pool.map { case (id, s) => id -> s.toSet }.toMap
-    val remaining =
-      scala.collection.mutable.Set(pool.map(_._1): _*)
-    var covered = Set.empty[String]
-    val selected = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long, Long)] // (id, rank, gain, total)
-    var rank = 1
-    while (rank <= k && remaining.nonEmpty) {
-      val pick = remaining.minBy { id =>
-        (-(sets(id) -- covered).size.toLong, id) // max gain, then min id
+    val n = requireCleanIds(df, idCol)
+    if (SizeGate.local(df.sparkSession, SizeGate.PoolRows)(n)) {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val pool = df
+        .select(col(idCol).cast("long"), col(setCol))
+        .as[(Long, Seq[String])]
+        .collect()
+      val sets = pool.map { case (id, s) => id -> s.toSet }.toMap
+      val remaining =
+        scala.collection.mutable.Set(pool.map(_._1): _*)
+      var covered = Set.empty[String]
+      val selected = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long, Long)] // (id, rank, gain, total)
+      var rank = 1
+      while (rank <= k && remaining.nonEmpty) {
+        val pick = remaining.minBy { id =>
+          (-(sets(id) -- covered).size.toLong, id) // max gain, then min id
+        }
+        val gain = (sets(pick) -- covered).size.toLong
+        covered = covered ++ sets(pick)
+        selected += ((pick, rank.toLong, gain, covered.size.toLong))
+        remaining.remove(pick)
+        rank += 1
       }
-      val gain = (sets(pick) -- covered).size.toLong
-      covered = covered ++ sets(pick)
-      selected += ((pick, rank.toLong, gain, covered.size.toLong))
-      remaining.remove(pick)
-      rank += 1
-    }
-    selected.toSeq.toDF(idCol, "sel_rank", "gain", "covered_total")
+      selected.toSeq.toDF(idCol, "sel_rank", "gain", "covered_total")
+    } else coverSelectDistributed(df, idCol, setCol, k)
   }
 
   /** [[select]] with NO pool ceiling — the k-round DISTRIBUTED greedy:
@@ -156,16 +159,13 @@ object MmrSelect {
     * materialized once and the per-round state rewrite is materialized
     * to keep lineage constant-depth. Bit-identical to [[select]]
     * (same integer arithmetic, same id tie-breaks — spec-pinned). */
-  def selectDistributed(
+  private[graft] def selectDistributed(
       df: DataFrame,
       idCol: String,
       qualityCol: String,
       setCol: String,
       k: Int,
       lam100: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    require(lam100 >= 0 && lam100 <= 100, s"lam100 in [0,100]: $lam100")
-    requireCleanIds(df, idCol)
     val spark = df.sparkSession
     import graft.Materialize.MatOps
     var state = df
@@ -221,13 +221,11 @@ object MmrSelect {
     * Driver state is the covered-element set — bounded by what the k
     * SELECTED documents contain, not by the pool. Same
     * (1−1/e)-greedy, same tie-breaks, spec-pinned ≡ [[coverSelect]]. */
-  def coverSelectDistributed(
+  private[graft] def coverSelectDistributed(
       df: DataFrame,
       idCol: String,
       setCol: String,
       k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    requireCleanIds(df, idCol)
     val spark = df.sparkSession
     import spark.implicits._
     import graft.Materialize.MatOps

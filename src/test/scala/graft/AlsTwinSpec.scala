@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.FactorQueries
 
 /** The size-gated single-task twin behind q576's rank-1 ALS
-  * (`alsRank1`): forcing cap = 0 runs the original broadcast-join
+  * (`alsRank1`): the distributed gate mode runs the original broadcast-join
   * round loop on the same cell frame, so both branches are asserted
   * BIT-identical after every update — including a sparse matrix
   * (missing cells), a zero-revenue cell, and a single-brand column. */
@@ -18,11 +18,14 @@ class AlsTwinSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame, k: String) =
       df.orderBy(k).collect().toSeq
         .map(_.toSeq.map { case i: Int => i.toLong; case x => x })
-    val (u1, v1) = FactorQueries.alsRank1(r, iters)
-    val (u2, v2) = FactorQueries.alsRank1(r, iters, cap = 0L)
-    assert(rows(u1, "br") == rows(u2, "br"))
-    assert(rows(v1, "na") == rows(v2, "na"))
-    (rows(u1, "br"), rows(v1, "na"))
+    def uv = {
+      val (u, v) = FactorQueries.alsRank1(r, iters)
+      (rows(u, "br"), rows(v, "na"))
+    }
+    val ((u1, v1), (u2, v2)) = SizeGateModes.both(uv)
+    assert(u1 == u2)
+    assert(v1 == v2)
+    (u1, v1)
   }
 
   test("alsRank1: single-task twin ≡ broadcast-join rounds") {

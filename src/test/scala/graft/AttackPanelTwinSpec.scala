@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.DependenceQueries
 
 /** The size-gated single-task twin behind q562's attack-robustness
-  * panel (`attackPanel`): forcing cap = 0 runs the original per-level
+  * panel (`attackPanel`): the distributed gate mode runs the original per-level
   * join + alternating-star component plan on the same frames, so both
   * branches are asserted BIT-identical — including isolated-survivor
   * singletons, a level that removes every node, and the level-0
@@ -30,7 +30,8 @@ class AttackPanelTwinSpec extends AnyFunSuite {
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("d").desc, col("node"))))
     val levels = Seq(0, 200, 500, 1000)
-    assert(rows(DependenceQueries.attackPanel(e, dr, nn0, levels)) ==
-      rows(DependenceQueries.attackPanel(e, dr, nn0, levels, cap = 0L)))
+    val (local, dist) = SizeGateModes.both(
+      rows(DependenceQueries.attackPanel(e, dr, nn0, levels)))
+    assert(local == dist)
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.CompoundRiskQueries
 
 /** The size-gated single-task convolution twin behind the
-  * compound-risk wave's mix pmf (q976–q980 `mixOf`): forcing cap = 0
+  * compound-risk wave's mix pmf (q976–q980 `mixOf`): the distributed gate mode
   * runs the original distributed plan (9 crossJoin+groupBy
   * re-quantized convolution rounds + the fq mixture) on the same
   * frames, so both branches are asserted BIT-identical — including
@@ -25,14 +25,16 @@ class CompoundRiskTwinSpec extends AnyFunSuite {
       .toDF("v", "c")
     // fq skips k = 2 entirely: cv2's support must not leak into mix
     val fq = Seq((1L, 5L), (3L, 2L), (10L, 1L)).toDF("k", "g")
-    assert(rows(CompoundRiskQueries.mixOf(sev, fq)) ==
-      rows(CompoundRiskQueries.mixOf(sev, fq, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(CompoundRiskQueries.mixOf(sev, fq)))
+    assert(local == dist)
   }
 
   test("mixOf twin on a single severity value and k = 1 only") {
     val sev = Seq((7L, 42L)).toDF("v", "c")
     val fq = Seq((1L, 42L)).toDF("k", "g")
-    assert(rows(CompoundRiskQueries.mixOf(sev, fq)) ==
-      rows(CompoundRiskQueries.mixOf(sev, fq, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(CompoundRiskQueries.mixOf(sev, fq)))
+    assert(local == dist)
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.queries.{RobustScaleQueries, RobustTrendQueries}
 
 /** The size-gated single-task day² twins behind q846/q847/q848 (Sn,
-  * Qn, Hodges-Lehmann) and q647 (Siegel repeated medians): forcing
-  * cap = 0 runs the original relational all-pairs plan on the same
+  * Qn, Hodges-Lehmann) and q647 (Siegel repeated medians): the distributed
+  * gate mode runs the original relational all-pairs plan on the same
   * series, so both branches are asserted BIT-identical — including
   * tie values (duplicate x) and irregular day spacing. */
 class DayPairTwinSpec extends AnyFunSuite {
@@ -25,18 +25,21 @@ class DayPairTwinSpec extends AnyFunSuite {
     df.collect().toSeq.map(_.toSeq)
 
   test("snFrame: single-task twin ≡ relational plan") {
-    assert(rows(RobustScaleQueries.snFrame(day)) ==
-      rows(RobustScaleQueries.snFrame(day, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(RobustScaleQueries.snFrame(day)))
+    assert(local == dist)
   }
 
   test("qnFrame: single-task twin ≡ relational plan") {
-    assert(rows(RobustScaleQueries.qnFrame(day)) ==
-      rows(RobustScaleQueries.qnFrame(day, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(RobustScaleQueries.qnFrame(day)))
+    assert(local == dist)
   }
 
   test("hlFrame: single-task twin ≡ relational plan") {
-    val local = rows(RobustScaleQueries.hlFrame(day))
-    assert(local == rows(RobustScaleQueries.hlFrame(day, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(RobustScaleQueries.hlFrame(day)))
+    assert(local == dist)
     // 7 days -> 28 Walsh pairs; the pseudomedian halves a pair sum
     assert(local == Seq(Seq(28L, 500L)))
   }
@@ -47,7 +50,8 @@ class DayPairTwinSpec extends AnyFunSuite {
       (106L, 900L), (110L, 12345L), (111L, -777L))
       .toDF("day", "netl")
       .select(col("day"), col("netl").cast("decimal(38,0)").as("net"))
-    assert(rows(RobustTrendQueries.siegelFrame(d)) ==
-      rows(RobustTrendQueries.siegelFrame(d, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(RobustTrendQueries.siegelFrame(d)))
+    assert(local == dist)
   }
 }

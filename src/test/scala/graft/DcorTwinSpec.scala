@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.DistDependenceQueries
 
 /** The size-gated single-task twin behind q891's distance-correlation
-  * V-statistics (`dcorStats`): forcing cap = 0 runs the original
+  * V-statistics (`dcorStats`): the distributed gate mode runs the original
   * n²-crossJoin + decimal aggregate plan on the same panel, so both
   * branches are asserted BIT-identical — including negative values
   * (abs diffs), duplicate (x, y) points, a constant column (all-zero
@@ -22,19 +22,22 @@ class DcorTwinSpec extends AnyFunSuite {
   test("dcorStats: single-task twin ≡ crossJoin V-stat plan") {
     val d = day(Seq((1, 100L, 3L), (2, -40L, 9L), (3, 100L, 3L),
       (4, 0L, 27L), (5, 7L, 1L)))
-    assert(rows(DistDependenceQueries.dcorStats(d)) ==
-      rows(DistDependenceQueries.dcorStats(d, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(DistDependenceQueries.dcorStats(d)))
+    assert(local == dist)
   }
 
   test("dcorStats twin on a constant x column") {
     val d = day(Seq((1, 5L, 2L), (2, 5L, 8L), (3, 5L, 1L)))
-    assert(rows(DistDependenceQueries.dcorStats(d)) ==
-      rows(DistDependenceQueries.dcorStats(d, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(DistDependenceQueries.dcorStats(d)))
+    assert(local == dist)
   }
 
   test("dcorStats twin on the empty panel") {
     val d = day(Seq.empty)
-    assert(rows(DistDependenceQueries.dcorStats(d)) ==
-      rows(DistDependenceQueries.dcorStats(d, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(DistDependenceQueries.dcorStats(d)))
+    assert(local == dist)
   }
 }

@@ -6,10 +6,10 @@ import graft.queries.SupplierGraph
 import graft.operators.Triangles
 
 /** The size-gated single-task fixpoint twins added for q495 (PageRank
-  * residual curve) and q591 (truss-peel trajectory): forcing the cap
-  * to 0 runs the distributed per-round loop on the same tiny graph,
-  * so both branches are asserted BIT-identical — the exactness
-  * contract the size gate relies on. */
+  * residual curve) and q591 (truss-peel trajectory): the
+  * `distributed` size-gate mode runs the distributed per-round loop on
+  * the same tiny graph, so both branches are asserted BIT-identical —
+  * the exactness contract the size gate relies on. */
 class GraphFixpointTwinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -25,14 +25,10 @@ class GraphFixpointTwinSpec extends AnyFunSuite {
   }
 
   test("pagerankResiduals: single-task twin ≡ distributed loop") {
-    val local = SupplierGraph
+    val (local, dist) = SizeGateModes.both(SupplierGraph
       .pagerankResiduals(ed, iters = 5, scale = 1000000000L)
       .orderBy("iter").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val dist = SupplierGraph
-      .pagerankResiduals(ed, iters = 5, scale = 1000000000L, cap = 0L)
-      .orderBy("iter").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq)
     assert(local == dist)
     assert(local.map(_._1) == (1L to 5L).toSeq)
     // round 1 moves mass off the uniform start — a zero residual here
@@ -45,12 +41,10 @@ class GraphFixpointTwinSpec extends AnyFunSuite {
     // s >= 2 peel) plus a pendant edge (support 0, peeled round 1)
     val e0 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L)).toDF("a", "c")
-    val local = Triangles.trussTrajectory(e0, rounds = 4)
-      .orderBy("round").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val dist = Triangles.trussTrajectory(e0, rounds = 4, cap = 0L)
-      .orderBy("round").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val (local, dist) = SizeGateModes.both(
+      Triangles.trussTrajectory(e0, rounds = 4)
+        .orderBy("round").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(local == dist)
     assert(local.head == ((0L, 7L, 1L)))
     assert(local.last == ((4L, 6L, 1L)))
@@ -74,33 +68,37 @@ class GraphFixpointTwinSpec extends AnyFunSuite {
 
   test("bfsFrom: single-task twin ≡ distributed loop (ADVICE r11 #1)") {
     val ed = ewAdj.select(col("ea"), col("ec"))
-    assert(rows(SupplierGraph.bfsFrom(ed, srcs, 3)) ==
-      rows(SupplierGraph.bfsFrom(ed, srcs, 3, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(SupplierGraph.bfsFrom(ed, srcs, 3)))
+    assert(local == dist)
     // assertExhausted path agrees too (diameter ≤ 3 per component)
-    assert(rows(SupplierGraph.bfsFrom(ed, srcs, 3,
-      assertExhausted = true)) ==
-      rows(SupplierGraph.bfsFrom(ed, srcs, 3, assertExhausted = true,
-        cap = 0L)))
+    val (localEx, distEx) = SizeGateModes.both(
+      rows(SupplierGraph.bfsFrom(ed, srcs, 3, assertExhausted = true)))
+    assert(localEx == distEx)
   }
 
   test("relaxMinSum: single-task twin ≡ distributed loop") {
-    assert(rows(SupplierGraph.relaxMinSum(ewAdj, srcs, 4)) ==
-      rows(SupplierGraph.relaxMinSum(ewAdj, srcs, 4, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(SupplierGraph.relaxMinSum(ewAdj, srcs, 4)))
+    assert(local == dist)
   }
 
   test("relaxMaxMin: single-task twin ≡ distributed loop") {
-    assert(rows(SupplierGraph.relaxMaxMin(ewAdj, srcs, 4)) ==
-      rows(SupplierGraph.relaxMaxMin(ewAdj, srcs, 4, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(SupplierGraph.relaxMaxMin(ewAdj, srcs, 4)))
+    assert(local == dist)
   }
 
   test("relaxDual: single-task twin ≡ distributed loop") {
-    assert(rows(SupplierGraph.relaxDual(ewAdj, srcs, 4)) ==
-      rows(SupplierGraph.relaxDual(ewAdj, srcs, 4, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(SupplierGraph.relaxDual(ewAdj, srcs, 4)))
+    assert(local == dist)
   }
 
   test("relaxStats: single-task twin ≡ distributed loop") {
-    assert(rows(SupplierGraph.relaxStats(ewAdj, srcs, 4)) ==
-      rows(SupplierGraph.relaxStats(ewAdj, srcs, 4, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(SupplierGraph.relaxStats(ewAdj, srcs, 4)))
+    assert(local == dist)
   }
 
   test("trussTrajectory: an unconverged peel reports converged = 0") {
@@ -108,11 +106,12 @@ class GraphFixpointTwinSpec extends AnyFunSuite {
     // then the empty set is a fixpoint; with rounds = 1 the last two
     // counts differ (4 -> 0), so converged must be 0 in BOTH branches
     val e0 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "c")
-    for (cap <- Seq(1L << 20, 0L)) {
-      val t = Triangles.trussTrajectory(e0, rounds = 1, cap = cap)
-        .orderBy("round").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(t == Seq((0L, 4L, 0L), (1L, 0L, 0L)))
+    for (mode <- SizeGateModes.modes) {
+      val t = SizeGateModes.under(mode)(
+        Triangles.trussTrajectory(e0, rounds = 1)
+          .orderBy("round").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+      assert(t == Seq((0L, 4L, 0L), (1L, 0L, 0L)), mode)
     }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.MatrixProfileQueries
 
 /** The size-gated single-task matrix-profile twins behind q956–q960:
-  * forcing cap = 0 runs the original lag-explode + running-sum-window
+  * the distributed gate mode runs the original lag-explode + running-sum-window
   * relational plan on the same series, so both branches are asserted
   * BIT-identical — including distance ties (the periodic series below
   * makes many window pairs equidistant, exercising the (dist, s) and
@@ -31,20 +31,23 @@ class MatrixProfileTwinSpec extends AnyFunSuite {
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   test("profileFrame: single-task twin ≡ relational plan") {
-    assert(rows(MatrixProfileQueries.profileFrame(sq, tMax)) ==
-      rows(MatrixProfileQueries.profileFrame(sq, tMax, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(MatrixProfileQueries.profileFrame(sq, tMax)))
+    assert(local == dist)
   }
 
   test("motifFrame: single-task twin ≡ relational plan") {
-    assert(rows(MatrixProfileQueries.motifFrame(sq, tMax)) ==
-      rows(MatrixProfileQueries.motifFrame(sq, tMax, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(MatrixProfileQueries.motifFrame(sq, tMax)))
+    assert(local == dist)
   }
 
   test("lagPairs: single-task twin ≡ relational plan") {
     // 19 covers most anchors, 7 the exclusion-zone minimum; 30 > tMax
     // exercises the empty-lag guard
     val lags = Seq(7, 19, 30)
-    assert(rows(MatrixProfileQueries.lagPairs(sq, tMax, lags)) ==
-      rows(MatrixProfileQueries.lagPairs(sq, tMax, lags, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(MatrixProfileQueries.lagPairs(sq, tMax, lags)))
+    assert(local == dist)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.MethodCompQueries
 
 /** The size-gated single-task Passing–Bablok twins behind q1071–q1074
-  * (pbFitOf) and q1073 (tauAgg): forcing cap = 0 runs the original
+  * (pbFitOf) and q1073 (tauAgg): the distributed gate mode runs the original
   * day²-pair relational plan (fan-out + bucket-parallel rank) on the
   * same frame, so both branches are asserted BIT-identical — the
   * fixture has duplicate x (xd = 0 exclusions), yd = −xd exclusions
@@ -27,18 +27,20 @@ class MethodCompTwinSpec extends AnyFunSuite {
     df.collect().toSeq.map(_.toSeq)
 
   test("pbFitOf: single-task twin ≡ relational plan") {
-    assert(rows(MethodCompQueries.pbFitOf(sq)) ==
-      rows(MethodCompQueries.pbFitOf(sq, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(MethodCompQueries.pbFitOf(sq)))
+    assert(local == dist)
   }
 
   test("pbFitOf: even slope count hits the two-rank average") {
     val even = sq.where(col("t") =!= 4)
-    assert(rows(MethodCompQueries.pbFitOf(even)) ==
-      rows(MethodCompQueries.pbFitOf(even, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(MethodCompQueries.pbFitOf(even)))
+    assert(local == dist)
   }
 
   test("tauAgg: single-task twin ≡ relational plan") {
-    assert(rows(MethodCompQueries.tauAgg(sq)) ==
-      rows(MethodCompQueries.tauAgg(sq, cap = 0L)))
+    val (local, dist) = SizeGateModes.both(rows(MethodCompQueries.tauAgg(sq)))
+    assert(local == dist)
   }
 }

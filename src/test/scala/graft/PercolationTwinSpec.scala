@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{OpsQueries, PercolationQueries}
 
 /** The size-gated single-task twins behind the percolation wave
-  * (q1181–q1184 `summarize`) and q416 (`hitsAuth2`): forcing cap = 0
+  * (q1181–q1184 `summarize`) and q416 (`hitsAuth2`): the distributed gate mode
   * runs the original distributed plan (scenario-keyed min-label
   * propagation / four half-step joins) on the same frame, so both
   * branches are asserted BIT-identical. The fixture has a multi-
@@ -27,8 +27,9 @@ class PercolationTwinSpec extends AnyFunSuite {
     df.collect().toSeq.map(_.toSeq)
 
   test("summarize: single-task twin ≡ distributed min-label plan") {
-    assert(rows(PercolationQueries.summarize(ke)) ==
-      rows(PercolationQueries.summarize(ke, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(PercolationQueries.summarize(ke)))
+    assert(local == dist)
   }
 
   test("hitsAuth2: single-task twin ≡ four half-step joins") {
@@ -39,7 +40,7 @@ class PercolationTwinSpec extends AnyFunSuite {
       .toDF("cust", "supp", "w")
     def sorted(df: org.apache.spark.sql.DataFrame) =
       rows(df.orderBy("supp"))
-    assert(sorted(OpsQueries.hitsAuth2(e)) ==
-      sorted(OpsQueries.hitsAuth2(e, cap = 0L)))
+    val (local, dist) = SizeGateModes.both(sorted(OpsQueries.hitsAuth2(e)))
+    assert(local == dist)
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ReplayQueries
 
 /** The size-gated single-task twin behind q505's permutation fan-out
-  * (`permSums`): forcing cap = 0 runs the original crossJoin +
+  * (`permSums`): the distributed gate mode runs the original crossJoin +
   * partitioned row_number window on the same frame, so both branches
   * are asserted BIT-identical — including hash-order ties broken by
   * id and the all-one-group / empty-group edges. */
@@ -20,14 +20,16 @@ class PermutationTwinSpec extends AnyFunSuite {
       (1L, 1L, 5L), (2L, 0L, 3L), (3L, 1L, 9L), (4L, 0L, 1L),
       (5L, 0L, 7L), (6L, 1L, 2L), (7L, 0L, 4L))
       .toDF("id", "g", "t")
-    assert(rows(ReplayQueries.permSums(ord, 7)) ==
-      rows(ReplayQueries.permSums(ord, 7, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(ReplayQueries.permSums(ord, 7)))
+    assert(local == dist)
   }
 
   test("permSums twin when every row is in group 1 (ps2 empty)") {
     val ord = Seq((10L, 1L, 2L), (11L, 1L, 6L), (12L, 1L, 1L))
       .toDF("id", "g", "t")
-    assert(rows(ReplayQueries.permSums(ord, 3)) ==
-      rows(ReplayQueries.permSums(ord, 3, cap = 0L)))
+    val (local, dist) =
+      SizeGateModes.both(rows(ReplayQueries.permSums(ord, 3)))
+    assert(local == dist)
   }
 }
