@@ -9,15 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a LOCAL twin that ships a bounded dim into one executor task and
   * folds the whole iteration (or all-pairs fan-out) there, and the
   * DISTRIBUTED plan that scales with the data. Every gate asks
-  * [[local]] which branch to take, so the row bounds live here and
-  * nowhere else:
+  * [[local]] (or, for a gate decided on the executors, [[mode]]) which
+  * branch to take, so the row bounds live here and nowhere else:
   *
   *   - [[EdgeRows]] = 2^20 rows: linear folds over an edge or pair
   *     list — the SupplierGraph BFS/relaxation/PageRank fixpoints, the
   *     truss peel, the Bradley–Terry folds, HITS, percolation and
-  *     attack panels, the permutation fan-out. Protects the one task's
-  *     heap (a few arrays of 2^20 longs); at the sandbox SFs these dims
-  *     are ≤ ~10^5 rows and per-round Spark-job overhead dominated.
+  *     attack panels, the permutation fan-out — and the driver
+  *     union-find of `dedup.Dedup`'s near-duplicate clusters, whose
+  *     larger edge lists run the alternating-star rounds. Protects the
+  *     one task's (or the driver's) heap (a few arrays of 2^20 longs);
+  *     at the test scale factors these dims are ≤ ~10^5 rows and per-round
+  *     Spark-job overhead dominated.
   *   - [[PairRows]] = 2^12 rows: quadratic folds over a
   *     calendar-bounded dim (Sn, Qn, HL, Siegel, Passing–Bablok, tau,
   *     the matrix profile, the segment DP, dCor) and the small dims of
@@ -29,21 +32,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - [[PoolRows]] = 100 000 candidates: the driver-side MMR and
   *     max-coverage greedy loops (`text.MmrSelect`), which collect the
   *     pool; a larger pool runs the k-round distributed greedy.
+  *   - [[TopKKeys]] = 2^18 keys: the per-partition heap map of
+  *     `plans.GroupedTopKExec`. This gate is decided per partition at
+  *     run time: a partition with more distinct keys hands its rows to
+  *     Spark's spilling external sorter.
   *
   * Select with `spark.graft.sizegate.mode` (session conf, read at call
   * time like [[Materialize.ModeKey]]):
   *
   *   - `auto` (default): a dim at or under its bound runs the local
   *     twin, a larger one the distributed plan.
-  *   - `distributed`: every gate takes the distributed plan, so the
-  *     oracle gate and the twin specs can check the branch that the
-  *     sandbox scales never reach.
+  *   - `distributed`: every gate takes the distributed plan without
+  *     sizing its input (every GroupedTopK partition goes to the
+  *     sorter), so the oracle gate and the twin specs can check the
+  *     branch that the test scale factors never reach.
   *
   * A mode only selects branches; no value raises a bound. Sites keep
   * their own extra conditions (minimum sizes, value magnitudes, lag
-  * checks) beside the gate. Spines and stored indexes are built in the
-  * mode of the process that first builds them: clear `SpineCache`
-  * before reading the other mode's branch in the same process.
+  * checks) beside the gate. Derived tables (spines, stored indexes) are
+  * keyed by [[mode]] (`sources.SpineCache.key`), so a table built under
+  * one mode is never read under the other.
   */
 object SizeGate {
   val ModeKey = "spark.graft.sizegate.mode"
@@ -52,18 +60,22 @@ object SizeGate {
   val PairRows = 1L << 12
   val HistRows = 1L << 13
   val PoolRows = 100000L
+  val TopKKeys = 1L << 18
+
+  /** The session's mode, `auto` or `distributed`; any other value
+    * throws naming the key. */
+  def mode(s: SparkSession): String = s.conf.get(ModeKey, "auto") match {
+    case m @ ("auto" | "distributed") => m
+    case other =>
+      throw new IllegalArgumentException(
+        s"$ModeKey='$other' — expected one of auto | distributed")
+  }
 
   /** Whether a gate takes its local twin for a dim of `rows` rows
     * under `bound`. `rows` is evaluated only in `auto` mode, so the
     * sizing job runs exactly when the answer depends on it. */
   def local(s: SparkSession, bound: Long)(rows: => Long): Boolean =
-    s.conf.get(ModeKey, "auto") match {
-      case "auto"        => rows <= bound
-      case "distributed" => false
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey='$other' — expected one of auto | distributed")
-    }
+    mode(s) == "auto" && rows <= bound
 
   /** [[local]] sized by `df.count()`. */
   def local(df: DataFrame, bound: Long): Boolean =

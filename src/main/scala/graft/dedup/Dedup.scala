@@ -1,5 +1,6 @@
 package graft.dedup
 import graft.Materialize.MatOps
+import graft.SizeGate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -528,22 +529,21 @@ object Dedup {
     * orders of magnitude smaller than the corpus (only pairs that
     * SURVIVED banding + exact-Jaccard verification), and a distributed
     * fixpoint round costs ~10 stages of fixed scheduling/planning
-    * overhead regardless of size. Below `driverThreshold` edges
-    * (default 2^20 ≈ 16 MB of id pairs — the same order as a broadcast
+    * overhead regardless of size. At or under `SizeGate.EdgeRows`
+    * edges (2^20 ≈ 16 MB of id pairs — the same order as a broadcast
     * side) the transitive closure runs as driver union-find in
     * microseconds off the edge count the loop needs anyway; bigger
-    * graphs take the distributed loop. Labels are identical on both
-    * paths (component-min), so results don't depend on which one ran.
+    * graphs, and every graph under the `distributed` gate mode, take
+    * the distributed loop. Labels are identical on both paths
+    * (component-min), so results don't depend on which one ran.
     */
-  def nearDupClusters(pairs: DataFrame, maxIters: Int = 50,
-      driverThreshold: Long = 1L << 20): DataFrame =
-    alternatingStarCC(pairs, maxIters, driverThreshold)._1
+  def nearDupClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+    alternatingStarCC(pairs, maxIters)._1
 
   /** [[nearDupClusters]] plus the distributed round count (0 on the
     * driver path; exposed for specs/ops). */
   private[graft] def alternatingStarCC(
-      pairs: DataFrame, maxIters: Int,
-      driverThreshold: Long = 1L << 20): (DataFrame, Int) = {
+      pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
     // canonical edge representation throughout: (u, v) with u > v
     val init = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .filter(col("u") =!= col("v"))
@@ -560,7 +560,7 @@ object Dedup {
       org.apache.spark.sql.types.ShortType,
       org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.LongType).contains(idType)
-    if (integral && cnt <= driverThreshold)
+    if (SizeGate.local(init.sparkSession, SizeGate.EdgeRows)(cnt) && integral)
       return (driverUnionFind(init).select(
         col("doc_id").cast(idType).as("doc_id"),
         col("cluster_id").cast(idType).as("cluster_id")), 0)

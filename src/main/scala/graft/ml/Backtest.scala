@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rolling season backtest ≙ reference `jobs/07_backtest_and_export_blend.py:73-104`:
@@ -44,13 +44,6 @@ object Backtest {
         }
       }
     } finally cached.unpersist()
-  }
-
-  /** Metrics as a DataFrame (driver-side rows, mirroring the reference's
-    * driver-side CSV write of backtest_metrics). */
-  def metricsDf(spark: SparkSession, metrics: Seq[FoldMetrics]): DataFrame = {
-    import spark.implicits._
-    metrics.toDF()
   }
 
   /** S6: driver-side CSV of fold metrics ≙ the reference's plain

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.SizeGate
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
@@ -25,8 +26,9 @@ import scala.collection.mutable
   * result set as the window formulation for any total `order`.
   *
   * Memory safety at high key cardinality: the heap map is bounded at
-  * `spark.graft.topk.maxKeysPerPartition` distinct keys (default 2^18).
-  * A partition that exceeds it degrades to Spark's spilling
+  * `graft.SizeGate.TopKKeys` distinct keys (2^18; under the
+  * `distributed` gate mode at none, so every partition takes the sorter
+  * path). A partition that exceeds it degrades to Spark's spilling
   * UnsafeExternalRowSorter — sort by (keys, order), stream the first k
   * rows of each key group with O(1) extra memory — so the operator keeps
   * the heap's O(n log k) fast path where it fits and the window plan's
@@ -58,8 +60,8 @@ case class GroupedTopKExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val kLocal = k
-    val maxKeys = conf.getConfString(
-      "spark.graft.topk.maxKeysPerPartition", (1 << 18).toString).toInt
+    val maxKeys =
+      if (SizeGate.mode(session) == "auto") SizeGate.TopKKeys else 0L
     val childOutput = child.output
     val childSchema = child.schema
     val keysLocal = keys

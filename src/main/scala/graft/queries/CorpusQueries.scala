@@ -134,7 +134,7 @@ object CorpusQueries {
     import graft.sim.ProductQuantize
     import graft.sources.ManifestCommit
     val emb = Tables.embeddings(s, dir)
-    val idxPath = storedIndexPath("ivfpq_inc", dir, "embeddings")
+    val idxPath = storedIndexPath(s, "ivfpq_inc", dir, "embeddings")
     if (ManifestCommit.latest(s"$idxPath/model").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -216,7 +216,7 @@ object CorpusQueries {
       Some(sqlBm25TopK(10, 4, k1, b))) { (s, dir) =>
       import graft.sources.ManifestCommit
       val docs = Tables.documents(s, dir)
-      val idxPath = storedIndexPath("bm25_pinc", dir, "documents")
+      val idxPath = storedIndexPath(s, "bm25_pinc", dir, "documents")
       // NO latest().isEmpty guard: appendBatch is idempotent by
       // (appId, batchId), so calling both ingests unconditionally is
       // self-healing — a crash between them leaves batch 0 committed
@@ -235,14 +235,15 @@ object CorpusQueries {
   }
 
   /** Where the stored index `name` built from source `table` under `dir`
-    * lives: `<java.io.tmpdir>/graft_<name>_v1_<fingerprint>`. v1 is the
-    * layout version (bump on schema change); the fingerprint covers the
-    * source file's path + length + mtime, so regenerated testdata gets a
-    * fresh index path and a stale survivor is never read. */
-  private[queries] def storedIndexPath(name: String, dir: String,
-      table: String): String =
+    * lives: `<java.io.tmpdir>/graft_<name>_v1_<fingerprint>`, its
+    * `SpineCache.key` at version 1 (bump on a layout change). The
+    * fingerprint covers the source file's path + length + mtime and the
+    * size-gate mode, so regenerated testdata gets a fresh index path, a
+    * stale survivor is never read, and each mode builds its own index. */
+  private[graft] def storedIndexPath(s: org.apache.spark.sql.SparkSession,
+      name: String, dir: String, table: String): String =
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${name}_v1_${graft.sources.LocalFs.fingerprint(dir, Seq(table))}")
+      "graft_" + graft.sources.SpineCache.key(s, dir, name, Seq(table), 1))
       .toString
 
   /** DuckDB replay of SketchExprs.hyperplaneSig over `embeddings.embedding`
@@ -1134,7 +1135,7 @@ object CorpusQueries {
     // later runs only read — the stored-index discipline (q137's
     // pattern). The fingerprint covers the source file's length+mtime,
     // so regenerated testdata can never silently feed a stale index.
-    val idxPath = storedIndexPath("ivfpq_idx", dir, "embeddings")
+    val idxPath = storedIndexPath(s, "ivfpq_idx", dir, "embeddings")
     if (ManifestCommit.latest(s"$idxPath/codes").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -1241,7 +1242,7 @@ object CorpusQueries {
       // the fingerprint covers the source file's length+mtime, so
       // neither a layout change NOR regenerated testdata can feed a
       // stale survivor to the reader
-      val idxPath = storedIndexPath("bm25_idx", dir, "documents")
+      val idxPath = storedIndexPath(s, "bm25_idx", dir, "documents")
       if (ManifestCommit.latest(idxPath).isEmpty)
         graft.text.Bm25.writeIndex(docs, "doc_id", "text", idxPath)
       graft.text.Bm25.topKFromIndex(ManifestCommit.read(s, idxPath),

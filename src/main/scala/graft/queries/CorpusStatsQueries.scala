@@ -285,7 +285,7 @@ object CorpusStatsQueries {
       val docs = Tables.documents(s, dir).where(col("text").isNotNull)
       def toks(d: org.apache.spark.sql.DataFrame) = d.select(col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("w"))
-      val path = CorpusQueries.storedIndexPath("kmv_idx", dir, "documents")
+      val path = CorpusQueries.storedIndexPath(s, "kmv_idx", dir, "documents")
       LocalFs.publishOnce(java.nio.file.Paths.get(path),
         p => ManifestCommit.latest(p.toString).nonEmpty) { stage =>
         ManifestCommit.writeVersioned(

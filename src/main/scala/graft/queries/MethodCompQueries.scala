@@ -107,7 +107,7 @@ object MethodCompQueries {
     * fan-out + bucket-parallel rank runs unchanged. */
   private[graft] def pbFitOf(sq: DataFrame): DataFrame = {
     val s = sq.sparkSession
-    val nDays = sq.count()
+    lazy val nDays = sq.count()
     // the local branch's Int-indexed n(n-1)/2 slope array stays far
     // from Int overflow under the fixed PairRows bound (the qnFrame one)
     if (SizeGate.local(s, SizeGate.PairRows)(nDays) && nDays >= 2) {
@@ -292,7 +292,7 @@ object MethodCompQueries {
     * task under the bound, the distributed pair join above it. */
   private[graft] def tauAgg(sq: DataFrame): DataFrame = {
     val s = sq.sparkSession
-    val nDays = sq.count()
+    lazy val nDays = sq.count()
     if (SizeGate.local(s, SizeGate.PairRows)(nDays) && nDays >= 2) {
       import s.implicits._
       sq.select(col("t").cast("int"), col("x").cast("long"),

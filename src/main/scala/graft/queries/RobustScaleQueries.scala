@@ -57,7 +57,7 @@ object RobustScaleQueries {
   private[graft] def snFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
-    val c = day.count()
+    lazy val c = day.count()
     // the degenerate n < 2 series has no pairs — only the relational
     // plan states its (empty) contract; the twin handles n >= 2
     if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
@@ -111,7 +111,7 @@ object RobustScaleQueries {
   private[graft] def qnFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
-    val c = day.count()
+    lazy val c = day.count()
     // the local branch's Int-indexed n(n-1)/2 gap array stays far
     // from Int overflow under the fixed PairRows bound
     if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
@@ -155,7 +155,7 @@ object RobustScaleQueries {
   private[graft] def hlFrame(day: DataFrame): DataFrame = {
     val s = day.sparkSession
     import s.implicits._
-    val c = day.count()
+    lazy val c = day.count()
     // same Int-indexed Walsh-sum array bound as qnFrame
     if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 1) {
       day.select(col("x")).as[Long]

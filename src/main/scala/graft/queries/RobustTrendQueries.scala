@@ -136,7 +136,7 @@ object RobustTrendQueries {
   private[graft] def siegelFrame(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
-    val c = d.count()
+    lazy val c = d.count()
     if (SizeGate.local(s, SizeGate.PairRows)(c) && c >= 2) {
       d.select(col("day").cast("long"), col("net").cast("long"))
         .as[(Long, Long)]

@@ -2318,7 +2318,7 @@ object SignalQueries {
     import graft.dedup.Dedup
     import graft.sources.{LocalFs, ManifestCommit}
     val docs = Tables.documents(s, dir)
-    val path = CorpusQueries.storedIndexPath("clusters", dir, "documents")
+    val path = CorpusQueries.storedIndexPath(s, "clusters", dir, "documents")
     // build BOTH generations in a staging dir published once: a crash
     // between the gen1 and gen2 writes must not leave a half-built
     // (old-labels-only) dataset behind the existence check — readers
@@ -2456,7 +2456,7 @@ object SignalQueries {
     import graft.dedup.Dedup
     import graft.sources.{LocalFs, ManifestCommit}
     val docs = Tables.documents(s, dir)
-    val path = CorpusQueries.storedIndexPath("profidx", dir, "documents")
+    val path = CorpusQueries.storedIndexPath(s, "profidx", dir, "documents")
     LocalFs.publishOnce(java.nio.file.Paths.get(path),
       p => ManifestCommit.latest(p.resolve("labels").toString).nonEmpty) { stagePath =>
       val stage = stagePath.toString

@@ -577,7 +577,7 @@ object WarehouseQueries {
       |""".stripMargin)) { (s, dir) =>
     import graft.sources.{LocalFs, ManifestCommit}
     val orders = Tables.orders(s, dir)
-    val path = CorpusQueries.storedIndexPath("schema_evo", dir, "orders")
+    val path = CorpusQueries.storedIndexPath(s, "schema_evo", dir, "orders")
     LocalFs.publishOnce(java.nio.file.Paths.get(path),
       p => ManifestCommit.latest(p.toString).nonEmpty) { stagePath =>
       val stage = stagePath.toString

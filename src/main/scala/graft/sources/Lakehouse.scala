@@ -80,10 +80,6 @@ object Lakehouse {
     }
   }
 
-  /** S4: standard overwrite parquet hand-off. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** ORC read/write — the second columnar interchange format (Spark's
     * native ORC datasource; orc-core ships in this Spark distribution).
     * Same scan properties as parquet: column pruning and predicate

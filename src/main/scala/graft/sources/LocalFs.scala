@@ -22,8 +22,9 @@ private[graft] object LocalFs {
 
   /** 16 hex chars of SHA-1 over `dir`, the path + mtime + length of
     * each `<table>.parquet` under it (regenerating a table changes its
-    * mtime and length) and a caller-owned `salt` (a build version). A
-    * regenerated source is a new key, never a stale hit. */
+    * mtime and length) and a caller-owned `salt` (`SpineCache.key`
+    * passes the size-gate mode). A regenerated source is a new key,
+    * never a stale hit. */
   def fingerprint(dir: String, tables: Seq[String], salt: String = ""): String = {
     val fps = tables.map { t =>
       val f = Paths.get(dir, s"$t.parquet").toFile

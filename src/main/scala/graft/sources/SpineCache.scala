@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-query `materialize()` (which a fresh session cannot reuse) to
   * a real stored table.
   *
-  * Correctness contract:
+  * Correctness contract (the key is [[key]]):
   *   - the cache key hashes the SOURCE DATA fingerprint (path + size
   *     + mtime of EVERY source table the spine derives from), so
   *     regenerated testdata can never serve a stale spine — a new
@@ -21,6 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     data fingerprints alone cannot see a semantic change to the
   *     builder logic — bump the version when the build changes and the
   *     old spine is simply never read again);
+  *   - the fingerprint is salted with the session's size-gate mode
+  *     (`graft.SizeGate.mode`): a spine built under `auto` ran the
+  *     local twins, one built under `distributed` the distributed
+  *     plans, and a mode must never be served the other mode's table,
+  *     or its branch silently does not run;
   *   - the build is the SAME DataFrame the consumers previously
   *     inlined; a parquet round-trip of long/decimal/string columns
   *     is exact, so results are bit-identical with or without the
@@ -67,13 +72,22 @@ object SpineCache {
       sourceTables: Seq[String], version: Int = 1)
       (build: => DataFrame): DataFrame =
     synchronized {
-      val path = cacheRoot.resolve(
-        s"${name}_${LocalFs.fingerprint(dir, sourceTables, s"v$version")}")
+      val path = cacheRoot.resolve(key(s, dir, name, sourceTables, version))
       LocalFs.publishOnce(path, p => Files.exists(p.resolve("_SUCCESS"))) {
         stage => build.write.mode("overwrite").parquet(stage.toString)
       }
       s.read.parquet(path.toString)
     }
+
+  /** The key of a table that build `version` of `name` derives from
+    * `sourceTables` under `dir` — for spines and for the query layer's
+    * stored indexes alike: `<name>_v<version>_<fingerprint>`, the
+    * fingerprint over the source files salted with the session's
+    * size-gate mode. */
+  def key(s: SparkSession, dir: String, name: String,
+      sourceTables: Seq[String], version: Int): String =
+    s"${name}_v${version}_" +
+      LocalFs.fingerprint(dir, sourceTables, graft.SizeGate.mode(s))
 
   /** Single-source convenience overload. */
   def table(s: SparkSession, dir: String, name: String,

@@ -26,7 +26,7 @@ class AnnIncrementalSpec extends AnyFunSuite {
       .toMap
 
   test("append-maintained codes score identically to a full build") {
-    val path = java.nio.file.Files.createTempDirectory("graft_annincr").toString
+    val path = TestSpark.tempDir("graft_annincr").toString
     val model = ProductQuantize.fit(emb, "vec_id", "embedding",
       dims = 64, subspaces = 8, codebookSize = 16)
     // seed the model + first half via the standard writer, then ingest
@@ -46,7 +46,7 @@ class AnnIncrementalSpec extends AnyFunSuite {
   }
 
   test("a replayed ingest batch changes nothing") {
-    val path = java.nio.file.Files.createTempDirectory("graft_annrep").toString
+    val path = TestSpark.tempDir("graft_annrep").toString
     val model = ProductQuantize.fit(emb, "vec_id", "embedding",
       dims = 64, subspaces = 8, codebookSize = 16)
     ProductQuantize.writeIvfPqIndex(

@@ -12,7 +12,7 @@ class AppendStreamSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_append").toString
+    TestSpark.tempDir("graft_append").toString
 
   test("batches append as generations; reads see the union") {
     val path = tmp()
@@ -127,9 +127,9 @@ class AppendStreamSpec extends AnyFunSuite {
     // deterministic micro-batching: one file per trigger, lexicographic
     // file order -> restarting the query re-plays the same (appId,
     // batchId) sequence, and every commit is skipped
-    val src = java.nio.file.Files.createTempDirectory("graft_append_src")
+    val src = TestSpark.tempDir("graft_append_src")
     (0 until 3).foreach { i =>
-      val stage = java.nio.file.Files.createTempDirectory("graft_append_stage")
+      val stage = TestSpark.tempDir("graft_append_stage")
       Seq((i.toLong, s"row$i")).toDF("id", "v")
         .coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val it = java.nio.file.Files.list(stage).iterator()

@@ -29,12 +29,12 @@ class AttributionStreamSpec extends AnyFunSuite {
 
     // three event-time-ordered files → three micro-batches; a touch in
     // batch i must credit a conversion in batch i+1 via carried state
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_src")
+    val dir = TestSpark.tempDir("graft_attr_src")
     val rows = batchDf
       .orderBy(col("event_time_us"), col("event_id")).collect()
     val third = (rows.length + 2) / 3
     rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_attr_stage")
+      val tmp = TestSpark.tempDir("graft_attr_stage")
       chunk.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
         .toSeq.toDF("user_id", "event_time_us", "event_id", "event_type")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)

@@ -12,7 +12,7 @@ class BloomIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("point lookups skip files a bloom rules out, exactly") {
-    val dir = Files.createTempDirectory("bloomidx").toString
+    val dir = TestSpark.tempDir("bloomidx").toString
     // range layout on id: each of 16 files owns a contiguous id range,
     // but the PROBE column is `other`, uncorrelated with the layout —
     // zone maps on `other` would be useless; blooms are not
@@ -34,7 +34,7 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("no sidecar, wrong column, or vacuumed state degrade to no skipping") {
-    val dir = Files.createTempDirectory("bloomidx2").toString
+    val dir = TestSpark.tempDir("bloomidx2").toString
     val rows = (1L to 500L).map(i => (i, i + 7)).toDF("id", "other")
     val g1 = ManifestCommit.writeVersioned(rows.repartition(4), dir)
     // no sidecar at all: everything kept

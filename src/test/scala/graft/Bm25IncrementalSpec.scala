@@ -26,7 +26,7 @@ class Bm25IncrementalSpec extends AnyFunSuite {
       .toMap
 
   test("append-maintained postings score identically to a full rebuild") {
-    val path = java.nio.file.Files.createTempDirectory("graft_bm25inc").toString
+    val path = TestSpark.tempDir("graft_bm25inc").toString
     // initial build = batch 0; ingest B = batch 1
     Bm25.appendPostings(corpusA.toDF("id", "text"), "id", "text",
       path, "idx", 0L, nFiles = 2)
@@ -41,7 +41,7 @@ class Bm25IncrementalSpec extends AnyFunSuite {
   }
 
   test("a replayed ingest batch changes nothing") {
-    val path = java.nio.file.Files.createTempDirectory("graft_bm25rep").toString
+    val path = TestSpark.tempDir("graft_bm25rep").toString
     Bm25.appendPostings(corpusA.toDF("id", "text"), "id", "text",
       path, "idx", 0L, nFiles = 2)
     Bm25.appendPostings(corpusB.toDF("id", "text"), "id", "text",
@@ -57,7 +57,7 @@ class Bm25IncrementalSpec extends AnyFunSuite {
   }
 
   test("postings stay term-bucketed across multiple files") {
-    val path = java.nio.file.Files.createTempDirectory("graft_bm25lay").toString
+    val path = TestSpark.tempDir("graft_bm25lay").toString
     Bm25.appendPostings(corpusA.toDF("id", "text"), "id", "text",
       path, "idx", 0L, nFiles = 2)
     val files = ManifestCommit.latest(path).get._2

@@ -67,10 +67,10 @@ class ChecksumSpec extends AnyFunSuite {
     val expected = Checksum.bucketChecksums(t, Seq("id", "name", "flag"), 8)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDecimal(2))).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_cksum_src")
+    val dir = TestSpark.tempDir("graft_cksum_src")
     val rows = t.as[(Long, String, Boolean)].collect()
     rows.grouped((rows.length + 1) / 2).zipWithIndex.foreach { case (c, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cksum_stage")
+      val tmp = TestSpark.tempDir("graft_cksum_stage")
       c.toSeq.toDF("id", "name", "flag").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()

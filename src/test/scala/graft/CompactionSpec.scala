@@ -12,7 +12,7 @@ class CompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir = Files.createTempDirectory("compact").toString
+  private def freshDir = TestSpark.tempDir("compact").toString
 
   private lazy val rows = (1L to 5000L).map(i => (i, s"v$i", i % 97))
     .toDF("id", "v", "g")

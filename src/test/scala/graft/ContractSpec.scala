@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.marchmania.{Game, TeamSeasonStat}
 
 /** Pins the driver contract and the scale-layout claims. */
@@ -44,6 +45,20 @@ class ContractSpec extends AnyFunSuite {
       "fe36aba230eab4af7eb65494833eff033378e558c50692927290fda60d31cb35")
   }
 
+  test("the engine reads no spark.graft conf key but the two mode switches") {
+    // a size bound or branch choice belongs to SizeGate, not to a new knob
+    val src = Paths.get("src/main")
+    assert(Files.isDirectory(src), src.toAbsolutePath.toString)
+    val key = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val walk = Files.walk(src)
+    val keys = try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(p => key.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+        .toSet
+      finally walk.close()
+    assert(keys === Set(Materialize.ModeKey, SizeGate.ModeKey))
+  }
+
   test("typed Dataset views of domain frames round-trip") {
     import spark.implicits._
     val games = Seq(Game(2024, 1, 1L, 101, 70, 102, 60)).toDS()
@@ -58,7 +73,7 @@ class ContractSpec extends AnyFunSuite {
 
   test("metadata queries over media tables never read the payload column") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_media").toString
+    val dir = TestSpark.tempDir("graft_media").toString
     Seq((1L, Array[Byte](1, 2, 3), "image/stub", "s", 3L))
       .toDF("media_id", "payload", "media_type", "source", "declared_len")
       .write.mode("overwrite").parquet(dir)

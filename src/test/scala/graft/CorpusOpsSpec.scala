@@ -255,7 +255,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("bigram surprise: deterministic continuations floor at 1e6, " +
     "common-prefix rare continuations score above") {
     val q = graft.queries.Registry.byName("q84_bigram_surprise")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q84")
+    val dir = TestSpark.tempDir("graft_q84")
     Seq(
       (1L, "a b a b a b a b", "en", "s1"), // 'b' continues to 'a' 3 of 6 times
       (2L, "k l m n o p q r", "en", "s1"), // every continuation deterministic
@@ -435,7 +435,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       (3L, "shuffle partition skew salt"),
       (4L, "join join shuffle spark"),
       (5L, "rareword spark")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+    val dir = TestSpark.tempDir("graft_bm25_idx").toString
     Bm25.writeIndex(docs, "doc_id", "text", dir)
     val stored = Bm25.topKFromIndex(ManifestCommit.read(spark, dir),
         docs.filter(col("doc_id") <= 2L), "doc_id", "text",

@@ -20,7 +20,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
     * source streams files in name order here since writes are sequential). */
   private def stage(dir: java.nio.file.Path, name: String,
       rows: Seq[(Long, String)]): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cs_stage")
+    val tmp = TestSpark.tempDir("graft_cs_stage")
     rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = java.nio.file.Files.list(tmp).iterator()
     var moved = false
@@ -38,7 +38,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
     org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
 
   test("chunking on a stream equals the batch fan-out (stateless face)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_chunk")
+    val dir = TestSpark.tempDir("graft_cs_chunk")
     stage(dir, "b1.parquet", fixture.take(6))
     stage(dir, "b2.parquet", fixture.drop(6))
     val expected = Chunking.chunk(fixture.toDF("doc_id", "text"),
@@ -65,7 +65,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
     import graft.text.Redaction
     val piiDocs = (1L to 8L).map(i =>
       i -> s"doc $i mail u$i@ex.org tel 555-000-000$i ip 10.0.0.$i")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_pii")
+    val dir = TestSpark.tempDir("graft_cs_pii")
     stage(dir, "b1.parquet", piiDocs.take(4))
     stage(dir, "b2.parquet", piiDocs.drop(4))
     def project(df: org.apache.spark.sql.DataFrame) =
@@ -94,7 +94,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
       val body = (1 to (i * 3).toInt).map(j => s"tok$j").mkString(" ")
       i -> (if (i % 3 == 0) s"the a of $body" else body)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_gopher")
+    val dir = TestSpark.tempDir("graft_cs_gopher")
     stage(dir, "b1.parquet", docs.take(4))
     stage(dir, "b2.parquet", docs.drop(4))
     val p = QualityRules.GopherParams(minWords = 5, maxWords = 30)
@@ -121,7 +121,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
     // later micro-batch delivers SMALLER ids — bin numbering may differ
     // from the batch replay (documented contract) but bins must never
     // overfill and every doc must land exactly once
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_ooo")
+    val dir = TestSpark.tempDir("graft_cs_ooo")
     stage(dir, "b1.parquet", fixture.drop(6)) // ids 7-12 first
     stage(dir, "b2.parquet", fixture.take(6)) // ids 1-6 after
     val stream = spark.readStream.schema(schema)
@@ -141,7 +141,7 @@ class CorpusStreamsSpec extends AnyFunSuite {
   }
 
   test("greedy packing stream equals batch under ordered arrival; cursor spans batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs_pack")
+    val dir = TestSpark.tempDir("graft_cs_pack")
     stage(dir, "b1.parquet", fixture.take(6))
     stage(dir, "b2.parquet", fixture.drop(6))
     val expected = Packing.greedyPack(fixture.toDF("doc_id", "text"),

@@ -116,10 +116,10 @@ class CountMinSpec extends AnyFunSuite {
     // the final sketch must equal the one-shot batch build
     val expected = CountMin.build(items, "x", depth = 4, width = 16)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_src")
+    val dir = TestSpark.tempDir("graft_cms_src")
     val rows = items.collect().map(_.getString(0))
     rows.grouped((rows.length + 1) / 2).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cms_stage")
+      val tmp = TestSpark.tempDir("graft_cms_stage")
       chunk.toSeq.toDF("x").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()
       var moved = false

@@ -13,7 +13,7 @@ class DeleteWhereSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("delete rewrites only the files holding matching rows") {
-    val dir = Files.createTempDirectory("delw").toString
+    val dir = TestSpark.tempDir("delw").toString
     val rows = (1L to 8000L).map(i => (i, s"u${i % 97}")).toDF("id", "user")
     // range layout: ids cluster, so a narrow id delete touches 1 file
     val g1 = ManifestCommit.writeVersioned(
@@ -36,7 +36,7 @@ class DeleteWhereSpec extends AnyFunSuite {
   }
 
   test("upsertByKey rewrites only the files holding matched keys") {
-    val dir = Files.createTempDirectory("cowup").toString
+    val dir = TestSpark.tempDir("cowup").toString
     val rows = (1L to 8000L).map(i => (i, i * 10)).toDF("id", "v")
     val g1 = ManifestCommit.writeVersioned(
       rows.repartitionByRange(8, $"id"), dir)
@@ -55,13 +55,13 @@ class DeleteWhereSpec extends AnyFunSuite {
     assert(got.where($"id" === 9002L).select("v").as[Long].head() == -5L)
     assert(got.where($"id" === 200L).select("v").as[Long].head() == 2000L)
     // first write into an empty dataset degrades to writeVersioned
-    val dir2 = Files.createTempDirectory("cowup2").toString
+    val dir2 = TestSpark.tempDir("cowup2").toString
     ManifestCommit.upsert(spark, incoming, Seq("id"), dir2)
     assert(ManifestCommit.read(spark, dir2).count() == 5L)
   }
 
   test("upsert on a composite key into a partitioned table rewrites only matched files") {
-    val dir = Files.createTempDirectory("cowup3").toString
+    val dir = TestSpark.tempDir("cowup3").toString
     val rows = (for (season <- 2021 to 2024; team <- 1 to 200)
       yield (season, team, s"v$season-$team")).toDF("season", "team", "v")
     // range layout on (season, team): two files per season partition
@@ -101,7 +101,7 @@ class DeleteWhereSpec extends AnyFunSuite {
   }
 
   test("partitioned appends and deletes spanning data dirs read as one pruned scan") {
-    val dir = Files.createTempDirectory("delw_part").toString
+    val dir = TestSpark.tempDir("delw_part").toString
     ManifestCommit.appendVersioned(
       Seq((1L, "a"), (2L, "b")).toDF("id", "p"), dir, partitionBy = Seq("p"))
     ManifestCommit.appendVersioned(
@@ -120,7 +120,7 @@ class DeleteWhereSpec extends AnyFunSuite {
   }
 
   test("null-condition rows survive (SQL DELETE semantics); no-op returns gen") {
-    val dir = Files.createTempDirectory("delw2").toString
+    val dir = TestSpark.tempDir("delw2").toString
     val rows = Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)))
       .toDF("id", "v")
     val g1 = ManifestCommit.writeVersioned(rows.repartition(1), dir)
@@ -135,7 +135,7 @@ class DeleteWhereSpec extends AnyFunSuite {
   }
 
   test("deleting every row of an affected file drops it from the manifest") {
-    val dir = Files.createTempDirectory("delw3").toString
+    val dir = TestSpark.tempDir("delw3").toString
     val rows = (1L to 1000L).map(i => (i, i % 5)).toDF("id", "g")
     ManifestCommit.writeVersioned(rows.repartitionByRange(4, $"id"), dir)
     // wipe the whole first quartile: its file vanishes, none rewritten

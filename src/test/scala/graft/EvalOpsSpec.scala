@@ -221,9 +221,9 @@ class EvalOpsSpec extends AnyFunSuite {
     val batch = graft.text.Drift.psi(rows.toDF("s", "v"), "v", "s", bounds)
       .select("s", "n_rows", "psi")
       .as[(String, Long, Double)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_src")
+    val dir = TestSpark.tempDir("graft_drift_src")
     rows.grouped(30).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_drift_stage")
+      val tmp = TestSpark.tempDir("graft_drift_stage")
       chunk.toSeq.toDF("s", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()

@@ -28,22 +28,39 @@ class GroupedTopKSpec extends AnyFunSuite {
 
   test("overflow to the spilling sorter keeps results identical at high key cardinality") {
     val rnd = new scala.util.Random(23)
-    // many more distinct keys than the overridden per-partition bound
     val df = (1 to 20000).map(i => (rnd.nextInt(5000), i, rnd.nextDouble()))
       .toDF("k", "id", "v")
       .repartition(4)
-    val key = "spark.graft.topk.maxKeysPerPartition"
-    val expected = GroupedTopK.topKPerKey(
-      df, Seq("k"), Seq("v" -> false, "id" -> true), k = 2)
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    spark.conf.set(key, "64") // force every partition through the sorter path
-    try {
-      val spilled = GroupedTopK.topKPerKey(
+    // auto keeps every partition on the heap map; distributed sends
+    // every partition through the sorter path
+    val (expected, spilled) = SizeGateModes.both(GroupedTopK.topKPerKey(
         df, Seq("k"), Seq("v" -> false, "id" -> true), k = 2)
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-      assert(spilled === expected)
-      assert(spilled.nonEmpty)
-    } finally spark.conf.unset(key)
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet)
+    assert(spilled === expected)
+    assert(spilled.nonEmpty)
+  }
+
+  test("a partition past the heap bound hands its buffered heaps to the sorter") {
+    // one partition holding more distinct keys than SizeGate.TopKKeys,
+    // each key twice: under auto the heap map fills mid-partition, and
+    // the buffered heap rows, the overflow row and the rest of the
+    // input go to the sorter together
+    val nKeys = SizeGate.TopKKeys + 1000
+    val df = spark.range(2 * nKeys)
+      .select(($"id" % nKeys).as("k"), $"id",
+        ($"id" * 7919L % 1000003L).as("v"))
+      .repartition(1, $"k")
+    val native = SizeGateModes.under("auto")(GroupedTopK.topKPerKey(
+        df, Seq("k"), Seq("v" -> false, "id" -> true), k = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"k").orderBy($"v".desc, $"id")
+    val window = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // a few differing rows at most: printing 2^18-row sets floods the log
+    assert((window -- native).take(5) === Set.empty)
+    assert((native -- window).take(5) === Set.empty)
+    assert(native.size === nKeys)
   }
 
   test("k < 1 is rejected up front") {

@@ -91,7 +91,7 @@ class HyperLogLogSpec extends AnyFunSuite {
     // batch sketches only its delta and merges against the prior
     // generation — sketch-sized work, the corpus is never rescanned.
     import graft.sources.ManifestCommit
-    val dir = java.nio.file.Files.createTempDirectory("hll_store").toString
+    val dir = TestSpark.tempDir("hll_store").toString
     val batch1 = (1 to 120).map(i => ("g", s"v$i")).toDF("g", "v")
     val batch2 = (100 to 200).map(i => ("g", s"v$i")).toDF("g", "v")
     val g1 = ManifestCommit.writeVersioned(

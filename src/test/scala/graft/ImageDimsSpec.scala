@@ -111,7 +111,7 @@ class ImageDimsSpec extends AnyFunSuite {
   test("the sniff stays in whole-stage codegen") {
     // a literal local relation constant-folds to a LocalTableScan; a
     // parquet-backed column exercises the real scan-stage projection
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dims").toString
+    val tmp = TestSpark.tempDir("graft_dims").toString
     Seq((1L, pngHeader(2, 3))).toDF("id", "payload")
       .write.mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp)

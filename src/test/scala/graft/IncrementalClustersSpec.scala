@@ -77,9 +77,9 @@ class IncrementalClustersSpec extends AnyFunSuite {
       Seq((6L, "a b c d e f x y z w q r"))) // bridges {1,2} and {3,4}
       .map(_.toDF("doc_id", "text"))
     val all = batches.reduce(_ unionByName _)
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_src")
+    val dir = TestSpark.tempDir("graft_inc_src")
     batches.zipWithIndex.foreach { case (b, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_inc_stage")
+      val tmp = TestSpark.tempDir("graft_inc_stage")
       b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val it = java.nio.file.Files.list(tmp).iterator()
       var moved = false

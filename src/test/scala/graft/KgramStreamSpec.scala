@@ -22,12 +22,12 @@ class KgramStreamSpec extends AnyFunSuite {
         batchDf, "user_id", "event_time_us", "event_id", "event_type", 3)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_kgram_src")
+    val dir = TestSpark.tempDir("graft_kgram_src")
     val rows = batchDf
       .orderBy(col("event_time_us"), col("event_id")).collect()
     val third = (rows.length + 2) / 3
     rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kgram_stage")
+      val tmp = TestSpark.tempDir("graft_kgram_stage")
       chunk.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
         .toSeq.toDF("user_id", "event_time_us", "event_id", "event_type")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)

@@ -15,11 +15,11 @@ class LakehouseSpec extends AnyFunSuite {
   }
 
   test("bronze ingest: csv -> trimmed strings -> parquet round-trip") {
-    val in = Files.createTempDirectory("graft_in")
+    val in = TestSpark.tempDir("graft_in")
     Files.writeString(in.resolve("MTeams.csv"),
       "TeamID,TeamName\n1101,  Duke  \n1102,Kansas\n")
     Files.writeString(in.resolve("Mystery.csv"), "a,b\n1,x\n")
-    val lakeDir = Files.createTempDirectory("graft_lake")
+    val lakeDir = TestSpark.tempDir("graft_lake")
     val landed = Lakehouse.ingestBronze(spark, in.toString, LakePaths(lakeDir.toString))
     assert(landed.size === 2)
     val teams = spark.read.parquet(s"$lakeDir/bronze/M/teams")
@@ -32,7 +32,7 @@ class LakehouseSpec extends AnyFunSuite {
     val df = Seq((1L, "a", 1.5, java.sql.Date.valueOf("2024-01-02")),
       (2L, "b", -0.25, java.sql.Date.valueOf("2024-02-03")))
       .toDF("id", "s", "v", "d")
-    val dir = Files.createTempDirectory("graft_orc").resolve("t").toString
+    val dir = TestSpark.tempDir("graft_orc").resolve("t").toString
     Lakehouse.writeOrc(df, dir)
     val back = Lakehouse.readOrc(spark, dir)
     // files read back nullable (same as parquet): compare names + types
@@ -46,7 +46,7 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("manifest commit: upsert round-trip, crash invisibility, gen race, vacuum") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_manifest").resolve("t").toString
+    val root = TestSpark.tempDir("graft_manifest").resolve("t").toString
     // gen 1: initial write via upsert
     val g1 = ManifestCommit.upsert(spark,
       Seq((2024, 1, "a"), (2024, 2, "b")).toDF("Season", "TeamID", "v"),
@@ -97,7 +97,7 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("manifest commit: partitioned generations prune, time travel reads old gens") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_manifest_part").resolve("t").toString
+    val root = TestSpark.tempDir("graft_manifest_part").resolve("t").toString
     val g1 = ManifestCommit.writeVersioned(
       Seq((2021, 1, "a"), (2022, 2, "b")).toDF("Season", "TeamID", "v"),
       root, partitionBy = Seq("Season"))
@@ -127,7 +127,7 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("manifest commit: zone maps skip files a range predicate cannot touch") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_zonemap").resolve("t").toString
+    val root = TestSpark.tempDir("graft_zonemap").resolve("t").toString
     // 4 hive partitions, coalesce(1) => exactly one part file each, with
     // deterministic disjoint id ranges [0,100) [100,200) ...
     val df = spark.range(0, 400).select(
@@ -182,7 +182,7 @@ class LakehouseSpec extends AnyFunSuite {
       .count() === 10) // residual filter still exact: ids 11..20
 
     // no sidecar at all (plain writeVersioned): no pruning, still exact
-    val root2 = Files.createTempDirectory("graft_zonemap2").resolve("t").toString
+    val root2 = TestSpark.tempDir("graft_zonemap2").resolve("t").toString
     ManifestCommit.writeVersioned(df.coalesce(1), root2, Seq("bucket"))
     val (k6, p6) = ManifestCommit.pruneBetween(root2, "id", 10, 20)
     assert(k6.size === 4 && p6.isEmpty)
@@ -195,7 +195,7 @@ class LakehouseSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val root = Files.createTempDirectory("graft_manifest_race").resolve("t").toString
+    val root = TestSpark.tempDir("graft_manifest_race").resolve("t").toString
     ManifestCommit.writeVersioned(Seq((0, "base")).toDF("id", "v"), root)
     // 8 writers race from the same observed latest generation; the link
     // publish must serialize them onto 8 DISTINCT generations (a rename
@@ -215,7 +215,7 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("Season-partitioned writes prune partitions on season filters") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_part").resolve("t").toString
+    val dir = TestSpark.tempDir("graft_part").resolve("t").toString
     (2020 to 2023).flatMap(s => (1 to 10).map(i => (s, i)))
       .toDF("Season", "TeamID")
       .write.partitionBy("Season").mode("overwrite").parquet(dir)
@@ -240,7 +240,7 @@ class LakehouseSpec extends AnyFunSuite {
       finally s.close()
     }
     val before = exportDirs()
-    val out = Files.createTempDirectory("graft_csv").resolve("sub.csv")
+    val out = TestSpark.tempDir("graft_csv").resolve("sub.csv")
     Lakehouse.exportSingleCsv(
       Seq(("2026_1101_1102", 0.5), ("2026_1101_1103", 0.7)).toDF("ID", "Pred"), out.toString)
     val lines = Files.readAllLines(out)

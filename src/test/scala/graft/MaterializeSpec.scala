@@ -60,7 +60,7 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   test("checkpoint mode writes to the reliable checkpoint dir, rows unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val dir = TestSpark.tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set(Materialize.ModeKey, "checkpoint")
     try {

@@ -71,7 +71,7 @@ class MlAndStreamingSpec extends AnyFunSuite {
 
   test("backtest metrics csv lands driver-side with one row per fold") {
     import graft.ml.Backtest
-    val out = java.nio.file.Files.createTempDirectory("graft_bt").resolve("m.csv")
+    val out = TestSpark.tempDir("graft_bt").resolve("m.csv")
     Backtest.writeMetricsCsv(out, Seq(
       Backtest.FoldMetrics(2023, 100, 50, 0.71, 0.62)))
     val lines = java.nio.file.Files.readAllLines(out)
@@ -125,7 +125,7 @@ class MlAndStreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     // file source needs a directory; stage the file into one
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val dir = TestSpark.tempDir("graft_stream_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(src), dir.resolve("events.parquet"))
     // readStream needs the RAW file schema (ts may be TIMESTAMP_NTZ under
@@ -156,7 +156,7 @@ class MlAndStreamingSpec extends AnyFunSuite {
         (r.getLong(2), r.getDouble(3))).toMap
     // 1-hour windows every 15 min: the window memberships sum to 4 per event
     assert(expected.values.map(_._1).sum === batchDf.count() * 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_slide_src")
+    val dir = TestSpark.tempDir("graft_slide_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"), dir.resolve("events.parquet"))
     val rawSchema = spark.read.parquet(dir.toString).schema
@@ -177,9 +177,9 @@ class MlAndStreamingSpec extends AnyFunSuite {
 
   test("streaming exact dedup drops cross-micro-batch duplicates") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_dedup_src")
+    val src = TestSpark.tempDir("graft_dedup_src")
     def stage(name: String, rows: Seq[(Long, String, java.sql.Timestamp)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_stage")
+      val tmp = TestSpark.tempDir("graft_dedup_stage")
       rows.toDF("doc_id", "text", "ingest_time")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()
@@ -244,12 +244,12 @@ class MlAndStreamingSpec extends AnyFunSuite {
     // straddle a file boundary must merge across batches (a single-file
     // stream would never exercise the cross-batch state); ascending
     // event-time order keeps every row inside the 2 h watermark
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_src")
+    val dir = TestSpark.tempDir("graft_sess_src")
     val sorted = batchDf.orderBy("ts").collect()
     val third = (sorted.length + 2) / 3
     import spark.implicits._
     sorted.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sess_stage")
+      val tmp = TestSpark.tempDir("graft_sess_stage")
       chunk.map(r => (r.getLong(r.fieldIndex("ts")),
           r.getLong(r.fieldIndex("user_id")),
           r.getString(r.fieldIndex("event_type")),
@@ -328,11 +328,11 @@ class MlAndStreamingSpec extends AnyFunSuite {
       }.toMap
     // three event-time-ordered files → three micro-batches: funnels that
     // straddle a file boundary must resume from cross-batch state
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_src")
+    val dir = TestSpark.tempDir("graft_funnel_src")
     val sorted = batchDf.orderBy("ts").collect()
     val third = (sorted.length + 2) / 3
     sorted.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_funnel_stage")
+      val tmp = TestSpark.tempDir("graft_funnel_stage")
       chunk.map(r => (r.getLong(r.fieldIndex("user_id")),
           r.getString(r.fieldIndex("event_type")),
           r.getLong(r.fieldIndex("ts")) / 1000L))
@@ -397,11 +397,11 @@ class MlAndStreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // three files → three micro-batches; the activity dim carries the
     // distinct (user, day) state across them
-    val dir = java.nio.file.Files.createTempDirectory("graft_ret_src")
+    val dir = TestSpark.tempDir("graft_ret_src")
     val rows = batchDf.collect()
     val third = (rows.length + 2) / 3
     rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ret_stage")
+      val tmp = TestSpark.tempDir("graft_ret_stage")
       chunk.map(r => (r.getLong(0), r.getLong(1)))
         .toSeq.toDF("user_id", "day")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)

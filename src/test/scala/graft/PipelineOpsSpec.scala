@@ -263,7 +263,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val model = ProductQuantize.fit(vecs, "vec_id", "embedding",
       dims, subspaces = 4, codebookSize = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val path = TestSpark.tempDir("graft_ivfpq").toString
     ProductQuantize.writeIvfPqIndex(vecs, "vec_id", "embedding",
       model, cellBits = 2, path)
     // model table round-trips bit-exactly
@@ -477,11 +477,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     // worst-case topology for label propagation (diameter = n); the
     // alternating-star algorithm must collapse it in logarithmic rounds
     val pairs = (1L until 1000L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // driverThreshold = 0 forces the DISTRIBUTED path (999 edges would
-    // normally take the union-find shortcut)
-    val (labels, rounds) = Dedup.alternatingStarCC(pairs, maxIters = 50,
-      driverThreshold = 0)
-    val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the distributed gate mode forces the alternating-star rounds (999
+    // edges would take the union-find shortcut under auto)
+    val (m, rounds) = SizeGateModes.under("distributed") {
+      val (labels, rounds) = Dedup.alternatingStarCC(pairs, maxIters = 50)
+      (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
     assert(m.size === 1000)
     assert(m.values.forall(_ == 1L))
     // ~log2(1000) productive rounds + the final no-change confirmation
@@ -538,19 +539,20 @@ class PipelineOpsSpec extends AnyFunSuite {
     val pairs = ((1L to 9L).map(i => (i, i + 1)) ++
       Seq((20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L)))
       .toDF("doc_a", "doc_b")
-    val viaDriver = Dedup.alternatingStarCC(pairs, 50)
-    val viaDistributed = Dedup.alternatingStarCC(pairs, 50, driverThreshold = 0)
+    def run = {
+      val (labels, rounds) = Dedup.alternatingStarCC(pairs, 50)
+      (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
+    val (viaDriver, viaDistributed) = SizeGateModes.both(run)
     assert(viaDriver._2 === 0) // took the shortcut
     assert(viaDistributed._2 > 0) // actually iterated
-    def m(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m(viaDriver._1) === m(viaDistributed._1))
+    assert(viaDriver._1 === viaDistributed._1)
   }
 
   test("connected components: non-convergence fails fast instead of mislabeling") {
     val pairs = (1L until 50L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalStateException](
-      Dedup.nearDupClusters(pairs, maxIters = 1, driverThreshold = 0).collect())
+    val e = intercept[IllegalStateException](SizeGateModes.under(
+      "distributed")(Dedup.nearDupClusters(pairs, maxIters = 1).collect()))
     assert(e.getMessage.contains("did not converge"))
   }
 

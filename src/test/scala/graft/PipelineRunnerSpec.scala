@@ -9,7 +9,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("end-to-end: csv -> bronze -> silver -> gold -> backtest -> submission") {
-    val in = Files.createTempDirectory("graft_pipe_in")
+    val in = TestSpark.tempDir("graft_pipe_in")
     val rnd = new scala.util.Random(11)
     val rows = for (season <- 2021 to 2023; day <- 1 to 40) yield {
       val a = 1101 + rnd.nextInt(6); val b = 1110 + rnd.nextInt(6)
@@ -18,8 +18,8 @@ class PipelineRunnerSpec extends AnyFunSuite {
     }
     Files.writeString(in.resolve("MRegularSeasonCompactResults.csv"),
       "Season,DayNum,WTeamID,WScore,LTeamID,LScore,WLoc,NumOT\n" + rows.mkString("\n") + "\n")
-    val lake = Files.createTempDirectory("graft_pipe_lake")
-    val sub = Files.createTempDirectory("graft_pipe_out").resolve("submission.csv")
+    val lake = TestSpark.tempDir("graft_pipe_lake")
+    val sub = TestSpark.tempDir("graft_pipe_out").resolve("submission.csv")
 
     val result = PipelineRunner.run(
       spark, in.toString, lake.toString, exportCsv = Some(sub.toString))
@@ -56,7 +56,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
     assert(reloaded.gbt.auc === tuned.gbt.auc)
 
     // ensemble export fits with the loaded params and blends LR+GBT
-    val sub2 = Files.createTempDirectory("graft_pipe_out2").resolve("ensemble.csv")
+    val sub2 = TestSpark.tempDir("graft_pipe_out2").resolve("ensemble.csv")
     val result2 = PipelineRunner.run(
       spark, in.toString, lake.toString,
       exportCsv = Some(sub2.toString), hpoParamsPath = Some(hpoPath))
@@ -108,7 +108,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
     assert(cfg.lrElasticNet === 0.0)
 
     // config-driven run: W league fixture, backtest bounded to 2022 only
-    val in = Files.createTempDirectory("graft_cfg_in")
+    val in = TestSpark.tempDir("graft_cfg_in")
     val rnd = new scala.util.Random(29)
     val rows = for (season <- 2021 to 2023; day <- 1 to 25) yield {
       val a = 3101 + rnd.nextInt(5); val b = 3110 + rnd.nextInt(5)
@@ -116,7 +116,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
     }
     Files.writeString(in.resolve("WRegularSeasonCompactResults.csv"),
       "Season,DayNum,WTeamID,WScore,LTeamID,LScore,WLoc,NumOT\n" + rows.mkString("\n") + "\n")
-    val lake = Files.createTempDirectory("graft_cfg_lake")
+    val lake = TestSpark.tempDir("graft_cfg_lake")
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val result = graft.jobs.PipelineRunner.run(
@@ -132,7 +132,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
   }
 
   test("manifest commit protocol: pipeline lands silver/gold as committed generations") {
-    val in = Files.createTempDirectory("graft_mc_in")
+    val in = TestSpark.tempDir("graft_mc_in")
     val rnd = new scala.util.Random(31)
     val rows = for (season <- 2022 to 2023; day <- 1 to 30) yield {
       val a = 1101 + rnd.nextInt(5); val b = 1110 + rnd.nextInt(5)
@@ -140,7 +140,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
     }
     Files.writeString(in.resolve("MRegularSeasonCompactResults.csv"),
       "Season,DayNum,WTeamID,WScore,LTeamID,LScore,WLoc,NumOT\n" + rows.mkString("\n") + "\n")
-    val lake = Files.createTempDirectory("graft_mc_lake")
+    val lake = TestSpark.tempDir("graft_mc_lake")
     val cfg = graft.jobs.PipelineConfig(commitProtocol = "manifest")
     val result = PipelineRunner.run(
       spark, in.toString, lake.toString, cfg, exportCsv = None, hpoParamsPath = None)
@@ -226,7 +226,7 @@ class PipelineRunnerSpec extends AnyFunSuite {
         |            "params": {"maxIter": 60, "regParam": 0.01, "elasticNetParam": 0}},
         | "feature_cols": ["WinRateDiff", "AvgPointDiffDiff", "EloDiff"],
         | "val_season": 2023, "league": "M"}""".stripMargin
-    val dir = Files.createTempDirectory("graft_hpo_compat")
+    val dir = TestSpark.tempDir("graft_hpo_compat")
     // NaN != NaN, so compare with the NaN metric mapped to a sentinel
     def comparable(r: HpoResult) =
       r.copy(logreg = r.logreg.copy(auc = if (r.logreg.auc.isNaN) -1.0 else r.logreg.auc))

@@ -135,11 +135,11 @@ class PropertySpec extends AnyFunSuite {
             comp.foreach(c => expected(c) = m)
           }
         }
-        def labels(threshold: Long) =
-          Dedup.alternatingStarCC(df, 50, threshold)._1.collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        labels(1L << 20) == expected.toMap && // driver union-find path
-          labels(0) == expected.toMap // distributed alternating-star path
+        def labels = Dedup.alternatingStarCC(df, 50)._1.collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // auto: driver union-find; distributed: alternating-star rounds
+        val (driver, distributed) = SizeGateModes.both(labels)
+        driver == expected.toMap && distributed == expected.toMap
       }
     })
   }

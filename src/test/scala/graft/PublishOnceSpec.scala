@@ -21,7 +21,7 @@ class PublishOnceSpec extends AnyFunSuite {
     .map(_.getFileName.toString).toSet
 
   test("two builds of one target: the winner's data stays, no staging dir is left") {
-    val root = Files.createTempDirectory("publish_once")
+    val root = TestSpark.tempDir("publish_once")
     val target = root.resolve("idx")
     var builds = 0
     LocalFs.publishOnce(target, published) { loserStage =>
@@ -42,7 +42,7 @@ class PublishOnceSpec extends AnyFunSuite {
   }
 
   test("a rename that fails for another reason throws; failed builds leave nothing") {
-    val root = Files.createTempDirectory("publish_once_fail")
+    val root = TestSpark.tempDir("publish_once_fail")
     val target = root.resolve("idx")
     // an unpublished, non-empty directory in the way is not a lost race
     Files.createDirectories(target)

@@ -56,11 +56,11 @@ class RealDataSpec extends AnyFunSuite {
   test("full pipeline on real W data: bronze -> gold -> backtest -> submission") {
     val raw = csv("WRegularSeasonCompactResults.csv")
       .filter(col("Season").between(2019, 2021))
-    val in = Files.createTempDirectory("graft_real_in")
+    val in = TestSpark.tempDir("graft_real_in")
     // stage the subset through our own single-file CSV exporter
     Lakehouse.exportSingleCsv(raw, in.resolve("WRegularSeasonCompactResults.csv").toString)
-    val lake = Files.createTempDirectory("graft_real_lake")
-    val sub = Files.createTempDirectory("graft_real_out").resolve("submission.csv")
+    val lake = TestSpark.tempDir("graft_real_lake")
+    val sub = TestSpark.tempDir("graft_real_out").resolve("submission.csv")
     val result = graft.jobs.PipelineRunner.run(
       spark, in.toString, lake.toString, graft.jobs.PipelineConfig(league = "W"),
       exportCsv = Some(sub.toString))

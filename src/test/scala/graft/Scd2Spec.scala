@@ -76,11 +76,11 @@ class Scd2Spec extends AnyFunSuite {
     // maintains a stored table); time-ordered files so each batch is
     // at-or-after the open versions, applyBatch's documented contract
     val whole = canon(Scd2.fromChangeLog(log, "k", "state", "ts", "id"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2_src")
+    val dir = TestSpark.tempDir("graft_scd2_src")
     val parts = Seq(log.where($"ts" < 25), log.where($"ts" >= 25 && $"ts" < 45),
       log.where($"ts" >= 45))
     parts.zipWithIndex.foreach { case (p, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_scd2_stage")
+      val tmp = TestSpark.tempDir("graft_scd2_stage")
       p.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val it = java.nio.file.Files.list(tmp).iterator()
       var moved = false

@@ -11,7 +11,7 @@ class SchemaDiffSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("reports added, removed, and type-changed columns by name") {
-    val dir = java.nio.file.Files.createTempDirectory("schdiff").toString
+    val dir = TestSpark.tempDir("schdiff").toString
     val g1 = ManifestCommit.writeVersioned(
       Seq((1, "x", 2.0)).toDF("a", "b", "v"), dir)
     val g2 = ManifestCommit.writeVersioned(
@@ -25,7 +25,7 @@ class SchemaDiffSpec extends AnyFunSuite {
   }
 
   test("identical schemas produce no findings; column order is not drift") {
-    val dir = java.nio.file.Files.createTempDirectory("schdiff2").toString
+    val dir = TestSpark.tempDir("schdiff2").toString
     val g1 = ManifestCommit.writeVersioned(Seq((1, "x")).toDF("a", "b"), dir)
     val g2 = ManifestCommit.writeVersioned(
       Seq(("y", 2)).toDF("b", "a").select("b", "a"), dir)

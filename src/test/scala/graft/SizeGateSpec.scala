@@ -1,14 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Registry
+import graft.queries.{CorpusQueries, Registry}
+import graft.sources.SpineCache
 import graft.text.MmrSelect
 
 /** The one size-gate switch (`spark.graft.sizegate.mode`): an unknown
   * mode fails loudly, `distributed` turns every gate off without
-  * sizing its input, an MMR pool above its bound runs the distributed
-  * greedy instead of failing, and one registry query per gated
-  * function returns the same rows in both modes. */
+  * sizing its input, derived tables are keyed by mode, an MMR pool
+  * above its bound runs the distributed greedy instead of failing, and
+  * one registry query per gated function returns the same rows in both
+  * modes. */
 class SizeGateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -38,6 +40,24 @@ class SizeGateSpec extends AnyFunSuite {
           fail("the distributed mode must not size the input")))
       assert(!SizeGate.local(Seq(1, 2).toDF("x"), 2L))
     }
+  }
+
+  test("a spine and a stored index built under one mode are never " +
+    "served to the other") {
+    val dir = TestSpark.tempDir("gate_spine_src").toString
+    spark.range(10).write.parquet(s"$dir/t.parquet")
+    var builds = Seq.empty[String]
+    def spine = SpineCache.table(spark, dir, "gate_mode_spine", "t") {
+      builds :+= SizeGate.mode(spark)
+      spark.range(3).toDF("x")
+    }.count()
+    assert(SizeGateModes.both(spine) == ((3L, 3L)))
+    assert(SizeGateModes.both(spine) == ((3L, 3L)))
+    assert(builds == Seq("auto", "distributed"))
+    def index = CorpusQueries.storedIndexPath(spark, "gate_idx", dir, "t")
+    val (autoPath, distPath) = SizeGateModes.both(index)
+    assert(autoPath != distPath)
+    assert(SizeGateModes.under("auto")(index) == autoPath)
   }
 
   test("an MMR pool above its bound runs the distributed greedy") {
@@ -88,7 +108,9 @@ class SizeGateSpec extends AnyFunSuite {
     "q891_distance_correlation",      // DistDependenceQueries.dcorStats
     "q539_hodges_lehmann_shift",      // SegmentQueries.hlSummary
     "q166_mmr_selection",             // MmrSelect.select
-    "q237_greedy_coverage")           // MmrSelect.coverSelect
+    "q237_greedy_coverage",           // MmrSelect.coverSelect
+    "q65_neardup_clusters",           // Dedup.alternatingStarCC
+    "q50_grouped_topk")               // GroupedTopKExec
 
   test("every gated function's registry query: auto rows = distributed " +
     "rows") {

@@ -25,7 +25,7 @@ class SpineCacheSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def fixture(): String = {
-    val dir = Files.createTempDirectory("spine_src").toString
+    val dir = TestSpark.tempDir("spine_src").toString
     spark.range(10).write.parquet(s"$dir/t.parquet")
     dir
   }

@@ -11,8 +11,7 @@ class TableEvolutionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft-evo").toString
+  private def tmp(): String = TestSpark.tempDir("graft-evo").toString
 
   test("writeVersionedExclusive: stale base generation fails loudly before writing") {
     val path = tmp()

@@ -12,7 +12,7 @@ class WapSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_wap").toString
+    TestSpark.tempDir("graft_wap").toString
 
   test("a passing audit publishes; reads see the new generation") {
     val path = tmp()

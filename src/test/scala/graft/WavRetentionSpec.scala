@@ -56,8 +56,7 @@ class WavRetentionSpec extends AnyFunSuite {
   }
 
   test("expireGenerations keeps the newest N readable, drops the rest") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-expire").toString
+    val dir = TestSpark.tempDir("graft-expire").toString
     val gens = (1 to 4).map { i =>
       ManifestCommit.writeVersioned(
         Seq((i.toLong, s"v$i")).toDF("k", "v"), dir)
@@ -82,8 +81,7 @@ class WavRetentionSpec extends AnyFunSuite {
 
   test("GDPR purge runbook: delete + expire + vacuum removes the bytes") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-purge").toString
+    val dir = TestSpark.tempDir("graft-purge").toString
     ManifestCommit.writeVersioned(
       Seq((1L, "alice"), (2L, "bob"), (3L, "carol"))
         .toDF("uid", "name"), dir)
@@ -113,8 +111,7 @@ class WavRetentionSpec extends AnyFunSuite {
   }
 
   test("expireGenerations keeps files shared with surviving generations") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-expire-share").toString
+    val dir = TestSpark.tempDir("graft-expire-share").toString
     // gen1 full write; gen2 APPEND re-references gen1's files
     ManifestCommit.writeVersioned(Seq((1L, "a")).toDF("k", "v"), dir)
     ManifestCommit.appendBatch(Seq((2L, "b")).toDF("k", "v"), dir,

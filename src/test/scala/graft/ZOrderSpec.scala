@@ -74,7 +74,7 @@ class ZOrderSpec extends AnyFunSuite {
       .toDF("a", "b")
     val zb = 5 // 32x32 grid
     def commit(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = Files.createTempDirectory("zorder").toString
+      val dir = TestSpark.tempDir("zorder").toString
       ManifestCommit.writeVersionedWithStats(df, dir, Seq("a", "b"))
       dir
     }
