@@ -36,6 +36,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `plans.GroupedTopKExec`. This gate is decided per partition at
   *     run time: a partition with more distinct keys hands its rows to
   *     Spark's spilling external sorter.
+  *   - [[SortBytes]] = 10 MB (Spark's broadcast-join default): the
+  *     estimated input size of a global sort that `plans.SmallSort`
+  *     plans on one partition, without the range shuffle's sampling
+  *     job. This gate is decided at planning time from the optimizer's
+  *     size estimate, so it starts no job.
   *
   * Select with `spark.graft.sizegate.mode` (session conf, read at call
   * time like [[Materialize.ModeKey]]):
@@ -44,8 +49,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     twin, a larger one the distributed plan.
   *   - `distributed`: every gate takes the distributed plan without
   *     sizing its input (every GroupedTopK partition goes to the
-  *     sorter), so the oracle gate and the twin specs can check the
-  *     branch that the test scale factors never reach.
+  *     sorter, every global sort takes the range shuffle), so the
+  *     oracle gate and the twin specs can check the branch that the
+  *     test scale factors never reach.
   *
   * A mode only selects branches; no value raises a bound. Sites keep
   * their own extra conditions (minimum sizes, value magnitudes, lag
@@ -61,6 +67,7 @@ object SizeGate {
   val HistRows = 1L << 13
   val PoolRows = 100000L
   val TopKKeys = 1L << 18
+  val SortBytes = 10L << 20
 
   /** The session's mode, `auto` or `distributed`; any other value
     * throws naming the key. */

@@ -14,10 +14,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Registry.all.map(q => q.name -> q.run).toMap
+    Registry.byName.map { case (name, q) => name -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    Registry.all.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
+    Registry.byName.flatMap { case (name, q) => q.oracle.map(name -> _) }
 }

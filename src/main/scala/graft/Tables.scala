@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Loaders for the driver-generated synthetic tables (see TESTDATA.md).
   * Plain parquet scans — Catalyst pushes filters/column pruning into the
   * scan, so callers should select/filter early and let the optimizer work.
+  * Reads go through [[graft.sources.ParquetRead]], so each file's schema
+  * is inferred once per process.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -23,7 +25,7 @@ object Tables {
       scala.util.Try(
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     }
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.ParquetRead(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 import org.apache.spark.SparkEnv
@@ -33,6 +34,8 @@ import scala.collection.mutable
   * rows of each key group with O(1) extra memory — so the operator keeps
   * the heap's O(n log k) fast path where it fits and the window plan's
   * sort-spill robustness where it doesn't, per partition, at run time.
+  * The SQL metrics `sorterPartitions` and `sorterRows` count the
+  * partitions and rows that took the sorter path.
   *
   * Wired through the full extension stack: logical node → planner
   * Strategy → physical UnaryExecNode, registered per-session.
@@ -58,6 +61,12 @@ case class GroupedTopKExec(
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "sorterPartitions" ->
+      SQLMetrics.createMetric(sparkContext, "partitions handed to the sorter"),
+    "sorterRows" ->
+      SQLMetrics.createMetric(sparkContext, "rows handed to the sorter"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val kLocal = k
     val maxKeys =
@@ -67,6 +76,8 @@ case class GroupedTopKExec(
     val keysLocal = keys
     val orderLocal = order
     val pageSize = SparkEnv.get.memoryManager.pageSizeBytes
+    val sorterPartitions = longMetric("sorterPartitions")
+    val sorterRows = longMetric("sorterRows")
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(keysLocal, childOutput)
       val ord = GenerateOrdering.generate(orderLocal, childOutput)
@@ -116,8 +127,12 @@ case class GroupedTopKExec(
           case other => toUnsafe(other)
         }
         val buffered = heaps.valuesIterator.flatMap(_.iterator)
+        sorterPartitions += 1
         val sorted = sorter.sort(
-          (buffered ++ Iterator.single(overflowRow) ++ it).map(unsafe))
+          (buffered ++ Iterator.single(overflowRow) ++ it).map { r =>
+            sorterRows += 1
+            unsafe(r)
+          })
         heaps.clear()
         new Iterator[InternalRow] {
           private var curKey: UnsafeRow = null

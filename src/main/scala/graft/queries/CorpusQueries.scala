@@ -132,9 +132,9 @@ object CorpusQueries {
       |${sqlIvfAdcOracle(40)}
       |""".stripMargin)) { (s, dir) =>
     import graft.sim.ProductQuantize
-    import graft.sources.ManifestCommit
+    import graft.sources.{ManifestCommit, SpineCache}
     val emb = Tables.embeddings(s, dir)
-    val idxPath = storedIndexPath(s, "ivfpq_inc", dir, "embeddings")
+    val idxPath = SpineCache.indexPath(s, dir, "ivfpq_inc", "embeddings")
     if (ManifestCommit.latest(s"$idxPath/model").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -214,9 +214,9 @@ object CorpusQueries {
     val b = 0.75
     Q("q185_bm25_incremental",
       Some(sqlBm25TopK(10, 4, k1, b))) { (s, dir) =>
-      import graft.sources.ManifestCommit
+      import graft.sources.{ManifestCommit, SpineCache}
       val docs = Tables.documents(s, dir)
-      val idxPath = storedIndexPath(s, "bm25_pinc", dir, "documents")
+      val idxPath = SpineCache.indexPath(s, dir, "bm25_pinc", "documents")
       // NO latest().isEmpty guard: appendBatch is idempotent by
       // (appId, batchId), so calling both ingests unconditionally is
       // self-healing — a crash between them leaves batch 0 committed
@@ -233,18 +233,6 @@ object CorpusQueries {
         .orderBy(col("query_id"), col("rk"))
     }
   }
-
-  /** Where the stored index `name` built from source `table` under `dir`
-    * lives: `<java.io.tmpdir>/graft_<name>_v1_<fingerprint>`, its
-    * `SpineCache.key` at version 1 (bump on a layout change). The
-    * fingerprint covers the source file's path + length + mtime and the
-    * size-gate mode, so regenerated testdata gets a fresh index path, a
-    * stale survivor is never read, and each mode builds its own index. */
-  private[graft] def storedIndexPath(s: org.apache.spark.sql.SparkSession,
-      name: String, dir: String, table: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_" + graft.sources.SpineCache.key(s, dir, name, Seq(table), 1))
-      .toString
 
   /** DuckDB replay of SketchExprs.hyperplaneSig over `embeddings.embedding`
     * (64 dims): bit p set iff the LCG-plane projection is > 0 — the exact
@@ -1129,13 +1117,14 @@ object CorpusQueries {
       |${sqlIvfAdcOracle(50)}
       |""".stripMargin)) { (s, dir) =>
     import graft.sim.ProductQuantize
-    import graft.sources.ManifestCommit
+    import graft.sources.{ManifestCommit, SpineCache}
     val emb = Tables.embeddings(s, dir)
-    // publish once per (format version, source-content fingerprint);
-    // later runs only read — the stored-index discipline (q137's
-    // pattern). The fingerprint covers the source file's length+mtime,
-    // so regenerated testdata can never silently feed a stale index.
-    val idxPath = storedIndexPath(s, "ivfpq_idx", dir, "embeddings")
+    // publish once per (format version, source-content fingerprint)
+    // in the process; later runs only read — the stored-index
+    // discipline (q137's pattern). The fingerprint covers the source
+    // file's length+mtime, so regenerated testdata can never silently
+    // feed a stale index.
+    val idxPath = SpineCache.indexPath(s, dir, "ivfpq_idx", "embeddings")
     if (ManifestCommit.latest(s"$idxPath/codes").isEmpty) {
       val model = ProductQuantize.fit(emb, "vec_id", "embedding",
         dims = 64, subspaces = 8, codebookSize = 16)
@@ -1234,15 +1223,15 @@ object CorpusQueries {
     val b = 0.75
     Q("q137_bm25_stored_query",
       Some(sqlBm25TopK(20, 5, k1, b))) { (s, dir) =>
-      import graft.sources.ManifestCommit
+      import graft.sources.{ManifestCommit, SpineCache}
       val docs = Tables.documents(s, dir)
       // one stored index per (format version, source-content
-      // fingerprint); the first run of a generation publishes it, later
+      // fingerprint) per process; the first run publishes it, later
       // runs only read. v1 = layout version (bump on schema change);
       // the fingerprint covers the source file's length+mtime, so
       // neither a layout change NOR regenerated testdata can feed a
       // stale survivor to the reader
-      val idxPath = storedIndexPath(s, "bm25_idx", dir, "documents")
+      val idxPath = SpineCache.indexPath(s, dir, "bm25_idx", "documents")
       if (ManifestCommit.latest(idxPath).isEmpty)
         graft.text.Bm25.writeIndex(docs, "doc_id", "text", idxPath)
       graft.text.Bm25.topKFromIndex(ManifestCommit.read(s, idxPath),

@@ -281,11 +281,11 @@ object CorpusStatsQueries {
         |       CAST(1 AS BIGINT) AS sketches_agree
         |FROM e ORDER BY source
         |""".stripMargin)) { (s, dir) =>
-      import graft.sources.{LocalFs, ManifestCommit}
+      import graft.sources.{LocalFs, ManifestCommit, SpineCache}
       val docs = Tables.documents(s, dir).where(col("text").isNotNull)
       def toks(d: org.apache.spark.sql.DataFrame) = d.select(col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("w"))
-      val path = CorpusQueries.storedIndexPath(s, "kmv_idx", dir, "documents")
+      val path = SpineCache.indexPath(s, dir, "kmv_idx", "documents")
       LocalFs.publishOnce(java.nio.file.Paths.get(path),
         p => ManifestCommit.latest(p.toString).nonEmpty) { stage =>
         ManifestCommit.writeVersioned(

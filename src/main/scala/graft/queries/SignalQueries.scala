@@ -2306,8 +2306,8 @@ object SignalQueries {
     * the query reads the stored result. The oracle is still the
     * all-pairs rebuild, so the hash match proves the whole
     * store → read → fold → store loop loses nothing (the q136/q137
-    * stored-index discipline applied to dedup state). Build-once via
-    * the content-fingerprinted path; later runs only read. */
+    * stored-index discipline applied to dedup state). Build-once per
+    * process via the content-fingerprinted path; later runs only read. */
   def q251: Q = Q(
     "q251_stored_cluster_labels",
     Some(s"""
@@ -2316,9 +2316,9 @@ object SignalQueries {
       |SELECT doc_id, cluster_id FROM lbl ORDER BY doc_id
       |""".stripMargin)) { (s, dir) =>
     import graft.dedup.Dedup
-    import graft.sources.{LocalFs, ManifestCommit}
+    import graft.sources.{LocalFs, ManifestCommit, SpineCache}
     val docs = Tables.documents(s, dir)
-    val path = CorpusQueries.storedIndexPath(s, "clusters", dir, "documents")
+    val path = SpineCache.indexPath(s, dir, "clusters", "documents")
     // build BOTH generations in a staging dir published once: a crash
     // between the gen1 and gen2 writes must not leave a half-built
     // (old-labels-only) dataset behind the existence check — readers
@@ -2454,9 +2454,9 @@ object SignalQueries {
       |SELECT doc_id, cluster_id FROM lbl ORDER BY doc_id
       |""".stripMargin)) { (s, dir) =>
     import graft.dedup.Dedup
-    import graft.sources.{LocalFs, ManifestCommit}
+    import graft.sources.{LocalFs, ManifestCommit, SpineCache}
     val docs = Tables.documents(s, dir)
-    val path = CorpusQueries.storedIndexPath(s, "profidx", dir, "documents")
+    val path = SpineCache.indexPath(s, dir, "profidx", "documents")
     LocalFs.publishOnce(java.nio.file.Paths.get(path),
       p => ManifestCommit.latest(p.resolve("labels").toString).nonEmpty) { stagePath =>
       val stage = stagePath.toString

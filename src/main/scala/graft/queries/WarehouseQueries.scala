@@ -575,9 +575,9 @@ object WarehouseQueries {
       |SELECT key, cents, priority FROM g2
       |ORDER BY key
       |""".stripMargin)) { (s, dir) =>
-    import graft.sources.{LocalFs, ManifestCommit}
+    import graft.sources.{LocalFs, ManifestCommit, SpineCache}
     val orders = Tables.orders(s, dir)
-    val path = CorpusQueries.storedIndexPath(s, "schema_evo", dir, "orders")
+    val path = SpineCache.indexPath(s, dir, "schema_evo", "orders")
     LocalFs.publishOnce(java.nio.file.Paths.get(path),
       p => ManifestCommit.latest(p.toString).nonEmpty) { stagePath =>
       val stage = stagePath.toString

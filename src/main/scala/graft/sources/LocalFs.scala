@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The local-filesystem primitives every stage-and-publish path in
   * `graft.sources` shares: directory listing, recursive delete, the
-  * source-data fingerprint that keys derived tables, and publish-once
-  * of a directory build. */
+  * source-data fingerprint that keys derived tables, the per-file
+  * stamps that key memoized schemas, and publish-once of a directory
+  * build. */
 private[graft] object LocalFs {
 
   def list(dir: Path): Seq[Path] = {
@@ -26,13 +27,21 @@ private[graft] object LocalFs {
     * passes the size-gate mode). A regenerated source is a new key,
     * never a stale hit. */
   def fingerprint(dir: String, tables: Seq[String], salt: String = ""): String = {
-    val fps = tables.map { t =>
-      val f = Paths.get(dir, s"$t.parquet").toFile
-      s"${f.getAbsolutePath}|${f.lastModified}|${f.length}"
-    }
+    val fps = tables.map(t => statLine(Paths.get(dir, s"$t.parquet")))
     MessageDigest.getInstance("SHA-1")
       .digest(s"$dir|${fps.mkString(";")}|$salt".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** `path|mtime|length` of `p`, or of each file under it when `p` is a
+    * directory, in path order. */
+  def stat(p: Path): Seq[String] =
+    if (Files.isDirectory(p)) list(p).sortBy(_.toString).flatMap(stat)
+    else Seq(statLine(p))
+
+  private def statLine(p: Path): String = {
+    val f = p.toFile
+    s"${f.getAbsolutePath}|${f.lastModified}|${f.length}"
   }
 
   /** Build a directory once and publish it at `target`. Nothing runs

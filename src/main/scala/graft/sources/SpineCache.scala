@@ -51,7 +51,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Within one invocation the spine is the ordinary shared materialized
   * intermediate (built once, inside the first consumer's timed region,
   * then read), exactly like an inline `materialize()`, never a
-  * cross-run memo. */
+  * cross-run memo. The query layer's stored indexes ([[indexPath]])
+  * live under the same root and share this lifetime.
+  *
+  * A spine is read through [[ParquetRead]], so its schema is inferred
+  * once per build. */
 object SpineCache {
 
   private lazy val cacheRoot: Path = {
@@ -72,11 +76,11 @@ object SpineCache {
       sourceTables: Seq[String], version: Int = 1)
       (build: => DataFrame): DataFrame =
     synchronized {
-      val path = cacheRoot.resolve(key(s, dir, name, sourceTables, version))
+      val path = under(key(s, dir, name, sourceTables, version))
       LocalFs.publishOnce(path, p => Files.exists(p.resolve("_SUCCESS"))) {
         stage => build.write.mode("overwrite").parquet(stage.toString)
       }
-      s.read.parquet(path.toString)
+      ParquetRead(s, path.toString)
     }
 
   /** The key of a table that build `version` of `name` derives from
@@ -89,16 +93,36 @@ object SpineCache {
     s"${name}_v${version}_" +
       LocalFs.fingerprint(dir, sourceTables, graft.SizeGate.mode(s))
 
+  /** Where the stored index `name` built from source `table` under
+    * `dir` lives: `<cache root>/<key>` at version 1 (bump on a layout
+    * change). The caller builds and appends there; within a process
+    * later runs only read it, [[clear]] drops it and the process's
+    * exit deletes it. */
+  def indexPath(s: SparkSession, dir: String, name: String,
+      table: String): String =
+    under(key(s, dir, name, Seq(table), 1)).toString
+
+  /** `cacheRoot/<key>`; a `name` that is a path (a swapped `dir` and
+    * `name`) would resolve outside the root, so it throws. */
+  private def under(key: String): Path = {
+    val p = cacheRoot.resolve(key)
+    require(p.getParent == cacheRoot,
+      s"SpineCache key '$key' leaves the cache root: is the name a path?")
+    p
+  }
+
   /** Single-source convenience overload. */
   def table(s: SparkSession, dir: String, name: String,
       sourceTable: String)(build: => DataFrame): DataFrame =
     table(s, dir, name, Seq(sourceTable))(build)
 
-  /** Drop every spine built so far by THIS process. Bench calls this
-    * between its two measurement passes so each pass recomputes every
-    * spine from the parquet inputs — pass 2 stays a genuinely cold
-    * repeat measurement, never a warm rerun of pass 1's spines. */
+  /** Drop every spine and stored index built so far by THIS process,
+    * and their memoized schemas. Bench calls this between its two
+    * measurement passes so each pass recomputes every spine and index
+    * from the parquet inputs — pass 2 stays a genuinely cold repeat
+    * measurement, never a warm rerun of pass 1's tables. */
   def clear(): Unit = synchronized {
     LocalFs.list(cacheRoot).foreach(LocalFs.deleteRecursively)
+    ParquetRead.forget(cacheRoot.toString)
   }
 }

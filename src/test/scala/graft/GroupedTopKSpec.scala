@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.{GroupedTopK, GroupedTopKExec}
 
-class GroupedTopKSpec extends AnyFunSuite {
+class GroupedTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -33,11 +35,27 @@ class GroupedTopKSpec extends AnyFunSuite {
       .repartition(4)
     // auto keeps every partition on the heap map; distributed sends
     // every partition through the sorter path
-    val (expected, spilled) = SizeGateModes.both(GroupedTopK.topKPerKey(
+    val ((expected, autoSorted), (spilled, distSorted)) = SizeGateModes.both {
+      val out = GroupedTopK.topKPerKey(
         df, Seq("k"), Seq("v" -> false, "id" -> true), k = 2)
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet)
+      (out.collect().map(r => (r.getInt(0), r.getInt(1))).toSet, sorterMetrics(out))
+    }
     assert(spilled === expected)
     assert(spilled.nonEmpty)
+    // (partitions, rows) handed to the sorter: none under auto, every
+    // row of every partition under distributed
+    assert(autoSorted === ((0L, 0L)))
+    assert(distSorted._1 >= 1L)
+    assert(distSorted._2 === 20000L)
+  }
+
+  /** The sorter-path metrics of the one GroupedTopKExec in `out`'s
+    * executed plan, after `out` ran. */
+  private def sorterMetrics(out: DataFrame): (Long, Long) = {
+    val Seq(exec) = collect(out.queryExecution.executedPlan) {
+      case e: GroupedTopKExec => e
+    }
+    (exec.metrics("sorterPartitions").value, exec.metrics("sorterRows").value)
   }
 
   test("a partition past the heap bound hands its buffered heaps to the sorter") {

@@ -1,0 +1,60 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.SpineCache
+
+/** Each input file's parquet schema is inferred once per process: a
+  * later read of the same files states the schema and starts no job,
+  * and a rewritten file is inferred again. */
+class ParquetReadSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("a second Tables.apply of the same file starts no Spark job") {
+    val dir = TestSpark.tempDir("pread_once").toString
+    spark.range(10).selectExpr("id", "id * 2 AS y").write.parquet(s"$dir/t.parquet")
+    val first = JobCount.of(Tables(spark, dir, "t"))
+    assert(first >= 1, "the first read infers the schema with a job")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(JobCount.of { df = Tables(spark, dir, "t") } === 0)
+    assert(df.schema.fieldNames.toSeq === Seq("id", "y"))
+    assert(df.selectExpr("sum(y)").head().getLong(0) === 90L)
+  }
+
+  test("a file rewritten with a different schema is read with the new schema") {
+    val dir = TestSpark.tempDir("pread_rewrite").toString
+    val path = s"$dir/t.parquet"
+    spark.range(4).toDF("x").write.parquet(path)
+    assert(Tables(spark, dir, "t").schema.fieldNames.toSeq === Seq("x"))
+    spark.range(3).selectExpr("CAST(id AS STRING) AS a", "id * 10 AS b")
+      .write.mode("overwrite").parquet(path)
+    val df = Tables(spark, dir, "t")
+    assert(df.schema.fieldNames.toSeq === Seq("a", "b"))
+    assert(df.selectExpr("sum(b)").head().getLong(0) === 30L)
+  }
+
+  test("a changed parquet setting is inferred again") {
+    val dir = TestSpark.tempDir("pread_conf").toString
+    spark.range(2).write.parquet(s"$dir/t.parquet")
+    def read(): Unit = Tables(spark, dir, "t")
+    read()
+    assert(JobCount.of(read()) === 0)
+    val key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try {
+      assert(JobCount.of(read()) >= 1)
+      assert(JobCount.of(read()) === 0)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a spine rebuilt after clear() is read with its new schema") {
+    val dir = TestSpark.tempDir("pread_spine").toString
+    spark.range(3).write.parquet(s"$dir/t.parquet")
+    def spine(cols: String*) =
+      SpineCache.table(spark, dir, "pread_spine", "t")(spark.range(3).selectExpr(cols: _*))
+    assert(spine("id AS u").schema.fieldNames.toSeq === Seq("u"))
+    SpineCache.clear()
+    val df = spine("id AS v", "id + 1 AS w")
+    assert(df.schema.fieldNames.toSeq === Seq("v", "w"))
+    assert(df.selectExpr("sum(w)").head().getLong(0) === 6L)
+  }
+}

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.{CorpusQueries, Registry}
+import graft.queries.Registry
 import graft.sources.SpineCache
 import graft.text.MmrSelect
 
@@ -54,7 +54,7 @@ class SizeGateSpec extends AnyFunSuite {
     assert(SizeGateModes.both(spine) == ((3L, 3L)))
     assert(SizeGateModes.both(spine) == ((3L, 3L)))
     assert(builds == Seq("auto", "distributed"))
-    def index = CorpusQueries.storedIndexPath(spark, "gate_idx", dir, "t")
+    def index = SpineCache.indexPath(spark, dir, "gate_idx", "t")
     val (autoPath, distPath) = SizeGateModes.both(index)
     assert(autoPath != distPath)
     assert(SizeGateModes.under("auto")(index) == autoPath)

@@ -94,4 +94,37 @@ class SpineCacheSpec extends AnyFunSuite {
       })
     assert(roots().flatMap(LocalFs.list).size == 2)
   }
+
+  test("a stored index lives under the cache root and clear() drops it") {
+    val dir = fixture()
+    val path = Paths.get(SpineCache.indexPath(spark, dir, "spec_idx", "t"))
+    assert(roots().contains(path.getParent), path)
+    assert(!path.getFileName.toString.startsWith("graft_"), path)
+    graft.sources.ManifestCommit.writeVersioned(spark.range(2).toDF("x"),
+      path.toString)
+    assert(Files.isDirectory(path))
+    SpineCache.clear()
+    assert(!Files.exists(path))
+    // a swapped dir and name resolves outside the root: refused
+    assertThrows[IllegalArgumentException](
+      SpineCache.indexPath(spark, "spec_idx", dir, "t"))
+  }
+
+  test("a registry query builds its stored index under the cache root") {
+    val sf = TestSpark.tempDir("spine_orders").toString
+    spark.range(20).selectExpr("id AS o_orderkey",
+        "CAST(id * 1.5 AS DECIMAL(12,2)) AS o_totalprice",
+        "concat('P', CAST(id % 3 AS STRING)) AS o_orderpriority")
+      .write.parquet(s"$sf/orders.parquet")
+    SpineCache.clear()
+    val q = graft.queries.Registry.byName("q291_schema_evolution_read")
+    val rows = q.run(spark, sf).count()
+    assert(nonDotEntries().exists(_.startsWith("schema_evo_v1_")),
+      nonDotEntries())
+    // clear() drops it: the next run builds it again, with the same rows
+    SpineCache.clear()
+    assert(nonDotEntries().isEmpty)
+    assert(q.run(spark, sf).count() == rows)
+    assert(nonDotEntries().exists(_.startsWith("schema_evo_v1_")))
+  }
 }
