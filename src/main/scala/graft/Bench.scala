@@ -1,30 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // scan-parallelism floor (guide §6): Spark sizes file splits as
-      // min(maxPartitionBytes, max(openCostInBytes, bytes/defaultParallelism)).
-      // The sandbox tables are single parquet files of 0.3-11 MB, so the
-      // 4 MB default openCost floor hands every fact scan 1-3 tasks and
-      // the whole suite runs near-serial regardless of $SPARK_GRAFT_CPUS
-      // (event-log profile r12: the hot stages were all 1-6 tasks at 32
-      // cores). 128 KB keeps the split size derived from input size ÷
-      // core count — SCALE-ADAPTIVE, not a local constant: on a real
-      // cluster bytes/core ≫ maxPartitionBytes, so splits stay 128 MB
-      // and this setting is a no-op.
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "WARN")
     // pay session/codegen/parquet-reader/page-cache warmup outside the
     // per-query timings (the first scan of each table + the first decimal
     // aggregate otherwise lands on whichever query runs first)
@@ -94,10 +73,6 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.isEmpty || only(name) }
         .map { case (name, fn) =>
-        // label the query's jobs (guide §1.5) so an event-log profile
-        // (spark.eventLog.enabled) attributes every job to its query;
-        // costs nothing when event logging is off
-        spark.sparkContext.setJobDescription(name)
         val gc0 = gcMsNow
         val sh0 = shufBytes.get()
         val t0 = System.nanoTime()

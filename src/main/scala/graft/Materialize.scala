@@ -26,7 +26,9 @@ import org.apache.spark.storage.StorageLevel
   * Select with `spark.graft.materialize.mode` (session conf, read at
   * call time so tests can flip it per-query).
   *
-  * Measured trade (tools/MatModeProbe, sf0.1, local[32]): `persist` is
+  * Measured trade (sf0.1, local[32], each query timed under both modes
+  * after a warm-up pass; `spark.graft.materialize.mode=persist` on
+  * `Verify` or `Bench` reproduces it): `persist` is
   * neutral on DAG-shaped pipelines (q98 3.6→3.6 s, q68 2.4→2.4 s) but
   * costs on ITERATIVE ones because lineage is retained and each
   * round's plan re-includes all prior rounds (q99 TextRank 2.3→5.7 s

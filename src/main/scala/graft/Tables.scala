@@ -16,29 +16,23 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // Spark ≤4.0 refuses TIMESTAMP(NANOS) parquet outright unless this
-      // legacy conf maps it to LongType; on 4.1+ the conf no longer
-      // exists and setting it is a harmless no-op (the scan yields
-      // TIMESTAMP_NTZ instead). Set it best-effort so ONE jar reads the
-      // file on either line, then normalize whatever arrived.
-      scala.util.Try(
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
-    }
     val df = graft.sources.ParquetRead(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 
   /** events.ts is parquet TIMESTAMP(NANOS). The engine contract is
     * epoch-nanos LongType (monotonic long arithmetic everywhere).
-    * Spark version drift changes what the scan yields:
-    *   - ≤4.0 with `spark.sql.legacy.parquet.nanosAsLong`: LongType already.
-    *   - 4.1+: the legacy conf is gone; the scan yields TIMESTAMP_NTZ at
-    *     µs precision. Normalize explicitly: with session tz pinned to UTC
-    *     the NTZ wall time IS the UTC instant, so
-    *     `unix_micros(cast ts as timestamp) * 1000` reproduces epoch-ns at
-    *     µs precision — the same precision DuckDB's oracle comparisons use.
-    * Schema-adaptive so the same jar works on either Spark.
+    *   - Spark 4.1+ reads TIMESTAMP(NANOS) as TIMESTAMP_NTZ at µs
+    *     precision. With the session time zone pinned to UTC the NTZ wall
+    *     time IS the UTC instant, so
+    *     `unix_micros(cast ts as timestamp) * 1000` gives epoch-ns at µs
+    *     precision — the precision DuckDB's oracle comparisons use.
+    *   - A LongType column (a reader that maps the nanos to long, as
+    *     Spark ≤ 4.0 did under `spark.sql.legacy.parquet.nanosAsLong`)
+    *     already holds epoch-ns and passes through.
+    * Set no `spark.sql.legacy.parquet.*` conf on the way: `ParquetRead`'s
+    * stamp holds those settings, so writing one makes every table read
+    * before it infer its schema again.
     */
   def normalizeEventTs(df: DataFrame): DataFrame = {
     df.schema.find(_.name == "ts").map(_.dataType) match {

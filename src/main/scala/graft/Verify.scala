@@ -1,6 +1,5 @@
 package graft
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args
@@ -11,18 +10,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // scan-parallelism floor — same setting and rationale as Bench
-      // (split size = bytes ÷ cores on MB-scale single-file tables,
-      // unchanged 128 MB splits at cluster scale)
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "WARN")
     // env-drift tripwire (see tools/EnvCheck): a broken schema contract
     // surfaces as one pointed line at the top of the correctness run
     // instead of 17 cryptic per-query failures

@@ -1,6 +1,7 @@
 package graft.marchmania
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -47,16 +48,41 @@ object Elo {
       games: DataFrame,
       kFactor: Double = 20.0,
       initialRating: Double = 1500.0,
-      homeAdvantage: Double = 100.0): DataFrame = {
-    val in = games.select(
+      homeAdvantage: Double = 100.0): DataFrame =
+    fold(games, Seq(col("WScore").cast("int"), col("LScore").cast("int"),
+        col("HomeCode").cast("int")), kFactor, initialRating, homeAdvantage)(
+      weight = r => math.log(1.0 + (r.getInt(5) - r.getInt(6)).toDouble),
+      homeCode = _.getInt(7))
+
+  def perSeason(
+      games: DataFrame,
+      kFactor: Double = 20.0,
+      initialRating: Double = 1500.0): DataFrame =
+    fold(games, Nil, kFactor, initialRating, homeAdvantage = 0.0)(
+      weight = _ => 1.0, homeCode = _ => Neutral)
+
+  /** Expected score of a side rated `r` against a side rated `opp`. */
+  private def expected(r: Double, opp: Double): Double =
+    1.0 / (1.0 + math.pow(10.0, (opp - r) / 400.0))
+
+  /** Home code of a neutral-site game: no side gets the home bonus. */
+  private final val Neutral = 2
+
+  /** The one season fold. Input columns 0-4 are Season, DayNum, GameId,
+    * WTeamID, LTeamID, then `extra`; per game the winner gains
+    * `k · weight · (1 − expected)` and the loser loses it, with
+    * `homeAdvantage` added to the home side's rating in `expected`
+    * (home code 0 winner home, 1 winner away, else neutral). Weight 1.0
+    * and bonus 0.0 leave the plain update's arithmetic unchanged. */
+  private def fold(games: DataFrame, extra: Seq[Column], kFactor: Double,
+      initialRating: Double, homeAdvantage: Double)(
+      weight: InternalRow => Double, homeCode: InternalRow => Int): DataFrame = {
+    val in = games.select(Seq(
       col("Season").cast("int"),
       col("DayNum").cast("int"),
       col("GameId"),
       col("WTeamID").cast("int"),
-      col("LTeamID").cast("int"),
-      col("WScore").cast("int"),
-      col("LScore").cast("int"),
-      col("HomeCode").cast("int"))
+      col("LTeamID").cast("int")) ++ extra: _*)
     OrderedFold.foldGroups[mutable.LinkedHashMap[Int, Double]](
       in,
       keyCols = Seq("Season"),
@@ -65,49 +91,12 @@ object Elo {
       init = _ => mutable.LinkedHashMap.empty[Int, Double],
       step = (ratings, r) => {
         val w = r.getInt(3); val l = r.getInt(4)
-        val margin = (r.getInt(5) - r.getInt(6)).toDouble
-        val code = r.getInt(7)
         val rw = ratings.getOrElse(w, initialRating)
         val rl = ratings.getOrElse(l, initialRating)
-        val rwEff = rw + (if (code == 0) homeAdvantage else 0.0)
-        val rlEff = rl + (if (code == 1) homeAdvantage else 0.0)
-        val expectedW = 1.0 / (1.0 + math.pow(10.0, (rlEff - rwEff) / 400.0))
-        val delta = kFactor * math.log(1.0 + margin) * (1.0 - expectedW)
-        ratings(w) = rw + delta
-        ratings(l) = rl - delta
-        ratings
-      },
-      emit = (key, ratings) => {
-        val season = key.getInt(0)
-        ratings.toSeq.sortBy(_._1).iterator.map { case (team, elo) =>
-          new GenericInternalRow(Array[Any](season, team, elo))
-        }
-      })
-  }
-
-  def perSeason(
-      games: DataFrame,
-      kFactor: Double = 20.0,
-      initialRating: Double = 1500.0): DataFrame = {
-    val in = games.select(
-      col("Season").cast("int"),
-      col("DayNum").cast("int"),
-      col("GameId"),
-      col("WTeamID").cast("int"),
-      col("LTeamID").cast("int"))
-    val wIdx = 3; val lIdx = 4
-    OrderedFold.foldGroups[mutable.LinkedHashMap[Int, Double]](
-      in,
-      keyCols = Seq("Season"),
-      orderCols = Seq(col("DayNum"), col("GameId")),
-      outSchema = OutputSchema)(
-      init = _ => mutable.LinkedHashMap.empty[Int, Double],
-      step = (ratings, r) => {
-        val w = r.getInt(wIdx); val l = r.getInt(lIdx)
-        val rw = ratings.getOrElse(w, initialRating)
-        val rl = ratings.getOrElse(l, initialRating)
-        val expectedW = 1.0 / (1.0 + math.pow(10.0, (rl - rw) / 400.0))
-        val delta = kFactor * (1.0 - expectedW)
+        val code = homeCode(r)
+        val expectedW = expected(rw + (if (code == 0) homeAdvantage else 0.0),
+          rl + (if (code == 1) homeAdvantage else 0.0))
+        val delta = kFactor * weight(r) * (1.0 - expectedW)
         ratings(w) = rw + delta
         ratings(l) = rl - delta
         ratings

@@ -16,6 +16,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    left-folds in list order — the same IEEE op sequence as our
   *    secondary-sort fold, so doubles match bit-for-bit.
   *
+  * Labels: [[run]] sets the calling thread's Spark job description to
+  * the query's name and leaves it set, so the jobs its body starts
+  * (eager `materialize()` calls) and the caller's action on the result
+  * carry the name in the UI, the event log and every listener. It is a
+  * description, not a job group: a group would take the jobs out of
+  * `statusTracker.getJobIdsForGroup(null)`, which callers read to tell
+  * whether any job has run yet.
+  *
   * Planning rules: [[run]] registers `plans.SmallSort` on the session,
   * so everything that runs a registry query (Verify, Bench, SparkEntry,
   * the benchmark harness) plans the same way:
@@ -34,6 +42,7 @@ final case class Q(
     body: (SparkSession, String) => DataFrame) {
   val run: (SparkSession, String) => DataFrame = { (s, dir) =>
     graft.plans.SmallSort.register(s)
+    s.sparkContext.setJobDescription(name)
     body(s, dir)
   }
 }

@@ -129,14 +129,8 @@ object PlanLint {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.queries.Registry.all.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(8, "ERROR")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val res = lint(spark, sfDir, names)
     res.toSeq.sortBy(_._1).foreach { case (n, fs) =>
       fs.foreach { case (kind, node) => println(s"LINT $n $kind $node") }

@@ -46,6 +46,16 @@ class ParquetReadSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
+  test("re-reading a table after an events read starts no Spark job") {
+    val dir = TestSpark.tempDir("pread_events").toString
+    spark.range(3).write.parquet(s"$dir/t.parquet")
+    spark.range(3).selectExpr("id", "CAST(timestamp_seconds(id) AS TIMESTAMP_NTZ) AS ts")
+      .write.parquet(s"$dir/events.parquet")
+    Tables(spark, dir, "t")
+    assert(Tables.events(spark, dir).schema("ts").dataType.simpleString === "bigint")
+    assert(JobCount.of(Tables(spark, dir, "t")) === 0)
+  }
+
   test("a spine rebuilt after clear() is read with its new schema") {
     val dir = TestSpark.tempDir("pread_spine").toString
     spark.range(3).write.parquet(s"$dir/t.parquet")
