@@ -17,7 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     truss peel, the Bradley–Terry folds, HITS, percolation and
   *     attack panels, the permutation fan-out — and the driver
   *     union-find of `dedup.Dedup`'s near-duplicate clusters, whose
-  *     larger edge lists run the alternating-star rounds. Protects the
+  *     larger edge lists run the alternating-star rounds, and the
+  *     pipeline fit (`jobs.PipelineRunner`), whose gold feature table
+  *     at or under the bound is one partition in a fixed row order, so
+  *     each MLlib pass is one task. Protects the
   *     one task's (or the driver's) heap (a few arrays of 2^20 longs);
   *     at the test scale factors these dims are ≤ ~10^5 rows and per-round
   *     Spark-job overhead dominated.

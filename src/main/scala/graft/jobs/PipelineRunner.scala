@@ -1,11 +1,12 @@
 package graft.jobs
 
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SizeGate
 import graft.marchmania._
 import graft.ml.{Backtest, HpoParams, Modeling, Tuning}
-import graft.sources.{LakePaths, Lakehouse}
+import graft.sources.{LakePaths, Lakehouse, ManifestCommit, ParquetRead}
 
 /** In-process pipeline ≙ reference `jobs/01…12` + `run_pipeline.py`:
   * one SparkSession, sequential fail-fast stages, Bronze → Silver → Gold
@@ -13,6 +14,14 @@ import graft.sources.{LakePaths, Lakehouse}
   * subprocess per job), stages share the session so nothing re-pays JVM
   * startup, and silver/gold land partitioned by Season for downstream
   * partition pruning on season-split reads.
+  *
+  * A run starts only the jobs its outputs need: every table it writes
+  * is read back with the schema the write stated, one per-season count
+  * gives the folds' sizes and the gold row count, and the backtest, the
+  * final fit and the export share one cached feature table. Each
+  * stage's jobs carry the job description `graft:pipeline/<stage>`
+  * (`ingest`, `stats`, `elo`, `rolling`, `gold`, `backtest`, `fit`,
+  * `export`).
   */
 object PipelineRunner {
 
@@ -43,9 +52,11 @@ object PipelineRunner {
       hpoParamsPath: Option[String] = None): Result = {
     // Apply the config's execution settings for the DURATION of the run
     // only — run() must not leave a hidden session-conf mutation behind
-    // for callers whose own queries follow (restored in the finally).
+    // for callers whose own queries follow (restored in the finally,
+    // with the caller's job description).
     val prevConf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
       .map(k => k -> spark.conf.getOption(k))
+    val prevDescription = spark.sparkContext.getLocalProperty("spark.job.description")
     spark.conf.set("spark.sql.shuffle.partitions", config.shufflePartitions.toString)
     spark.conf.set("spark.sql.adaptive.enabled", config.adaptiveEnabled.toString)
     // object-store lake roots self-configure from the reference's env
@@ -71,9 +82,12 @@ object PipelineRunner {
       graft.sources.ObjectStore.applyToSession(spark,
         graft.sources.ObjectStore.s3aConfsFromEnv())
     try runStages(spark, inputDir, lakeRoot, config, exportCsv, hpoParamsPath)
-    finally prevConf.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    finally {
+      prevConf.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      spark.sparkContext.setJobDescription(prevDescription)
     }
   }
 
@@ -85,12 +99,16 @@ object PipelineRunner {
       exportCsv: Option[String],
       hpoParamsPath: Option[String]): Result = {
     val lake = LakePaths(lakeRoot)
+    def stage[T](name: String)(f: => T): T = {
+      spark.sparkContext.setJobDescription(s"graft:pipeline/$name")
+      f
+    }
 
     // 01: bronze ingest (csv -> trimmed -> parquet)
-    Lakehouse.ingestBronze(spark, inputDir, lake)
+    stage("ingest")(Lakehouse.ingestBronze(spark, inputDir, lake))
 
     // games with a stable GameId for deterministic fold/window tie-breaks
-    val games = spark.read.parquet(lake.bronze(s"${config.league}/regular_compact"))
+    val games = ParquetRead(spark, lake.bronze(s"${config.league}/regular_compact"))
     val gamesKeyed = games.select(
       col("Season").cast("int").as("Season"),
       col("DayNum").cast("int").as("DayNum"),
@@ -102,90 +120,98 @@ object PipelineRunner {
     // dataset hand-off under the configured commit protocol: reference
     // parity is plain overwrite; "manifest" routes through ManifestCommit
     // (crash-safe generations, object-store-safe publish) with the same
-    // Season partitioning either way
+    // Season partitioning either way. Both read back with the schema the
+    // write committed, without a footer-inference job.
     val manifest = config.commitProtocol == "manifest"
     def writeRead(df: DataFrame, path: String): DataFrame =
       if (manifest) {
-        graft.sources.ManifestCommit.writeVersioned(df, path, partitionBy = Seq("Season"))
-        graft.sources.ManifestCommit.read(spark, path)
-      } else {
-        df.write.mode(SaveMode.Overwrite).partitionBy("Season").parquet(path)
-        spark.read.parquet(path)
-      }
+        ManifestCommit.writeVersioned(df, path, partitionBy = Seq("Season"))
+        ManifestCommit.read(spark, path)
+      } else ParquetRead.write(df, path, Seq("Season"))
     def writeSilver(df: DataFrame, name: String): DataFrame =
       writeRead(df, lake.silver(config.league, name))
 
     // 02: team-season stats  05: elo  06: rolling snapshot
-    val stats = writeSilver(TeamSeasonStats.build(gamesKeyed), "team_season_stats")
-    val elo = writeSilver(
+    val stats = stage("stats")(
+      writeSilver(TeamSeasonStats.build(gamesKeyed), "team_season_stats"))
+    val elo = stage("elo")(writeSilver(
       Elo.perSeason(gamesKeyed, config.eloKFactor, config.eloInitialRating),
-      "elo_ratings")
-    val rolling = writeSilver(
+      "elo_ratings"))
+    val rolling = stage("rolling")(writeSilver(
       Rolling.lastPerSeason(Rolling.features(LongGames.build(gamesKeyed), config.rollingN)),
-      "rolling_last_per_season")
+      "rolling_last_per_season"))
 
     // 03: gold training matchups (two-sided attach + diffs + dropna)
-    val features = stats.select("Season", "TeamID", "WinRate", "AvgPointDiff")
-      .join(elo, Seq("Season", "TeamID"), "left")
-      .join(rolling.select(col("Season"), col("TeamID"), col("RollWinRate")),
-        Seq("Season", "TeamID"), "left")
-    val gold = Matchups.dropIncomplete(
-      Matchups.attachFeatures(
-        Matchups.buildLabeled(gamesKeyed), features,
-        diffCols = Seq("WinRate", "AvgPointDiff", "Elo")),
-      essential = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff"))
-    val goldRead = writeRead(gold, lake.gold(config.league, "training_matchups"))
-
-    // 07: rolling backtest (season bounds from config)
-    val featureCols = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff")
-    val metrics = Backtest.rollingSeasons(
-      Modeling.fillMissing(goldRead, featureCols), featureCols, maxIter = 15,
-      minTrainSeason = config.minTrainSeason, maxValSeason = config.maxValSeason)
-
-    // 04/12: final fit + submission export. With an HPO params file
-    // (S7, ≙ jobs/12:58-89) the export is the LR+GBT ensemble fit with
-    // the reloaded tuned params; absent file or param → the config's
-    // `modeling.*` settings;
-    // no path requested → the plain LR export.
-    val path = exportCsv.map { out =>
-      val full = Modeling.fillMissing(goldRead, featureCols).cache()
-      def idAnd(model: PipelineModel): DataFrame =
-        model.transform(full).select(
-          concat_ws("_", col("Season"), col("Team1"), col("Team2")).as("ID"),
-          Modeling.probOf().as("Pred"))
-      val scored = hpoParamsPath match {
-        case Some(p) =>
-          val hpo = HpoParams.read(p)
-          val lrParams = hpo.map(_.logreg.params).getOrElse(Map.empty)
-          val gbtParams = hpo.map(_.gbt.params).getOrElse(Map.empty)
-          val lrModel = HpoParams.lrFrom(lrParams, featureCols, config).fit(full)
-          val gbtModel = HpoParams.gbtFrom(gbtParams, featureCols, config).fit(full)
-          // blend by chaining transforms over ONE frame — gold matchup IDs
-          // are not unique (rematches), so the reference's join-on-ID blend
-          // (Modeling.blend, kept for unique-ID submission frames) would
-          // fan out here; chaining also skips the join entirely
-          val withLr = lrModel.transform(full)
-            .withColumn("pred_lr", Modeling.probOf())
-            .drop("features", "rawPrediction", "probability", "prediction")
-          gbtModel.transform(withLr)
-            .withColumn("pred_gbt", Modeling.probOf())
-            .select(
-              concat_ws("_", col("Season"), col("Team1"), col("Team2")).as("ID"),
-              (lit(config.blendAlphaGbt) * col("pred_gbt") +
-                lit(1.0 - config.blendAlphaGbt) * col("pred_lr")).as("Pred"))
-        case None =>
-          idAnd(Modeling.lrPipeline(featureCols, maxIter = 15).fit(full))
-      }
-      val written = Lakehouse.exportSingleCsv(scored, out).toString
-      full.unpersist()
-      written
+    val goldRead = stage("gold") {
+      val features = stats.select("Season", "TeamID", "WinRate", "AvgPointDiff")
+        .join(elo, Seq("Season", "TeamID"), "left")
+        .join(rolling.select(col("Season"), col("TeamID"), col("RollWinRate")),
+          Seq("Season", "TeamID"), "left")
+      val gold = Matchups.dropIncomplete(
+        Matchups.attachFeatures(
+          Matchups.buildLabeled(gamesKeyed), features,
+          diffCols = Seq("WinRate", "AvgPointDiff", "Elo")),
+        essential = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff"))
+      writeRead(gold, lake.gold(config.league, "training_matchups"))
     }
 
-    Result(
-      seasonsBuilt = stats.select("Season").distinct().count(),
-      goldRows = goldRead.count(),
-      backtest = metrics,
-      submissionPath = path)
+    // the gold rows per season give the folds' sizes and the gold row
+    // count. Under the size gate the feature table is ONE partition in a
+    // fixed row order: a fit of a few thousand rows is bound by per-task
+    // cost, and one task per MLlib pass sums its gradients in the same
+    // order on every run, so predictions and metrics are reproducible.
+    val featureCols = Seq("WinRateDiff", "AvgPointDiffDiff", "EloDiff")
+    val seasonRows = stage("backtest")(Backtest.seasonRows(goldRead))
+    val goldRows = seasonRows.map(_._2).sum
+    val filled = Modeling.fillMissing(goldRead, featureCols)
+    val full = (if (SizeGate.local(spark, SizeGate.EdgeRows)(goldRows))
+      filled.repartition(1).sortWithinPartitions("Season", "GameId", "Team1")
+    else filled).cache()
+    try {
+      // 07: rolling backtest (season bounds from config)
+      val metrics = stage("backtest")(Backtest.folds(full, seasonRows, featureCols,
+        minTrainSeasons = 1, maxIter = 15,
+        minTrainSeason = config.minTrainSeason, maxValSeason = config.maxValSeason))
+
+      // 04/12: final fit + submission export. With an HPO params file
+      // (S7, ≙ jobs/12:58-89) the export is the LR+GBT ensemble fit with
+      // the reloaded tuned params; absent file or param → the config's
+      // `modeling.*` settings;
+      // no path requested → the plain LR export.
+      val path = exportCsv.map { out =>
+        def matchupId = concat_ws("_", col("Season"), col("Team1"), col("Team2")).as("ID")
+        val scored = stage("fit")(hpoParamsPath match {
+          case Some(p) =>
+            val hpo = HpoParams.read(p)
+            val lrParams = hpo.map(_.logreg.params).getOrElse(Map.empty)
+            val gbtParams = hpo.map(_.gbt.params).getOrElse(Map.empty)
+            val lrModel = HpoParams.lrFrom(lrParams, featureCols, config).fit(full)
+            val gbtModel = HpoParams.gbtFrom(gbtParams, featureCols, config).fit(full)
+            // blend by chaining transforms over ONE frame — gold matchup IDs
+            // are not unique (rematches), so the reference's join-on-ID blend
+            // (Modeling.blend, kept for unique-ID submission frames) would
+            // fan out here; chaining also skips the join entirely
+            val withLr = lrModel.transform(full)
+              .withColumn("pred_lr", Modeling.probOf())
+              .drop("features", "rawPrediction", "probability", "prediction")
+            gbtModel.transform(withLr)
+              .withColumn("pred_gbt", Modeling.probOf())
+              .select(matchupId,
+                (lit(config.blendAlphaGbt) * col("pred_gbt") +
+                  lit(1.0 - config.blendAlphaGbt) * col("pred_lr")).as("Pred"))
+          case None =>
+            Modeling.lrPipeline(featureCols, maxIter = 15).fit(full).transform(full)
+              .select(matchupId, Modeling.probOf().as("Pred"))
+        })
+        stage("export")(Lakehouse.exportSingleCsv(scored, out).toString)
+      }
+
+      // every Season= directory of the written stats table is one season
+      // built (a null season included), read off the file listing
+      val seasonsBuilt = stats.inputFiles
+        .flatMap(_.split('/').find(_.startsWith("Season="))).distinct.length
+      Result(seasonsBuilt, goldRows, metrics, path)
+    } finally full.unpersist()
   }
 
   /** HPO stage ≙ reference `jobs/11_hpo_backtest.py:30-58`: split the gold

@@ -63,7 +63,9 @@ object Lakehouse {
 
   /** S8 + S4: discover `*.csv` under `inputDir`, route each through the
     * registry, land as Bronze parquet ≙ `jobs/01_ingest_bronze.py:38-65`.
-    * Returns (file, landedPath) pairs.
+    * Each table's schema is recorded as it is written
+    * ([[ParquetRead.write]]), so a read through [[ParquetRead]] starts no
+    * job. Returns (file, landedPath) pairs.
     */
   def ingestBronze(
       spark: SparkSession,
@@ -74,8 +76,7 @@ object Lakehouse {
     files.map { f =>
       val spec = DatasetRegistry.route(f.getFileName.toString)
       val out = lake.bronze(spec.lakeSubpath)
-      readCsvTrimmed(spark, f.toString)
-        .write.mode(SaveMode.Overwrite).parquet(out)
+      ParquetRead.write(readCsvTrimmed(spark, f.toString), out)
       f.toString -> out
     }
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Parquet reads that infer each local file set's schema once per
@@ -17,7 +17,10 @@ import org.apache.spark.sql.types.StructType
   * `spark.sql.legacy.parquet.*` settings, which change what inference
   * yields. A rewritten file or a changed setting is inferred again.
   * Object-store paths and paths that name no local file (globs) keep
-  * the plain read. */
+  * the plain read.
+  *
+  * A table this process writes through [[write]] is never inferred:
+  * the writer knows its schema. */
 object ParquetRead {
   private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
 
@@ -33,6 +36,26 @@ object ParquetRead {
             df
         }
     }
+
+  /** Writes `df` as parquet at `path`, overwriting, in Hive-style
+    * subdirs per `partitionBy`, and reads it back with the schema a
+    * read of the written files infers: `df`'s data columns, then the
+    * partition columns typed from the directory names, all nullable.
+    * The schema is recorded as if inferred, so neither this read nor a
+    * later [[apply]] of `path` starts a job. `place` writes the files
+    * so that they end up at `path`: by default it writes there;
+    * `SpineCache` writes a staging dir and renames it into place. */
+  def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
+      place: (DataFrameWriter[Row], String) => Unit = (w, p) => w.parquet(p)): DataFrame = {
+    place(df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*), path)
+    val s = df.sparkSession
+    // stating only the data columns leaves the partition columns to
+    // discovery, which types them as inference does, from the listing
+    val read = s.read.schema(StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))
+      .parquet(path)
+    stamp(s, path).foreach(st => schemas.put(path, (st, read.schema)))
+    read
+  }
 
   /** Forget the schemas of every path under `root`. */
   def forget(root: String): Unit = schemas.keySet.removeIf(_.startsWith(root))

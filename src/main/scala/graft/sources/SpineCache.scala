@@ -54,8 +54,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cross-run memo. The query layer's stored indexes ([[indexPath]])
   * live under the same root and share this lifetime.
   *
-  * A spine is read through [[ParquetRead]], so its schema is inferred
-  * once per build. */
+  * A spine is written and read through [[ParquetRead]]: the build
+  * states its schema for the published path, so no read of it infers
+  * one. */
 object SpineCache {
 
   private lazy val cacheRoot: Path = {
@@ -77,10 +78,10 @@ object SpineCache {
       (build: => DataFrame): DataFrame =
     synchronized {
       val path = under(key(s, dir, name, sourceTables, version))
-      LocalFs.publishOnce(path, p => Files.exists(p.resolve("_SUCCESS"))) {
-        stage => build.write.mode("overwrite").parquet(stage.toString)
-      }
-      ParquetRead(s, path.toString)
+      def published(p: Path) = Files.exists(p.resolve("_SUCCESS"))
+      if (published(path)) ParquetRead(s, path.toString)
+      else ParquetRead.write(build, path.toString, place = (w, _) =>
+        LocalFs.publishOnce(path, published)(stage => w.parquet(stage.toString)))
     }
 
   /** The key of a table that build `version` of `name` derives from

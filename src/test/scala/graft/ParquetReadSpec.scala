@@ -1,7 +1,8 @@
 package graft
 
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.SpineCache
+import graft.sources.{LakePaths, Lakehouse, ParquetRead, SpineCache}
 
 /** Each input file's parquet schema is inferred once per process: a
   * later read of the same files states the schema and starts no job,
@@ -66,5 +67,30 @@ class ParquetReadSpec extends AnyFunSuite {
     val df = spine("id AS v", "id + 1 AS w")
     assert(df.schema.fieldNames.toSeq === Seq("v", "w"))
     assert(df.selectExpr("sum(w)").head().getLong(0) === 6L)
+  }
+
+  test("a table the engine writes states the schema a parquet read infers") {
+    val root = TestSpark.tempDir("pread_written").toString
+    // a partitioned pipeline table, with non-null nested fields
+    val table = s"$root/table"
+    ParquetRead.write(spark.range(6).selectExpr("CAST(id % 3 AS INT) AS Season", "id",
+      "named_struct('a', id, 'b', array(id, id + 1)) AS s", "map('k', array(id)) AS m"),
+      table, Seq("Season"))
+    // a bronze table
+    val in = TestSpark.tempDir("pread_written_in")
+    Files.writeString(in.resolve("MTeams.csv"), "TeamID,TeamName\n1101, Abilene Chr\n1102,Air Force\n")
+    val Seq((_, bronze)) = Lakehouse.ingestBronze(spark, in.toString, LakePaths(s"$root/lake"))
+    // a spine: a one-source version-1 spine lives at that source's index path
+    spark.range(3).write.parquet(s"$root/t.parquet")
+    SpineCache.table(spark, root, "pread_written", "t")(
+      spark.range(3).selectExpr("id", "array(named_struct('x', id)) AS xs"))
+    val spine = SpineCache.indexPath(spark, root, "pread_written", "t")
+    Seq(table, bronze, spine).foreach { path =>
+      var stated: org.apache.spark.sql.DataFrame = null
+      assert(JobCount.of { stated = ParquetRead(spark, path) } === 0, path)
+      val inferred = spark.read.parquet(path)
+      assert(stated.schema === inferred.schema, path)
+      assert(stated.collect().map(_.toString).sorted === inferred.collect().map(_.toString).sorted)
+    }
   }
 }

@@ -1,14 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
-import graft.jobs.PipelineRunner
+import graft.jobs.{PipelineConfig, PipelineRunner}
 
 class PipelineRunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("end-to-end: csv -> bronze -> silver -> gold -> backtest -> submission") {
+  /** Three seasons of 40 random games between twelve teams, as a
+    * Kaggle compact-results CSV in a fresh input directory. */
+  private def compactFixture(): Path = {
     val in = TestSpark.tempDir("graft_pipe_in")
     val rnd = new scala.util.Random(11)
     val rows = for (season <- 2021 to 2023; day <- 1 to 40) yield {
@@ -18,6 +20,20 @@ class PipelineRunnerSpec extends AnyFunSuite {
     }
     Files.writeString(in.resolve("MRegularSeasonCompactResults.csv"),
       "Season,DayNum,WTeamID,WScore,LTeamID,LScore,WLoc,NumOT\n" + rows.mkString("\n") + "\n")
+    in
+  }
+
+  /** One run over [[compactFixture]] into a fresh lake, with its result
+    * and the bytes of its submission CSV. */
+  private def runFixture(config: PipelineConfig = PipelineConfig()): (PipelineRunner.Result, Array[Byte]) = {
+    val sub = TestSpark.tempDir("graft_pipe_out").resolve("submission.csv")
+    val result = PipelineRunner.run(spark, compactFixture().toString,
+      TestSpark.tempDir("graft_pipe_lake").toString, config, exportCsv = Some(sub.toString))
+    (result, Files.readAllBytes(sub))
+  }
+
+  test("end-to-end: csv -> bronze -> silver -> gold -> backtest -> submission") {
+    val in = compactFixture()
     val lake = TestSpark.tempDir("graft_pipe_lake")
     val sub = TestSpark.tempDir("graft_pipe_out").resolve("submission.csv")
 
@@ -65,6 +81,40 @@ class PipelineRunnerSpec extends AnyFunSuite {
     assert(lines2.size.toLong === result2.goldRows + 1)
     val preds = (1 until lines2.size).map(i => lines2.get(i).split(",")(1).toDouble)
     assert(preds.forall(p => p >= 0.0 && p <= 1.0))
+  }
+
+  test("submission and fold metrics are byte-identical across shuffle partitions 1 and 4") {
+    val (r1, csv1) = runFixture(PipelineConfig(shufflePartitions = 1))
+    val (r4, csv4) = runFixture(PipelineConfig(shufflePartitions = 4))
+    assert(java.util.Arrays.equals(csv1, csv4))
+    // case-class equality compares every fold's auc and logLoss exactly
+    assert(r1 === r4.copy(submissionPath = r1.submissionPath))
+  }
+
+  test("both size-gate modes build the same tables and predict within 1e-9") {
+    val (auto, distributed) = SizeGateModes.both(runFixture())
+    Seq[PipelineRunner.Result => Any](_.seasonsBuilt, _.goldRows, _.backtest.map(_.season))
+      .foreach(f => assert(f(auto._1) === f(distributed._1)))
+    // a matchup's features are per (Season, team), so its ID names one prediction
+    def preds(csv: Array[Byte]): Map[String, Double] =
+      new String(csv, "UTF-8").split("\n").toSeq.tail
+        .map { l => val Array(id, p) = l.split(","); id -> p.toDouble }.toMap
+    val (a, d) = (preds(auto._2), preds(distributed._2))
+    assert(a.keySet === d.keySet)
+    a.foreach { case (id, p) => assert(math.abs(p - d(id)) <= 1e-9, id) }
+  }
+
+  test("a run starts at most 62 Spark jobs, each labeled with its stage") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    val labels = try {
+      val descriptions = JobCount.descriptions(runFixture())
+      assert(descriptions.size <= 62, descriptions.groupBy(identity).view.mapValues(_.size).toMap)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      descriptions.distinct
+    } finally sc.setJobDescription(null)
+    assert(labels === Seq("ingest", "stats", "elo", "rolling", "gold", "backtest", "fit", "export")
+      .map(s => s"graft:pipeline/$s"))
   }
 
   test("typed pipeline config parses the reference yml shape and drives a run") {
@@ -150,7 +200,9 @@ class PipelineRunnerSpec extends AnyFunSuite {
     val gold = lake.resolve("gold/M/training_matchups")
     assert(Files.list(gold).iterator().asScala
       .exists(_.getFileName.toString.startsWith("_manifest-")))
-    val read = graft.sources.ManifestCommit.read(spark, gold.toString)
+    var read: org.apache.spark.sql.DataFrame = null
+    // the manifest's committed schema is stated: no footer-inference job
+    assert(JobCount.of { read = graft.sources.ManifestCommit.read(spark, gold.toString) } === 0)
     assert(read.count() === result.goldRows)
     assert(read.columns.contains("Season"))
   }
