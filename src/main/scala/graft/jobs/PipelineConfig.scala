@@ -12,8 +12,16 @@ import java.nio.file.{Files, Paths}
   * [[fromText]] reads the YAML with the Jackson YAML module that ships in
   * Spark's jars and looks each field up by its key path; an absent key
   * keeps the field's default, a present one of the wrong type is rejected
-  * by name. The `modeling.*` model settings are also the fallback for a
-  * param an HPO params file does not carry (see [[graft.ml.HpoParams]]).
+  * by name.
+  *
+  * The `modeling.logreg.*` and `modeling.gbt.*` settings (`lrMaxIter`,
+  * `lrRegParam`, `lrElasticNet`, `gbtMaxIter`, `gbtMaxDepth`,
+  * `gbtSubsamplingRate`) feed ONE path only: the LR+GBT ensemble export
+  * of a run given an HPO params file, as the fallback for a param that
+  * file does not carry (`HpoParams.lrFrom`/`gbtFrom`). The backtest and
+  * the plain LR export (no params file) ignore them: both fit
+  * `Modeling.lrPipeline` with `PipelineRunner.LrMaxIter` iterations and
+  * its default regularization, so `lrMaxIter = 80` here changes neither.
   */
 final case class PipelineConfig(
     league: String = "M",

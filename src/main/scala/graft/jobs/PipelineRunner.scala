@@ -31,6 +31,11 @@ object PipelineRunner {
       backtest: Seq[Backtest.FoldMetrics],
       submissionPath: Option[String])
 
+  /** Iteration cap of the backtest's per-fold LR fits and of the plain
+    * (no HPO file) LR export. `PipelineConfig`'s `modeling.logreg.*`
+    * settings do not reach these fits (see its scaladoc). */
+  val LrMaxIter = 15
+
   /** Runs the job chain ≙ the reference reading `conf/pipeline.yml` in
     * every job: league, ELO constants, rolling N, blend α, model settings
     * and backtest bounds all come from [[PipelineConfig]] (load one with
@@ -170,7 +175,7 @@ object PipelineRunner {
     try {
       // 07: rolling backtest (season bounds from config)
       val metrics = stage("backtest")(Backtest.folds(full, seasonRows, featureCols,
-        minTrainSeasons = 1, maxIter = 15,
+        minTrainSeasons = 1, maxIter = LrMaxIter,
         minTrainSeason = config.minTrainSeason, maxValSeason = config.maxValSeason))
 
       // 04/12: final fit + submission export. With an HPO params file
@@ -200,7 +205,7 @@ object PipelineRunner {
                 (lit(config.blendAlphaGbt) * col("pred_gbt") +
                   lit(1.0 - config.blendAlphaGbt) * col("pred_lr")).as("Pred"))
           case None =>
-            Modeling.lrPipeline(featureCols, maxIter = 15).fit(full).transform(full)
+            Modeling.lrPipeline(featureCols, maxIter = LrMaxIter).fit(full).transform(full)
               .select(matchupId, Modeling.probOf().as("Pred"))
         })
         stage("export")(Lakehouse.exportSingleCsv(scored, out).toString)

@@ -1,6 +1,6 @@
 package graft.marchmania
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
@@ -11,18 +11,18 @@ import graft.operators.Relational
   * The reference uses `percentile_approx(·, 0.5)`; we use the exact
   * `percentile` (identical result at these cardinalities, and exactly
   * reproducible — the approx sketch's answer depends on merge order).
-  * Two shuffles: one for the window partition, one for the group-by —
-  * both on (Season, TeamID) prefixes so AQE can coalesce.
+  * Two shuffles: one for the latest-per-system pick
+  * (`Relational.latestPerKey`), one for the group-by.
   */
 object Massey {
   def consensus(
       ordinals: DataFrame,
-      tieBreak: Seq[Column] = Seq.empty,
+      tieBreak: Seq[String] = Seq.empty,
       approxMedian: Boolean = false): DataFrame = {
     val latest = Relational.latestPerKey(
       ordinals,
       keys = Seq("Season", "TeamID", "SystemName"),
-      orderDesc = col("RankingDayNum") +: tieBreak)
+      orderDesc = "RankingDayNum" +: tieBreak)
     val median =
       if (approxMedian) // the reference's actual choice (accuracy 10000)
         percentile_approx(col("OrdinalRank"), lit(0.5), lit(10000))

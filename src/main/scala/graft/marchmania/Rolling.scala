@@ -32,6 +32,6 @@ object Rolling {
     Relational.latestPerKey(
       rollingFeatures,
       keys = Seq("Season", "TeamID"),
-      orderDesc = Seq(col("DayNum"), col("GameId")))
+      orderDesc = Seq("DayNum", "GameId"))
       .drop("OpponentID", "PointsFor", "PointsAgainst", "Win", "PointDiff", "GameId")
 }

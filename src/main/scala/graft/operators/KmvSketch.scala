@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import graft.plans.GroupedTopK
 import org.apache.spark.sql.functions._
 
 /** KMV (k-minimum-values) distinct-count sketch (Bar-Yossef et al.
@@ -46,7 +47,13 @@ object KmvSketch {
       k: Int,
       salt: String): DataFrame = {
     val kc = keys.map(col)
-    ranked(df, keys, valueCol, k, salt)
+    // `__rn` the hash's rank within its group, `__nh` the group's
+    // distinct-HASH count, `__n` its exact distinct-VALUE count
+    val wp = Window.partitionBy(kc: _*)
+    hashes(df, keys, valueCol, k, salt)
+      .withColumn("__rn", row_number().over(wp.orderBy(col("__h"))))
+      .withColumn("__nh", count(lit(1)).over(wp))
+      .withColumn("__n", sum(col("__vc")).over(wp))
       .where(col("__rn") === k ||
         (col("__rn") === 1 && col("__nh") < k))
       .select((kc :+ col("__n").as("exact_distinct") :+
@@ -74,20 +81,19 @@ object KmvSketch {
       valueCol: String,
       k: Int,
       salt: String): DataFrame =
-    ranked(df, keys, valueCol, k, salt)
-      .where(col("__rn") <= k)
+    GroupedTopK.topKPerKey(hashes(df, keys, valueCol, k, salt), keys,
+        Seq("__h" -> true), k, rankCol = Some("__rn"))
       .select((keys.map(col) :+ col("__h").as("min_hash") :+
         col("__rn").cast("long").as("rank")): _*)
 
-  /** Per-(keys, DISTINCT hash) rows with `__rn` the hash's rank within
-    * its group, `__nh` the group's distinct-HASH count, and `__n` the
-    * group's exact distinct-VALUE count. The k-th order statistic and
+  /** Per-(keys, DISTINCT hash `__h`) rows with `__vc` the number of
+    * distinct values behind the hash. The k-th order statistic and
     * the mergeability property are defined over DISTINCT hash values
     * (the set-of-minima contract) — ranking raw (hash, value) rows
     * would let a collision occupy two of the k slots and break
     * merge ≡ direct; the exact value count still rides along for the
     * small-set rule and the free exact answer. */
-  private def ranked(
+  private def hashes(
       df: DataFrame,
       keys: Seq[String],
       valueCol: String,
@@ -96,19 +102,13 @@ object KmvSketch {
     require(k >= 2, s"k must be >= 2: $k")
     require(keys.nonEmpty, "at least one key column")
     val kc = keys.map(col)
-    val hashes = df
-      .where(col(valueCol).isNotNull)
+    df.where(col(valueCol).isNotNull)
       .select((kc :+ col(valueCol).cast("string").as("__v")): _*)
       .distinct()
       .withColumn("__h",
         graft.functions.PolyHash.saltedHash(col("__v"), salt))
       .groupBy((kc :+ col("__h")): _*)
       .agg(count(lit(1)).as("__vc"))
-    val wp = Window.partitionBy(kc: _*)
-    hashes
-      .withColumn("__rn", row_number().over(wp.orderBy(col("__h"))))
-      .withColumn("__nh", count(lit(1)).over(wp))
-      .withColumn("__n", sum(col("__vc")).over(wp))
   }
 
   /** Union-merge a STORED minima table (the [[minima]] shape:
@@ -131,9 +131,9 @@ object KmvSketch {
     val union = stored.select((kc :+ col("min_hash")): _*)
       .unionByName(fresh)
       .distinct()
-    val w = Window.partitionBy(kc: _*).orderBy(col("min_hash"))
-    union.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    GroupedTopK.topKPerKey(union, keys, Seq("min_hash" -> true), k,
+        rankCol = Some("rank"))
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** Estimate from a minima table ALONE (no raw data): per group,

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.Materialize.MatOps
+import graft.plans.GroupedTopK
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (LPA) — community detection over a
@@ -47,16 +47,13 @@ object LabelProp {
     var labels = adj.select(col("v")).distinct()
       .withColumn("lab", col("v"))
       .materialize()
-    val w = Window.partitionBy(col("v"))
-      .orderBy(col("__c").desc, col("lab").asc)
     for (_ <- 1 to rounds) {
       val cnt = adj
         .join(labels.select(col("v").as("u"), col("lab")), Seq("u"))
         .groupBy(col("v"), col("lab"))
         .agg(count(lit(1)).as("__c"))
-      val pick = cnt
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
+      val pick = GroupedTopK.topKPerKey(cnt, Seq("v"),
+          Seq("__c" -> false, "lab" -> true), k = 1)
         .select(col("v"), col("lab").as("__newlab"))
       labels = labels
         .join(pick, Seq("v"), "left")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GroupedTopK
 
 /** Reusable relational operator shapes from the reference's inventory
   * (SURVEY.md §2), generalized over key/order/value columns. All are
@@ -14,16 +15,15 @@ object Relational {
 
   /** Keep the most recent row per group — reference `src/features/massey.py:52-59`
     * (latest ranking per system) and `jobs/06_build_silver_rolling.py:51-57`
-    * (end-of-season snapshot). `row_number` over a descending order, keep
-    * rn==1. One shuffle on the partition keys; the caller must make
-    * `orderDesc` a total order for determinism.
+    * (end-of-season snapshot), which keep `row_number() == 1` over a
+    * descending order. Here: the row with the greatest `orderDesc`
+    * columns (compared in turn, nulls last) per `keys` value, on
+    * [[graft.plans.GroupedTopK]] with k = 1; same columns as `df`. One
+    * shuffle on the keys, none when `df` is already clustered on them.
+    * The caller must make `orderDesc` a total order for determinism.
     */
-  def latestPerKey(df: DataFrame, keys: Seq[String], orderDesc: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderDesc.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def latestPerKey(df: DataFrame, keys: Seq[String], orderDesc: Seq[String]): DataFrame =
+    GroupedTopK.topKPerKey(df, keys, orderDesc.map(_ -> false), k = 1)
 
   /** Trailing-window averages that EXCLUDE the current row (anti-leakage
     * "causal rolling momentum") — reference `src/features/rolling.py:79-93`:
@@ -215,9 +215,10 @@ object Relational {
   /** Per-key mode: the most frequent `valueCol` per key, smallest
     * value winning ties (a deterministic contract — "the" mode is
     * meaningless without one). The raw rows see ONE aggregation
-    * (count per (key, value), map-side combined); the rank-1 window
-    * then runs over the already-|key×value|-reduced counts, never
-    * over data rows. Output: keys…, mode_value, mode_count. Null
+    * (count per (key, value), map-side combined); the top-1 pick
+    * ([[graft.plans.GroupedTopK]], ordered by count descending, then
+    * value) then runs over the already-|key×value|-reduced counts,
+    * never over data rows. Output: keys…, mode_value, mode_count. Null
     * values are excluded (SQL aggregate convention); keys with only
     * nulls emit nothing.
     */
@@ -230,11 +231,7 @@ object Relational {
       .where(col(valueCol).isNotNull)
       .groupBy((keys.map(col) :+ col(valueCol)): _*)
       .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__c").desc, col(valueCol).asc)
-    counts
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    GroupedTopK.topKPerKey(counts, keys, Seq("__c" -> false, valueCol -> true), k = 1)
       .select((keys.map(col) :+ col(valueCol).as("mode_value") :+
         col("__c").as("mode_count")): _*)
   }

@@ -216,7 +216,7 @@ object CoreQueries {
       |""".stripMargin)) { (s, dir) =>
     Relational.latestPerKey(
       Tables.events(s, dir).select("user_id", "event_id", "event_type", "value", "ts"),
-      Seq("user_id"), Seq(col("ts"), col("event_id")))
+      Seq("user_id"), Seq("ts", "event_id"))
       .drop("ts")
       .orderBy(col("user_id"))
   }

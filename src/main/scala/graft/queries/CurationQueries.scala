@@ -356,10 +356,8 @@ object CurationQueries {
       .select(col("lang"), col("tg"), col("c_l"),
         expr(s"CAST((1000000 * CAST(c_l AS $d38) * total) div " +
           s"(CAST(c AS $d38) * tot_l) AS BIGINT)").as("lift_ppm"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("lang"))
-          .orderBy(col("lift_ppm").desc, col("tg"))))
-      .where(col("rank") <= 3)
+      .transform(graft.plans.GroupedTopK.topKPerKey(_, Seq("lang"),
+        Seq("lift_ppm" -> false, "tg" -> true), k = 3, rankCol = Some("rank")))
       .select(col("lang"), col("rank").cast("long").as("rank"),
         col("tg").as("trigram"), col("c_l").as("n_occurrences"),
         col("lift_ppm"))

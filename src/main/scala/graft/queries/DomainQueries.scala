@@ -145,7 +145,7 @@ object DomainQueries {
       (col("event_id") % 100).cast("int").as("RankingDayNum"),
       (col("event_id") % 200 + 1).cast("int").as("OrdinalRank"),
       col("event_id"))
-    Massey.consensus(ordinals, tieBreak = Seq(col("event_id")))
+    Massey.consensus(ordinals, tieBreak = Seq("event_id"))
       .orderBy(col("TeamID"))
   }
 

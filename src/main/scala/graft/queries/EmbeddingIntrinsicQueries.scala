@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
 import graft.Tables
 
@@ -97,11 +96,8 @@ object EmbeddingIntrinsicQueries {
     require(k <= 5, "emb_nn5 spine holds the top-5 neighbors")
     graft.sources.SpineCache.table(s, dir, "emb_nn5",
       Seq("embeddings")) {
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("dd"), col("nid"))
-      nnPairs(s, dir)
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 5)
+      graft.plans.GroupedTopK.topKPerKey(nnPairs(s, dir), Seq("qid"),
+        Seq("dd" -> true, "nid" -> true), k = 5, rankCol = Some("rk"))
     }.where(col("rk") <= k)
   }
 

@@ -180,7 +180,6 @@ object PipelineQueries {
       |SELECT doc_id, trank, token, tfidf FROM ranked WHERE trank <= 5
       |ORDER BY doc_id, trank
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     // stage boundary: every downstream table (doc lengths, document
     // frequencies, the scored join's fact side) is derivable from the
     // per-doc term frequencies — checkpoint tf once and derive the rest
@@ -197,15 +196,14 @@ object PipelineQueries {
     // plan re-optimizes with the real N under AQE instead of a baked
     // literal
     val total = Tables.documents(s, dir).agg(count(lit(1)).as("total"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("token"))
     tf.join(doclen, "doc_id")
       .join(broadcast(df), "token")
       .crossJoin(broadcast(total))
       .withColumn("tfidf",
         (col("cnt") * expr("(1000000 * total) div dfreq")).cast("double") / col("dl"))
       .drop("total")
-      .withColumn("trank", row_number().over(w))
-      .filter(col("trank") <= 5)
+      .transform(graft.plans.GroupedTopK.topKPerKey(_, Seq("doc_id"),
+        Seq("tfidf" -> false, "token" -> true), k = 5, rankCol = Some("trank")))
       .select(col("doc_id"), col("trank"), col("token"), col("tfidf"))
       .orderBy(col("doc_id"), col("trank"))
   }

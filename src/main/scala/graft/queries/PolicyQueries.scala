@@ -127,10 +127,8 @@ object PolicyQueries {
         col("c").as("c_bigram"),
         expr("(1000 * ((4 * c - 3) * t + 3 * n1p * ncont))" +
           " div (4 * cw * t)").as("pkn_milli"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("context"))
-      .orderBy(col("pkn_milli").desc, col("word"))
-    pkn.withColumn("rk", row_number().over(w)).where(col("rk") <= 3)
+    graft.plans.GroupedTopK.topKPerKey(pkn, Seq("context"),
+        Seq("pkn_milli" -> false, "word" -> true), k = 3)
       .select(col("context"), col("word"), col("c_bigram"),
         col("pkn_milli"))
       .orderBy(col("context"), col("pkn_milli").desc, col("word"))

@@ -969,11 +969,8 @@ object SignalQueries {
       .groupBy(col("event_type").as("prev"),
         col("next_type").as("nxt"))
       .agg(count(lit(1)).as("c"))
-    val pred = tr
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("prev"))
-          .orderBy(col("c").desc, col("nxt"))))
-      .where(col("rk") === 1)
+    val pred = GroupedTopK.topKPerKey(tr, Seq("prev"),
+        Seq("c" -> false, "nxt" -> true), k = 1)
       .select(col("prev"), col("nxt").as("predicted"))
     sPairs
       .where(col("d") >= col("mid") && col("next_d") >= col("mid"))
@@ -1200,15 +1197,12 @@ object SignalQueries {
         .withColumnRenamed("embedding", "qa")
       val cents = qv.where(col("vec_id") < k)
         .select(col("vec_id").as("cid"), col("qa").as("ca"))
-      val asg = qv.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("cid"), // native integer d² kernel
-          graft.functions.SketchExprs.sqEuclideanLong(
-            col("qa"), col("ca")).as("d2"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"))
-            .orderBy(col("d2"), col("cid"))))
-        .where(col("rn") === 1)
-        .drop("rn")
+      val asg = GroupedTopK.topKPerKey(
+          qv.crossJoin(broadcast(cents))
+            .select(col("vec_id"), col("cid"), // native integer d² kernel
+              graft.functions.SketchExprs.sqEuclideanLong(
+                col("qa"), col("ca")).as("d2")),
+          Seq("vec_id"), Seq("d2" -> true, "cid" -> true), k = 1)
         .materialize() // feeds both the per-dim refresh and the rollup
       val dim = asg.join(qv, "vec_id")
         .select(col("cid"), posexplode(col("qa")).as(Seq("i", "v")))
@@ -2018,11 +2012,8 @@ object SignalQueries {
     import graft.operators.OrderStats
     val g = sessions(s, dir)
       .materialize() // one sessionized pass feeds entry + aggregates
-    val entry = g
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"), col("grp"))
-          .orderBy(col("t_us"), col("event_id"))))
-      .where(col("rn") === 1)
+    val entry = GroupedTopK.topKPerKey(g, Seq("user_id", "grp"),
+        Seq("t_us" -> true, "event_id" -> true), k = 1)
       .select(col("user_id"), col("grp"),
         col("event_type").as("entry_type"))
     val agg = g.groupBy(col("user_id"), col("grp"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Materialize.MatOps
 import graft.Tables
 
@@ -175,9 +174,8 @@ object StructureQueries {
       .agg(expr("(1000 * CAST(sum(CAST(l_extendedprice * 100" +
         " AS DECIMAL(38,0))) AS BIGINT))" +
         " div sum(CAST(floor(l_quantity + 0.5) AS BIGINT))").as("cost"))
-    val w = Window.partitionBy(col("pk")).orderBy(col("cost"), col("sk"))
-    val rk = bid.withColumn("r", row_number().over(w))
-      .where(col("r") <= 2)
+    val rk = graft.plans.GroupedTopK.topKPerKey(bid, Seq("pk"),
+        Seq("cost" -> true, "sk" -> true), k = 2, rankCol = Some("r"))
       .materialize()
     rk.where(col("r") === 1).select(col("pk"), col("cost").as("first"))
       .join(rk.where(col("r") === 2)

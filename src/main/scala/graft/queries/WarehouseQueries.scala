@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.MatOps
 import graft.Tables
+import graft.plans.GroupedTopK
 
 /** Round-7 warehouse-analytics wave: calendar-delta reporting,
   * per-group argmin procurement, SLA attainment, share-shift, and
@@ -134,7 +135,6 @@ object WarehouseQueries {
       |       CAST((1000000 * cents) // tot AS BIGINT) AS leader_share_ppm
       |FROM r WHERE rn = 1 ORDER BY y
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val b = Tables.lineitem(s, dir)
       .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
       .groupBy(year(col("l_shipdate")).cast("long").as("y"),
@@ -143,11 +143,8 @@ object WarehouseQueries {
         .cast("long").as("cents"))
       .materialize() // feeds the totals AND the rank pass
     val t = b.groupBy(col("y")).agg(sum(col("cents")).as("tot"))
-    b.join(broadcast(t), Seq("y"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("y"))
-          .orderBy(col("cents").desc, col("brand"))))
-      .where(col("rn") === 1)
+    GroupedTopK.topKPerKey(b.join(broadcast(t), Seq("y")), Seq("y"),
+        Seq("cents" -> false, "brand" -> true), k = 1)
       .select(col("y"), col("brand").as("leader_brand"),
         col("cents").as("leader_cents"),
         expr("(1000000 * cents) div tot").as("leader_share_ppm"))
@@ -819,7 +816,7 @@ object WarehouseQueries {
         sum(col("l_quantity").cast("long")).as("qty"))
       .where(col("qty") > 0)
       .withColumn("unit_milli", expr("(1000 * cents) div qty"))
-    graft.plans.GroupedTopK.topKPerKey(
+    GroupedTopK.topKPerKey(
         ps.select("part", "supp", "cents", "qty", "unit_milli"),
         keyCols = Seq("part"),
         order = Seq("unit_milli" -> true, "supp" -> true),
@@ -1767,7 +1764,6 @@ object WarehouseQueries {
         |       CAST((1000000 * n) // tot AS BIGINT) AS share_ppm
         |FROM r WHERE rn <= 5 ORDER BY col_name, rank
         |""".stripMargin)) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val u = Tables.orders(s, dir)
         .select(lit("o_orderpriority").as("col_name"),
           col("o_orderpriority").cast("string").as("value"))
@@ -1784,11 +1780,9 @@ object WarehouseQueries {
         .agg(count(lit(1)).as("n"))
         .materialize() // MCV dim feeds the totals AND the rank pass
       val t = c.groupBy(col("col_name")).agg(sum(col("n")).as("tot"))
-      c.join(broadcast(t), Seq("col_name"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("col_name"))
-            .orderBy(col("n").desc, col("value"))))
-        .where(col("rn") <= 5)
+      GroupedTopK.topKPerKey(c.join(broadcast(t), Seq("col_name")),
+          Seq("col_name"), Seq("n" -> false, "value" -> true), k = 5,
+          rankCol = Some("rn"))
         .select(col("col_name"), col("rn").cast("long").as("rank"),
           col("value"), col("n").as("n_rows"),
           expr("(1000000 * n) div tot").as("share_ppm"))
@@ -1934,17 +1928,14 @@ object WarehouseQueries {
       |            AS BIGINT) AS churn_ppm
       |FROM pairs p LEFT JOIN ov ON p.q1 = ov.q1 ORDER BY p.q1
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val t = Tables.orders(s, dir)
       .groupBy(col("o_custkey").as("ck"),
         (year(col("o_orderdate")) * 4 + quarter(col("o_orderdate")) - 1)
           .cast("long").as("qi"))
       .agg(sum((col("o_totalprice") * 100).cast("decimal(38,0)"))
         .as("cents"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qi"))
-          .orderBy(col("cents").desc, col("ck"))))
-      .where(col("rn") <= 200)
+      .transform(GroupedTopK.topKPerKey(_, Seq("qi"),
+        Seq("cents" -> false, "ck" -> true), k = 200))
       .select(col("ck"), col("qi"))
       .materialize() // k-sized membership dim: pairs + overlap joins
     val sz = t.groupBy(col("qi")).agg(count(lit(1)).as("n"))
@@ -2513,7 +2504,6 @@ object WarehouseQueries {
       |FROM r JOIN supplier s ON r.l_suppkey = s.s_suppkey
       |WHERE r.rn = 1 ORDER BY r.y, r.qt
       |""".stripMargin)) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val b = Tables.lineitem(s, dir)
       .groupBy(year(col("l_shipdate")).cast("long").as("y"),
         quarter(col("l_shipdate")).cast("long").as("qt"),
@@ -2522,11 +2512,8 @@ object WarehouseQueries {
         .cast("long").as("cents"))
       .materialize() // feeds the quarter totals AND the rank pass
     val t = b.groupBy(col("y"), col("qt")).agg(sum(col("cents")).as("tot"))
-    b.join(broadcast(t), Seq("y", "qt"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("y"), col("qt"))
-          .orderBy(col("cents").desc, col("l_suppkey"))))
-      .where(col("rn") === 1)
+    GroupedTopK.topKPerKey(b.join(broadcast(t), Seq("y", "qt")),
+        Seq("y", "qt"), Seq("cents" -> false, "l_suppkey" -> true), k = 1)
       .join(broadcast(Tables.supplier(s, dir)),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("y"), col("qt"), col("s_name").as("leader"),

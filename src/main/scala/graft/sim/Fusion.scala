@@ -1,7 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import graft.plans.GroupedTopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -44,10 +44,8 @@ object Fusion {
     val fused = slim.reduce(_ unionByName _)
       .groupBy(col(queryCol), col(itemCol))
       .agg(sum(col("__term")).as("__s"))
-    val w = Window.partitionBy(col(queryCol))
-      .orderBy(col("__s").desc, col(itemCol))
-    fused.withColumn("fused_rank", row_number().over(w))
-      .where(col("fused_rank") <= k)
+    GroupedTopK.topKPerKey(fused, Seq(queryCol),
+        Seq("__s" -> false, itemCol -> true), k, rankCol = Some("fused_rank"))
       .select(col(queryCol), col("fused_rank"), col(itemCol),
         col("__s").cast("double").as("rrf"))
   }

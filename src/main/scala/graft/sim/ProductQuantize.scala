@@ -1,7 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import graft.plans.GroupedTopK
 import org.apache.spark.sql.functions._
 
 /** Product quantization — the next 4-16× compression step after int8
@@ -46,6 +46,14 @@ object ProductQuantize {
       }),
       lit(0.0), (acc, x) => acc + x)
 
+  /** The k nearest (qid, vec_id) pairs per `qid` by (adc_dist, vec_id),
+    * as (vec_id = qid, rank, neighbor_id, adc_dist). */
+  private def nearest(k: Int)(scored: DataFrame): DataFrame =
+    GroupedTopK.topKPerKey(scored, Seq("qid"),
+        Seq("adc_dist" -> true, "vec_id" -> true), k, rankCol = Some("rank"))
+      .select(col("qid").as("vec_id"), col("rank"),
+        col("vec_id").as("neighbor_id"), col("adc_dist"))
+
   /** Codebook rows (m, k, cvec) derived from [[fit]]'s model — one
     * pivot-selection implementation, two faces. */
   def codebooks(
@@ -81,12 +89,9 @@ object ProductQuantize {
         slice(col(vecCol), m * sub + 1, sub)): _*)))
       .select(col("vec_id"), col("pos").as("m"), col("col").as("svec"))
     val dist = sqDist(col("svec"), col("cvec"))
-    val w = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("dist"), col("k"))
-    subvecs.join(broadcast(codebook), Seq("m"))
-      .withColumn("dist", dist)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    GroupedTopK.topKPerKey(
+        subvecs.join(broadcast(codebook), Seq("m")).withColumn("dist", dist),
+        Seq("vec_id", "m"), Seq("dist" -> true, "k" -> true), k = 1)
       .select(col("vec_id"), col("m").as("subspace"),
         col("k").as("code"), col("dist"))
   }
@@ -165,15 +170,10 @@ object ProductQuantize {
       element_at(element_at(col("qd"), m + 1),
         element_at(col("codes"), m + 1) + 1))
       .reduce(_ + _)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist"), col("vec_id"))
     codesWide.crossJoin(broadcast(q))
       .filter(col("qid") =!= col("vec_id"))
       .withColumn("adc_dist", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("adc_dist"))
+      .transform(nearest(k))
   }
 
   /** IVF-PQ — the canonical large-corpus ANN layout, composed from the
@@ -348,15 +348,10 @@ object ProductQuantize {
       element_at(element_at(col("qd"), m + 1),
         element_at(col("codes"), m + 1) + 1))
       .reduce(_ + _)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist"), col("vec_id"))
     c.join(broadcast(probes), Seq("cell"))
       .filter(col("qid") =!= col("vec_id"))
       .withColumn("adc_dist", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("adc_dist"))
+      .transform(nearest(k))
   }
 
   /** ADC (asymmetric distance computation) top-k — retrieval where the
@@ -390,17 +385,12 @@ object ProductQuantize {
     val qd = qsub.join(broadcast(codebook), Seq("m"))
       .withColumn("qdst", qdst)
       .select(col("qid"), col("m").as("subspace"), col("k").as("code"), col("qdst"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist"), col("vec_id"))
     codes.join(broadcast(qd), Seq("subspace", "code"))
       .filter(col("qid") =!= col("vec_id"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(aggregate(
         array_sort(collect_list(struct(col("subspace"), col("qdst")))),
         lit(0.0), (acc, x) => acc + x.getField("qdst")).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("adc_dist"))
+      .transform(nearest(k))
   }
 }

@@ -1,8 +1,8 @@
 package graft.sim
 import graft.Materialize.MatOps
+import graft.plans.GroupedTopK
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -31,6 +31,17 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.SketchExprs.cosineSim(a, b)
 
+  /** The k best (vec_id, neighbor_id, cos) pairs per `vec_id` by
+    * (cos DESC, neighbor_id), with their 1-based `rank` appended. */
+  private def ranked(k: Int)(pairs: DataFrame): DataFrame =
+    GroupedTopK.topKPerKey(pairs, Seq("vec_id"),
+      Seq("cos" -> false, "neighbor_id" -> true), k, rankCol = Some("rank"))
+
+  /** [[ranked]] as (vec_id, rank, neighbor_id, cos). */
+  private def nearest(k: Int)(pairs: DataFrame): DataFrame =
+    ranked(k)(pairs)
+      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+
   /** Exact top-k cosine neighbors for every vector of `queries` among
     * `corpus` (both with (`idCol`, `vecCol`)). The queries side is
     * broadcast; ranking uses a deterministic (−cos, neighbor id)
@@ -46,12 +57,8 @@ object Similarity {
     val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("qvec"))
     val pairs = c.join(broadcast(q), col("vec_id") =!= col("neighbor_id"))
       .withColumn("cos", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .transform(nearest(k))
   }
 
   /** Embedding-cosine near-duplicate pairs: all (a < b) pairs with
@@ -185,20 +192,15 @@ object Similarity {
     import spark.implicits._
     val centDf = centroids.toSeq.toDF("cell", "cvec")
     val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("qvec"))
-    val probed = q.crossJoin(broadcast(centDf))
-      .withColumn("ccos", cosine(col("qvec"), col("cvec")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("crank") <= nprobe)
+    val probed = GroupedTopK.topKPerKey(
+        q.crossJoin(broadcast(centDf))
+          .withColumn("ccos", cosine(col("qvec"), col("cvec"))),
+        Seq("vec_id"), Seq("ccos" -> false, "cell" -> true), nprobe)
       .select(col("vec_id"), col("qvec"), col("cell"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     probed.join(assigned, Seq("cell"))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .transform(nearest(k))
   }
 
   /** IVF-shaped ANN with a DETERMINISTIC coarse quantizer: the cell is
@@ -236,14 +238,10 @@ object Similarity {
     // no dedup needed: every corpus vector lives in exactly one cell and
     // the probe masks are distinct, so each (query, neighbor) pair can
     // meet at most once
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     probes.join(c, Seq("cell"))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .transform(nearest(k))
   }
 
   /** Metadata-filtered exact top-k — the "filtered vector search" shape
@@ -274,13 +272,10 @@ object Similarity {
     val q = queries.select(
       col(idCol).as("vec_id") +: col(vecCol).as("qvec") +:
         matchCols.map(col): _*)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     c.join(broadcast(q), matchCols)
       .filter(col("vec_id") =!= col("neighbor_id"))
       .withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .transform(ranked(k))
       .select(col("vec_id") +: matchCols.map(col) :+ col("rank") :+
         col("neighbor_id") :+ col("cos"): _*)
   }
@@ -381,12 +376,8 @@ object Similarity {
     val cand = candIds
       .join(vecs.select(col("id").as("vec_id"), col("vec").as("qvec")), "vec_id")
       .join(vecs.select(col("id").as("neighbor_id"), col("vec").as("nvec")), "neighbor_id")
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     cand
       .withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .transform(nearest(k))
   }
 }

@@ -118,15 +118,10 @@ object Bm25 {
       .agg(sum(col("contrib")
           .cast(org.apache.spark.sql.types.DecimalType(18, 9)))
         .cast("double").as("score"))
-    val top = graft.plans.GroupedTopK.topKPerKey(scores,
-      keyCols = Seq("query_id"),
-      order = Seq("score" -> false, "doc_id" -> true),
-      k = k)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    top
-      .withColumn("rk", row_number().over(w))
+    graft.plans.GroupedTopK.topKPerKey(scores,
+        keyCols = Seq("query_id"),
+        order = Seq("score" -> false, "doc_id" -> true),
+        k = k, rankCol = Some("rk"))
       .select(col("query_id"), col("rk"), col("doc_id"), col("score"))
   }
 

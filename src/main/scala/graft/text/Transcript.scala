@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GroupedTopK
 
 /** Conversation/transcript assembly — the SFT-data preparation step:
   * turn events become ordered, role-tagged turns with EXACT character
@@ -17,10 +18,11 @@ import org.apache.spark.sql.functions._
   * rendered lengths (+1 per separator) — all integers, all
   * oracle-replayable.
   *
-  * Scale shape: ONE exchange — every window (trailing-k rank, turn
-  * index, offset prefix sum) partitions by the conversation key, so
-  * Catalyst reuses a single hash exchange and sorts; no joins, no
-  * second pass. State per conversation is its ≤ k surviving turns.
+  * Scale shape: ONE exchange — the trailing-k pick (GroupedTopK) and
+  * both windows (turn index, offset prefix sum) partition by the
+  * conversation key, so Catalyst reuses a single hash exchange; no
+  * joins, no second pass. State per conversation is its ≤ k surviving
+  * turns.
   */
 object Transcript {
 
@@ -37,15 +39,14 @@ object Transcript {
       content: Column,
       lastK: Int): DataFrame = {
     require(lastK >= 1, s"lastK must be >= 1: $lastK")
-    val wDesc = Window.partitionBy(col(convCol))
-      .orderBy(col(tsCol).desc, col(tieCol).desc)
     val wAsc = Window.partitionBy(col(convCol))
       .orderBy(col(tsCol).asc, col(tieCol).asc)
     val wPrev = wAsc.rowsBetween(Window.unboundedPreceding, -1)
-    df.select(col(convCol), col(tsCol), col(tieCol),
-        role.as("role"), content.as("content"))
-      .withColumn("__recency", row_number().over(wDesc))
-      .where(col("__recency") <= lastK)
+    val turns = df.select(col(convCol), col(tsCol), col(tieCol),
+      role.as("role"), content.as("content"))
+    // the last `lastK` turns of each conversation, latest first
+    GroupedTopK.topKPerKey(turns, Seq(convCol),
+        Seq(tsCol -> false, tieCol -> false), lastK)
       .withColumn("turn_idx", row_number().over(wAsc).cast("long"))
       .withColumn("__len",
         (length(col("role")) + lit(2) + length(col("content"))).cast("long"))

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.execution.window.{Final, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** Mechanical plan-lint over the whole query registry (VERDICT r9 #3):
   * walks every query's physical plan (AQE off, so the tree is plain)
   * and flags the three anti-patterns the house discipline forbids on
-  * fact-scaled frames:
+  * fact-scaled frames, plus one duplicated operator:
   *
   *  - `cartesian-fact`: a CartesianProduct with an UNREDUCED fact-table
   *    scan on either side (fact = the sf-scaling tables; "reduced"
@@ -24,7 +24,11 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   *    partition spec whose child contains an unreduced fact scan (the
   *    single-partition rank walk that dies at 100×; global windows
   *    over aggregated dim/day frames — the `globalRankCum` discipline —
-  *    auto-pass because the aggregate bounds them).
+  *    auto-pass because the aggregate bounds them);
+  *  - `window-topk`: a WindowGroupLimit with a NON-empty partition spec,
+  *    the plan Spark gives a partitioned `row_number() <= k` (or `=== 1`)
+  *    filter. Per-key top-k has one home, `plans.GroupedTopK`; one
+  *    finding per site (the Final node, not its map-side Partial).
   *
   * Materialized stage boundaries (Scan ExistingRDD) count as reduced:
   * the materialization discipline (Materialize.scala scaladoc) only
@@ -96,6 +100,9 @@ object PlanLint {
       case w: WindowGroupLimitExec
           if w.partitionSpec.isEmpty && unreducedFact(w.child) =>
         Seq(("global-window-fact", w.nodeName))
+      case w: WindowGroupLimitExec
+          if w.partitionSpec.nonEmpty && w.mode == Final =>
+        Seq(("window-topk", w.nodeName))
       case _ => Nil
     }
 

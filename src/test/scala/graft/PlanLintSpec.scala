@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * registry query's physical plan at sf0.001 and asserts the three
   * fact-frame invariants `tools.PlanLint` encodes (no cartesian over
   * unreduced facts, no fact-corpus broadcast under a nested-loop
-  * join, no single-partition window over an unreduced fact). A NEW
+  * join, no single-partition window over an unreduced fact), plus the
+  * one-operator rule `window-topk` (a partitioned `row_number() <= k`
+  * filter belongs on `plans.GroupedTopK`). A NEW
   * wave that trips one must either fix the plan or consciously add
   * itself to the whitelist below with a justification — this suite is
   * what keeps wave N+1 honest without a judge.
@@ -26,7 +28,20 @@ class PlanLintSpec extends AnyFunSuite {
   private def ready = java.nio.file.Files.exists(
     java.nio.file.Paths.get(s"$sf/orders.parquet"))
 
-  /** query → allowed finding kinds, each with its audit rationale. */
+  /** query → allowed finding kinds, each with its audit rationale.
+    *
+    * No `window-topk` row: every partitioned `row_number()` filter runs
+    * on GroupedTopK. The `row_number()` windows kept on purpose plan no
+    * partitioned WindowGroupLimit, so none needs a row:
+    *  - global windows (no partition spec; `global-window-fact` covers
+    *    the unreduced ones);
+    *  - frames that compute a whole-group window column beside the rank
+    *    before filtering on it (q365_session_conversion_by_entry and
+    *    q336_bounce_by_entry, `max`/`count` over the session;
+    *    q704_dominant_centroid_dim, `sum` over the label): a group
+    *    limit would cut the rows that column needs;
+    *  - ranks that are aggregated or compared rather than filtered
+    *    (`Relational.runningDistinct`, `OrderStats`, `Scd2`). */
   private val whitelist: Map[String, Set[String]] = Map(
     // ANN / retrieval faces: the broadcast side is the QUERY set — a
     // literal-id filter on the embeddings scan, bounded by
@@ -46,6 +61,24 @@ class PlanLintSpec extends AnyFunSuite {
     "q836_pickands_estimator" -> Set("bnl-fact-broadcast"),
     "q837_dekkers_moment" -> Set("bnl-fact-broadcast"),
     "q839_return_levels" -> Set("bnl-fact-broadcast"))
+
+  test("a partitioned row_number() filter is a window-topk finding; GroupedTopK is not") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val df = Seq((1, 10), (1, 20), (2, 5)).toDF("g", "v")
+    def kinds(out: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try graft.tools.PlanLint.findings(out.queryExecution.executedPlan).map(_._1)
+      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+    val window = df.withColumn("rn", row_number().over(
+      Window.partitionBy($"g").orderBy($"v".desc))).where($"rn" <= 1)
+    assert(kinds(window) === Seq("window-topk"))
+    assert(kinds(graft.plans.GroupedTopK.topKPerKey(
+      df, Seq("g"), Seq("v" -> false), k = 1)).isEmpty)
+  }
 
   test("no unwhitelisted fact-frame plan anti-pattern in any query") {
     assume(ready)
